@@ -84,30 +84,37 @@ object Bench {
     }
     val results = best.toSeq
 
-    // streaming drains: each is stateful (queue/checkpoint/sink), so a
-    // repeat needs fresh dirs; best-of-2 per entry, fail-unmistakable.
-    // msgs = (message name, file bytes); returns best drain seconds.
-    def streamDrain(label: String, base: java.nio.file.Path,
-                    msgs: Seq[(String, Array[Byte])]): Double = {
-      import java.nio.file.{Files, Paths}
-      val data = s"$base/$label-data"
-      Files.createDirectories(Paths.get(data))
-      msgs.foreach { case (n, bytes) => Files.write(Paths.get(data, n), bytes) }
-      def drainOnce(attempt: Int): Double = {
-        val (queue, out, ckpt) = (s"$base/$label-q$attempt",
-          s"$base/$label-out$attempt", s"$base/$label-ckpt$attempt")
-        Files.createDirectories(Paths.get(queue))
-        msgs.zipWithIndex.foreach { case ((name, _), i) =>
-          Files.writeString(Paths.get(queue, f"msg_$i%03d"), name)
+    import graft.streaming.StreamingPipeline
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+    // ONE harness for every streaming drain. Each drain is stateful
+    // (queue/store/checkpoint/sink), so each of its two attempts runs in
+    // fresh dirs under `<base>/<attempt>`: every (subdir -> JSONL rows)
+    // input is written there as ~nFiles chunk files, then the clock
+    // starts, `start(dir)` builds and starts the query over that dir,
+    // and the drain is timed to termination. A 600 s timeout or a
+    // NonFatal error is a FAILURE (-1 + stderr naming the entry), never
+    // a datapoint; the entry reports the min of the two attempts.
+    def drain(label: String, inputs: Seq[(String, Array[String])], nFiles: Int)
+             (start: String => StreamingQuery): Double = {
+      val base = Files.createTempDirectory(s"graft_bench_$label")
+      def once(attempt: Int): Double = {
+        val dir = s"$base/$attempt"
+        for ((sub, rows) <- inputs) {
+          Files.createDirectories(Paths.get(dir, sub))
+          rows.grouped(math.max(1, rows.length / nFiles)).zipWithIndex.foreach {
+            case (chunk, i) =>
+              Files.writeString(Paths.get(dir, sub, f"part_$i%03d.jsonl"),
+                chunk.mkString("\n"))
+          }
         }
         val t0 = System.nanoTime()
         try {
-          val q = graft.streaming.StreamingPipeline.notifyPipeline(
-            spark, queue, data, out, ckpt,
-            trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-            maxMessagesPerTrigger = 16).start()
+          val q = start(dir)
           if (q.awaitTermination(600000)) (System.nanoTime() - t0) / 1e9
-          else { // timed out: a hung drain is a FAILURE, not a 600 s datapoint
+          else {
             q.stop()
             System.err.println(s"[bench] $label timed out")
             -1.0
@@ -117,8 +124,34 @@ object Bench {
           -1.0
         }
       }
-      val a = drainOnce(0)
-      if (a < 0) a else { val b = drainOnce(1); if (b < 0) a else math.min(a, b) }
+      val a = once(0)
+      if (a < 0) a else { val b = once(1); if (b < 0) a else math.min(a, b) }
+    }
+
+    // setup failures (e.g. an unreadable sf dir) must still yield the
+    // JSON line with the entry in "failed", not a dead process
+    def setup[A](label: String, failed: A)(body: => A): A =
+      try body catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $label setup failed: ${e.getMessage}")
+        failed
+      }
+
+    def events(where: String, cols: String*): Array[String] =
+      Registry.table(spark, sfDir, "events").where(where)
+        .selectExpr(cols: _*).orderBy("ts").toJSON.collect()
+
+    // notifyPipeline AvailableNow drain over one queue message per
+    // capture file (the files are written once, outside the clock)
+    def streamDrain(label: String, base: java.nio.file.Path,
+                    files: Seq[(String, Array[Byte])]): Double = {
+      val data = s"$base/$label-data"
+      Files.createDirectories(Paths.get(data))
+      files.foreach { case (n, bytes) => Files.write(Paths.get(data, n), bytes) }
+      drain(label, Seq("q" -> files.map(_._1).toArray), files.length) { dir =>
+        StreamingPipeline.notifyPipeline(spark, s"$dir/q", data, s"$dir/out",
+          s"$dir/ckpt", trigger = Trigger.AvailableNow(),
+          maxMessagesPerTrigger = 16).start()
+      }
     }
 
     // flagship streaming numbers: the notifyPipeline AvailableNow drain
@@ -127,11 +160,8 @@ object Bench {
     // path and the native-binary-decode path are different workloads
     // (r4's mixed entry made the pkts/s incomparable across rounds).
     // File synthesis is setup, not measured.
-    // setup failures (e.g. an unreadable sf dir) must still yield the
-    // JSON line with the entry in "failed", not a dead process
     val perFile = 1000
-    val (jsonSecs, jsonPkts, binSecs, binPkts) = try {
-      import java.nio.file.Files
+    val (jsonSecs, jsonPkts, binSecs, binPkts) = setup("stream", (-1.0, 0, -1.0, 0)) {
       val nJson = 24
       val nPcap = 8
       val base = Files.createTempDirectory("graft_bench_stream")
@@ -147,61 +177,26 @@ object Bench {
       }
       (streamDrain("stream_json", base, jsonMsgs), raw.length,
         streamDrain("stream_binary", base, pcapMsgs), nPcap * perFile)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] stream setup failed: ${e.getMessage}")
-      (-1.0, 0, -1.0, 0)
     }
 
-    // shared admission-drain harness: docsJson → nFiles jsonl chunks →
-    // admissionPipeline AvailableNow drain; best-of-2 (stateful, so
-    // each attempt gets fresh queue/store/checkpoint dirs);
-    // fail-unmistakable (-1 + stderr naming the entry)
+    // admissionPipeline AvailableNow drain of docsJson in nFiles chunks
     def admissionDrain(label: String, docsJson: Array[String],
-                       nFiles: Int, maxFilesPerTrigger: Int): Double = {
-      import java.nio.file.{Files, Paths}
-      val base = Files.createTempDirectory(s"graft_bench_$label")
-      def drainOnce(attempt: Int): Double = {
-        val (in, sig, out, ckpt) = (s"$base/in$attempt", s"$base/sig$attempt",
-          s"$base/out$attempt", s"$base/ckpt$attempt")
-        Files.createDirectories(Paths.get(in))
-        docsJson.grouped(math.max(1, docsJson.length / nFiles)).zipWithIndex
-          .foreach { case (chunk, i) =>
-            Files.writeString(Paths.get(in, f"docs_$i%03d.jsonl"),
-              chunk.mkString("\n"))
-          }
-        val t0 = System.nanoTime()
-        try {
-          val q = graft.streaming.StreamingPipeline.admissionPipeline(
-            spark, in, sig, out, ckpt,
-            trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-            maxFilesPerTrigger = maxFilesPerTrigger).start()
-          if (q.awaitTermination(600000)) (System.nanoTime() - t0) / 1e9
-          else {
-            q.stop()
-            System.err.println(s"[bench] $label timed out")
-            -1.0
-          }
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          -1.0
-        }
+                       nFiles: Int, maxFilesPerTrigger: Int): Double =
+      drain(label, Seq("in" -> docsJson), nFiles) { dir =>
+        StreamingPipeline.admissionPipeline(spark, s"$dir/in", s"$dir/sig",
+          s"$dir/out", s"$dir/ckpt", trigger = Trigger.AvailableNow(),
+          maxFilesPerTrigger = maxFilesPerTrigger).start()
       }
-      val a = drainOnce(0)
-      if (a < 0) a else { val x = drainOnce(1); if (x < 0) a else math.min(a, x) }
-    }
 
     // continuous corpus admission (MinHash-LSH against the persisted
     // signature store, per micro-batch): docs/s over an AvailableNow
     // drain of several micro-batches — the spec proves semantics, this
     // entry tracks throughput
-    val (admSecs, admDocs) = try {
+    val (admSecs, admDocs) = setup("admission_stream", (-1.0, 0)) {
       val docs = Registry.table(spark, sfDir, "documents")
         .selectExpr("doc_id", "text", "lang", "source").toJSON.collect()
       (admissionDrain("admission_stream", docs, nFiles = 16,
         maxFilesPerTrigger = 4), docs.length)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] admission_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
     }
 
     // amortization datapoint: ONE big micro-batch (4× the corpus,
@@ -210,7 +205,7 @@ object Bench {
     // cost (per-batch MinHash + signature-store read + CC rounds + 3
     // sinks) the 1,250-doc batches above cannot amortize. Reported
     // separately as admission_stream_big / admission_big_docs_per_sec.
-    val (admBigSecs, admBigDocs) = try {
+    val (admBigSecs, admBigDocs) = setup("admission_stream_big", (-1.0, 0)) {
       val d0 = Registry.table(spark, sfDir, "documents")
         .selectExpr("doc_id", "text", "lang", "source")
       // variant id stride = max(doc_id)+1, not count(): sparse or
@@ -230,99 +225,45 @@ object Bench {
         }.reduce(_ unionByName _).toJSON.collect()
       (admissionDrain("admission_stream_big", bigDocs, nFiles = 8,
         maxFilesPerTrigger = 32), bigDocs.length) // whole corpus, ONE batch
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] admission_stream_big setup failed: ${e.getMessage}")
-      (-1.0, 0)
     }
+
+    def embeddingRows(embT: DataFrame, idOffset: Long = 0L): Array[String] =
+      embT.selectExpr(s"vec_id + $idOffset AS vec_id",
+          "CAST(label AS BIGINT) AS label",
+          "transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding")
+        .toJSON.collect()
 
     // continuous SEMANTIC admission (SRP-bucket store + exact-cosine
     // verify per micro-batch, r15): vectors/s over an AvailableNow
-    // drain of several micro-batches; fresh dirs per attempt, best-of-2
-    val (semSecs, semVecs) = try {
+    // drain of several micro-batches
+    val (semSecs, semVecs) = setup("semantic_admission_stream", (-1.0, 0)) {
       val embT = Registry.table(spark, sfDir, "embeddings")
       val dim = graft.analytics.Similarity.embeddingDim(embT)
-      val vecs = embT.selectExpr("vec_id", "CAST(label AS BIGINT) AS label",
-          "transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding")
-        .toJSON.collect()
-      import java.nio.file.{Files, Paths}
-      val base = Files.createTempDirectory("graft_bench_semantic_admission")
-      def drainOnce(attempt: Int): Double = {
-        val (in, st, out, ckpt) = (s"$base/in$attempt", s"$base/store$attempt",
-          s"$base/out$attempt", s"$base/ckpt$attempt")
-        Files.createDirectories(Paths.get(in))
-        vecs.grouped(math.max(1, vecs.length / 16)).zipWithIndex.foreach {
-          case (chunk, i) =>
-            Files.writeString(Paths.get(in, f"vecs_$i%03d.jsonl"),
-              chunk.mkString("\n"))
-        }
-        val t0 = System.nanoTime()
-        try {
-          val q = graft.streaming.StreamingPipeline.semanticAdmissionPipeline(
-            spark, in, st, out, ckpt,
-            trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-            maxFilesPerTrigger = 4, tau = 0.9, nBits = 8, dim = dim).start()
-          if (q.awaitTermination(600000)) (System.nanoTime() - t0) / 1e9
-          else { q.stop()
-            System.err.println("[bench] semantic_admission_stream timed out"); -1.0 }
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[bench] semantic_admission_stream failed: ${e.getMessage}")
-          -1.0
-        }
-      }
-      val a = drainOnce(0)
-      (if (a < 0) a
-       else { val x = drainOnce(1); if (x < 0) a else math.min(a, x) },
-        vecs.length)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] semantic_admission_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
+      val vecs = embeddingRows(embT)
+      (drain("semantic_admission_stream", Seq("in" -> vecs), 16) { dir =>
+        StreamingPipeline.semanticAdmissionPipeline(spark, s"$dir/in",
+          s"$dir/store", s"$dir/out", s"$dir/ckpt",
+          trigger = Trigger.AvailableNow(),
+          maxFilesPerTrigger = 4, tau = 0.9, nBits = 8, dim = dim).start()
+      }, vecs.length)
     }
 
     // continuous ANN index maintenance (frozen-model delta encode,
     // r15 second wave): vectors/s over an AvailableNow drain of the
     // whole embeddings table. The index TRAIN sits OUTSIDE the timed
     // window — train-once-search-many; the steady-state per-batch
-    // encode + delta write is the cost being priced. Best-of-2 drains.
-    val (idxmSecs, idxmVecs) = try {
+    // encode + delta write is the cost being priced.
+    val (idxmSecs, idxmVecs) = setup("index_maintenance_stream", (-1.0, 0)) {
       val embT = Registry.table(spark, sfDir, "embeddings")
-      val vecs = embT.selectExpr("vec_id", "CAST(label AS BIGINT) AS label",
-          "transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding")
-        .toJSON.collect()
-      import java.nio.file.{Files, Paths}
-      val base = Files.createTempDirectory("graft_bench_index_maint")
-      val idx = s"$base/index"
+      val vecs = embeddingRows(embT)
+      val idx = s"${Files.createTempDirectory("graft_bench_index_maint")}/index"
       graft.analytics.Similarity.writeIvfPq(embT, idx,
         nCells = 8, m = 16, ksub = 32, rounds = 3)
-      def drainOnce(attempt: Int): Double = {
-        val (in, delta, ckpt) = (s"$base/in$attempt",
-          s"$base/delta$attempt", s"$base/ckpt$attempt")
-        Files.createDirectories(Paths.get(in))
-        vecs.grouped(math.max(1, vecs.length / 16)).zipWithIndex.foreach {
-          case (chunk, i) =>
-            Files.writeString(Paths.get(in, f"vecs_$i%03d.jsonl"),
-              chunk.mkString("\n"))
-        }
-        val t0 = System.nanoTime()
-        try {
-          val q = graft.streaming.StreamingPipeline.indexMaintenancePipeline(
-            spark, in, idx, delta, ckpt,
-            trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-            maxFilesPerTrigger = 4).start()
-          if (q.awaitTermination(600000)) (System.nanoTime() - t0) / 1e9
-          else { q.stop()
-            System.err.println("[bench] index_maintenance_stream timed out"); -1.0 }
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[bench] index_maintenance_stream failed: ${e.getMessage}")
-          -1.0
-        }
-      }
-      val a = drainOnce(0)
-      (if (a < 0) a
-       else { val x = drainOnce(1); if (x < 0) a else math.min(a, x) },
-        vecs.length)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] index_maintenance_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
+      (drain("index_maintenance_stream", Seq("in" -> vecs), 16) { dir =>
+        StreamingPipeline.indexMaintenancePipeline(spark, s"$dir/in", idx,
+          s"$dir/delta", s"$dir/ckpt", trigger = Trigger.AvailableNow(),
+          maxFilesPerTrigger = 4).start()
+      }, vecs.length)
     }
 
     // maintained-search cost vs delta LIFETIME batches — the datapoint
@@ -331,13 +272,10 @@ object Bench {
     // the delta). 16 single-file micro-batches build a 16-partition
     // delta; the IDENTICAL ivfPqTopK probe is timed (best-of-2) over it
     // before and after the atomic-swap fold (16 partitions → 2).
-    val (msPreSecs, msDuringSecs, msPostSecs) = try {
+    val (msPreSecs, msDuringSecs, msPostSecs) =
+        setup("maintained_search", (-1.0, -1.0, -1.0)) {
       val embT = Registry.table(spark, sfDir, "embeddings")
-      val vecs = embT.selectExpr("vec_id + 8000000 AS vec_id",
-          "CAST(label AS BIGINT) AS label",
-          "transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding")
-        .toJSON.collect()
-      import java.nio.file.{Files, Paths}
+      val vecs = embeddingRows(embT, idOffset = 8000000L)
       val base = Files.createTempDirectory("graft_bench_maint_compact")
       val idx = s"$base/index"
       graft.analytics.Similarity.writeIvfPq(embT, idx,
@@ -350,9 +288,9 @@ object Bench {
           Files.writeString(f, chunk.mkString("\n"))
           f.toFile.setLastModified(1700000000000L + i * 2000L)
       }
-      val q = graft.streaming.StreamingPipeline.indexMaintenancePipeline(
+      val q = StreamingPipeline.indexMaintenancePipeline(
         spark, in, idx, delta, ckpt,
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+        trigger = Trigger.AvailableNow(),
         maxFilesPerTrigger = 1).start()
       require(q.awaitTermination(600000), "maintenance drain timed out")
       def searchOnce(): Double = {
@@ -370,7 +308,7 @@ object Bench {
       // publishes its segment and swaps the manifest concurrently
       @volatile var compactErr: Throwable = null
       val folder = new Thread(() =>
-        try graft.streaming.StreamingPipeline.compactMaintainedDelta(spark, delta)
+        try StreamingPipeline.compactMaintainedDelta(spark, delta)
         catch { case e: Throwable => compactErr = e })
       folder.start()
       val during = searchOnce()
@@ -378,12 +316,9 @@ object Bench {
       if (compactErr != null) throw compactErr
       // second maintenance entry sweeps the retired partitions, so the
       // "compacted" probe measures the steady state
-      graft.streaming.StreamingPipeline.compactMaintainedDelta(spark, delta)
+      StreamingPipeline.compactMaintainedDelta(spark, delta)
       val post = math.min(searchOnce(), searchOnce())
       (pre, during, post)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] maintained_search setup failed: ${e.getMessage}")
-      (-1.0, -1.0, -1.0)
     }
 
     // streaming twins with DataFrame→DataFrame shape (anomalyAlerts,
@@ -391,376 +326,198 @@ object Bench {
     // noop sink. Inputs are written in ts order so the watermark (and
     // therefore window closure + state eviction) advances with the
     // batch sequence exactly as in production; throughput = rows/s.
-    // widthFloor 2 for classic stateful ops; 8 for transformWithState
-    // drains (per-ROW handlers need parallel width — see
-    // StreamingPipeline.withStreamShuffleWidth)
-    def twinDrain(label: String, rows: Array[String],
-                  schema: org.apache.spark.sql.types.StructType,
+    // `schema` is a DDL string. Every twin runs under a batch-scoped
+    // stateful shuffle width derived from the drain's admission unit
+    // (maxFilesPerTrigger), never the core count — floor 2 for classic
+    // stateful ops, 8 for transformWithState drains (per-ROW handlers
+    // need parallel width): see StreamingPipeline.withStreamShuffleWidth
+    // for the measured per-batch fixed-cost evidence.
+    def twinDrain(label: String, rows: Array[String], schema: String,
                   nFiles: Int, maxFilesPerTrigger: Int,
-                  widthFloor: Int = 2)
-                 (xform: org.apache.spark.sql.DataFrame
-                    => org.apache.spark.sql.DataFrame): Double = {
-      import java.nio.file.{Files, Paths}
-      val base = Files.createTempDirectory(s"graft_bench_$label")
-      def drainOnce(attempt: Int): Double = {
-        val (in, ckpt) = (s"$base/in$attempt", s"$base/ckpt$attempt")
-        Files.createDirectories(Paths.get(in))
-        rows.grouped(math.max(1, rows.length / nFiles)).zipWithIndex.foreach {
-          case (chunk, i) =>
-            Files.writeString(Paths.get(in, f"part_$i%03d.jsonl"),
-              chunk.mkString("\n"))
-        }
-        val t0 = System.nanoTime()
-        // batch-scoped stateful shuffle width (the admissionPipeline
-        // discipline, r18 opt round): width derives from the drain's
-        // admission unit (maxFilesPerTrigger), never the core count —
-        // see StreamingPipeline.withStreamShuffleWidth for the
-        // measured 3–6× per-batch fixed-cost evidence
-        try graft.streaming.StreamingPipeline
-          .withStreamShuffleWidth(spark, maxFilesPerTrigger, widthFloor) {
+                  widthFloor: Int = 2)(xform: DataFrame => DataFrame): Double =
+      StreamingPipeline.withStreamShuffleWidth(spark, maxFilesPerTrigger, widthFloor) {
+        drain(label, Seq("in" -> rows), nFiles) { dir =>
           val stream = spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", maxFilesPerTrigger).json(in)
-          val q = xform(stream).writeStream.format("noop")
-            .outputMode("append").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .option("maxFilesPerTrigger", maxFilesPerTrigger).json(s"$dir/in")
+          xform(stream).writeStream.format("noop")
+            .outputMode("append").option("checkpointLocation", s"$dir/ckpt")
+            .trigger(Trigger.AvailableNow())
             .start()
-          if (q.awaitTermination(600000)) (System.nanoTime() - t0) / 1e9
-          else { q.stop(); System.err.println(s"[bench] $label timed out"); -1.0 }
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          -1.0
         }
       }
-      val a = drainOnce(0)
-      if (a < 0) a else { val x = drainOnce(1); if (x < 0) a else math.min(a, x) }
-    }
-    import org.apache.spark.sql.types.{StructType, StructField, TimestampType, StringType}
 
     // streaming EWMA anomaly twin: per-label windowed counts →
     // flatMapGroupsWithState baseline/ratio labels over closed windows
-    val (anomSecs, anomEvents) = try {
-      val rows = Registry.table(spark, sfDir, "events")
-        .where("event_type IS NOT NULL")
-        .selectExpr("ts", "event_type AS label")
-        .orderBy("ts").toJSON.collect()
-      val schema = StructType(Seq(StructField("ts", TimestampType),
-        StructField("label", StringType)))
-      (twinDrain("anomaly_stream", rows, schema,
+    val (anomSecs, anomEvents) = setup("anomaly_stream", (-1.0, 0)) {
+      val rows = events("event_type IS NOT NULL", "ts", "event_type AS label")
+      (twinDrain("anomaly_stream", rows, "ts TIMESTAMP, label STRING",
         nFiles = 16, maxFilesPerTrigger = 2) { df =>
-        graft.streaming.StreamingPipeline.anomalyAlerts(
-          df, "ts", "label", windowSeconds = 3600)
+        StreamingPipeline.anomalyAlerts(df, "ts", "label", windowSeconds = 3600)
       }, rows.length)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] anomaly_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
     }
 
     // trend-aware Holt capacity alerts over the same closed-window
     // fold (per-label level+trend dot products, horizons emitted)
-    val (holtSecs, holtEvents) = try {
-      val rows = Registry.table(spark, sfDir, "events")
-        .where("event_type IS NOT NULL")
-        .selectExpr("ts", "event_type AS label")
-        .orderBy("ts").toJSON.collect()
-      val schema = StructType(Seq(StructField("ts", TimestampType),
-        StructField("label", StringType)))
-      (twinDrain("holt_alert_stream", rows, schema,
+    val (holtSecs, holtEvents) = setup("holt_alert_stream", (-1.0, 0)) {
+      val rows = events("event_type IS NOT NULL", "ts", "event_type AS label")
+      (twinDrain("holt_alert_stream", rows, "ts TIMESTAMP, label STRING",
         nFiles = 16, maxFilesPerTrigger = 2) { df =>
-        graft.streaming.StreamingPipeline.holtCapacityAlerts(
+        StreamingPipeline.holtCapacityAlerts(
           df, "ts", "label", windowSeconds = 3600, capacity = 1000.0,
           lookback = 7)
       }, rows.length)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] holt_alert_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
     }
 
     // streaming MG-sketch trending-tokens twin: token explode →
     // batch-local MG(sketchK) pre-sketch → per-window sketch state;
     // synthetic ts spreads the corpus over 10 closed 60 s windows
-    val (trendSecs, trendDocs) = try {
+    val (trendSecs, trendDocs) = setup("trending_stream_sketch", (-1.0, 0)) {
       val rows = Registry.table(spark, sfDir, "documents")
         .where("text IS NOT NULL")
         .selectExpr("timestamp_seconds(1700000000 + doc_id % 600) AS ts",
           "text")
         .orderBy("ts", "text").toJSON.collect()
-      val schema = StructType(Seq(StructField("ts", TimestampType),
-        StructField("text", StringType)))
-      (twinDrain("trending_stream_sketch", rows, schema,
+      (twinDrain("trending_stream_sketch", rows, "ts TIMESTAMP, text STRING",
         nFiles = 8, maxFilesPerTrigger = 2) { df =>
-        graft.streaming.StreamingPipeline.trendingTokensSketch(
+        StreamingPipeline.trendingTokensSketch(
           df, "ts", "text", windowSeconds = 60, sketchK = 30, topK = 10)
       }, rows.length)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] trending_stream_sketch setup failed: ${e.getMessage}")
-      (-1.0, 0)
     }
 
     // native session_window streaming twin: per-user session state
     // merge + watermark-close emission
-    val (sessSecs, sessEvents) = try {
-      val rows = Registry.table(spark, sfDir, "events")
-        .where("user_id IS NOT NULL")
-        .selectExpr("ts", "user_id")
-        .orderBy("ts").toJSON.collect()
-      val schema = StructType(Seq(StructField("ts", TimestampType),
-        StructField("user_id", org.apache.spark.sql.types.LongType)))
-      (twinDrain("session_stream", rows, schema,
+    val (sessSecs, sessEvents) = setup("session_stream", (-1.0, 0)) {
+      val rows = events("user_id IS NOT NULL", "ts", "user_id")
+      (twinDrain("session_stream", rows, "ts TIMESTAMP, user_id BIGINT",
         nFiles = 16, maxFilesPerTrigger = 2) { df =>
-        graft.streaming.StreamingPipeline.sessionSummaryPipeline(
+        StreamingPipeline.sessionSummaryPipeline(
           df, "ts", "user_id", gapSeconds = 1800)
       }, rows.length)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] session_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
+    }
+
+    // two correlated file streams (left, right), each in 8 chunks,
+    // drained by one query under a width derived from the ONE mft that
+    // also feeds the source option (so the two cannot silently diverge)
+    def pairDrain(label: String, left: Array[String], right: Array[String],
+                  schema: String, widthFloor: Int = 2)
+                 (join: (DataFrame, DataFrame) => DataFrame): Double = {
+      val mft = 2
+      StreamingPipeline.withStreamShuffleWidth(spark, mft, widthFloor) {
+        drain(label, Seq("l" -> left, "r" -> right), 8) { dir =>
+          def src(sub: String) = spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", mft).json(s"$dir/$sub")
+          join(src("l"), src("r")).writeStream.format("noop")
+            .outputMode("append").option("checkpointLocation", s"$dir/ckpt")
+            .trigger(Trigger.AvailableNow())
+            .start()
+        }
+      }
     }
 
     // stream–stream interval join twin: clicks ⋈ purchases on user_id
     // within 6 h — TWO correlated file streams (the processor's
     // notification+object shape), both watermarked, state bounded by
-    // the horizon; throughput = (left+right rows)/s drained.
-    val (ijSecs, ijEvents) = try {
-      import java.nio.file.{Files, Paths}
-      val ev = Registry.table(spark, sfDir, "events")
-        .where("user_id IS NOT NULL")
-      def rowsOf(kind: String): Array[String] = ev
-        .where(s"event_type = '$kind'")
-        .selectExpr("ts", "user_id", "event_id")
-        .orderBy("ts").toJSON.collect()
+    // the horizon; throughput = (left+right rows)/s drained. The
+    // two-sided state is keyed on user_id — width-neutral results.
+    val (ijSecs, ijEvents) = setup("interval_join_stream", (-1.0, 0)) {
+      def rowsOf(kind: String) = events(
+        s"user_id IS NOT NULL AND event_type = '$kind'", "ts", "user_id", "event_id")
       val (lRows, rRows) = (rowsOf("click"), rowsOf("purchase"))
-      val schema = StructType(Seq(StructField("ts", TimestampType),
-        StructField("user_id", org.apache.spark.sql.types.LongType),
-        StructField("event_id", org.apache.spark.sql.types.LongType)))
-      val base = Files.createTempDirectory("graft_bench_interval_join")
-      def drainOnce(attempt: Int): Double = {
-        val (inL, inR, ckpt) =
-          (s"$base/l$attempt", s"$base/r$attempt", s"$base/ckpt$attempt")
-        for ((dir, rows) <- Seq(inL -> lRows, inR -> rRows)) {
-          Files.createDirectories(Paths.get(dir))
-          rows.grouped(math.max(1, rows.length / 8)).zipWithIndex.foreach {
-            case (chunk, i) =>
-              Files.writeString(Paths.get(dir, f"part_$i%03d.jsonl"),
-                chunk.mkString("\n"))
-          }
-        }
-        val t0 = System.nanoTime()
-        // batch-scoped stateful width (see twinDrain's note): the
-        // two-sided state is keyed on user_id — width-neutral results.
-        // ONE val feeds both the source option and the width so they
-        // cannot silently diverge (the width must derive from the
-        // admission unit)
-        val mft = 2
-        try graft.streaming.StreamingPipeline.withStreamShuffleWidth(spark, mft) {
-          def src(dir: String) = spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", mft).json(dir)
-          val q = graft.streaming.StreamingPipeline.intervalJoinPipeline(
-              src(inL), "ts", src(inR), "ts", "user_id", 6L * 3600L)
-            .writeStream.format("noop")
-            .outputMode("append").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          if (q.awaitTermination(600000)) (System.nanoTime() - t0) / 1e9
-          else { q.stop()
-            System.err.println("[bench] interval_join_stream timed out"); -1.0 }
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[bench] interval_join_stream failed: ${e.getMessage}")
-          -1.0
-        }
-      }
-      val a = drainOnce(0)
-      (if (a < 0) a
-       else { val x = drainOnce(1); if (x < 0) a else math.min(a, x) },
-        lRows.length + rRows.length)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] interval_join_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
+      (pairDrain("interval_join_stream", lRows, rRows,
+        "ts TIMESTAMP, user_id BIGINT, event_id BIGINT") { (l, r) =>
+        StreamingPipeline.intervalJoinPipeline(l, "ts", r, "ts", "user_id", 6L * 3600L)
+      }, lRows.length + rRows.length)
     }
 
-    // RocksDB provider save/set/restore shared by every TWS drain.
-    // Changelog checkpointing rides along (r18 opt round): the default
-    // commit uploads a FULL RocksDB snapshot per store per batch —
-    // pure per-batch fixed cost that only grows with checkpoint
-    // round-trips at production scale (object-store checkpoints);
-    // changelog mode commits the per-batch delta and amortizes
-    // snapshots into background maintenance. Measured on the quota
-    // drain (sf0.1, local[32], best-of-2): 8.1 → 5.7 s at width 8,
-    // 25.2 → 13.4 s at width 32. State contents are identical — the
-    // changelog replays to the same store.
-    def withRocksDbProvider[A](f: => A): A =
-      graft.streaming.StreamingPipeline.withRocksDbStateStore(spark)(f)
-
     // transformWithState hard-quota drain: first-N per (type, minute
-    // window); RocksDB provider required by the operator — set for the
-    // drain, restored after
-    val (quotaSecs, quotaEvents) = try {
-      withRocksDbProvider {
-        val rows = Registry.table(spark, sfDir, "events")
-          .where("event_type IS NOT NULL AND event_id IS NOT NULL")
-          .selectExpr("ts", "event_type", "event_id")
-          .orderBy("ts").toJSON.collect()
-        val schema = StructType(Seq(StructField("ts", TimestampType),
-          StructField("event_type", StringType),
-          StructField("event_id", org.apache.spark.sql.types.LongType)))
-        (twinDrain("quota_stream", rows, schema,
+    // window); RocksDB provider (+ changelog checkpointing) required by
+    // the operator — set for the drain, restored after
+    val (quotaSecs, quotaEvents) = setup("quota_stream", (-1.0, 0)) {
+      StreamingPipeline.withRocksDbStateStore(spark) {
+        val rows = events("event_type IS NOT NULL AND event_id IS NOT NULL",
+          "ts", "event_type", "event_id")
+        (twinDrain("quota_stream", rows,
+          "ts TIMESTAMP, event_type STRING, event_id BIGINT",
           nFiles = 16, maxFilesPerTrigger = 2, widthFloor = 8) { df =>
-          graft.streaming.StreamingPipeline.quotaLimitPipeline(
-            df, windowSeconds = 60, cap = 3)
+          StreamingPipeline.quotaLimitPipeline(df, windowSeconds = 60, cap = 3)
         }, rows.length)
       }
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] quota_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
     }
 
     // transformWithState streaming funnel drain (view→click→purchase,
     // 2-day gap — the batch funnel_steps parameters); RocksDB required
-    val (funSecs, funEvents) = try {
-      withRocksDbProvider {
-        val rows = Registry.table(spark, sfDir, "events")
-          .where("user_id IS NOT NULL AND " +
-            "event_type IN ('view','click','purchase')")
-          .selectExpr("user_id", "ts", "event_type")
-          .orderBy("ts").toJSON.collect()
-        val schema = StructType(Seq(
-          StructField("user_id", org.apache.spark.sql.types.LongType),
-          StructField("ts", TimestampType),
-          StructField("event_type", StringType)))
-        (twinDrain("funnel_stream", rows, schema,
+    val (funSecs, funEvents) = setup("funnel_stream", (-1.0, 0)) {
+      StreamingPipeline.withRocksDbStateStore(spark) {
+        val rows = events("user_id IS NOT NULL AND " +
+          "event_type IN ('view','click','purchase')", "user_id", "ts", "event_type")
+        (twinDrain("funnel_stream", rows,
+          "user_id BIGINT, ts TIMESTAMP, event_type STRING",
           nFiles = 16, maxFilesPerTrigger = 2, widthFloor = 8) { df =>
-          graft.streaming.StreamingPipeline.funnelPipeline(
+          StreamingPipeline.funnelPipeline(
             df, Seq("view", "click", "purchase"), 2L * 86400L)
         }, rows.length)
       }
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] funnel_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
     }
 
     // chained stateful drain: dedup-within-watermark -> windowed count
     // in ONE streaming plan (two stateful operators, watermark
     // propagated through the dedup); 1 h delay keeps real dedup state
-    val (novSecs, novEvents) = try {
-      val rows = Registry.table(spark, sfDir, "events")
-        .where("user_id IS NOT NULL AND event_type IS NOT NULL")
-        .selectExpr("ts", "user_id", "event_type")
-        .orderBy("ts").toJSON.collect()
-      val schema = StructType(Seq(StructField("ts", TimestampType),
-        StructField("user_id", org.apache.spark.sql.types.LongType),
-        StructField("event_type", StringType)))
-      (twinDrain("novelty_stream", rows, schema,
+    val (novSecs, novEvents) = setup("novelty_stream", (-1.0, 0)) {
+      val rows = events("user_id IS NOT NULL AND event_type IS NOT NULL",
+        "ts", "user_id", "event_type")
+      (twinDrain("novelty_stream", rows,
+        "ts TIMESTAMP, user_id BIGINT, event_type STRING",
         nFiles = 16, maxFilesPerTrigger = 2) { df =>
-        graft.streaming.StreamingPipeline.noveltyPipeline(
+        StreamingPipeline.noveltyPipeline(
           df, "ts", Seq("user_id", "event_type"), "event_type",
           windowSeconds = 3600, watermarkDelay = "1 hour")
       }, rows.length)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] novelty_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
     }
 
     // transformWithState SCD2 drain: buffer-until-watermark version
     // builder per user; RocksDB required by the operator
-    val (scd2Secs, scd2Events) = try {
-      withRocksDbProvider {
-        val rows = Registry.table(spark, sfDir, "events")
-          .where("user_id IS NOT NULL AND ts IS NOT NULL")
-          .selectExpr("user_id", "ts", "event_id", "event_type")
-          .orderBy("ts").toJSON.collect()
-        val schema = StructType(Seq(
-          StructField("user_id", org.apache.spark.sql.types.LongType),
-          StructField("ts", TimestampType),
-          StructField("event_id", org.apache.spark.sql.types.LongType),
-          StructField("event_type", StringType)))
-        (twinDrain("scd2_stream", rows, schema,
+    val (scd2Secs, scd2Events) = setup("scd2_stream", (-1.0, 0)) {
+      StreamingPipeline.withRocksDbStateStore(spark) {
+        val rows = events("user_id IS NOT NULL AND ts IS NOT NULL",
+          "user_id", "ts", "event_id", "event_type")
+        (twinDrain("scd2_stream", rows,
+          "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING",
           nFiles = 16, maxFilesPerTrigger = 2, widthFloor = 8) { df =>
-          graft.streaming.StreamingPipeline.scd2Pipeline(df)
+          StreamingPipeline.scd2Pipeline(df)
         }, rows.length)
       }
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] scd2_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
     }
 
     // transformWithState as-of join drain: purchases enriched with the
     // nearest at-or-before view per user (1-day tolerance) — TWO
     // correlated file streams, O(1) compacted ref state per key;
     // RocksDB required by the operator
-    val (asofSecs, asofEvents) = try {
-      withRocksDbProvider {
-        import java.nio.file.{Files, Paths}
-        val ev = Registry.table(spark, sfDir, "events")
-          .where("user_id IS NOT NULL AND ts IS NOT NULL")
-        def rowsOf(kind: String): Array[String] = ev
-          .where(s"event_type = '$kind'")
-          .selectExpr("ts", "user_id", "event_id")
-          .orderBy("ts").toJSON.collect()
+    val (asofSecs, asofEvents) = setup("asof_stream", (-1.0, 0)) {
+      StreamingPipeline.withRocksDbStateStore(spark) {
+        def rowsOf(kind: String) = events(
+          s"user_id IS NOT NULL AND ts IS NOT NULL AND event_type = '$kind'",
+          "ts", "user_id", "event_id")
         val (pRows, rRows) = (rowsOf("purchase"), rowsOf("view"))
-        val schema = StructType(Seq(StructField("ts", TimestampType),
-          StructField("user_id", org.apache.spark.sql.types.LongType),
-          StructField("event_id", org.apache.spark.sql.types.LongType)))
-        val base = Files.createTempDirectory("graft_bench_asof")
-        def drainOnce(attempt: Int): Double = {
-          val (inP, inR, ckpt) =
-            (s"$base/p$attempt", s"$base/r$attempt", s"$base/ckpt$attempt")
-          for ((dir, rows) <- Seq(inP -> pRows, inR -> rRows)) {
-            Files.createDirectories(Paths.get(dir))
-            rows.grouped(math.max(1, rows.length / 8)).zipWithIndex.foreach {
-              case (chunk, i) =>
-                Files.writeString(Paths.get(dir, f"part_$i%03d.jsonl"),
-                  chunk.mkString("\n"))
-            }
-          }
-          val t0 = System.nanoTime()
-          // batch-scoped stateful width (see twinDrain's note); one
-          // val feeds both the option and the width; TWS floor 8
-          val mft = 2
-          try graft.streaming.StreamingPipeline.withStreamShuffleWidth(spark, mft, floor = 8) {
-            def src(dir: String) = spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", mft).json(dir)
-            val q = graft.streaming.StreamingPipeline.asofPipeline(
-                src(inP), src(inR), watermarkDelay = "6 hours",
-                toleranceSeconds = 86400L)
-              .writeStream.format("noop")
-              .outputMode("append").option("checkpointLocation", ckpt)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            if (q.awaitTermination(600000)) (System.nanoTime() - t0) / 1e9
-            else { q.stop()
-              System.err.println("[bench] asof_stream timed out"); -1.0 }
-          } catch { case NonFatal(e) =>
-            System.err.println(s"[bench] asof_stream failed: ${e.getMessage}")
-            -1.0
-          }
-        }
-        val a = drainOnce(0)
-        (if (a < 0) a
-         else { val x = drainOnce(1); if (x < 0) a else math.min(a, x) },
-          pRows.length + rRows.length)
+        (pairDrain("asof_stream", pRows, rRows,
+          "ts TIMESTAMP, user_id BIGINT, event_id BIGINT", widthFloor = 8) { (p, r) =>
+          StreamingPipeline.asofPipeline(p, r, watermarkDelay = "6 hours",
+            toleranceSeconds = 86400L)
+        }, pRows.length + rRows.length)
       }
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] asof_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
     }
 
     // THREE chained stateful operators: day-grain dedup -> sliding
     // 7d/1d window expand + (window,label,user) agg (the structural
     // dedup) -> (window,label) count
-    val (rdSecs, rdEvents) = try {
-      val rows = Registry.table(spark, sfDir, "events")
-        .where("user_id IS NOT NULL AND ts IS NOT NULL")
-        .selectExpr("ts", "user_id", "event_type")
-        .orderBy("ts").toJSON.collect()
-      val schema = StructType(Seq(StructField("ts", TimestampType),
-        StructField("user_id", org.apache.spark.sql.types.LongType),
-        StructField("event_type", StringType)))
-      (twinDrain("rolling_distinct_stream", rows, schema,
+    val (rdSecs, rdEvents) = setup("rolling_distinct_stream", (-1.0, 0)) {
+      val rows = events("user_id IS NOT NULL AND ts IS NOT NULL",
+        "ts", "user_id", "event_type")
+      (twinDrain("rolling_distinct_stream", rows,
+        "ts TIMESTAMP, user_id BIGINT, event_type STRING",
         nFiles = 16, maxFilesPerTrigger = 2) { df =>
-        graft.streaming.StreamingPipeline.rollingDistinctPipeline(
+        StreamingPipeline.rollingDistinctPipeline(
           df, windowDays = 7, watermarkDelay = "1 hour")
       }, rows.length)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] rolling_distinct_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
     }
 
     // the bounded-state twin of the drain above: ONE stateful
@@ -768,22 +525,15 @@ object Bench {
     // (window, label) cell vs the exact chain's per-user membership) —
     // the 100 TB dashboard runs THIS; the delta vs
     // rolling_distinct_stream is the price of exactness
-    val (rdHllSecs, rdHllEvents) = try {
-      val rows = Registry.table(spark, sfDir, "events")
-        .where("user_id IS NOT NULL AND ts IS NOT NULL")
-        .selectExpr("ts", "user_id", "event_type")
-        .orderBy("ts").toJSON.collect()
-      val schema = StructType(Seq(StructField("ts", TimestampType),
-        StructField("user_id", org.apache.spark.sql.types.LongType),
-        StructField("event_type", StringType)))
-      (twinDrain("rolling_distinct_hll_stream", rows, schema,
+    val (rdHllSecs, rdHllEvents) = setup("rolling_distinct_hll_stream", (-1.0, 0)) {
+      val rows = events("user_id IS NOT NULL AND ts IS NOT NULL",
+        "ts", "user_id", "event_type")
+      (twinDrain("rolling_distinct_hll_stream", rows,
+        "ts TIMESTAMP, user_id BIGINT, event_type STRING",
         nFiles = 16, maxFilesPerTrigger = 2) { df =>
-        graft.streaming.StreamingPipeline.rollingDistinctHllPipeline(
+        StreamingPipeline.rollingDistinctHllPipeline(
           df, windowDays = 7, watermarkDelay = "1 hour")
       }, rows.length)
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] rolling_distinct_hll_stream setup failed: ${e.getMessage}")
-      (-1.0, 0)
     }
 
     val all = results ++ Seq("stream_json" -> jsonSecs,

@@ -887,9 +887,7 @@ object Similarity {
           s"were encoded against $indexDir's current model — discard the " +
           "delta, or restore its pin file (the pipeline refuses to stamp " +
           "pre-existing unpinned codes for the same reason)")
-      val in = fs.open(pinPath)
-      val pinned = try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
+      val pinned = graft.util.StoreManifest.readPin(fs, pinPath)
       val current = ivfPqModelId(
         spark.read.parquet(s"$indexDir/cells"),
         spark.read.parquet(s"$indexDir/codebook"))

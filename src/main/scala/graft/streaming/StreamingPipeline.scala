@@ -99,20 +99,11 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val attempt = recordAttempt(spark, checkpoint, batchId)
-
-        if (attempt >= maxAttempts) {
-          // poison batch: budget exhausted — dead-letter every row of
-          // the batch (the whole "message", like the reference's DLQ
-          // topic) and commit so the stream moves on. Earlier partial
-          // attempts may have committed some sink directories before
-          // crashing on a later one — remove them so the batch's rows
-          // exist ONLY in the DLQ (no double-count on re-drive).
-          dropBatchDirs(spark, outDir, batchId, "events", "_notifications")
+        withRetryBudget(spark, checkpoint, outDir, batchId, maxAttempts) {
           batch.select(col("source_file"), col("udm_json"),
               lit("retry budget exhausted").as("dlq_reason"))
             .write.mode("overwrite").json(s"$outDir/_errors/batch_id=$batchId")
-        } else {
+        } {
           failHook(batch, batchId)
           val b = batch.cache()
           try {
@@ -134,8 +125,6 @@ object StreamingPipeline {
               .write.mode("overwrite").json(s"$outDir/_notifications/batch_id=$batchId")
           } finally b.unpersist()
         }
-        clearAttempts(spark, checkpoint, batchId)
-        ()
       }
   }
 
@@ -152,38 +141,37 @@ object StreamingPipeline {
     }
   }
 
-  /** Shared attempt accounting for the retry budget: one marker file
-    * per try under the checkpoint, recorded BEFORE processing so a
-    * mid-batch crash still consumes an attempt. Returns this attempt's
-    * 0-based number. */
-  private def recordAttempt(spark: SparkSession, checkpoint: String,
-                            batchId: Long): Int = {
+  /** The retry budget shared by [[pipeline]] and [[notifyPipeline]]:
+    * one marker file per try under the checkpoint, recorded BEFORE
+    * processing so a mid-batch crash still consumes an attempt. Once a
+    * batch has failed `maxAttempts` times it is a poison batch: earlier
+    * partial attempts may have committed some sink directories before
+    * crashing on a later one, so those are removed and `deadLetter`
+    * writes every row of the batch (the whole "message", like the
+    * reference's DLQ topic) — its rows exist ONLY in the DLQ, no
+    * double-count on re-drive. Otherwise `body` runs. Either way the
+    * markers are dropped once the batch succeeded — without this a
+    * long-running stream accumulates one marker dir per batch forever
+    * and pays an fs listing per batch. A crash BETWEEN sink success and
+    * that cleanup resets the retried batch's budget — harmless: sinks
+    * are idempotent overwrite, so the retry converges. */
+  private def withRetryBudget(spark: SparkSession, checkpoint: String,
+                              outDir: String, batchId: Long, maxAttempts: Int)
+                             (deadLetter: => Unit)(body: => Unit): Unit = {
     import org.apache.hadoop.fs.Path
     val attemptsDir = new Path(s"$checkpoint/graft_attempts/batch-$batchId")
     val fs = attemptsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val attempt = if (fs.exists(attemptsDir)) fs.listStatus(attemptsDir).length else 0
     fs.mkdirs(attemptsDir)
     fs.create(new Path(attemptsDir, s"attempt-$attempt"), true).close()
-    attempt
+    if (attempt >= maxAttempts) {
+      dropBatchDirs(spark, outDir, batchId, "events", "_notifications")
+      deadLetter
+    } else body
+    fs.delete(attemptsDir, true)
   }
 
-  /** Drop a batch's attempt markers once its sinks committed — without
-    * this a long-running stream accumulates one marker dir per batch
-    * forever (unbounded small-file growth under the checkpoint) and
-    * pays an fs listing per batch. A crash BETWEEN sink success and
-    * this cleanup resets the retried batch's budget — harmless: sinks
-    * are idempotent overwrite, so the retry converges. */
-  private def clearAttempts(spark: SparkSession, checkpoint: String,
-                            batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val attemptsDir = new Path(s"$checkpoint/graft_attempts/batch-$batchId")
-    val fs = attemptsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(attemptsDir)) fs.delete(attemptsDir, true)
-  }
-
-  /** Batch-scoped stateful shuffle width for a PURE-streaming drain —
-    * [[admissionPipeline]]'s batch-width discipline extended to plans
-    * whose stateful exchanges cannot be narrowed inside foreachBatch:
+  /** Batch-scoped stateful shuffle width for a PURE-streaming drain:
     * a stateful streaming query's shuffle width is FIXED at first
     * start (baked into the checkpoint's offset metadata), so the
     * session default (sized for corpus-scale batch jobs) pins
@@ -212,7 +200,11 @@ object StreamingPipeline {
     *
     * `body` must contain the `.start()` (the conf is read at query
     * start); the previous width is restored after `body` returns —
-    * drains are serial per session, the admissionPipeline contract. */
+    * drains are serial per session. This is the ONLY writer of the
+    * width; foreachBatch bodies write none: a batch-derived plan runs
+    * under the query's cloned session, which never sees a later write
+    * to `spark`, and AQE sizes batch-local shuffles from measured map
+    * output (tools/fb_width_probe.scala). */
   def withStreamShuffleWidth[A](spark: SparkSession,
                                 maxFilesPerTrigger: Int,
                                 floor: Int = 2)(body: => A): A = {
@@ -220,16 +212,12 @@ object StreamingPipeline {
     // floor 2 for the CLASSIC stateful operators (windowed agg / dedup
     // / session / FMGWS): a partial aggregate runs BEFORE their
     // stateful exchange, so only GROUPS reach the state store and
-    // instance count is everything. Two floors are NOT 2:
-    //  - transformWithState drains pass floor 8 — TWS runs its handler
-    //    PER ROW (nothing pre-aggregates ahead of its exchange), so
-    //    state work needs parallel width: at floor 2 the full-bench
-    //    quota drain regressed 5.1 → 7.9–9.0 s and scd2 4.2 → 6.4–6.9
-    //    across two runs (r19), while the classic drains improved
-    //    1.2–1.8×.
-    //  - the foreachBatch pipelines keep their own inline floor 8 —
-    //    their batch-local exchanges carry real per-batch compute
-    //    (minhash/encode) and measurably lose below 8 (r19 probe).
+    // instance count is everything. transformWithState drains pass
+    // floor 8 — TWS runs its handler PER ROW (nothing pre-aggregates
+    // ahead of its exchange), so state work needs parallel width: at
+    // floor 2 the full-bench quota drain regressed 5.1 → 7.9–9.0 s and
+    // scd2 4.2 → 6.4–6.9 across two runs (r19), while the classic
+    // drains improved 1.2–1.8×.
     spark.conf.set("spark.sql.shuffle.partitions",
       math.max(floor, maxFilesPerTrigger).toString)
     try body
@@ -291,23 +279,36 @@ object StreamingPipeline {
     * batch dirs that the replayed batch overwrites wholesale (the
     * at-least-once contract is per-sink idempotence, never
     * inter-sink ordering — the one order-bearing write, the notify
-    * pipeline's `_latency` stamp, stays strictly AFTER this call). */
-  private def runSinksConcurrently(sinks: Seq[() => Unit]): Unit =
+    * pipeline's `_latency` stamp, stays strictly AFTER this call).
+    *
+    * The contract holds under interruption too (a query stop interrupts
+    * the micro-batch thread): the outstanding sinks are cancelled, the
+    * call waits until every sink thread has returned, re-sets the
+    * interrupt flag and only then rethrows. */
+  private[graft] def runSinksConcurrently(sinks: Seq[() => Unit]): Unit =
     if (sinks.sizeIs <= 1) sinks.foreach(_())
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(sinks.size)
+      import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+      val pool = Executors.newFixedThreadPool(sinks.size)
       try {
         val futures = sinks.map { s =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = s()
-          })
+          pool.submit(new Callable[Unit] { def call(): Unit = s() })
         }
-        val failures = futures.flatMap { f =>
-          try { f.get(); None }
-          catch {
-            case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+        val failures =
+          try futures.flatMap { f =>
+            try { f.get(); None }
+            catch { case e: ExecutionException => Some(e.getCause) }
+          } catch {
+            case e: InterruptedException =>
+              futures.foreach(_.cancel(true))
+              pool.shutdown()
+              var done = false
+              while (!done)
+                try done = pool.awaitTermination(1, TimeUnit.SECONDS)
+                catch { case _: InterruptedException => () }
+              Thread.currentThread().interrupt()
+              throw e
           }
-        }
         failures.foreach(e => throw e)
       } finally pool.shutdown()
     }
@@ -364,25 +365,11 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batch-scoped shuffle width (the admissionPipeline rationale,
-        // r19): the only batch-local exchange is the per-file counts
-        // groupBy — at the session default it scheduled (cores) tasks
-        // for a ≤maxMessagesPerTrigger-file batch. The width derives
-        // from the ADMISSION UNIT (messages per trigger); the decode
-        // itself is narrow (scan partitions) and unaffected.
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          math.max(8, maxMessagesPerTrigger).toString)
-        try {
-        val attempt = recordAttempt(spark, checkpoint, batchId)
-        if (attempt >= maxAttempts) {
-          // see pipeline(): clear partial-attempt sink output so the
-          // dead-lettered batch's rows live only in the DLQ
-          dropBatchDirs(spark, outDir, batchId, "events", "_notifications")
+        withRetryBudget(spark, checkpoint, outDir, batchId, maxAttempts) {
           batch.select(col("message_id"), col("payload"),
               lit("retry budget exhausted").as("dlq_reason"))
             .write.mode("overwrite").json(s"$outDir/_errors/batch_id=$batchId")
-        } else {
+        } {
           failHook(batch, batchId)
           val msgs = batch.select("message_id", "payload", "publish_ms").collect()
             .map(r => (r.getString(0), r.getString(1).trim, r.getLong(2)))
@@ -457,11 +444,6 @@ object StreamingPipeline {
               // driver-local rows was pure per-batch fixed cost.
               // spark.read.json reads the dir identically.
               val commitMs = System.currentTimeMillis()
-              def jq(s: String) = "\"" + s.flatMap {
-                case '"' => "\\\""; case '\\' => "\\\\"
-                case c if c < ' ' => f"\\u${c.toInt}%04x"
-                case c => c.toString
-              } + "\""
               dropBatchDirs(spark, outDir, batchId, "_latency")
               // Hadoop FS, not java.nio: outDir may be hdfs://s3a://
               // (every other sink resolves through the same FS — a
@@ -473,7 +455,7 @@ object StreamingPipeline {
                 spark.sparkContext.hadoopConfiguration)
               val latOs = latFs.create(latPath, true)
               try latOs.write(valid.map { case (_, f, pub) =>
-                s"""{"source_file":${jq(f)},"publish_ms":$pub,""" +
+                s"""{"source_file":${jsonQuote(f)},"publish_ms":$pub,""" +
                   s""""commit_ms":$commitMs,"latency_ms":${commitMs - pub}}"""
               }.mkString("", "\n", "\n").getBytes("UTF-8"))
               finally latOs.close()
@@ -482,11 +464,23 @@ object StreamingPipeline {
             dlqInvalid.write.mode("overwrite").json(s"$outDir/_errors/batch_id=$batchId")
           }
         }
-        clearAttempts(spark, checkpoint, batchId)
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        ()
       }
   }
+
+  /** Read schema of the document streams ([[admissionPipeline]],
+    * [[bloomAdmissionPipeline]]): JSONL doc_id, text, lang, source. */
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("text", StringType, nullable = true),
+    StructField("lang", StringType, nullable = true),
+    StructField("source", StringType, nullable = true)))
+
+  /** Read schema of the embedding streams ([[semanticAdmissionPipeline]],
+    * [[indexMaintenancePipeline]]): JSONL vec_id, label, embedding. */
+  private val vecSchema = StructType(Seq(
+    StructField("vec_id", LongType, nullable = false),
+    StructField("label", LongType, nullable = true),
+    StructField("embedding", ArrayType(DoubleType), nullable = true)))
 
   /** Continuous corpus admission — the streaming form of
     * [[graft.analytics.Dedup.admitNewDocuments]]: a training corpus
@@ -526,11 +520,6 @@ object StreamingPipeline {
                         prepare: DataFrame => DataFrame = identity)
       : DataStreamWriter[org.apache.spark.sql.Row] = {
     import graft.analytics.Dedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", org.apache.spark.sql.types.LongType, nullable = false),
-      StructField("text", StringType, nullable = true),
-      StructField("lang", StringType, nullable = true),
-      StructField("source", StringType, nullable = true)))
     // explicit read schema for the store leaves (batch_id never
     // appears — live partitions are resolved through the manifest and
     // read as leaf dirs): no footer-driven schema inference, so an
@@ -547,19 +536,6 @@ object StreamingPipeline {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import org.apache.hadoop.fs.Path
-        // batch-scoped shuffle width: the SAME knob that bounds the
-        // micro-batch (maxFilesPerTrigger, the admission unit) bounds
-        // the useful parallelism of its batch-local shuffles — the
-        // session default (sized for corpus-scale jobs) just schedules
-        // empty tasks here, and AQE cannot coalesce them inside
-        // foreachBatch. A 100 TB deployment runs a large
-        // maxFilesPerTrigger, so its batches keep wide shuffles; the
-        // conf is restored before the batch returns (session-global:
-        // documented, and admission batches are serial per query).
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          math.max(8, maxFilesPerTrigger).toString)
-        try {
         val sigPath = new Path(sigDir)
         val fs = sigPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         // live partitions resolve through the store MANIFEST (segments
@@ -610,8 +586,7 @@ object StreamingPipeline {
           // cached: the store-read + double-band-join plan above it is
           // the batch's second-heaviest stage and THREE consumers pull
           // it (intra-batch pairs, the cluster keep-set, the sig sink);
-          // uncached it re-executed per action — pure per-batch fixed
-          // cost that AQE can't help with inside foreachBatch
+          // uncached it re-executed per action.
           // dupIds is ≤ batch-sized — broadcast the anti-join build
           // side (2 fewer exchanges per batch; left_anti builds right)
           val survivorSig = sig.join(
@@ -645,7 +620,6 @@ object StreamingPipeline {
             failHook(batch, batchId) // test seam: crash AFTER sinks, BEFORE commit
           } finally survivorSig.unpersist()
         } finally { sig.unpersist(); cachedBatch.unpersist() }
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
         ()
       }
   }
@@ -688,11 +662,6 @@ object StreamingPipeline {
       : DataStreamWriter[org.apache.spark.sql.Row] = {
     require(expectedItems > 0 && fpp > 0 && fpp < 1,
       s"bad sketch params: expectedItems=$expectedItems fpp=$fpp")
-    val docSchema = StructType(Seq(
-      StructField("doc_id", org.apache.spark.sql.types.LongType, nullable = false),
-      StructField("text", StringType, nullable = true),
-      StructField("lang", StringType, nullable = true),
-      StructField("source", StringType, nullable = true)))
     val stream = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(incomingDir)
@@ -780,17 +749,12 @@ object StreamingPipeline {
               }
             }
           // tmp + rename: the version either exists complete or not at
-          // all — a half-written sketch must never be readable
-          val tmp = new Path(dir, s".sketch_v$batchId.tmp")
-          val fin = new Path(dir, s"sketch_v$batchId")
-          val os = fs.create(tmp, true)
-          try merged.writeTo(os) finally os.close()
-          if (fs.exists(fin)) fs.delete(fin, false)
-          // a silently failed rename would leave no sketch for this
-          // batch — later batches would read an older version and
-          // re-admit this batch's duplicates without any error surfacing
-          require(fs.rename(tmp, fin),
-            s"failed to publish sketch_v$batchId (rename $tmp -> $fin)")
+          // all — a half-written sketch must never be readable, and a
+          // silently failed rename would let later batches re-admit
+          // this batch's duplicates from an older version
+          graft.util.StoreManifest.publishFile(fs,
+              new Path(dir, s".sketch_v$batchId.tmp"),
+              new Path(dir, s"sketch_v$batchId"))(merged.writeTo)
           failHook(batch, batchId) // test seam: crash AFTER sinks, BEFORE commit
           versions().filter(_ < batchId - 1).foreach(v =>
             fs.delete(new Path(dir, s"sketch_v$v"), false))
@@ -848,12 +812,7 @@ object StreamingPipeline {
                                 failHook: (DataFrame, Long) => Unit = (_, _) => ())
       : DataStreamWriter[org.apache.spark.sql.Row] = {
     import graft.analytics.{Dedup, Similarity}
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
     require(tau > 0 && tau <= 1, s"tau must be in (0,1]: $tau")
-    val vecSchema = StructType(Seq(
-      StructField("vec_id", LongType, nullable = false),
-      StructField("label", LongType, nullable = true),
-      StructField("embedding", ArrayType(DoubleType), nullable = true)))
     // leaf-dir read schema: batch_id never appears (live partitions
     // resolve through the store manifest)
     val storeSchema = StructType(Seq(
@@ -867,90 +826,78 @@ object StreamingPipeline {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import org.apache.hadoop.fs.Path
-        // batch-scoped shuffle width (admissionPipeline's rationale)
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          math.max(8, maxFilesPerTrigger).toString)
+        val storePath = new Path(storeDir)
+        val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // (nBits, dim, tau-independent) bucketing params are the
+        // store's identity: drifting them mis-buckets every lookup
+        // with zero errors surfaced — pin on first write, verify after
+        val paramsFile = new Path(storeDir + "_params")
+        val wantParams = s"nBits=$nBits dim=$dim"
+        if (fs.exists(paramsFile)) {
+          val got = graft.util.StoreManifest.readPin(fs, paramsFile)
+          require(got == wantParams,
+            s"semantic store $storeDir was built with ($got) but this " +
+              s"pipeline runs ($wantParams): bucketing params are the " +
+              "store's identity — restart with the original parameters, " +
+              "or delete the store to rebuild membership from scratch")
+        } else {
+          // pin BEFORE the first store write (a crash between a sink
+          // write and a later pin would leave store rows whose params
+          // the next, possibly drifted, incarnation could not check)
+          // and ATOMICALLY via tmp+rename (the Bloom-sketch publish
+          // pattern): a crash mid-write must never leave a truncated
+          // pin that bricks every restart with a garbage mismatch
+          graft.util.StoreManifest.publishPin(fs, paramsFile, wantParams)
+        }
+        val cachedBatch = batch.cache()
         try {
-          val storePath = new Path(storeDir)
-          val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          // (nBits, dim, tau-independent) bucketing params are the
-          // store's identity: drifting them mis-buckets every lookup
-          // with zero errors surfaced — pin on first write, verify after
-          val paramsFile = new Path(storeDir + "_params")
-          val wantParams = s"nBits=$nBits dim=$dim"
-          if (fs.exists(paramsFile)) {
-            val in = fs.open(paramsFile)
-            val got = try scala.io.Source.fromInputStream(in).mkString.trim
-              finally in.close()
-            require(got == wantParams,
-              s"semantic store $storeDir was built with ($got) but this " +
-                s"pipeline runs ($wantParams): bucketing params are the " +
-                "store's identity — restart with the original parameters, " +
-                "or delete the store to rebuild membership from scratch")
-          } else {
-            // pin BEFORE the first store write (a crash between a sink
-            // write and a later pin would leave store rows whose params
-            // the next, possibly drifted, incarnation could not check)
-            // and ATOMICALLY via tmp+rename (the Bloom-sketch publish
-            // pattern): a crash mid-write must never leave a truncated
-            // pin that bricks every restart with a garbage mismatch
-            val tmpPin = new Path(storeDir + "_params.tmp")
-            val os = fs.create(tmpPin, true)
-            try os.write(wantParams.getBytes("UTF-8")) finally os.close()
-            require(fs.rename(tmpPin, paramsFile),
-              s"failed to publish params pin $tmpPin -> $paramsFile")
-          }
-          val cachedBatch = batch.cache()
-          try {
-            // the batch's bucket cover — bounded by batch rows; pushed
-            // into the store scan as an In() filter (never a full scan)
-            val batchBuckets = cachedBatch
-              .filter(col("embedding").isNotNull)
-              .select(Similarity.srpBucket(col("embedding"), dim, nBits)
-                .as("bucket"))
-              .distinct().collect().map(_.getLong(0)).toSeq
-            // live partitions resolve through the store MANIFEST so
-            // compaction can run concurrently; replay exclusion is at
-            // PATH level (admissionPipeline's rationale — the fold
-            // never covers the newest partition)
-            // one listing: watermark refusal + live-path resolution
-            val storeLive = graft.util.StoreManifest.livePathsChecked(fs,
-              storeDir, batchId)
-            val store =
-              if (storeLive.nonEmpty)
-                spark.read.schema(storeSchema).parquet(storeLive: _*)
-                  .filter(col("bucket").isInCollection(
-                    if (batchBuckets.isEmpty) Seq(-1L) else batchBuckets))
-                  .select("bucket", "vec")
-              else
-                spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  StructType(Seq(StructField("bucket", LongType),
-                    StructField("vec", ArrayType(DoubleType)))))
-            // eagerly materialized: both sinks consume the decision —
-            // uncheckpointed, each would re-run the store join
-            val admitted = Dedup.semanticAdmit(store, cachedBatch, tau, nBits,
-                Some(dim))
-              .filter(col("admitted")).select("vec_id", "bucket")
-              .localCheckpoint(true)
-            // both sinks consume the CHECKPOINTED decision + the hot
-            // cache — independent batch_id-scoped overwrites,
-            // overlapped (§2.6, the admissionPipeline discipline); a
-            // crash leaving either dir alone replays wholesale (the
-            // store read excludes the replayed batch's own partition
-            // at PATH level — spec: half-written replay)
-            runSinksConcurrently(Seq(
-              () => cachedBatch.join(admitted.select("vec_id"), Seq("vec_id"), "left_semi")
-                .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId"),
-              () => cachedBatch.filter(col("embedding").isNotNull)
-                .select(col("vec_id"), col("embedding").as("vec"))
-                .join(admitted, Seq("vec_id"))
-                .select(col("vec_id"), col("bucket"), col("vec"))
-                .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")))
-            failHook(batch, batchId) // test seam: crash AFTER sinks, BEFORE commit
-          } finally cachedBatch.unpersist()
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+          // the batch's bucket cover — bounded by batch rows; pushed
+          // into the store scan as an In() filter (never a full scan)
+          val batchBuckets = cachedBatch
+            .filter(col("embedding").isNotNull)
+            .select(Similarity.srpBucket(col("embedding"), dim, nBits)
+              .as("bucket"))
+            .distinct().collect().map(_.getLong(0)).toSeq
+          // live partitions resolve through the store MANIFEST so
+          // compaction can run concurrently; replay exclusion is at
+          // PATH level (admissionPipeline's rationale — the fold
+          // never covers the newest partition)
+          // one listing: watermark refusal + live-path resolution
+          val storeLive = graft.util.StoreManifest.livePathsChecked(fs,
+            storeDir, batchId)
+          val store =
+            if (storeLive.nonEmpty)
+              spark.read.schema(storeSchema).parquet(storeLive: _*)
+                .filter(col("bucket").isInCollection(
+                  if (batchBuckets.isEmpty) Seq(-1L) else batchBuckets))
+                .select("bucket", "vec")
+            else
+              spark.createDataFrame(
+                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                StructType(Seq(StructField("bucket", LongType),
+                  StructField("vec", ArrayType(DoubleType)))))
+          // eagerly materialized: both sinks consume the decision —
+          // uncheckpointed, each would re-run the store join
+          val admitted = Dedup.semanticAdmit(store, cachedBatch, tau, nBits,
+              Some(dim))
+            .filter(col("admitted")).select("vec_id", "bucket")
+            .localCheckpoint(true)
+          // both sinks consume the CHECKPOINTED decision + the hot
+          // cache — independent batch_id-scoped overwrites,
+          // overlapped (§2.6, the admissionPipeline discipline); a
+          // crash leaving either dir alone replays wholesale (the
+          // store read excludes the replayed batch's own partition
+          // at PATH level — spec: half-written replay)
+          runSinksConcurrently(Seq(
+            () => cachedBatch.join(admitted.select("vec_id"), Seq("vec_id"), "left_semi")
+              .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId"),
+            () => cachedBatch.filter(col("embedding").isNotNull)
+              .select(col("vec_id"), col("embedding").as("vec"))
+              .join(admitted, Seq("vec_id"))
+              .select(col("vec_id"), col("bucket"), col("vec"))
+              .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")))
+          failHook(batch, batchId) // test seam: crash AFTER sinks, BEFORE commit
+        } finally cachedBatch.unpersist()
         ()
       }
   }
@@ -984,10 +931,6 @@ object StreamingPipeline {
                                maxFilesPerTrigger: Int = 16,
                                failHook: (DataFrame, Long) => Unit = (_, _) => ())
       : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val vecSchema = StructType(Seq(
-      StructField("vec_id", LongType, nullable = false),
-      StructField("label", LongType, nullable = true),
-      StructField("embedding", ArrayType(DoubleType), nullable = true)))
     val stream = spark.readStream.schema(vecSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(incomingDir)
@@ -995,10 +938,6 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batch-scoped shuffle width (admissionPipeline's rationale)
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          math.max(8, maxFilesPerTrigger).toString)
         // EMPTY batch: skip the delta write AND the pin transition — a
         // zero-row batch_id partition would flip deltaHasCodes true
         // permanently, wedging a later legitimate retrain against data
@@ -1006,7 +945,7 @@ object StreamingPipeline {
         // idempotent: nothing was written either time). NOT a `return`:
         // a return inside this lambda would throw NonLocalReturnControl
         // at runtime (the enclosing method has long since returned).
-        try if (!batch.isEmpty) {
+        if (!batch.isEmpty) {
           import org.apache.hadoop.fs.Path
           // ONE model collect per batch: id + encoder share it (two
           // separate collects would read the model parquet twice per
@@ -1040,9 +979,7 @@ object StreamingPipeline {
           def deltaHasCodes: Boolean =
             graft.util.StoreManifest.livePaths(fs, deltaDir).nonEmpty
           val pinOk = if (fs.exists(pinPath)) {
-            val in = fs.open(pinPath)
-            val got = try scala.io.Source.fromInputStream(in).mkString.trim
-              finally in.close()
+            val got = graft.util.StoreManifest.readPin(fs, pinPath)
             require(got == modelId || !deltaHasCodes,
               s"delta $deltaDir is pinned to model $got but $indexDir now " +
                 s"holds model $modelId (retrained?): appending would mix " +
@@ -1057,16 +994,9 @@ object StreamingPipeline {
                 "(and this checkpoint), or restore its pin file")
             false
           }
-          if (!pinOk) {
-            // empty delta: (re)pin atomically, tmp+rename, BEFORE the
-            // first write of this incarnation
-            val tmpPin = new Path(deltaDir + "_model_id.tmp")
-            val os = fs.create(tmpPin, true)
-            try os.write(modelId.getBytes("UTF-8")) finally os.close()
-            if (fs.exists(pinPath)) fs.delete(pinPath, false)
-            require(fs.rename(tmpPin, pinPath),
-              s"failed to publish model-id pin $tmpPin -> $pinPath")
-          }
+          // empty delta: (re)pin atomically, tmp+rename, BEFORE the
+          // first write of this incarnation
+          if (!pinOk) graft.util.StoreManifest.publishPin(fs, pinPath, modelId)
           // fresh-checkpoint hazard (admissionPipeline's rationale): a
           // restarted-id batch at or below the delta's folded watermark
           // would write reader-invisible codes — refuse loudly
@@ -1074,7 +1004,7 @@ object StreamingPipeline {
           encode(batch)
             .write.mode("overwrite").parquet(s"$deltaDir/batch_id=$batchId")
           failHook(batch, batchId) // test seam: crash AFTER sink, BEFORE commit
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        }
         ()
       }
   }
@@ -1321,9 +1251,7 @@ object StreamingPipeline {
       if (fs.exists(journal)) {
         // resume a crashed rotation: the journaled temp was complete
         // before the journal was published
-        val in = fs.open(journal)
-        try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
+        graft.util.StoreManifest.readPin(fs, journal)
       } else {
         // no journal: any `.reindex_*` sibling is an orphan of a crash
         // BEFORE its journal published (mid-train, or between the
@@ -1344,11 +1272,7 @@ object StreamingPipeline {
           nCells, m, ksub, rounds)
         fs.create(new Path(tmp, ".complete"), true).close()
         failAt("trained")
-        val jTmp = new Path(indexDir + ".reindex_journal.tmp")
-        val os = fs.create(jTmp, true)
-        try os.write(t.getBytes("UTF-8")) finally os.close()
-        require(fs.rename(jTmp, journal),
-          s"failed to publish reindex journal $journal")
+        graft.util.StoreManifest.publishPin(fs, journal, t)
         failAt("journaled")
         t
       }
@@ -1398,12 +1322,7 @@ object StreamingPipeline {
     val newId = graft.analytics.Similarity.ivfPqModelId(
       spark.read.parquet(s"$indexDir/cells"),
       spark.read.parquet(s"$indexDir/codebook"))
-    val pinTmp = new Path(deltaDir + "_model_id.tmp")
-    val pin = new Path(deltaDir + "_model_id")
-    val os = fs.create(pinTmp, true)
-    try os.write(newId.getBytes("UTF-8")) finally os.close()
-    if (fs.exists(pin)) fs.delete(pin, false)
-    require(fs.rename(pinTmp, pin), s"failed to publish new pin $pin")
+    graft.util.StoreManifest.publishPin(fs, new Path(deltaDir + "_model_id"), newId)
     failAt("pinned")
     fs.delete(journal, false)
     newId
@@ -2853,20 +2772,6 @@ object StreamingPipeline {
         : Iterator[(Long, Long, Long, Boolean, Long, Long)] =
       drain(key, timerValues.getCurrentWatermarkInMs())
   }
-
-  /** Streaming heartbeat — the sniffer's 60 s liveness log
-    * (sniffer_entrypoint.sh:93–104) as a StreamingQueryListener that
-    * surfaces per-batch progress (rows/sec, batch duration = A3). */
-  def attachHeartbeat(spark: SparkSession)(onProgress: String => Unit): Unit =
-    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit =
-        onProgress(s"""{"heartbeat":"started","id":"${e.id}"}""")
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        onProgress(e.progress.json)
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        onProgress(s"""{"heartbeat":"terminated","id":"${e.id}"}""")
-    })
 
   private def jsonQuote(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""; case '\\' => "\\\\"

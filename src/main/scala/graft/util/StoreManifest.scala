@@ -90,6 +90,30 @@ object StoreManifest {
     require(fs.rename(tmp, dst), s"failed to publish store manifest $dst")
   }
 
+  /** [[publish]]'s temp-and-rename for the other small durable files
+    * (Bloom sketch versions, pins, the reindex journal): `write` fills
+    * `tmp`, which is renamed onto `dst`. A crash mid-write leaves only
+    * the temp, never a truncated `dst`; a failed rename fails loud.
+    * Unlike a manifest generation, `dst` may legitimately pre-exist (a
+    * replaced pin, a replayed sketch version): it is deleted first. */
+  private[graft] def publishFile(fs: FileSystem, tmp: Path, dst: Path)
+                                (write: java.io.OutputStream => Unit): Unit = {
+    val os = fs.create(tmp, true)
+    try write(os) finally os.close()
+    if (fs.exists(dst)) fs.delete(dst, false)
+    require(fs.rename(tmp, dst), s"failed to publish $dst (rename $tmp -> $dst)")
+  }
+
+  /** Publish a one-value text pin (`<pin>.tmp`, then rename). */
+  private[graft] def publishPin(fs: FileSystem, pin: Path, value: String): Unit =
+    publishFile(fs, pin.suffix(".tmp"), pin)(_.write(value.getBytes("UTF-8")))
+
+  /** Read a pin back, whitespace-trimmed. */
+  private[graft] def readPin(fs: FileSystem, pin: Path): String = {
+    val in = fs.open(pin)
+    try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
+  }
+
   /** `batch_id=N` partitions holding committed data (≥1 data file —
     * a dir holding only an in-flight `_temporary` is not yet a
     * partition), as (id → path), from a listing. Data files are

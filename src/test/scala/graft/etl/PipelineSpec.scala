@@ -135,6 +135,70 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("admission batches run at the session's shuffle width: foreachBatch writes no width") {
+    val in = Files.createTempDirectory("graft_adm_width_in").toString
+    val base = Files.createTempDirectory("graft_adm_width").toString
+    Files.writeString(Paths.get(in, "b1.jsonl"),
+      """{"doc_id":1,"text":"a document read under the session width","lang":"en","source":"s"}""")
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    val q = StreamingPipeline.admissionPipeline(spark, in, s"$base/sigs",
+      s"$base/out", s"$base/ckpt", trigger = Trigger.AvailableNow(),
+      failHook = (_, _) => seen.synchronized {
+        seen += spark.conf.get("spark.sql.shuffle.partitions")
+      }).start()
+    q.awaitTermination(120000)
+    assert(seen.nonEmpty && seen.forall(_ == before),
+      s"foreachBatch saw widths $seen, session had $before")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
+  }
+
+  test("runSinksConcurrently: an interrupted caller awaits every sink and no write lands after it returns") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+    import java.util.concurrent.atomic.AtomicInteger
+    val started = new CountDownLatch(2)
+    val returned = new AtomicInteger(0)
+    val writes = new ConcurrentLinkedQueue[Long]()
+    // one sink is mid-write (uninterruptible busy work) when the caller
+    // is interrupted, the other is still waiting (interruptible)
+    val busy: () => Unit = () =>
+      try {
+        started.countDown()
+        val end = System.nanoTime() + 500L * 1000000L
+        while (System.nanoTime() < end) {}
+        writes.add(System.nanoTime())
+      } finally returned.incrementAndGet()
+    val waiting: () => Unit = () =>
+      try {
+        started.countDown()
+        Thread.sleep(5000)
+        writes.add(System.nanoTime())
+      } finally returned.incrementAndGet()
+    @volatile var thrown: Throwable = null
+    @volatile var returnedAt = 0L
+    @volatile var sinksReturned = -1
+    @volatile var flagSet = false
+    val caller = new Thread(() => {
+      try StreamingPipeline.runSinksConcurrently(Seq(busy, waiting))
+      catch { case t: Throwable => thrown = t }
+      returnedAt = System.nanoTime()
+      sinksReturned = returned.get()
+      flagSet = Thread.currentThread().isInterrupted
+    })
+    caller.start()
+    started.await()
+    caller.interrupt()
+    caller.join(30000)
+    assert(!caller.isAlive)
+    assert(thrown.isInstanceOf[InterruptedException], s"rethrown: $thrown")
+    assert(sinksReturned == 2, s"$sinksReturned of 2 sink thunks had returned")
+    assert(flagSet, "interrupt flag re-set before the rethrow")
+    Thread.sleep(1000) // past the busy sink's window
+    val ws = writes.toArray.toSeq.map(_.asInstanceOf[Long])
+    assert(ws.size == 1, s"the in-flight write completes, the waiting one is cancelled: $ws")
+    assert(ws.forall(_ <= returnedAt), "a sink write landed after the call returned")
+  }
+
   test("admission prepare hook: mojibake re-crawl rejected under fixEncoding intake, admitted raw") {
     import org.apache.spark.sql.DataFrame
     val clean = (0 until 12).map(i => s"café$i word$i").mkString(" ")

@@ -237,6 +237,27 @@ class NotifySourceSpec extends SparkSpec {
     assert(bad.length == 1 && bad(0).getAs[String]("payload") == "../evil.pcap.json")
   }
 
+  test("notifyPipeline batches run at the session's shuffle width: foreachBatch writes no width") {
+    val q = Files.createTempDirectory("graft_wq").toString
+    val data = Files.createTempDirectory("graft_wdata").toString
+    val out = Files.createTempDirectory("graft_wout").toString
+    val ckpt = Files.createTempDirectory("graft_wckpt").toString
+    Files.writeString(Paths.get(data, "capture_w.pcap.json"), s"[$goodPacket]")
+    msg(q, "m1", "capture_w.pcap.json", 2100000L)
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    val qq = StreamingPipeline.notifyPipeline(spark, q, data, out, ckpt,
+      trigger = Trigger.AvailableNow(),
+      failHook = (_, _) => seen.synchronized {
+        seen += spark.conf.get("spark.sql.shuffle.partitions")
+      }).start()
+    qq.awaitTermination(120000)
+    assert(spark.read.text(s"$out/events").count() == 1)
+    assert(seen.nonEmpty && seen.forall(_ == before),
+      s"foreachBatch saw widths $seen, session had $before")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
+  }
+
   test("notifications naming BINARY pcap/pcapng objects decode in-plan to UDM events") {
     import CaptureBytes._
     val q = Files.createTempDirectory("graft_bpq").toString
