@@ -3,20 +3,22 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal-column plumbing: image/audio/video payloads ride as
   * opaque `binary` columns with typed metadata structs; decode /
-  * feature-extract runs per-partition so batch-oriented decoders
-  * amortize (the Scala analog of `mapInPandas` batch UDFs).
+  * feature-extract runs one payload at a time inside each partition
+  * (one shared scaffold: a narrow, iterator-to-iterator walk, no
+  * shuffle).
   *
   * The decode step is REAL for the two ubiquitous image containers —
   * PNG (IHDR width/height) and JPEG (SOF frame header width/height),
   * parsed from the public format specs in pure JVM ([[MediaDecode]]) —
   * and falls back to the deterministic [[stubDecode]] hash-derived
   * metadata for formats whose codecs aren't in this container
-  * (audio/video): the Spark-side contract — schema, partitioning,
-  * batch shape — is identical either way, so swapping the fallback
-  * for a JNI/FFI decoder changes no plan. */
+  * (audio/video): the Spark-side contract — schema, partitioning —
+  * is identical either way, so swapping the fallback for a JNI/FFI
+  * decoder changes no plan. */
 object Multimodal {
 
   /** The typed metadata schema a decoder fills. */
@@ -122,7 +124,7 @@ object Multimodal {
   }
 
   /** JVM mirror of [[stubDecode]] (bit-for-bit: same md5-hex
-    * arithmetic) — the batched decoder's fallback for non-PNG/JPEG
+    * arithmetic) — [[decodeBatched]]'s fallback for non-PNG/JPEG
     * payloads. */
   private def stubDecodeJvm(payload: Array[Byte]): (String, Int, Int, Long) = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -132,36 +134,67 @@ object Multimodal {
     (fmt, hx(5) % 1920 + 1, hx(9) % 1080 + 1, (hx(13) % 60000).toLong)
   }
 
-  /** Batched per-partition decode — the Scala analog of a
-    * `mapInPandas` batch UDF: rows flow through the decoder in
-    * `batchSize` groups so a real (vectorized/FFI) decoder amortizes
-    * per-call overhead. PNG/JPEG headers are REALLY parsed
-    * ([[MediaDecode.decode]]); other payloads fall back to the
-    * deterministic stub. Output: doc_id, content_hash (md5 — the
+  /** The per-payload scaffold of every decoder operator: `f` turns one
+    * (doc_id, payload) row of `src` into its output rows, one payload
+    * at a time inside each partition — a narrow, iterator-to-iterator
+    * walk with no shuffle. `names` label the tuple fields. The caller
+    * prepares `src` (widen, fixture attach, filters). */
+  private def payloadRows[T <: Product : TypeTag](src: DataFrame, names: String*)
+                                                (f: (Long, Array[Byte]) => IterableOnce[T]): DataFrame = {
+    import src.sparkSession.implicits._
+    src.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
+      .mapPartitions(_.flatMap { case (id, p) => f(id, p) })
+      .toDF(names: _*)
+  }
+
+  /** [[payloadRows]] for operators that emit exactly one row per
+    * payload. */
+  private def perPayload[T <: Product : TypeTag](src: DataFrame, names: String*)
+                                                (f: (Long, Array[Byte]) => T): DataFrame =
+    payloadRows(src, names: _*)((id, p) => Iterator.single(f(id, p)))
+
+  /** The report of a strip-then-reparse audit: bytes the scrub removed
+    * plus `check(scrubbed)` — (re-parses clean, content identical);
+    * (0, false, false) when `stripped` is None (the payload did not
+    * parse). */
+  private def scrubReport(p: Array[Byte], stripped: Option[Array[Byte]])
+                         (check: Array[Byte] => (Boolean, Boolean)): (Long, Boolean, Boolean) =
+    stripped match {
+      case Some(s) =>
+        val (clean, same) = check(s)
+        ((p.length - s.length).toLong, clean, same)
+      case None => (0L, false, false)
+    }
+
+  /** Pixel identity of two payloads under one raster decoder: both
+    * decode, to the same dims and the same samples. */
+  private def sameRaster(decode: Array[Byte] => Option[(Int, Int, Array[Byte])])
+                        (a: Array[Byte], b: Array[Byte]): Boolean =
+    (decode(a), decode(b)) match {
+      case (Some((w1, h1, g1)), Some((w2, h2, g2))) =>
+        w1 == w2 && h1 == h2 && java.util.Arrays.equals(g1, g2)
+      case _ => false
+    }
+
+  /** Per-payload header decode ([[perPayload]]). PNG/JPEG headers are
+    * REALLY parsed ([[MediaDecode.decode]]); other payloads fall back
+    * to the deterministic stub. Output: doc_id, content_hash (md5 — the
     * multimodal dedup key), format, width, height, duration_ms
     * (0 for decoded stills), payload_bytes. */
-  def decodeBatched(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // a real decoder would hand `batch` to one vectorized call here
-        batch.iterator.map { case (id, payload) =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          val hash = md.digest(payload).map("%02x".format(_)).mkString
-          MediaDecode.decode(payload) match {
-            case Some((fmt, w, h)) =>
-              (id, hash, fmt, w, h, 0L, payload.length.toLong)
-            case None =>
-              val (fmt, w, h, dur) = stubDecodeJvm(payload)
-              (id, hash, fmt, w, h, dur, payload.length.toLong)
-          }
-        }
+  def decodeBatched(documents: DataFrame): DataFrame =
+    perPayload(withPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "content_hash", "format", "width", "height",
+      "duration_ms", "payload_bytes") { (id, payload) =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val hash = md.digest(payload).map("%02x".format(_)).mkString
+      MediaDecode.decode(payload) match {
+        case Some((fmt, w, h)) =>
+          (id, hash, fmt, w, h, 0L, payload.length.toLong)
+        case None =>
+          val (fmt, w, h, dur) = stubDecodeJvm(payload)
+          (id, hash, fmt, w, h, dur, payload.length.toLong)
       }
-    }.toDF("doc_id", "content_hash", "format", "width", "height",
-      "duration_ms", "payload_bytes")
-  }
+    }
 
   /** Decode + derive: real PNG/JPEG dimensions, aspect bucket
     * (training-shard grouping), payload size. Oracled columns only —
@@ -192,9 +225,9 @@ object Multimodal {
     * IEEE division — identical in any engine); the output `aspect`
     * column is rounded for display only.
     *
-    * Scale shape: [[decodeBatched]]'s per-partition batched header
-    * walk (headers only — never a full image decode), then one narrow
-    * projection; no shuffle, no UDF beyond the documented batch seam. */
+    * Scale shape: [[decodeBatched]]'s per-payload header walk (headers
+    * only — never a full image decode), then one narrow projection; no
+    * shuffle, no UDF beyond the documented decoder seam. */
   def imageFilter(documents: DataFrame, minDim: Int = 64,
                   maxAspect: Double = 3.0): DataFrame = {
     require(minDim >= 1, s"minDim must be >= 1: $minDim")
@@ -408,38 +441,27 @@ object Multimodal {
     bits
   }
 
-  /** The batched 64-bit-fingerprint scaffold shared by the three
-    * perceptual modalities ([[imageDHash]], [[audioFingerprints]],
-    * [[videoFingerprints]]): widen → drop null payloads → per-
-    * partition batched decode+hash → split into the two 32-bit halves
+  /** The 64-bit-fingerprint scaffold shared by the three perceptual
+    * modalities ([[imageDHash]], [[audioFingerprints]],
+    * [[videoFingerprints]]): widen → drop null payloads → per-payload
+    * decode+hash ([[payloadRows]]) → split into the two 32-bit halves
     * the SimHash band machinery expects. Undecodable payloads are
     * DROPPED (perceptual identity is defined over decodable media).
     * Output: (doc_id, simhash_hi, simhash_lo). */
-  private def fingerprintPayloads(withPayload: DataFrame, batchSize: Int)
-                                 (hash: Array[Byte] => Option[Long]): DataFrame = {
-    val src = graft.util.SparkUtil.widen(withPayload)
-      .filter(col("payload").isNotNull)
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { case (id, payload) =>
-          hash(payload).map { d =>
-            (id, (d >>> 32) & 0xffffffffL, d & 0xffffffffL)
-          }
-        }
-      }
-    }.toDF("doc_id", "simhash_hi", "simhash_lo")
-  }
+  private def fingerprintPayloads(withPayload: DataFrame)
+                                 (hash: Array[Byte] => Option[Long]): DataFrame =
+    payloadRows(graft.util.SparkUtil.widen(withPayload).filter(col("payload").isNotNull),
+      "doc_id", "simhash_hi", "simhash_lo") { (id, payload) =>
+      hash(payload).map(d => (id, (d >>> 32) & 0xffffffffL, d & 0xffffffffL))
+    }
 
   /** Per-doc dHash fingerprints over the binary payload column —
-    * batched per-partition PIXEL decode (PNG: [[MediaDecode
-    * .pngGrayPixels]] IDAT inflate + unfilter; JPEG: [[MediaDecode
-    * .jpegLumaPixels]] baseline Huffman + IDCT, luma plane — both pure
-    * JVM) + [[dHash64]] through the shared [[fingerprintPayloads]]
-    * scaffold. */
-  def imageDHash(withPayload: DataFrame, batchSize: Int = 64): DataFrame =
-    fingerprintPayloads(withPayload, batchSize) { payload =>
+    * per-payload PIXEL decode (PNG: [[MediaDecode.pngGrayPixels]] IDAT
+    * inflate + unfilter; JPEG: [[MediaDecode.jpegLumaPixels]] baseline
+    * Huffman + IDCT, luma plane — both pure JVM) + [[dHash64]] through
+    * the shared [[fingerprintPayloads]] scaffold. */
+  def imageDHash(withPayload: DataFrame): DataFrame =
+    fingerprintPayloads(withPayload) { payload =>
       MediaDecode.pngGrayPixels(payload)
         .orElse(MediaDecode.jpegLumaPixels(payload))
         .map { case (w, h, gray) => dHash64(gray, w, h) }
@@ -529,13 +551,11 @@ object Multimodal {
     * fingerprints feed the UNCHANGED SimHash 4×16-bit pigeonhole band
     * join ([[Dedup.simhashNearDupPairsFromFingerprints]] — complete
     * for Hamming ≤ 3, never all-pairs). Output: (doc_a, doc_b,
-    * hamming), ordered. Scale shape: one batched narrow decode pass
-    * (pixels never shuffle — 8 B of hash per image crosses the wire)
-    * + the banded equi-join. */
-  def imageNearDupPairs(withPayload: DataFrame, maxDist: Int = 3,
-                        batchSize: Int = 64): DataFrame =
-    Dedup.simhashNearDupPairsFromFingerprints(
-      imageDHash(withPayload, batchSize), maxDist)
+    * hamming), ordered. Scale shape: one narrow per-payload decode
+    * pass (pixels never shuffle — 8 B of hash per image crosses the
+    * wire) + the banded equi-join. */
+  def imageNearDupPairs(withPayload: DataFrame, maxDist: Int = 3): DataFrame =
+    Dedup.simhashNearDupPairsFromFingerprints(imageDHash(withPayload), maxDist)
 
   // ------------------------------------------------------------------
   // audio: WAV (RIFF) header decode
@@ -568,11 +588,11 @@ object Multimodal {
     o.toByteArray
   }
 
-  /** Quantize [−1,1] samples to interleaved SIGNED ints with EXACTLY
-    * [[pcmQuantize]]'s arithmetic (8-bit: the unsigned WAV byte minus
-    * 128; 16-bit: the same signed short) — so a FLAC built from these
-    * values decodes to the identical doubles as the WAV twin (FLAC
-    * samples are signed at every depth). */
+  /** Quantize [−1,1] samples to interleaved SIGNED ints (8-bit: the
+    * unsigned WAV byte minus 128; 16-bit: the signed short) —
+    * [[pcmQuantize]] is the byte encoding of these values, so a FLAC
+    * built from them decodes to the identical doubles as the WAV twin
+    * (FLAC samples are signed at every depth). */
   def pcmQuantizeInt(samples: Array[Double], bits: Int, gain: Double,
                      channels: Int): Array[Int] = {
     require(bits == 8 || bits == 16, s"bits must be 8 or 16: $bits")
@@ -919,6 +939,17 @@ object Multimodal {
     pngChunkBytes("iTXt", key.getBytes("ISO-8859-1") ++
       Array[Byte](0, 0, 0, 0, 0) ++ value.getBytes("UTF-8"))
 
+  /** `chunks` spliced into `png` right after its IHDR chunk (offset
+    * 33: signature 8 + IHDR chunk 12 + 13) — the metadata-injection
+    * step of the PNG audit fixtures. */
+  def pngWithChunksAfterIhdr(png: Array[Byte], chunks: Array[Byte]*): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(png.length + chunks.map(_.length).sum)
+    out.write(png, 0, 33)
+    chunks.foreach(c => out.write(c))
+    out.write(png, 33, png.length - 33)
+    out.toByteArray
+  }
+
   /** Attach REAL PNGs carrying formula-driven tEXt metadata after the
     * IHDR chunk (Author/Comment; doc_id%5==0 docs untagged) — the PNG
     * privacy-audit fixture. */
@@ -926,15 +957,9 @@ object Multimodal {
     val synth = udf { (docId: Long) =>
       val base = pngBytesGray(24, 16, synthGray(docId, 24, 16))
       if (docId % 5 == 0) base
-      else {
-        val t1 = pngTextChunk("Author", s"author_${docId % 50}")
-        val t2 = pngTextChunk("Comment", s"c_${docId % 7}")
-        // insert after IHDR: signature 8 + IHDR chunk (12 + 13) = 33
-        val out = new java.io.ByteArrayOutputStream(base.length + t1.length + t2.length)
-        out.write(base, 0, 33); out.write(t1); out.write(t2)
-        out.write(base, 33, base.length - 33)
-        out.toByteArray
-      }
+      else pngWithChunksAfterIhdr(base,
+        pngTextChunk("Author", s"author_${docId % 50}"),
+        pngTextChunk("Comment", s"c_${docId % 7}"))
     }
     documents.withColumn("payload", synth(col("doc_id")))
   }
@@ -946,31 +971,19 @@ object Multimodal {
     * .pngStripMetadata]] (closed-form in the fixture), whether the
     * scrubbed bytes carry no text chunks, and PIXEL identity of the
     * scrub (decode equality — measured, not asserted). */
-  def pngMetaScrubAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withTextPngPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        val texts = MediaDecode.pngTextChunks(p).getOrElse(Seq.empty)
-        val author = texts.find(_._1 == "Author").map(_._2)
-        MediaDecode.pngStripMetadata(p) match {
-          case Some(s) =>
-            val same = (MediaDecode.pngGrayPixels(p),
-              MediaDecode.pngGrayPixels(s)) match {
-              case (Some((w1, h1, g1)), Some((w2, h2, g2))) =>
-                w1 == w2 && h1 == h2 && java.util.Arrays.equals(g1, g2)
-              case _ => false
-            }
-            (id, texts.size.toLong, author, (p.length - s.length).toLong,
-              MediaDecode.pngTextChunks(s).getOrElse(Seq.empty).isEmpty, same)
-          case None => (id, texts.size.toLong, author, 0L, false, false)
+  def pngMetaScrubAudit(documents: DataFrame): DataFrame =
+    perPayload(withTextPngPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "n_text_chunks", "author", "bytes_removed",
+      "text_removed", "pixels_identical") { (id, p) =>
+      val texts = MediaDecode.pngTextChunks(p).getOrElse(Seq.empty)
+      val author = texts.find(_._1 == "Author").map(_._2)
+      val (removed, clean, same) =
+        scrubReport(p, MediaDecode.pngStripMetadata(p)) { s =>
+          (MediaDecode.pngTextChunks(s).getOrElse(Seq.empty).isEmpty,
+            sameRaster(MediaDecode.pngGrayPixels)(p, s))
         }
-      })
-    }.toDF("doc_id", "n_text_chunks", "author", "bytes_removed",
-      "text_removed", "pixels_identical")
-      .orderBy("doc_id")
-  }
+      (id, texts.size.toLong, author, removed, clean, same)
+    }.orderBy("doc_id")
 
   /** Attach REAL PNGs carrying the FULL metadata surface after IHDR
     * (doc_id%5==0 docs clean): a cHRM chunk (color interpretation —
@@ -995,13 +1008,7 @@ object Multimodal {
             pngChunkBytes("eXIf", exifTiffBody((docId % 8 + 1).toInt,
               Some(((docId % 90).toInt, (docId % 180).toInt))))
           else Array.empty[Byte]
-        // insert after IHDR: signature 8 + IHDR chunk (12 + 13) = 33
-        val out = new java.io.ByteArrayOutputStream(
-          base.length + chrm.length + t.length + z.length + it.length + ex.length)
-        out.write(base, 0, 33)
-        out.write(chrm); out.write(t); out.write(z); out.write(it); out.write(ex)
-        out.write(base, 33, base.length - 33)
-        out.toByteArray
+        pngWithChunksAfterIhdr(base, chrm, t, z, it, ex)
       }
     }
     documents.withColumn("payload", synth(col("doc_id")))
@@ -1016,38 +1023,26 @@ object Multimodal {
     * the fixture — and the formula EXCLUDES the cHRM chunk, so the
     * oracle pins its retention), whether the scrubbed bytes carry no
     * text chunks AND no eXIf, and PIXEL identity of the scrub. */
-  def pngMetaAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withMetaPngPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        val texts = MediaDecode.pngTextChunks(p).getOrElse(Seq.empty)
-        def v(k: String) = texts.find(_._1 == k).map(_._2)
-        val exif = MediaDecode.pngExif(p)
-        val (removed, clean, same) = MediaDecode.pngStripMetadata(p) match {
-          case Some(s) =>
-            val pix = (MediaDecode.pngGrayPixels(p), MediaDecode.pngGrayPixels(s)) match {
-              case (Some((w1, h1, g1)), Some((w2, h2, g2))) =>
-                w1 == w2 && h1 == h2 && java.util.Arrays.equals(g1, g2)
-              case _ => false
-            }
-            ((p.length - s.length).toLong,
-              MediaDecode.pngTextChunks(s).getOrElse(Seq.empty).isEmpty &&
-                MediaDecode.pngExif(s).isEmpty, pix)
-          case None => (0L, false, false)
-        }
-        (id, texts.size.toLong, v("Author"), v("Description"), v("Title"),
-          exif.flatMap(_.orientation).map(_.toLong),
-          exif.flatMap(_.gpsLat).map(d => math.rint(d * 10000) / 10000),
-          exif.flatMap(_.gpsLon).map(d => math.rint(d * 10000) / 10000),
-          removed, clean, same)
-      })
-    }.toDF("doc_id", "n_text_chunks", "author", "description", "title",
+  def pngMetaAudit(documents: DataFrame): DataFrame =
+    perPayload(withMetaPngPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "n_text_chunks", "author", "description", "title",
       "orientation", "gps_lat", "gps_lon", "bytes_removed",
-      "meta_removed", "pixels_identical")
-      .orderBy("doc_id")
-  }
+      "meta_removed", "pixels_identical") { (id, p) =>
+      val texts = MediaDecode.pngTextChunks(p).getOrElse(Seq.empty)
+      def v(k: String) = texts.find(_._1 == k).map(_._2)
+      val exif = MediaDecode.pngExif(p)
+      val (removed, clean, same) =
+        scrubReport(p, MediaDecode.pngStripMetadata(p)) { s =>
+          (MediaDecode.pngTextChunks(s).getOrElse(Seq.empty).isEmpty &&
+            MediaDecode.pngExif(s).isEmpty,
+            sameRaster(MediaDecode.pngGrayPixels)(p, s))
+        }
+      (id, texts.size.toLong, v("Author"), v("Description"), v("Title"),
+        exif.flatMap(_.orientation).map(_.toLong),
+        exif.flatMap(_.gpsLat).map(d => math.rint(d * 10000) / 10000),
+        exif.flatMap(_.gpsLon).map(d => math.rint(d * 10000) / 10000),
+        removed, clean, same)
+    }.orderBy("doc_id")
 
   /** Attach REAL tagged-FLAC payloads: the tone fixture with a
     * formula-driven VORBIS_COMMENT block (ARTIST/TITLE; doc_id%5==0
@@ -1070,32 +1065,25 @@ object Multimodal {
     * (closed-form in the fixture), whether the scrubbed bytes carry no
     * tags, and SAMPLE identity of the scrub (decode equality — the
     * lossless claim, measured per doc). */
-  def flacTagScrubAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withTaggedFlacPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        val tags = MediaDecode.flacVorbisComments(p)
-        val artist = tags.flatMap(_.find(_._1 == "ARTIST").map(_._2))
-        MediaDecode.flacStripMetadata(p) match {
-          case Some(s) =>
-            val same = (MediaDecode.flacPcmMono(p),
-              MediaDecode.flacPcmMono(s)) match {
-              case (Some((r1, a)), Some((r2, bb))) =>
-                r1 == r2 && java.util.Arrays.equals(a, bb)
-              case _ => false
-            }
-            (id, tags.map(_.size.toLong).getOrElse(0L), artist,
-              (p.length - s.length).toLong,
-              MediaDecode.flacVorbisComments(s).isEmpty, same)
-          case None => (id, 0L, artist, 0L, false, false)
-        }
-      })
-    }.toDF("doc_id", "n_tags", "artist", "bytes_removed",
-      "tags_removed", "samples_identical")
-      .orderBy("doc_id")
-  }
+  def flacTagScrubAudit(documents: DataFrame): DataFrame =
+    perPayload(withTaggedFlacPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "n_tags", "artist", "bytes_removed",
+      "tags_removed", "samples_identical") { (id, p) =>
+      val tags = MediaDecode.flacVorbisComments(p)
+      val artist = tags.flatMap(_.find(_._1 == "ARTIST").map(_._2))
+      val stripped = MediaDecode.flacStripMetadata(p)
+      val (removed, clean, same) = scrubReport(p, stripped) { s =>
+        (MediaDecode.flacVorbisComments(s).isEmpty,
+          (MediaDecode.flacPcmMono(p), MediaDecode.flacPcmMono(s)) match {
+            case (Some((r1, a)), Some((r2, bb))) =>
+              r1 == r2 && java.util.Arrays.equals(a, bb)
+            case _ => false
+          })
+      }
+      // a stream the scrub cannot parse reports no tags
+      val nTags = if (stripped.isEmpty) 0L else tags.fold(0L)(_.size.toLong)
+      (id, nTags, artist, removed, clean, same)
+    }.orderBy("doc_id")
 
   /** One spec-valid ID3v2.3 tag block: header (plain 10 bytes,
     * syncsafe total size) + TPE1/TIT2 text frames (encoding 0,
@@ -1192,23 +1180,17 @@ object Multimodal {
   /** MP3 SCREEN audit — the frame-header walk over the fixture: per
     * doc the sample rate, first-frame bitrate, frame count and
     * duration (all exact formulas), plus the ID3 presence flags. */
-  def mp3MetaAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withMp3Payload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        MediaDecode.mp3Meta(p) match {
-          case Some(m) => (id, true, m.sampleRate.toLong,
-            m.bitrateKbps.toLong, m.channels.toLong, m.nFrames.toLong,
-            m.durationMs, m.id3v2Bytes > 0, m.id3v1)
-          case None => (id, false, 0L, 0L, 0L, 0L, 0L, false, false)
-        }
-      })
-    }.toDF("doc_id", "parsed", "sample_rate", "bitrate_kbps", "channels",
-      "n_frames", "duration_ms", "has_id3v2", "has_id3v1")
-      .orderBy("doc_id")
-  }
+  def mp3MetaAudit(documents: DataFrame): DataFrame =
+    perPayload(withMp3Payload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "parsed", "sample_rate", "bitrate_kbps", "channels",
+      "n_frames", "duration_ms", "has_id3v2", "has_id3v1") { (id, p) =>
+      MediaDecode.mp3Meta(p) match {
+        case Some(m) => (id, true, m.sampleRate.toLong,
+          m.bitrateKbps.toLong, m.channels.toLong, m.nFrames.toLong,
+          m.durationMs, m.id3v2Bytes > 0, m.id3v1)
+        case None => (id, false, 0L, 0L, 0L, 0L, 0L, false, false)
+      }
+    }.orderBy("doc_id")
 
   /** ID3 tag audit + SCRUB report — the [[exifScrubAudit]] discipline
     * on MP3: per doc the tag count and artist/title/geo values (the
@@ -1217,35 +1199,26 @@ object Multimodal {
     * whether the scrubbed bytes carry no ID3 at all, and FRAME
     * identity of the scrub (the audio region is byte-verbatim —
     * re-walked frame count + duration must match). */
-  def mp3TagScrubAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withMp3Payload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        val tags = MediaDecode.mp3Id3Frames(p).getOrElse(Seq.empty)
-        def v(k: String) = tags.find(_._1 == k).map(_._2)
-        val before = MediaDecode.mp3Meta(p)
-        val (removed, clean, same) = MediaDecode.mp3StripId3(p) match {
-          case Some(s) =>
-            val after = MediaDecode.mp3Meta(s)
-            ((p.length - s.length).toLong,
-              MediaDecode.mp3Id3Frames(s).isEmpty,
-              (before, after) match {
-                case (Some(x), Some(y)) =>
-                  x.nFrames == y.nFrames && x.durationMs == y.durationMs &&
-                    y.id3v2Bytes == 0 && !y.id3v1
-                case _ => false
-              })
-          case None => (0L, false, false)
+  def mp3TagScrubAudit(documents: DataFrame): DataFrame =
+    perPayload(withMp3Payload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "n_tags", "artist", "title", "geo",
+      "bytes_removed", "tags_removed", "frames_identical") { (id, p) =>
+      val tags = MediaDecode.mp3Id3Frames(p).getOrElse(Seq.empty)
+      def v(k: String) = tags.find(_._1 == k).map(_._2)
+      val before = MediaDecode.mp3Meta(p)
+      val (removed, clean, same) =
+        scrubReport(p, MediaDecode.mp3StripId3(p)) { s =>
+          (MediaDecode.mp3Id3Frames(s).isEmpty,
+            (before, MediaDecode.mp3Meta(s)) match {
+              case (Some(x), Some(y)) =>
+                x.nFrames == y.nFrames && x.durationMs == y.durationMs &&
+                  y.id3v2Bytes == 0 && !y.id3v1
+              case _ => false
+            })
         }
-        (id, tags.size.toLong, v("TPE1"), v("TIT2"), v("TXXX:geo"),
-          removed, clean, same)
-      })
-    }.toDF("doc_id", "n_tags", "artist", "title", "geo",
-      "bytes_removed", "tags_removed", "frames_identical")
-      .orderBy("doc_id")
-  }
+      (id, tags.size.toLong, v("TPE1"), v("TIT2"), v("TXXX:geo"),
+        removed, clean, same)
+    }.orderBy("doc_id")
 
   /** One spec-valid Ogg page (RFC 3533): header + lacing + body, CRC
     * sealed with [[MediaDecode.oggCrc]]. `packets` become this page's
@@ -1371,22 +1344,16 @@ object Multimodal {
   /** Ogg SCREEN audit over the fixture: codec/channels/rate from the
     * ID header, page count, duration from the last granule — every
     * column an exact formula by doc parity. */
-  def oggMetaAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withOggPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        MediaDecode.oggMeta(p) match {
-          case Some(m) => (id, m.codec, m.channels.toLong,
-            m.sampleRate.toLong, m.nPages.toLong, m.durationMs)
-          case None => (id, "none", 0L, 0L, 0L, 0L)
-        }
-      })
-    }.toDF("doc_id", "codec", "channels", "sample_rate", "n_pages",
-      "duration_ms")
-      .orderBy("doc_id")
-  }
+  def oggMetaAudit(documents: DataFrame): DataFrame =
+    perPayload(withOggPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "codec", "channels", "sample_rate", "n_pages",
+      "duration_ms") { (id, p) =>
+      MediaDecode.oggMeta(p) match {
+        case Some(m) => (id, m.codec, m.channels.toLong,
+          m.sampleRate.toLong, m.nPages.toLong, m.durationMs)
+        case None => (id, "none", 0L, 0L, 0L, 0L)
+      }
+    }.orderBy("doc_id")
 
   /** Ogg comment audit + REDACTION report — the privacy seam on the
     * Ogg family: per doc the tag count and ARTIST/GEO values, bytes
@@ -1394,31 +1361,25 @@ object Multimodal {
     * redacted file re-parses with BLANK values under the same keys,
     * and whether every page CRC re-seals ([[MediaDecode
     * .oggCrcValid]]). */
-  def oggTagRedactAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withOggPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        val tags = MediaDecode.oggComments(p).getOrElse(Seq.empty)
-        def v(k: String) = tags.find(_._1 == k).map(_._2)
-        val (redactedBytes, blanked, sealedOk) =
-          MediaDecode.oggRedactComments(p) match {
-            case Some(r) =>
-              val after = MediaDecode.oggComments(r).getOrElse(Seq.empty)
-              (tags.map(_._2.getBytes("UTF-8").length.toLong).sum,
-                after.map(_._1) == tags.map(_._1) &&
-                  after.forall(_._2.trim.isEmpty),
-                MediaDecode.oggCrcValid(r) && r.length == p.length)
-            case None => (0L, false, false)
-          }
-        (id, tags.size.toLong, v("ARTIST"), v("GEO"),
-          redactedBytes, blanked, sealedOk)
-      })
-    }.toDF("doc_id", "n_tags", "artist", "geo", "bytes_redacted",
-      "values_blanked", "pages_sealed")
-      .orderBy("doc_id")
-  }
+  def oggTagRedactAudit(documents: DataFrame): DataFrame =
+    perPayload(withOggPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "n_tags", "artist", "geo", "bytes_redacted",
+      "values_blanked", "pages_sealed") { (id, p) =>
+      val tags = MediaDecode.oggComments(p).getOrElse(Seq.empty)
+      def v(k: String) = tags.find(_._1 == k).map(_._2)
+      val (redactedBytes, blanked, sealedOk) =
+        MediaDecode.oggRedactComments(p) match {
+          case Some(r) =>
+            val after = MediaDecode.oggComments(r).getOrElse(Seq.empty)
+            (tags.map(_._2.getBytes("UTF-8").length.toLong).sum,
+              after.map(_._1) == tags.map(_._1) &&
+                after.forall(_._2.trim.isEmpty),
+              MediaDecode.oggCrcValid(r) && r.length == p.length)
+          case None => (0L, false, false)
+        }
+      (id, tags.size.toLong, v("ARTIST"), v("GEO"),
+        redactedBytes, blanked, sealedOk)
+    }.orderBy("doc_id")
 
   /** One RIFF chunk (fourcc + LE size + body + even pad). */
   def riffChunkBytes(fourcc: String, body: Array[Byte]): Array[Byte] = {
@@ -1505,44 +1466,36 @@ object Multimodal {
     * [[MediaDecode.webpStripMetadata]] (closed-form — ICCP retention
     * pinned by the formula), post-scrub re-parse empty, and IMAGE
     * identity (the VP8L chunk byte-verbatim, dims unchanged). */
-  def webpExifScrubAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withWebpPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        val meta = MediaDecode.webpMeta(p)
-        val exif = MediaDecode.webpExif(p)
-        def vp8lBytes(x: Array[Byte]): Option[Seq[Byte]] = {
-          val s = new String(x, java.nio.charset.StandardCharsets.ISO_8859_1)
-          val i = s.indexOf("VP8L")
-          if (i < 0) None else Some(x.slice(i, i + 8 + 16).toSeq)
-        }
-        val (removed, clean, same) = MediaDecode.webpStripMetadata(p) match {
-          case Some(s) =>
-            val m2 = MediaDecode.webpMeta(s)
-            ((p.length - s.length).toLong,
-              MediaDecode.webpExif(s).isEmpty &&
-                m2.exists(m => !m.hasExif && !m.hasXmp),
-              m2.isDefined && meta.isDefined &&
-                m2.get.width == meta.get.width &&
-                m2.get.height == meta.get.height &&
-                vp8lBytes(p) == vp8lBytes(s))
-          case None => (0L, false, false)
-        }
-        (id, meta.map(_.format).getOrElse("none"),
-          meta.map(_.width.toLong).getOrElse(0L),
-          meta.map(_.height.toLong).getOrElse(0L),
-          exif.flatMap(_.orientation).map(_.toLong),
-          exif.flatMap(_.gpsLat).map(d => math.rint(d * 10000) / 10000),
-          exif.flatMap(_.gpsLon).map(d => math.rint(d * 10000) / 10000),
-          meta.exists(_.hasXmp), removed, clean, same)
-      })
-    }.toDF("doc_id", "format", "width", "height", "orientation",
+  def webpExifScrubAudit(documents: DataFrame): DataFrame =
+    perPayload(withWebpPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "format", "width", "height", "orientation",
       "gps_lat", "gps_lon", "has_xmp", "bytes_removed", "meta_removed",
-      "image_identical")
-      .orderBy("doc_id")
-  }
+      "image_identical") { (id, p) =>
+      val meta = MediaDecode.webpMeta(p)
+      val exif = MediaDecode.webpExif(p)
+      def vp8lBytes(x: Array[Byte]): Option[Seq[Byte]] = {
+        val s = new String(x, java.nio.charset.StandardCharsets.ISO_8859_1)
+        val i = s.indexOf("VP8L")
+        if (i < 0) None else Some(x.slice(i, i + 8 + 16).toSeq)
+      }
+      val (removed, clean, same) =
+        scrubReport(p, MediaDecode.webpStripMetadata(p)) { s =>
+          val m2 = MediaDecode.webpMeta(s)
+          (MediaDecode.webpExif(s).isEmpty &&
+            m2.exists(m => !m.hasExif && !m.hasXmp),
+            m2.isDefined && meta.isDefined &&
+              m2.get.width == meta.get.width &&
+              m2.get.height == meta.get.height &&
+              vp8lBytes(p) == vp8lBytes(s))
+        }
+      (id, meta.map(_.format).getOrElse("none"),
+        meta.map(_.width.toLong).getOrElse(0L),
+        meta.map(_.height.toLong).getOrElse(0L),
+        exif.flatMap(_.orientation).map(_.toLong),
+        exif.flatMap(_.gpsLat).map(d => math.rint(d * 10000) / 10000),
+        exif.flatMap(_.gpsLon).map(d => math.rint(d * 10000) / 10000),
+        meta.exists(_.hasXmp), removed, clean, same)
+    }.orderBy("doc_id")
 
   /** A spec-valid GIF89a: logical screen (no global color table),
     * an optional comment extension, `nFrames` image descriptors with
@@ -1592,36 +1545,28 @@ object Multimodal {
   /** GIF screen + scrub report: dims, frame count, the comment text;
     * bytes removed by [[MediaDecode.gifStripMetadata]] (closed-form),
     * post-scrub comments gone, frames intact (re-walked count). */
-  def gifMetaScrubAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withGifPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        val meta = MediaDecode.gifMeta(p)
-        val (removed, clean, same) = MediaDecode.gifStripMetadata(p) match {
-          case Some(s) =>
-            val m2 = MediaDecode.gifMeta(s)
-            ((p.length - s.length).toLong,
-              m2.exists(_.comments.isEmpty),
-              (meta, m2) match {
-                case (Some(a), Some(c)) =>
-                  a.nFrames == c.nFrames && a.width == c.width &&
-                    a.height == c.height
-                case _ => false
-              })
-          case None => (0L, false, false)
+  def gifMetaScrubAudit(documents: DataFrame): DataFrame =
+    perPayload(withGifPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "width", "height", "n_frames", "comment",
+      "bytes_removed", "comments_removed", "frames_identical") { (id, p) =>
+      val meta = MediaDecode.gifMeta(p)
+      val (removed, clean, same) =
+        scrubReport(p, MediaDecode.gifStripMetadata(p)) { s =>
+          val m2 = MediaDecode.gifMeta(s)
+          (m2.exists(_.comments.isEmpty),
+            (meta, m2) match {
+              case (Some(a), Some(c)) =>
+                a.nFrames == c.nFrames && a.width == c.width &&
+                  a.height == c.height
+              case _ => false
+            })
         }
-        (id, meta.map(_.width.toLong).getOrElse(0L),
-          meta.map(_.height.toLong).getOrElse(0L),
-          meta.map(_.nFrames.toLong).getOrElse(0L),
-          meta.flatMap(_.comments.headOption),
-          removed, clean, same)
-      })
-    }.toDF("doc_id", "width", "height", "n_frames", "comment",
-      "bytes_removed", "comments_removed", "frames_identical")
-      .orderBy("doc_id")
-  }
+      (id, meta.map(_.width.toLong).getOrElse(0L),
+        meta.map(_.height.toLong).getOrElse(0L),
+        meta.map(_.nFrames.toLong).getOrElse(0L),
+        meta.flatMap(_.comments.headOption),
+        removed, clean, same)
+    }.orderBy("doc_id")
 
   /** A spec-valid bare little-endian TIFF: IFD0 with ImageWidth(256)
     * + ImageLength(257) SHORTs, optional Orientation(274) and a GPS
@@ -1681,26 +1626,20 @@ object Multimodal {
   /** Bare-TIFF screen audit — dims + orientation + GPS through the
     * shared walk; GPS-bearing docs are the quarantine route (no TIFF
     * scrub exists by design — see [[MediaDecode.tiffMeta]]). */
-  def tiffExifAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withTiffPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        MediaDecode.tiffMeta(p) match {
-          case Some(m) => (id, m.width.toLong, m.height.toLong,
-            m.orientation.map(_.toLong),
-            m.gpsLat.map(d => math.rint(d * 10000) / 10000),
-            m.gpsLon.map(d => math.rint(d * 10000) / 10000),
-            m.gpsLat.isDefined || m.gpsLon.isDefined)
-          case None => (id, 0L, 0L, None: Option[Long],
-            None: Option[Double], None: Option[Double], false)
-        }
-      })
-    }.toDF("doc_id", "width", "height", "orientation", "gps_lat",
-      "gps_lon", "quarantine")
-      .orderBy("doc_id")
-  }
+  def tiffExifAudit(documents: DataFrame): DataFrame =
+    perPayload(withTiffPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "width", "height", "orientation", "gps_lat",
+      "gps_lon", "quarantine") { (id, p) =>
+      MediaDecode.tiffMeta(p) match {
+        case Some(m) => (id, m.width.toLong, m.height.toLong,
+          m.orientation.map(_.toLong),
+          m.gpsLat.map(d => math.rint(d * 10000) / 10000),
+          m.gpsLon.map(d => math.rint(d * 10000) / 10000),
+          m.gpsLat.isDefined || m.gpsLon.isDefined)
+        case None => (id, 0L, 0L, None: Option[Long],
+          None: Option[Double], None: Option[Double], false)
+      }
+    }.orderBy("doc_id")
 
   /** One spec-valid gzip member (RFC 1952): optional MTIME/FNAME/
     * FCOMMENT metadata, raw-deflate body, CRC32 + ISIZE trailer.
@@ -1758,37 +1697,31 @@ object Multimodal {
     * None, mtime 0, no comment), and DECOMPRESSED identity — the
     * strongest oracle this family has (inflate before == after,
     * byte-for-byte, measured per doc). */
-  def gzipScrubAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withGzipPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        // ONE member walk per side (the bundle) — a naive audit
-        // re-inflates every payload five times (review find)
-        val bundle = MediaDecode.gzipAuditBundle(p)
-        val (removed, clean, same) = bundle match {
-          case Some((before, decP, Some(s))) =>
-            MediaDecode.gzipAuditBundle(s) match {
-              case Some((after, decS, _)) =>
-                ((p.length - s.length).toLong,
-                  after.fname.isEmpty && after.mtime == 0L &&
-                    !after.hasComment && !after.hasExtra,
-                  before.members == after.members &&
-                    java.util.Arrays.equals(decP, decS))
-              case None => (0L, false, false)
-            }
-          case _ => (0L, false, false)
-        }
-        val before = bundle.map(_._1)
-        (id, before.map(_.members.toLong).getOrElse(0L),
-          before.flatMap(_.fname), before.exists(_.hasComment),
-          removed, clean, same)
-      })
-    }.toDF("doc_id", "n_members", "fname", "has_comment",
-      "bytes_removed", "meta_removed", "decompressed_identical")
-      .orderBy("doc_id")
-  }
+  def gzipScrubAudit(documents: DataFrame): DataFrame =
+    perPayload(withGzipPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "n_members", "fname", "has_comment",
+      "bytes_removed", "meta_removed", "decompressed_identical") { (id, p) =>
+      // ONE member walk per side (the bundle) — a naive audit
+      // re-inflates every payload five times (review find)
+      val bundle = MediaDecode.gzipAuditBundle(p)
+      val (removed, clean, same) = bundle match {
+        case Some((before, decP, Some(s))) =>
+          MediaDecode.gzipAuditBundle(s) match {
+            case Some((after, decS, _)) =>
+              ((p.length - s.length).toLong,
+                after.fname.isEmpty && after.mtime == 0L &&
+                  !after.hasComment && !after.hasExtra,
+                before.members == after.members &&
+                  java.util.Arrays.equals(decP, decS))
+            case None => (0L, false, false)
+          }
+        case _ => (0L, false, false)
+      }
+      val before = bundle.map(_._1)
+      (id, before.map(_.members.toLong).getOrElse(0L),
+        before.flatMap(_.fname), before.exists(_.hasComment),
+        removed, clean, same)
+    }.orderBy("doc_id")
 
   /** Attach REAL WARC payloads in the CommonCrawl layout — ONE gzip
     * member per record: a `warcinfo` record then doc_id%4+1
@@ -1825,23 +1758,17 @@ object Multimodal {
     * computed from the BYTES the walk extracted, so a wrong member
     * boundary, header parse, or Content-Length slice hash-mismatches
     * the formula oracle. */
-  def warcInventory(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withWarcPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.flatMap { case (id, p) =>
-        MediaDecode.warcRecords(p).getOrElse(Seq.empty).zipWithIndex.map {
-          case (r, i) =>
-            val md = java.security.MessageDigest.getInstance("MD5")
-            (id, i.toLong, r.warcType, r.targetUri, r.contentLength,
-              md.digest(r.body).map("%02x".format(_)).mkString)
-        }
-      })
-    }.toDF("doc_id", "rec_idx", "warc_type", "target_uri",
-      "content_length", "body_md5")
-      .orderBy("doc_id", "rec_idx")
-  }
+  def warcInventory(documents: DataFrame): DataFrame =
+    payloadRows(withWarcPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "rec_idx", "warc_type", "target_uri",
+      "content_length", "body_md5") { (id, p) =>
+      MediaDecode.warcRecords(p).getOrElse(Seq.empty).zipWithIndex.map {
+        case (r, i) =>
+          val md = java.security.MessageDigest.getInstance("MD5")
+          (id, i.toLong, r.warcType, r.targetUri, r.contentLength,
+            md.digest(r.body).map("%02x".format(_)).mkString)
+      }
+    }.orderBy("doc_id", "rec_idx")
 
   /** Attach a WAV payload column: per-doc channels/rate/depth from the
     * deterministic formulas, document text riding as the PCM data
@@ -1854,34 +1781,25 @@ object Multimodal {
     documents.withColumn("payload", synth(col("doc_id"), col("text")))
   }
 
-  /** Batched audio decode — same per-partition batch shape as
-    * [[decodeBatched]]. REAL RIFF chunk walk ([[MediaDecode.wav]]);
+  /** Per-payload audio decode — the [[decodeBatched]] shape. REAL
+    * RIFF chunk walk ([[MediaDecode.wav]]);
     * total under the P14 containment stance: an unparseable payload
     * yields format `unknown` with zeroed audio fields, never an
     * exception. `duration_ms` is derived from the PARSED data-chunk
     * length and byte rate — the oracle checks it against the synthesis
     * formula, proving the walk read real bytes. */
-  def audioFeatures(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withAudioPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // a real decoder would hand `batch` to one vectorized call here
-        batch.iterator.map { case (id, payload) =>
-          MediaDecode.wav(payload) match {
-            case Some(w) =>
-              (id, "wav", w.channels.toLong, w.sampleRate.toLong,
-                w.bits.toLong, w.durationMs, payload.length.toLong)
-            case None =>
-              (id, "unknown", 0L, 0L, 0L, 0L, payload.length.toLong)
-          }
-        }
+  def audioFeatures(documents: DataFrame): DataFrame =
+    perPayload(withAudioPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "format", "channels", "sample_rate_hz",
+      "bits_per_sample", "duration_ms", "payload_bytes") { (id, payload) =>
+      MediaDecode.wav(payload) match {
+        case Some(w) =>
+          (id, "wav", w.channels.toLong, w.sampleRate.toLong,
+            w.bits.toLong, w.durationMs, payload.length.toLong)
+        case None =>
+          (id, "unknown", 0L, 0L, 0L, 0L, payload.length.toLong)
       }
-    }.toDF("doc_id", "format", "channels", "sample_rate_hz",
-      "bits_per_sample", "duration_ms", "payload_bytes")
-      .orderBy("doc_id")
-  }
+    }.orderBy("doc_id")
 
   // ------------------------------------------------------------------
   // perceptual audio near-dup: PCM decode + band-energy fingerprint
@@ -2058,31 +1976,22 @@ object Multimodal {
   }
 
   /** Quantize doubles to PCM bytes (8-bit unsigned / 16-bit signed LE,
-    * `channels` identical interleaved channels), clamped to [−1, 1]. */
+    * `channels` identical interleaved channels), clamped to [−1, 1]:
+    * the byte encoding of [[pcmQuantizeInt]]. */
   def pcmQuantize(samples: Array[Double], bits: Int, gain: Double,
                   channels: Int): Array[Byte] = {
-    require(bits == 8 || bits == 16, s"bits must be 8 or 16: $bits")
-    require(channels >= 1, s"channels must be >= 1: $channels")
-    val bytesPer = bits / 8
-    val out = new Array[Byte](samples.length * channels * bytesPer)
-    var i = 0
-    while (i < samples.length) {
-      val s = math.max(-1.0, math.min(1.0, samples(i) * gain))
-      var c = 0
-      while (c < channels) {
-        val o = (i * channels + c) * bytesPer
-        if (bits == 8)
-          out(o) = math.min(255, math.max(0, math.round(s * 127).toInt + 128)).toByte
-        else {
-          val v = math.round(s * 32767).toInt
-          out(o) = (v & 0xff).toByte
-          out(o + 1) = ((v >> 8) & 0xff).toByte
-        }
-        c += 1
+    val ints = pcmQuantizeInt(samples, bits, gain, channels)
+    if (bits == 8) ints.map(v => (v + 128).toByte)
+    else {
+      val out = new Array[Byte](ints.length * 2)
+      var i = 0
+      while (i < ints.length) {
+        out(2 * i) = (ints(i) & 0xff).toByte
+        out(2 * i + 1) = ((ints(i) >> 8) & 0xff).toByte
+        i += 1
       }
-      i += 1
+      out
     }
-    out
   }
 
   /** Attach REAL PCM-bearing WAV payloads ([[synthToneSamples]]
@@ -2114,12 +2023,11 @@ object Multimodal {
   }
 
   /** Per-doc audio fingerprints over the binary payload column —
-    * batched per-partition PCM decode ([[MediaDecode.wavPcmMono]]) +
+    * per-payload PCM decode ([[MediaDecode.wavPcmMono]]) +
     * [[audioFingerprint64]] through the shared [[fingerprintPayloads]]
     * scaffold (too-short/undecodable clips drop). */
-  def audioFingerprints(withPayload: DataFrame,
-                        batchSize: Int = 64): DataFrame =
-    fingerprintPayloads(withPayload, batchSize) { payload =>
+  def audioFingerprints(withPayload: DataFrame): DataFrame =
+    fingerprintPayloads(withPayload) { payload =>
       MediaDecode.wavPcmMono(payload)
         .orElse(MediaDecode.flacPcmMono(payload))
         .flatMap { case (sr, samples) =>
@@ -2132,13 +2040,11 @@ object Multimodal {
     * same band-energy GRADIENTS: fingerprints feed the UNCHANGED
     * SimHash 4×16-bit pigeonhole band join (complete for Hamming ≤ 3,
     * never all-pairs). Output: (doc_a, doc_b, hamming), ordered.
-    * Scale shape: one batched narrow decode pass (samples never
+    * Scale shape: one narrow per-payload decode pass (samples never
     * shuffle — 8 B of hash per clip crosses the wire) + the banded
     * equi-join. */
-  def audioNearDupPairs(withPayload: DataFrame, maxDist: Int = 3,
-                        batchSize: Int = 64): DataFrame =
-    Dedup.simhashNearDupPairsFromFingerprints(
-      audioFingerprints(withPayload, batchSize), maxDist)
+  def audioNearDupPairs(withPayload: DataFrame, maxDist: Int = 3): DataFrame =
+    Dedup.simhashNearDupPairsFromFingerprints(audioFingerprints(withPayload), maxDist)
 
   // ------------------------------------------------------------------
   // video: frame sampling over an opaque container column
@@ -2163,7 +2069,7 @@ object Multimodal {
 
   /** Walk a [[videoBytes]] container; truncation-contained — a corrupt
     * or chopped container yields the frames that fully parsed, never
-    * an exception (one bad video must not poison a batch). */
+    * an exception (one bad video must not poison the partition). */
   def parseFrames(payload: Array[Byte]): Seq[Array[Byte]] = {
     def u32(off: Int): Long =
       ((payload(off) & 0xffL) << 24) | ((payload(off + 1) & 0xffL) << 16) |
@@ -2440,23 +2346,15 @@ object Multimodal {
     * wrong offset, endianness, or largesize/co64 misread breaks the
     * formula oracle. Output: (doc_id, track_idx, handler, codec,
     * width, height, duration_ms, n_samples), ordered. */
-  def mp4Features(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val withP = withMp4Payload(graft.util.SparkUtil.widen(documents))
-    withP.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.iterator.flatMap {
-        case (id, payload) =>
-          MediaDecode.mp4Tracks(payload).zipWithIndex.map { case (t, i) =>
-            (id, i.toLong, t.handler, t.codec, t.width.toLong,
-              t.height.toLong, t.durationMs, t.nSamples)
-          }
-      }))
-      .toDF("doc_id", "track_idx", "handler", "codec", "width", "height",
-        "duration_ms", "n_samples")
-      .orderBy("doc_id", "track_idx")
-  }
+  def mp4Features(documents: DataFrame): DataFrame =
+    payloadRows(withMp4Payload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "track_idx", "handler", "codec", "width", "height",
+      "duration_ms", "n_samples") { (id, payload) =>
+      MediaDecode.mp4Tracks(payload).zipWithIndex.map { case (t, i) =>
+        (id, i.toLong, t.handler, t.codec, t.width.toLong,
+          t.height.toLong, t.durationMs, t.nSamples)
+      }
+    }.orderBy("doc_id", "track_idx")
 
   /** A spec-shaped EXIF APP1 segment (little-endian TIFF): IFD0 with
     * orientation (+ the GPS IFD pointer when `gps` is set), GPS IFD
@@ -2535,54 +2433,36 @@ object Multimodal {
   /** EXIF privacy AUDIT over the binary payload column — the screen a
     * training-image corpus runs before release: per doc, whether EXIF
     * exists, the declared orientation, and decoded GPS coordinates
-    * (decimal degrees). Batched per-partition parse (no entropy
-    * decode — marker walk + TIFF reads only). Output: (doc_id,
-    * has_exif, orientation, gps_lat, gps_lon), ordered. */
-  def exifAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withExifJpegPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        MediaDecode.jpegExif(p) match {
-          case Some(m) => (id, true, m.orientation.map(_.toLong),
-            m.gpsLat.map(d => math.rint(d * 10000) / 10000),
-            m.gpsLon.map(d => math.rint(d * 10000) / 10000))
-          case None => (id, false, None: Option[Long],
-            None: Option[Double], None: Option[Double])
-        }
-      })
-    }.toDF("doc_id", "has_exif", "orientation", "gps_lat", "gps_lon")
-      .orderBy("doc_id")
-  }
+    * (decimal degrees). Per-payload parse (no entropy decode — marker
+    * walk + TIFF reads only). Output: (doc_id, has_exif, orientation,
+    * gps_lat, gps_lon), ordered. */
+  def exifAudit(documents: DataFrame): DataFrame =
+    perPayload(withExifJpegPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "has_exif", "orientation", "gps_lat", "gps_lon") { (id, p) =>
+      MediaDecode.jpegExif(p) match {
+        case Some(m) => (id, true, m.orientation.map(_.toLong),
+          m.gpsLat.map(d => math.rint(d * 10000) / 10000),
+          m.gpsLon.map(d => math.rint(d * 10000) / 10000))
+        case None => (id, false, None: Option[Long],
+          None: Option[Double], None: Option[Double])
+      }
+    }.orderBy("doc_id")
 
   /** Metadata-SCRUB audit — run [[MediaDecode.jpegStripMetadata]] over
     * the same fixture and report, per doc: bytes removed (the APP1
     * segment, closed-form in the fixture), whether the scrubbed bytes
     * carry no EXIF, and PIXEL identity of the scrub (decode equality —
     * the lossless claim, checked not asserted). */
-  def exifScrubAudit(documents: DataFrame, batchSize: Int = 64): DataFrame = {
-    val src = withExifJpegPayload(graft.util.SparkUtil.widen(documents))
-      .select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.iterator.map { case (id, p) =>
-        MediaDecode.jpegStripMetadata(p) match {
-          case Some(s) =>
-            val same = (MediaDecode.jpegLumaPixels(p),
-              MediaDecode.jpegLumaPixels(s)) match {
-              case (Some((w1, h1, g1)), Some((w2, h2, g2))) =>
-                w1 == w2 && h1 == h2 && java.util.Arrays.equals(g1, g2)
-              case _ => false
-            }
-            (id, (p.length - s.length).toLong,
-              MediaDecode.jpegExif(s).isEmpty, same)
-          case None => (id, 0L, false, false)
+  def exifScrubAudit(documents: DataFrame): DataFrame =
+    perPayload(withExifJpegPayload(graft.util.SparkUtil.widen(documents)),
+      "doc_id", "bytes_removed", "exif_removed", "pixels_identical") { (id, p) =>
+      val (removed, clean, same) =
+        scrubReport(p, MediaDecode.jpegStripMetadata(p)) { s =>
+          (MediaDecode.jpegExif(s).isEmpty,
+            sameRaster(MediaDecode.jpegLumaPixels)(p, s))
         }
-      })
-    }.toDF("doc_id", "bytes_removed", "exif_removed", "pixels_identical")
-      .orderBy("doc_id")
-  }
+      (id, removed, clean, same)
+    }.orderBy("doc_id")
 
   /** Frames of an opaque video payload, by container magic: the GVID
     * fixture walk, the REAL MJPEG-in-AVI demux ([[MediaDecode
@@ -2693,69 +2573,55 @@ object Multimodal {
   }
 
   /** Per-doc video fingerprints over the binary payload column —
-    * batched per-partition container walk + frame pixel decode +
+    * per-payload container walk + frame pixel decode +
     * [[videoFingerprint64]] through the shared [[fingerprintPayloads]]
     * scaffold. */
-  def videoFingerprints(withPayload: DataFrame,
-                        batchSize: Int = 64,
-                        frameStep: Int = 1): DataFrame =
-    fingerprintPayloads(withPayload, batchSize)(
-      videoFingerprint64(_, frameStep))
+  def videoFingerprints(withPayload: DataFrame, frameStep: Int = 1): DataFrame =
+    fingerprintPayloads(withPayload)(videoFingerprint64(_, frameStep))
 
   /** Perceptual VIDEO near-dup pairs — completes the trilogy next to
     * [[imageNearDupPairs]] (stills) and [[audioNearDupPairs]] (PCM):
     * per-frame re-encoded copies of one clip share ~no bytes but every
     * pooled gradient; fingerprints feed the UNCHANGED SimHash 4×16-bit
     * pigeonhole band join (complete for Hamming ≤ 3). Output: (doc_a,
-    * doc_b, hamming), ordered. Scale shape: one batched narrow
+    * doc_b, hamming), ordered. Scale shape: one narrow per-payload
     * decode pass (8 B of hash per clip crosses the wire) + the banded
     * equi-join. */
   def videoNearDupPairs(withPayload: DataFrame, maxDist: Int = 3,
-                        batchSize: Int = 64, frameStep: Int = 1): DataFrame =
+                        frameStep: Int = 1): DataFrame =
     Dedup.simhashNearDupPairsFromFingerprints(
-      videoFingerprints(withPayload, batchSize, frameStep), maxDist)
+      videoFingerprints(withPayload, frameStep), maxDist)
 
   /** Frame sampling — keep every `everyK`-th frame of each video
     * payload, emitting (doc_id, frame_idx, frame_md5, frame_bytes).
     * The training-data use: thin a video corpus to representative
     * stills before (image) feature extraction and dedup.
     *
-    * Scale shape: same batched per-partition walk as
-    * [[decodeBatched]] (`mapInPandas` analog) — iterator-to-iterator,
-    * O(batch) memory, no shuffle; a real demuxer slots into the batch
-    * loop without plan changes. */
-  def frameSample(documents: DataFrame, everyK: Int,
-                  batchSize: Int = 64): DataFrame =
+    * Scale shape: the [[decodeBatched]] per-payload walk — a narrow,
+    * iterator-to-iterator pass holding one video's frames at a time, no
+    * shuffle. */
+  def frameSample(documents: DataFrame, everyK: Int): DataFrame =
     frameSampleFrom(
-      withVideoPayload(graft.util.SparkUtil.widen(documents)), everyK,
-      batchSize)
+      withVideoPayload(graft.util.SparkUtil.widen(documents)), everyK)
 
   /** Frame sampling over an ALREADY-ATTACHED payload column —
     * container-dispatched ([[videoFrames]]: GVID or real MJPEG-in-AVI),
     * so the same thinning op runs over whichever container the corpus
-    * carries. Same batched per-partition walk as [[frameSample]]. */
-  def frameSampleFrom(withPayload: DataFrame, everyK: Int,
-                      batchSize: Int = 64): DataFrame = {
+    * carries. Same per-payload walk as [[frameSample]]. */
+  def frameSampleFrom(withPayload: DataFrame, everyK: Int): DataFrame = {
     require(everyK >= 1, s"everyK must be >= 1: $everyK")
-    val src = withPayload.select(col("doc_id"), col("payload"))
-    import src.sparkSession.implicits._
-    src.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // a real demuxer would hand `batch` to one vectorized call here
-        batch.iterator.flatMap { case (id, payload) =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          // the step rides into the demux (skipped frames never
-          // byte-copied); the original index is keptIdx·everyK
-          videoFrames(payload, everyK).zipWithIndex.map {
-            case (f, k) =>
-              (id, k.toLong * everyK,
-                md.digest(f).map("%02x".format(_)).mkString,
-                f.length.toLong)
-          }
-        }
+    payloadRows(withPayload,
+      "doc_id", "frame_idx", "frame_md5", "frame_bytes") { (id, payload) =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      // the step rides into the demux (skipped frames never
+      // byte-copied); the original index is keptIdx·everyK
+      videoFrames(payload, everyK).zipWithIndex.map {
+        case (f, k) =>
+          (id, k.toLong * everyK,
+            md.digest(f).map("%02x".format(_)).mkString,
+            f.length.toLong)
       }
-    }.toDF("doc_id", "frame_idx", "frame_md5", "frame_bytes")
-      .orderBy("doc_id", "frame_idx")
+    }.orderBy("doc_id", "frame_idx")
   }
 
   /** Attach MJPEG-in-AVI containers whose `00dc` frames carry the SAME
@@ -2801,8 +2667,8 @@ object Multimodal {
     * doc_id; only decodable raster formats (png/jpeg) are bucketed —
     * a stub-decoded container never enters a geometry decision.
     *
-    * Scale shape: [[decodeBatched]]'s batched header walk, then one
-    * narrow projection; no shuffle. */
+    * Scale shape: [[decodeBatched]]'s per-payload header walk, then
+    * one narrow projection; no shuffle. */
   def aspectBuckets(documents: DataFrame): DataFrame = {
     val entries = aspectBucketPanel.zipWithIndex.map {
       case ((p, q, name), i) =>
@@ -2950,7 +2816,7 @@ object MediaDecode {
     * the demux composes the two decoders this repo already has (RIFF
     * walk + JPEG entropy decode). Truncation-contained: a chunk whose
     * declared size overruns the payload ends the walk with the frames
-    * that fully parsed (one bad video must not poison a batch);
+    * that fully parsed (one bad video must not poison the partition);
     * non-AVI payloads return empty. `step` keeps only every step-th
     * frame WITHOUT byte-copying the skipped ones (chunk walking is
     * header reads; the copy is the cost frameStep exists to cut). */
@@ -3947,9 +3813,11 @@ object MediaDecode {
     val out = Seq.newBuilder[(String, Int, Int)]
     var p = 12
     var running = true
-    while (running && p + 8 <= b.length) {
+    // bounds in Long: a declared length near 2^31 must end the walk,
+    // not wrap the sum negative past the check
+    while (running && p + 8L <= b.length) {
       val len = le32(b, p + 4).toInt
-      if (len < 0 || p + 8 + len > b.length) running = false
+      if (len < 0 || p + 8L + len > b.length) running = false
       else {
         out += ((new String(b, p, 4,
           java.nio.charset.StandardCharsets.US_ASCII), p + 8, len))
@@ -4523,9 +4391,11 @@ object MediaDecode {
     val out = Seq.newBuilder[(String, Int, Int)]
     var p = 8
     var done = false
-    while (!done && p + 8 <= b.length) {
+    // bounds in Long: a declared length near 2^31 must end the walk,
+    // not wrap the sum negative past the check
+    while (!done && p + 8L <= b.length) {
       val len = be32(b, p).toInt
-      if (len < 0 || p + 12 + len > b.length) done = true
+      if (len < 0 || p + 12L + len > b.length) done = true
       else {
         val t = new String(b, p + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
         out += ((t, p, len))
@@ -4863,7 +4733,7 @@ object MediaDecode {
   /** Parse the moov tree into raw per-track sample tables. Non-MP4
     * payloads (no `ftyp`/`moov` leading box) return empty; any
     * malformed region ends ITS level with what parsed (one bad video
-    * must not poison a batch). */
+    * must not poison the partition). */
   private def mp4Parse(b: Array[Byte]): Seq[Mp4TrakRaw] = {
     if (b.length < 12) return Nil
     val lead = new String(b, 4, 4, java.nio.charset.StandardCharsets.US_ASCII)

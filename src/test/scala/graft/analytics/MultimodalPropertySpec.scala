@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * containment stance as an invariant: NO input, however malformed,
   * may throw; well-formed containers round-trip exactly. Pure JVM (no
   * Spark session needed — the parsers are the per-row kernels of the
-  * batched decode operators). */
+  * per-payload decode operators). */
 class MultimodalPropertySpec extends AnyFunSuite {
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
@@ -872,13 +872,8 @@ class MultimodalPropertySpec extends AnyFunSuite {
     val t2 = Multimodal.pngTextChunk("Comment", "hi")
     // closed-form chunk size: 12 overhead + keyword + NUL + value
     assert(t1.length == 12 + 6 + 1 + 5)
-    def inject(extra: Array[Byte]*): Array[Byte] = {
-      // after IHDR: signature 8 + IHDR chunk (12 + 13) = 33
-      val o = new java.io.ByteArrayOutputStream()
-      o.write(base, 0, 33); extra.foreach(o.write)
-      o.write(base, 33, base.length - 33)
-      o.toByteArray
-    }
+    def inject(extra: Array[Byte]*): Array[Byte] =
+      Multimodal.pngWithChunksAfterIhdr(base, extra: _*)
     val tagged = inject(t1, t2)
     assert(MediaDecode.pngTextChunks(tagged)
       .contains(Seq("Author" -> "alice", "Comment" -> "hi")))
@@ -1488,6 +1483,47 @@ class MultimodalPropertySpec extends AnyFunSuite {
       MediaDecode.webpMeta(b); MediaDecode.webpExif(b)
       MediaDecode.webpStripMetadata(b)
     }
+  }
+
+  test("png/webp chunk walk: a declared length near 2^31 ends the walk with the parsed prefix, not None") {
+    // an 8-byte chunk header whose length field reads 0x7FFFFFF0: the
+    // offset + header + length sum leaves the Int range
+    def hugeHeader(fourcc: String, bigEndian: Boolean): Array[Byte] = {
+      val len = Array[Byte](0x7f, 0xff.toByte, 0xff.toByte, 0xf0.toByte)
+      if (bigEndian) len ++ fourcc.getBytes("US-ASCII")
+      else fourcc.getBytes("US-ASCII") ++ len.reverse
+    }
+    // PNG: tEXt + eXIf, then the header; IDAT/IEND sit past it
+    val base = Multimodal.pngBytesGray(24, 16, Multimodal.synthGray(3L, 24, 16))
+    val text = Multimodal.pngTextChunk("Author", "alice")
+    val exif = Multimodal.pngChunkBytes("eXIf",
+      Multimodal.exifTiffBody(6, Some((45, 90))))
+    val png = Multimodal.pngWithChunksAfterIhdr(base, text, exif,
+      hugeHeader("zzzz", bigEndian = true))
+    // the same prefix with an honestly truncated tail: a chunk header
+    // declaring more bytes than remain
+    val honest = Multimodal.pngWithChunksAfterIhdr(base, text, exif,
+      Array[Byte](0, 0, 0x10, 0) ++ "zzzz".getBytes("US-ASCII"))
+    assert(MediaDecode.pngTextChunks(png).contains(Seq("Author" -> "alice")))
+    assert(MediaDecode.pngTextChunks(png) == MediaDecode.pngTextChunks(honest))
+    assert(MediaDecode.pngExif(png).contains(
+      MediaDecode.ExifMeta(Some(6), Some(45.0), Some(90.0))))
+    val pngClean = MediaDecode.pngStripMetadata(png)
+    assert(pngClean.isDefined, "the scrub must run over the parsed prefix")
+    assert(MediaDecode.pngTextChunks(pngClean.get).contains(Seq.empty))
+    assert(MediaDecode.pngExif(pngClean.get).isEmpty)
+    // WebP: a GPS-bearing extended file, then the header
+    val ext = Multimodal.webpBytes(33, 21, Some((6, (45, 90))), None,
+      extended = true, 5L)
+    val webp = ext ++ hugeHeader("JUNK", bigEndian = false)
+    assert(MediaDecode.webpExif(webp).contains(
+      MediaDecode.ExifMeta(Some(6), Some(45.0), Some(90.0))))
+    assert(MediaDecode.webpMeta(webp).isDefined)
+    assert(MediaDecode.webpMeta(webp) == MediaDecode.webpMeta(ext))
+    val webpClean = MediaDecode.webpStripMetadata(webp)
+    assert(webpClean.isDefined, "the scrub must run over the parsed prefix")
+    assert(MediaDecode.webpExif(webpClean.get).isEmpty)
+    assert(MediaDecode.webpMeta(webpClean.get).exists(m => !m.hasExif && !m.hasXmp))
   }
 
   test("gif: screen exactness, multi-sub-block comments, GCE retained, trailer truncation, containment") {

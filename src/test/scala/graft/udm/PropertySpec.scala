@@ -67,7 +67,7 @@ class PropertySpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val texts = docs.select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val batched = Multimodal.decodeBatched(docs, batchSize = 7)
+    val batched = Multimodal.decodeBatched(docs)
       .orderBy("doc_id").collect()
     // real dimensions out of the synthesized PNG/JPEG binaries, for
     // EVERY generated text (arbitrary trailing bytes never confuse the

@@ -1,4 +1,13 @@
-val names = sys.env.getOrElse("DRIVE_QUERIES", "dedup_prefix_jaccard").split(",").toSeq
+// a trailing `*` is a name prefix: `mm_*` expands to every registry
+// query starting with `mm_`, in sorted order
+val names = sys.env.getOrElse("DRIVE_QUERIES", "dedup_prefix_jaccard").split(",").toSeq.flatMap { n =>
+  if (!n.endsWith("*")) Seq(n)
+  else {
+    val hits = graft.queries.Registry.queries.keys.filter(_.startsWith(n.dropRight(1))).toSeq.sorted
+    require(hits.nonEmpty, s"no registry query matches $n")
+    hits
+  }
+}
 val sf = sys.env.getOrElse("DRIVE_SF", "/root/testdata/sf0.01")
 val out = sys.env.getOrElse("DRIVE_OUT", "/tmp/v_one")
 new java.io.File(out).mkdirs()
