@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.streaming.StreamingPipeline
 import graft.udm.UdmTransform
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
@@ -30,32 +31,21 @@ object BatchPipeline {
 
   /** Read a directory of tshark-JSON capture files (F2 glob —
     * `capture_*.pcap*` analog) into one row per packet, keeping the raw
-    * packet JSON for snippet fidelity. A file that is not a JSON array
-    * yields one row with its whole text (→ malformed event), mirroring
-    * the reference's whole-file error containment
-    * (json2udm_cloud.py:350–360) at row granularity. */
-  def readRawPackets(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     glob: String = "*.json"): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.read
+    * packet JSON for snippet fidelity; the split and the whole-file
+    * containment are [[UdmTransform.splitCaptures]]'s, shared with both
+    * streams. */
+  def readRawPackets(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    UdmTransform.splitCaptures(spark.read
       .option("wholetext", "true")
-      .option("pathGlobFilter", glob)
-      .text(dir)
-      .select(input_file_name().as("source_file"), col("value"))
-      .select(col("source_file"),
-        explode(coalesce(from_json(col("value"), ArrayType(StringType)),
-          array(col("value")))).as("raw"))
-  }
+      .option("pathGlobFilter", "*.json")
+      .text(dir))
 
-  /** Full batch run: transform, route error events to an `_errors`
+  /** Full batch run: transform and route errors with the streams' own
+    * [[StreamingPipeline.toUdm]], send error events to an `_errors`
     * path (K4 DLQ analog), write good events as JSONL (K2), return
     * per-file counts (A1/A2). */
   def run(spark: org.apache.spark.sql.SparkSession, inDir: String, outDir: String): DataFrame = {
-    val udm = UdmTransform.transform(readRawPackets(spark, inDir), "raw")
-      .withColumn("event", col("event_struct.event"))
-      .withColumn("is_error",
-        col("event.metadata.product_name").contains("PacketProcessingError") ||
-          col("event.metadata.product_name").contains("Malformed"))
+    val udm = StreamingPipeline.toUdm(readRawPackets(spark, inDir))
       .cache() // consumed three times below; don't re-parse per sink
     try {
       udm.filter(col("is_error"))
@@ -66,23 +56,6 @@ object BatchPipeline {
         .write.mode(SaveMode.Overwrite).text(s"$outDir/events")
       UdmTransform.perFileCounts(udm).localCheckpoint(eager = true)
     } finally udm.unpersist()
-  }
-
-  /** K1 — golden-file writer: one compact JSON array per call, element
-    * order preserved. Streams through a single task (no driver
-    * collect) — only for golden comparison; JSONL is the engine's
-    * canonical sink. For BYTE-identical comparison against a
-    * reference-produced `json.dump(list, indent=4)` file use
-    * [[writeGoldenJsonArray]]. */
-  def writeSingleJsonArray(df: DataFrame, jsonCol: String, path: String): Unit = {
-    val ds = df.select(col(jsonCol)).coalesce(1)
-    import ds.sparkSession.implicits._
-    ds.as[String].mapPartitions { it =>
-      // lazy: O(1) memory regardless of file size
-      Iterator("[") ++ it.zipWithIndex.map { case (j, i) =>
-        if (i == 0) j else "," + j
-      } ++ Iterator("]")
-    }.write.mode(SaveMode.Overwrite).text(path)
   }
 
   /** Re-emit one compact JSON value in the reference's

@@ -93,21 +93,23 @@ object PcapDecode {
     * (`source_file`, `raw`). Decode runs inside the scan's partitions —
     * per-file parallelism, no driver involvement, no temp files. */
   def decode(spark: SparkSession, dir: String, glob: String = "*.pcap*",
-             decoder: Decoder = PcapParser.nativeDecoder): DataFrame =
-    decodeScan(spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob).load(dir), decoder)
+             decoder: Decoder = PcapParser.nativeDecoder): DataFrame = {
+    import spark.implicits._
+    spark.read.format("binaryFile").option("pathGlobFilter", glob).load(dir)
+      .select(col("path"), col("content"))
+      .as[(String, Array[Byte])]
+      .mapPartitions(_.flatMap { case (path, bytes) =>
+        decoder(path, bytes).map(raw => (path, raw))
+      })
+      .toDF("source_file", "raw")
+  }
 
-  /** Same decode over an explicit file list — the notification-driven
+  /** Decode over an explicit file list — the notification-driven
     * shape, where a micro-batch's payloads name the exact objects to
-    * fetch (download → decode → transform, processor_app.py:144–163). */
-  def decodePaths(spark: SparkSession, paths: Seq[String],
-                  decoder: Decoder = PcapParser.nativeDecoder): DataFrame =
-    decodeScan(spark.read.format("binaryFile").load(paths: _*), decoder)
-
-  /** [[decodePaths]] with per-FILE error containment: a capture whose
-    * decode throws yields ONE marker row (`source_file`, a
-    * non-JSON `GRAFT_DECODE_ERROR …` string) instead of failing the
-    * whole scan. The marker is unparseable on purpose — downstream the
+    * fetch (download → decode → transform, processor_app.py:144–163) —
+    * with per-FILE error containment: a capture whose decode throws
+    * yields ONE marker row (`source_file`, a non-JSON
+    * `GRAFT_DECODE_ERROR …` string) instead of failing the whole scan. The marker is unparseable on purpose — downstream the
     * total UDM transform (P14) turns it into a Malformed error event
     * that the pipeline's `is_error` routing dead-letters, so one
     * corrupt capture DLQs one message while every co-batched message
@@ -138,18 +140,6 @@ object PcapDecode {
             Iterator.single((path,
               s"GRAFT_DECODE_ERROR ${e.getClass.getSimpleName}: ${e.getMessage}"))
         }
-      })
-      .toDF("source_file", "raw")
-  }
-
-  private def decodeScan(files: DataFrame, decoder: Decoder): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    files
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, bytes) =>
-        decoder(path, bytes).map(raw => (path, raw))
       })
       .toDF("source_file", "raw")
   }

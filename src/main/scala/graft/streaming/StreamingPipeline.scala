@@ -36,23 +36,19 @@ import org.apache.spark.sql.types._
 object StreamingPipeline {
 
   /** Streaming source over a landing directory of tshark-JSON capture
-    * files → one row per packet (raw JSON string + source file). */
+    * files → one row per packet (raw JSON string + source file), split
+    * by [[UdmTransform.splitCaptures]]. */
   def readPacketStream(spark: SparkSession, landingDir: String,
                        maxFilesPerTrigger: Int = 16,
-                       glob: String = "*.json",
                        cleanSource: String = "off",
                        archiveDir: Option[String] = None): DataFrame = {
     var r = spark.readStream
       .option("wholetext", "true")
-      .option("pathGlobFilter", glob)
+      .option("pathGlobFilter", "*.json")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .option("cleanSource", cleanSource)
     archiveDir.foreach(d => r = r.option("sourceArchiveDir", d))
-    r.text(landingDir)
-      .select(col("value"), col("_metadata.file_path").as("source_file"))
-      .select(col("source_file"),
-        explode(coalesce(from_json(col("value"), ArrayType(StringType)),
-          array(col("value")))).as("raw"))
+    UdmTransform.splitCaptures(r.text(landingDir))
   }
 
   /** The transform stage (shared with batch — same expressions). */
@@ -126,6 +122,30 @@ object StreamingPipeline {
           } finally b.unpersist()
         }
       }
+  }
+
+  /** Take a create-once lock file for a store-rewriting operation
+    * (`what` names it in the error): `fs.create(overwrite=false)` fails
+    * when the lock exists, and the error reports the lock's age so the
+    * operator can tell a crashed run from a running one. Atomic on
+    * HDFS; check-then-create (best-effort) on local disk and most
+    * object stores. The caller releases the lock. */
+  private def acquireLock(fs: org.apache.hadoop.fs.FileSystem,
+                          lock: org.apache.hadoop.fs.Path, what: String): Unit = {
+    val lockStream =
+      try fs.create(lock, false)
+      catch {
+        case _: java.io.IOException =>
+          val age = try {
+            (System.currentTimeMillis() -
+              fs.getFileStatus(lock).getModificationTime) / 1000
+          } catch { case scala.util.control.NonFatal(_) => -1L }
+          throw new IllegalStateException(
+            s"$what lock $lock already exists (age ${age}s): another " +
+              s"$what is running, or a previous one crashed — delete the " +
+              s"lock once you are sure no $what is in flight and re-run")
+      }
+    lockStream.close()
   }
 
   /** Remove a batch's directory under the named sinks — used by the
@@ -269,6 +289,20 @@ object StreamingPipeline {
     }
   }
 
+  /** The transformWithState operators' shared precondition: they need
+    * multi-column-family state, which only the RocksDB provider has
+    * (see [[withRocksDbStateStore]]). Checked fail-loud when the
+    * operator is BUILT, naming the operator, instead of at the first
+    * batch. */
+  private def requireRocksDbProvider(spark: SparkSession, operator: String): Unit = {
+    val provider = spark.conf.getOption(
+      "spark.sql.streaming.stateStore.providerClass").getOrElse("")
+    require(provider.contains("RocksDB"),
+      s"$operator: transformWithState requires " +
+        "spark.sql.streaming.stateStore.providerClass=" +
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  }
+
   /** Run independent batch-scoped sink writes CONCURRENTLY (guide §2.6
     * thread-pool overlap): each thunk on its own thread, awaiting ALL
     * before returning or rethrowing — an in-flight write must never
@@ -395,12 +429,8 @@ object StreamingPipeline {
             }
             val parts = Seq(
               if (jsonNames.isEmpty) None else Some(
-                spark.read.option("wholetext", "true")
-                  .text(jsonNames.map { case (_, f, _) => s"$dataDir/$f" }: _*)
-                  .select(col("_metadata.file_path").as("source_file"), col("value"))
-                  .select(col("source_file"),
-                    explode(coalesce(from_json(col("value"), ArrayType(StringType)),
-                      array(col("value")))).as("raw"))),
+                UdmTransform.splitCaptures(spark.read.option("wholetext", "true")
+                  .text(jsonNames.map { case (_, f, _) => s"$dataDir/$f" }: _*))),
               if (pcapNames.isEmpty) None else Some(
                 // contained: ONE corrupt capture DLQs one message (via
                 // the P14 Malformed path), never the whole batch
@@ -1084,20 +1114,7 @@ object StreamingPipeline {
         "copy of those rows is the journaled temp — complete the fold with " +
         "the release that wrote the journal before compacting here")
     val lock = new Path(root, ".compact_lock")
-    val lockStream =
-      try fs.create(lock, false)
-      catch {
-        case _: java.io.IOException =>
-          val age = try {
-            (System.currentTimeMillis() -
-              fs.getFileStatus(lock).getModificationTime) / 1000
-          } catch { case scala.util.control.NonFatal(_) => -1L }
-          throw new IllegalStateException(
-            s"compaction lock $lock already exists (age ${age}s): another " +
-              "compaction is running, or a previous one crashed — delete the " +
-              "lock once you are sure no compaction is in flight and re-run")
-      }
-    lockStream.close()
+    acquireLock(fs, lock, "compaction")
     try {
       StoreManifest.sweepStale(fs, root)
       failAt("swept")
@@ -1210,20 +1227,7 @@ object StreamingPipeline {
     // stores it is check-then-create, so mutual exclusion is
     // best-effort there — same caveat as both `.compact_lock`s.
     val lock = new Path(indexDir + ".reindex_lock")
-    val lockStream =
-      try fs.create(lock, false)
-      catch {
-        case _: java.io.IOException =>
-          val age = try {
-            (System.currentTimeMillis() -
-              fs.getFileStatus(lock).getModificationTime) / 1000
-          } catch { case scala.util.control.NonFatal(_) => -1L }
-          throw new IllegalStateException(
-            s"reindex lock $lock already exists (age ${age}s): another " +
-              "reindex is running, or a previous one crashed — delete the " +
-              "lock once you are sure no reindex is in flight and re-run")
-      }
-    lockStream.close()
+    acquireLock(fs, lock, "reindex")
     // ALSO hold the delta's .compact_lock while the rotation runs: the
     // now-LIVE-safe compactMaintainedDelta may be scheduled
     // independently, and a fold mid-flight while this rotation deletes
@@ -2086,14 +2090,7 @@ object StreamingPipeline {
     require(windowSeconds >= 1, s"windowSeconds must be >= 1: $windowSeconds")
     require(cap >= 1, s"cap must be >= 1: $cap")
     val spark = events.sparkSession
-    if (events.isStreaming) {
-      val provider = spark.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass").getOrElse("")
-      require(provider.contains("RocksDB"),
-        "quotaLimitPipeline: transformWithState requires " +
-          "spark.sql.streaming.stateStore.providerClass=" +
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    }
+    if (events.isStreaming) requireRocksDbProvider(spark, "quotaLimitPipeline")
     import spark.implicits._
     val winUs = windowSeconds * 1000000L
     val typed = events
@@ -2247,14 +2244,7 @@ object StreamingPipeline {
       s"funnel steps must be distinct: $steps")
     require(maxGapSeconds > 0, s"maxGapSeconds must be positive: $maxGapSeconds")
     val spark = events.sparkSession
-    if (events.isStreaming) {
-      val provider = spark.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass").getOrElse("")
-      require(provider.contains("RocksDB"),
-        "funnelPipeline: transformWithState requires " +
-          "spark.sql.streaming.stateStore.providerClass=" +
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    }
+    if (events.isStreaming) requireRocksDbProvider(spark, "funnelPipeline")
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val k = steps.size
@@ -2414,12 +2404,7 @@ object StreamingPipeline {
     val spark = events.sparkSession
     require(events.isStreaming,
       "scd2Pipeline is the STREAMING twin — use Metrics.scd2Intervals in batch")
-    val provider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass").getOrElse("")
-    require(provider.contains("RocksDB"),
-      "scd2Pipeline: transformWithState requires " +
-        "spark.sql.streaming.stateStore.providerClass=" +
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    requireRocksDbProvider(spark, "scd2Pipeline")
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val typed = events
@@ -2618,12 +2603,7 @@ object StreamingPipeline {
       "asofPipeline is the STREAMING twin — use SparkUtil.mergeAsOf in batch")
     require(toleranceSeconds == -1L || toleranceSeconds > 0,
       s"toleranceSeconds must be positive or -1 (unbounded): $toleranceSeconds")
-    val provider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass").getOrElse("")
-    require(provider.contains("RocksDB"),
-      "asofPipeline: transformWithState requires " +
-        "spark.sql.streaming.stateStore.providerClass=" +
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    requireRocksDbProvider(spark, "asofPipeline")
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val tolUs =

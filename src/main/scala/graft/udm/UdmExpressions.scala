@@ -33,9 +33,9 @@ import org.apache.spark.sql.types._
   *  - Whole-file error containment (py:350–360): a file whose root is not
   *    a JSON array produces `[]` (zero events, silent loss) in the
   *    reference; our readers map it to ONE malformed-event row
-  *    (BatchPipeline.readRawPackets), so every input file is accounted for
-  *    in the output and in per-file counts. Deliberate fix, not an
-  *    oversight.
+  *    (UdmTransform.splitCaptures, shared by the batch, file-stream and
+  *    notify readers), so every input file is accounted for in the output
+  *    and in per-file counts. Deliberate fix, not an oversight.
   */
 object UdmExpressions {
 
@@ -297,7 +297,8 @@ object UdmExpressions {
   }
 
   // ---------------------------------------------------------------------
-  // Full event assembly (P12/P14)
+  // Full event assembly (P12/P14) — the contract lives on the one entry
+  // point, UdmTransform.transform, which runs udmEventPre
   // ---------------------------------------------------------------------
 
   private def metadata(ts: Column, product: Column, etype: Column, desc: Column): Column =
@@ -306,31 +307,6 @@ object UdmExpressions {
       desc.as("description"))
 
   private val nullStr = lit(null.asInstanceOf[String])
-
-  /** P12/P14 — total row→row transform: raw packet JSON text → UDM event
-    * struct. EVERY input row yields exactly one event (the reference's
-    * core invariant, json2udm_cloud.py:94–96):
-    *  - unparseable JSON or missing `_source.layers` → minimal
-    *    NETWORK_EVENT_UNKNOWN "Malformed" event (py:104–111);
-    *  - would-throw int casts → NETWORK_EVENT_ERROR with message and a
-    *    ≤1000-char snippet of the raw packet (py:296–317);
-    *  - otherwise the full mapped event.
-    * Null-section omission (py:267–291) happens at serialization:
-    * `to_json(..., ignoreNullFields=true)` — see [[UdmTransform.toJson]].
-    */
-  def udmEvent(raw: Column, fallbackTs: Column = current_timestamp()): Column = {
-    // native codegen'd parse (tls.record pre-normalized to an array);
-    // duplicate references to `parsed` below are collapsed by codegen
-    // subexpression elimination — safe because UdmPacketParseExpr is NOT
-    // CodegenFallback (unlike from_json, which needs the projection
-    // boundary documented on [[udmEventParsed]])
-    val parsed = graft.functions.UdmPacketParseExpr(raw)
-    val l = parsed.getField("_source").getField("layers")
-    udmEventPre(l, try_element_at(f(f(l, "tls"), "tls.record"), lit(1)),
-      sectionValues(f(f(l, "dns"), "Queries"), "dns.qry.name"),
-      sectionValues(f(f(l, "dns"), "Answers"), "dns.resp.ttl"),
-      raw, fallbackTs)
-  }
 
   /** Pre-parsed variant: callers project `parsed` (= from_json of the
     * raw packet) and `tlsRecs` (= [[tlsRecords]]) into their own columns

@@ -2,6 +2,7 @@ package graft.udm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** End-to-end pcap-JSON → UDM transform (the reference's entry point C,
   * processor/json2udm_cloud.py:319–362) as DataFrame transforms.
@@ -17,20 +18,22 @@ import org.apache.spark.sql.functions._
   */
 object UdmTransform {
 
-  /** Read tshark JSON capture files (JSON array per file → multiLine) as
-    * one row per packet, tagging each with its source file (the
-    * reference's unit of work, processor_app.py:136–179). */
-  def readPackets(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(PacketSchemas.packetSchema)
-      .option("multiLine", "true")
-      .option("mode", "PERMISSIVE")
-      .json(path)
-      .withColumn("source_file", input_file_name())
-
-  /** One UDM event per raw packet JSON string — the P14 invariant. */
-  def events(raw: Column, fallbackTs: Column = current_timestamp()): Column =
-    UdmExpressions.udmEvent(raw, fallbackTs)
+  /** The one capture-split step every capture reader shares: a
+    * wholetext read of tshark-JSON captures (one `value` row per file,
+    * with the file source's `_metadata`) → one `(source_file, raw)` row
+    * per packet. A file that is not a JSON array yields ONE row with its
+    * whole text, which the total transform turns into a Malformed event
+    * — the reference's whole-file error containment
+    * (json2udm_cloud.py:350–360) at row granularity, so every input file
+    * is accounted for. `source_file` is `_metadata.file_path` for batch
+    * and stream reads alike, so a capture keys its per-file counts the
+    * same way through every pipeline. */
+  private[graft] def splitCaptures(wholetext: DataFrame): DataFrame =
+    wholetext
+      .select(col("_metadata.file_path").as("source_file"), col("value"))
+      .select(col("source_file"),
+        explode(coalesce(from_json(col("value"), ArrayType(StringType)),
+          array(col("value")))).as("raw"))
 
   /** Serialize with empty-section omission (json2udm_cloud.py:267–291):
     * nulls live inside the plan; omission is a serialization concern.
@@ -44,15 +47,25 @@ object UdmTransform {
     * the `UDM_PACKETS_PROCESSED` / `UDM_PACKET_ERRORS` log lines).
     * Map-side partial aggregation makes this cheap at any scale: the
     * shuffle key cardinality is the number of files. */
-  def perFileCounts(udm: DataFrame, fileCol: String = "source_file"): DataFrame =
-    udm.groupBy(col(fileCol).as("file"))
+  def perFileCounts(udm: DataFrame): DataFrame =
+    udm.groupBy(col("source_file").as("file"))
       .agg(
         count(lit(1)).as("packets_processed"),
         sum(when(col("event.metadata.product_name")
           .contains("PacketProcessingError"), 1L).otherwise(0L)).as("packet_errors"))
 
-  /** Full batch pipeline: raw packet JSON strings column → UDM events
-    * DataFrame with serialized JSON alongside the typed struct.
+  /** P12/P14 — the one UDM entry point: a column of raw packet JSON
+    * text → the input rows plus `event_struct` (its `event` field is the
+    * UDM event) and `udm_json` (its serialization). A total row→row
+    * transform: EVERY input row yields exactly one event (the
+    * reference's core invariant, json2udm_cloud.py:94–96):
+    *  - unparseable JSON or missing `_source.layers` → minimal
+    *    NETWORK_EVENT_UNKNOWN "Malformed" event (py:104–111);
+    *  - would-throw int casts → NETWORK_EVENT_ERROR with message and a
+    *    ≤1000-char snippet of the raw packet (py:296–317);
+    *  - otherwise the full mapped event.
+    * Null-section omission (py:267–291) happens at serialization — see
+    * [[toJson]].
     *
     * The parse is the codegen'd native [[graft.functions.UdmPacketParseExpr]]
     * (one streaming Jackson pass, `tls.record` object-or-array

@@ -941,6 +941,70 @@ class PipelineSpec extends SparkSpec {
     assert(events == 3 && errors == 2) // 3 good, 1 int-error + 1 malformed
   }
 
+  test("one capture dir through batch, file stream and notify: same per-file rows, events and DLQ count") {
+    import org.apache.spark.sql.DataFrame
+    val in = Files.createTempDirectory("graft_xin").toString
+    val q = Files.createTempDirectory("graft_xq").toString
+    val base = Files.createTempDirectory("graft_xout").toString
+    mkCapture(in, "capture_001.pcap.json", goodPacket, errorPacket)
+    mkCapture(in, "capture_002.pcap.json", goodPacket)
+    Files.writeString(Paths.get(in, "capture_003.pcap.json"), "corrupt bytes")
+    // message files with strictly increasing mtimes (the notify source
+    // orders by (mtime, name))
+    Seq("capture_001.pcap.json", "capture_002.pcap.json", "capture_003.pcap.json")
+      .zipWithIndex.foreach { case (f, i) =>
+        val m = Paths.get(q, s"m$i")
+        Files.writeString(m, f)
+        Files.setLastModifiedTime(m,
+          java.nio.file.attribute.FileTime.fromMillis(3000000L + i))
+      }
+
+    val batchCounts = BatchPipeline.run(spark, in, s"$base/batch")
+    StreamingPipeline.pipeline(spark, in, s"$base/stream", s"$base/stream_ckpt",
+      trigger = Trigger.AvailableNow()).start().awaitTermination(120000)
+    StreamingPipeline.notifyPipeline(spark, q, in, s"$base/notify", s"$base/notify_ckpt",
+      trigger = Trigger.AvailableNow()).start().awaitTermination(120000)
+
+    def rows(counts: DataFrame): Seq[(String, Long, Long)] =
+      counts.select("file", "packets_processed", "packet_errors").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    def events(out: String): Seq[String] =
+      spark.read.text(s"$out/events").collect().map(_.getString(0)).toSeq.sorted
+    val batchRows = rows(batchCounts)
+    val batchEvents = events(s"$base/batch")
+    assert(batchRows.map { case (f, n, e) => (f.replaceAll("^.*/", ""), n, e) } == Seq(
+      ("capture_001.pcap.json", 2L, 1L), ("capture_002.pcap.json", 1L, 0L),
+      ("capture_003.pcap.json", 1L, 0L)))
+    assert(batchEvents.length == 2)
+    Seq("stream", "notify").foreach { p =>
+      assert(rows(spark.read.json(s"$base/$p/_notifications")) == batchRows,
+        s"$p per-file rows differ from the batch run's")
+      assert(events(s"$base/$p") == batchEvents, s"$p events differ from the batch run's")
+    }
+    Seq("batch", "stream", "notify").foreach { p =>
+      assert(spark.read.json(s"$base/$p/_errors").count() == 2,
+        s"$p must dead-letter the int-error and the malformed event")
+    }
+  }
+
+  test("transformWithState operators refuse the default state store provider at construction") {
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    assert(!spark.conf.getOption(providerKey).exists(_.contains("RocksDB")))
+    // building the DataFrame runs the check; no query starts
+    val stream = spark.readStream.format("rate").load()
+    Seq[(String, () => Any)](
+      "quotaLimitPipeline" -> (() => StreamingPipeline.quotaLimitPipeline(stream, 60, 1)),
+      "funnelPipeline" -> (() => StreamingPipeline.funnelPipeline(stream, Seq("a", "b"), 60)),
+      "scd2Pipeline" -> (() => StreamingPipeline.scd2Pipeline(stream)),
+      "asofPipeline" -> (() => StreamingPipeline.asofPipeline(stream, stream, "0 seconds"))
+    ).foreach { case (op, build) =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains(s"$op: transformWithState requires " +
+        s"$providerKey=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
+        s"$op: ${e.getMessage}")
+    }
+  }
+
   test("filename ops: validation (F1) and derivation (P16)") {
     import spark.implicits._
     val df = Seq("capture_1.pcap", "capture_2.pcapng", "", "evil/name.pcap",
@@ -964,21 +1028,6 @@ class PipelineSpec extends SparkSpec {
     // but a dot run after a real name char IS strippable
     assert(df(9).getString(2) == "a..udm.json")   // splitext("a..b") = "a."
     assert(df(10).getString(2) == "a.udm.json")   // splitext("a.") = "a"
-  }
-
-  test("K1 golden array writer emits a parseable JSON array in order") {
-    import spark.implicits._
-    val out = Files.createTempDirectory("graft_golden").toString + "/arr"
-    val df = Seq("""{"a":1}""", """{"a":2}""", """{"a":3}""").toDF("j")
-    BatchPipeline.writeSingleJsonArray(df, "j", out)
-    val text = spark.read.option("wholetext", "true").text(out).head().getString(0)
-    val parsed = spark.range(1).select(
-      from_json(lit(text), org.apache.spark.sql.types.DataTypes.createArrayType(
-        org.apache.spark.sql.types.DataTypes.createStructType(Array(
-          org.apache.spark.sql.types.DataTypes.createStructField("a",
-            org.apache.spark.sql.types.DataTypes.IntegerType, true))))).as("arr"))
-      .select(explode(col("arr")).as("e")).select("e.a").as[Int].collect()
-    assert(parsed.toSeq == Seq(1, 2, 3))
   }
 
   test("golden writer is byte-identical to json.dump(indent=4)") {

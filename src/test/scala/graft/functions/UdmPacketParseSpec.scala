@@ -109,8 +109,8 @@ class UdmPacketParseSpec extends SparkSpec {
       """corrupt bytes""",
       """{"_source": 42}""")
     val df = raws.toDF("raw")
-    val native = df.select(
-      UdmTransform.toJson(UdmTransform.events(col("raw"), frozen)).as("j"))
+    val native = UdmTransform.transform(df, "raw", frozen)
+      .select(col("udm_json").as("j"))
       .collect().map(_.getString(0)).toSeq
     val legacy = df
       .withColumn("__p", from_json(col("raw"), PacketSchemas.packetSchema))

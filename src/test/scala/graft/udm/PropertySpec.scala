@@ -46,8 +46,8 @@ class PropertySpec extends SparkSpec {
       Gen.asciiPrintableStr.map(s => s"""{"_source":{"layers":{"tcp":{"tcp.srcport":${'"'}$s${'"'}}}}}"""))
     val inputs = samples(rawGen, 300)
     val frozen = to_timestamp(lit("2030-01-01 00:00:00"))
-    val out = inputs.toDF("raw")
-      .select(UdmTransform.toJson(UdmTransform.events(col("raw"), frozen)).as("j"))
+    val out = UdmTransform.transform(inputs.toDF("raw"), "raw", frozen)
+      .select(col("udm_json").as("j"))
       .collect()
     assert(out.length == inputs.length) // one event per input, no throws
     // every serialized event has the mandatory metadata core

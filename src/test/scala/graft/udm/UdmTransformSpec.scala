@@ -14,9 +14,8 @@ class UdmTransformSpec extends SparkSpec {
   private val frozenTs = to_timestamp(lit("2030-01-01 00:00:00"))
 
   private def udm(rawJsons: String*): Array[Row] = {
-    val df = rawJsons.toDF("raw")
-      .select(UdmTransform.events(col("raw"), frozenTs).as("e"))
-      .select("e.event.*")
+    val df = UdmTransform.transform(rawJsons.toDF("raw"), "raw", frozenTs)
+      .select("event_struct.event.*")
     df.collect()
   }
 
@@ -210,16 +209,16 @@ class UdmTransformSpec extends SparkSpec {
   }
 
   test("JSON serialization omits empty sections and null fields (P12)") {
-    val df = Seq(httpPacket).toDF("raw")
-      .select(UdmTransform.toJson(UdmTransform.events(col("raw"), frozenTs)).as("j"))
+    val df = UdmTransform.transform(Seq(httpPacket).toDF("raw"), "raw", frozenTs)
+      .select(col("udm_json").as("j"))
     val j = df.collect()(0).getString(0)
     assert(j.contains(""""event":{"metadata":{"event_timestamp":"2025-09-05T12:34:56.123400Z""""))
     assert(!j.contains("null"))
     assert(!j.contains("file_data")) // absent field omitted
     assert(!j.contains("icmp_type"))
     // malformed event serializes to metadata-only (py:107–111)
-    val dfm = Seq("""{"x":1}""").toDF("raw")
-      .select(UdmTransform.toJson(UdmTransform.events(col("raw"), frozenTs)).as("j"))
+    val dfm = UdmTransform.transform(Seq("""{"x":1}""").toDF("raw"), "raw", frozenTs)
+      .select(col("udm_json").as("j"))
     val jm = dfm.collect()(0).getString(0)
     assert(!jm.contains("principal") && !jm.contains("network") && !jm.contains("additional"))
   }
@@ -246,11 +245,11 @@ class UdmTransformSpec extends SparkSpec {
 
   test("A1/A2 per-file counts") {
     import org.apache.spark.sql.functions.{col => c}
-    val df = Seq(
+    val df = UdmTransform.transform(Seq(
       ("f1", httpPacket),
       ("f1", """{"_source": {"layers": {"frame": {"frame.number": "8", "frame.time_utc": "x"}, "tcp": {"tcp.srcport": "bad"}}}}"""),
-      ("f2", httpPacket)).toDF("source_file", "raw")
-      .withColumn("event", UdmTransform.events(c("raw"), frozenTs).getField("event"))
+      ("f2", httpPacket)).toDF("source_file", "raw"), "raw", frozenTs)
+      .withColumn("event", c("event_struct.event"))
     val counts = UdmTransform.perFileCounts(df).orderBy("file").collect()
     assert(counts.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq ==
       Seq(("f1", 2L, 1L), ("f2", 1L, 0L)))
