@@ -46,7 +46,7 @@ object BatchPipeline {
     * per-file counts (A1/A2). */
   def run(spark: org.apache.spark.sql.SparkSession, inDir: String, outDir: String): DataFrame = {
     val udm = StreamingPipeline.toUdm(readRawPackets(spark, inDir))
-      .cache() // consumed three times below; don't re-parse per sink
+      .cache() // the sink columns only; consumed three times below
     try {
       udm.filter(col("is_error"))
         .select(col("source_file"), col("udm_json"))

@@ -51,13 +51,19 @@ object StreamingPipeline {
     UdmTransform.splitCaptures(r.text(landingDir))
   }
 
-  /** The transform stage (shared with batch — same expressions). */
-  def toUdm(packets: DataFrame): DataFrame =
-    UdmTransform.transform(packets, "raw")
-      .withColumn("event", col("event_struct.event"))
-      .withColumn("is_error",
-        col("event.metadata.product_name").contains("PacketProcessingError") ||
-          col("event.metadata.product_name").contains("Malformed"))
+  /** The transform stage every capture pipeline shares (the streams and
+    * the batch run), ending on exactly the columns the sinks read:
+    * `source_file`, `udm_json`, `is_error` (the DLQ route) and
+    * `product_name` (what [[UdmTransform.perFileCounts]] counts). The
+    * pipelines cache this output once per batch, so the raw packet and
+    * the event struct are never materialized. */
+  def toUdm(packets: DataFrame): DataFrame = {
+    val product = col("event_struct.event.metadata.product_name")
+    UdmTransform.transform(packets, "raw").select(col("source_file"), col("udm_json"),
+      (product.contains("PacketProcessingError") || product.contains("Malformed"))
+        .as("is_error"),
+      product.as("product_name"))
+  }
 
   /** Wire the full pipeline: landing dir → UDM JSONL + error DLQ +
     * per-file notification/metrics table. Delivery contract:

@@ -44,14 +44,15 @@ object UdmTransform {
     graft.functions.StructToJsonExpr(event)
 
   /** A1/A2 — per-file packet + error counts (json2udm_cloud.py:325–348,
-    * the `UDM_PACKETS_PROCESSED` / `UDM_PACKET_ERRORS` log lines).
+    * the `UDM_PACKETS_PROCESSED` / `UDM_PACKET_ERRORS` log lines) over
+    * `source_file` and the event's `product_name`.
     * Map-side partial aggregation makes this cheap at any scale: the
     * shuffle key cardinality is the number of files. */
   def perFileCounts(udm: DataFrame): DataFrame =
     udm.groupBy(col("source_file").as("file"))
       .agg(
         count(lit(1)).as("packets_processed"),
-        sum(when(col("event.metadata.product_name")
+        sum(when(col("product_name")
           .contains("PacketProcessingError"), 1L).otherwise(0L)).as("packet_errors"))
 
   /** P12/P14 — the one UDM entry point: a column of raw packet JSON
@@ -70,9 +71,11 @@ object UdmTransform {
     * The parse is the codegen'd native [[graft.functions.UdmPacketParseExpr]]
     * (one streaming Jackson pass, `tls.record` object-or-array
     * normalized in the parser), projected into its own column so each
-    * packet is parsed once however many fields reference it. Unlike
-    * `from_json` (CodegenFallback) it does not break whole-stage
-    * codegen, so scan → parse → event-struct fuse into one stage. */
+    * packet is parsed once however many fields reference it. The scan
+    * and the parse fuse into one whole-stage-codegen stage; the event
+    * projection does not — its higher-order functions are
+    * CodegenFallback (see [[UdmExpressions]]), so it runs as a separate
+    * generated projection with those members interpreted. */
   def transform(packets: DataFrame, rawCol: String,
                 fallbackTs: Column = current_timestamp()): DataFrame = {
     import UdmExpressions.{f, sectionValues}

@@ -240,6 +240,35 @@ class PcapParserSpec extends SparkSpec {
     assert(count == 64, s"walk capped at 64 answers, got $count")
   }
 
+  test("frame time, MAC and TCP flags keep their padding at the edges") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def layers(json: String) = mapper.readTree(json).path("_source").path("layers")
+    val midnight = 1757030400L // 2025-09-05 00:00:00 UTC: a one-digit day
+    val ns = 1000000000L
+    val times = PcapParser.decodeFile(ngFile(ngShb(), ngIdb(Some(9)),
+      ngEpb(midnight * ns, samplePackets.head),
+      ngEpb((midnight + 86399) * ns + 999999999L, samplePackets.head),
+      ngEpb((midnight + 10 * 86400) * ns + 5, samplePackets.head)))
+      .map(j => layers(j).path("frame").path("frame.time_utc").asText())
+    assert(times == Seq("Sep  5, 2025 00:00:00.000000000 UTC",
+      "Sep  5, 2025 23:59:59.999999999 UTC", "Sep 15, 2025 00:00:00.000000005 UTC"))
+
+    // unknown EtherType: frame + eth only
+    val macFrame = Array.fill[Byte](6)(0) ++ Array.fill[Byte](6)(-1) ++
+      Array(0x88.toByte, 0xb5.toByte)
+    val eth = layers(PcapParser.decodeFile(pcapFile(Seq(macFrame))).head).path("eth")
+    assert(eth.path("eth.dst").asText() == "00:00:00:00:00:00")
+    assert(eth.path("eth.src").asText() == "ff:ff:ff:ff:ff:ff")
+
+    def flagsOf(segment: Array[Byte]): String =
+      layers(PcapParser.decodeFile(pcapFile(Seq(ethernet(0x0800,
+        ipv4(6, srcIp, dstIp, segment))))).head).path("tcp").path("tcp.flags").asText()
+    val allFlags = tcp(1234, 80, 0xff, Array.empty)
+    allFlags(12) = 0x51.toByte // data offset 5 words + the NS bit
+    assert(flagsOf(tcp(1234, 80, 0, Array.empty)) == "0x0000")
+    assert(flagsOf(allFlags) == "0x01ff")
+  }
+
   test("native-decoded pcap AND pcapng flow through decode() into the UDM classifier") {
     val dir = Files.createTempDirectory("graft_pcap_native").toString
     Files.write(Paths.get(dir, "cap.pcap"), pcapFile(samplePackets))

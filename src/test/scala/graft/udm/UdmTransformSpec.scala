@@ -249,9 +249,27 @@ class UdmTransformSpec extends SparkSpec {
       ("f1", httpPacket),
       ("f1", """{"_source": {"layers": {"frame": {"frame.number": "8", "frame.time_utc": "x"}, "tcp": {"tcp.srcport": "bad"}}}}"""),
       ("f2", httpPacket)).toDF("source_file", "raw"), "raw", frozenTs)
-      .withColumn("event", c("event_struct.event"))
+      .withColumn("product_name", c("event_struct.event.metadata.product_name"))
     val counts = UdmTransform.perFileCounts(df).orderBy("file").collect()
     assert(counts.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq ==
       Seq(("f1", 2L, 1L), ("f2", 1L, 0L)))
+  }
+
+  test("toUdm compiles its projection once: a new current_timestamp() per run reuses it") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // each action binds current_timestamp() to a new literal, as each
+    // micro-batch does; the generated source must not carry it. The
+    // repartition keeps the input from folding into a LocalRelation,
+    // which the driver would evaluate without any codegen.
+    val packets = Seq(httpPacket, "not json at all",
+      """{"_source": {"layers": {"frame": {"frame.time_utc": "x"}, "tcp": {"tcp.srcport": "bad"}}}}""")
+      .toDF("raw").withColumn("source_file", lit("f")).repartition(1)
+    def run(): Array[Row] = graft.streaming.StreamingPipeline.toUdm(packets).collect()
+    assert(run().length == 3) // the first run compiles and fills the cache
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = run()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before,
+      "the second run compiled a new class")
+    assert(second.map(_.getAs[Boolean]("is_error")).toSeq == Seq(false, true, true))
   }
 }
