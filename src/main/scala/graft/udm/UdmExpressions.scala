@@ -8,14 +8,15 @@ import org.apache.spark.sql.types._
   * processor/json2udm_cloud.py:91–317) re-expressed as pure Catalyst
   * `Column` builders — SURVEY.md §2.2 operators P1–P16.
   *
-  * Everything here is built-in expressions (zero UDFs), and the
-  * per-packet transform is narrow (no shuffle), like the reference's
-  * per-file loop but distributed. The event projection does NOT fuse
-  * into whole-stage codegen: the higher-order functions in [[dnsInfo]]
-  * (`transform`/`filter`), [[about]] (`filter(concat…)`) and
-  * [[processingError]] (`exists`) are CodegenFallback in Spark 4, so
-  * the event `Project` runs as its own generated projection with those
-  * members interpreted, outside every WholeStageCodegen node.
+  * Everything here is built-in expressions or native codegen'd ones
+  * from `graft.functions` (zero UDFs, no higher-order functions: those
+  * are CodegenFallback in Spark 4), and the per-packet transform is
+  * narrow (no shuffle), like the reference's per-file loop but
+  * distributed. The event projection fuses into the whole-stage-codegen
+  * stage that holds the scan, the parse and the serializer. That stage
+  * generates each top-level section of the normal event and each app
+  * section into a method of its own (see [[udmEventPre]]), so that every
+  * generated method stays small enough for HotSpot to JIT-compile.
   *
   * Documented intentional divergences from the reference (bugs we fixed,
   * noted for the judge):
@@ -136,10 +137,14 @@ object UdmExpressions {
   // Section builders (P4–P13) — all pure functions of the layers struct
   // ---------------------------------------------------------------------
 
-  private def structOrNull(pairs: (String, Column)*): Column = {
-    val s = struct(pairs.map { case (n, c) => c.as(n) }: _*)
-    when(pairs.map(_._2.isNotNull).reduce(_ || _), s)
-  }
+  /** A section struct, null when every member is null. */
+  private def structOrNull(pairs: (String, Column)*): Column =
+    graft.functions.StructOrNullExpr(struct(pairs.map { case (n, c) => c.as(n) }: _*))
+
+  /** `c` in a generated method of its own under whole-stage codegen
+    * (see [[udmEventPre]]). */
+  private def ownMethod(name: String)(c: Column): Column =
+    graft.functions.OwnMethodExpr(c, name)
 
   /** P4 — event classification. Last-writer-wins in the reference
     * (json2udm_cloud.py:136,165,169,180,197,227) ⇒ precedence
@@ -204,16 +209,17 @@ object UdmExpressions {
   def dnsInfo(l: Column, qNames: Column, ttls: Column): Column = {
     val d = f(l, "dns")
     val qTypes = sectionValues(f(d, "Queries"), "dns.qry.type")
-    val queries = when(qNames.isNotNull,
-      transform(qNames, (n, i) => struct(
-        n.as("name"), try_element_at(qTypes, i + 1).as("type"))))
-    val answerTtls = when(ttls.isNotNull,
-      filter(transform(ttls, t => tryInt(t)), t => t.isNotNull))
+    // arrays_zip pads the types with nulls past their end; the slice
+    // drops types past the last name (both lists are null or non-empty)
+    val queries = slice(arrays_zip(qNames, coalesce(qTypes, noStrings)), lit(1), size(qNames))
+      .cast(dnsInfoType("queries").dataType)
     val flagResp = f(f(d, "dns.flags_tree"), "dns.flags.response")
     val isResponse = when(flagResp.isNotNull, flagResp === "1")
+    // read only by the normal event, where every TTL parsed
+    // ([[processingError]]), so there are no nulls to drop
     when(d.isNotNull, structOrNull(
       "queries" -> queries,
-      "answer_ttls" -> when(answerTtls.isNotNull && size(answerTtls) > 0, answerTtls),
+      "answer_ttls" -> ttlInts(ttls),
       "is_response" -> isResponse))
   }
 
@@ -262,11 +268,13 @@ object UdmExpressions {
       one(h.isNotNull && truthy(f(h, "http.host")), entry(f(h, "http.host"), nullStr)),
       one(h.isNotNull && truthy(f(h, "http.request.full_uri")),
         entry(nullStr, f(h, "http.request.full_uri"))))
-    val dnsEntries = coalesce(transform(qNames, n => entry(n, nullStr)), none)
+    // query names are never null, so dropping "" leaves the truthy
+    // ones; zipping with an empty list gives each a null url
+    val dnsEntries = coalesce(
+      arrays_zip(array_remove(qNames, ""), noStrings).cast(aboutType), none)
     val sni = f(f(rec, "tls.handshake"), "tls.handshake.extensions_server_name")
     val tlsEntries = one(truthy(sni), entry(sni, nullStr))
-    val all = filter(concat(httpEntries, dnsEntries, tlsEntries),
-      e => truthy(e.getField("hostname")) || truthy(e.getField("url")))
+    val all = concat(httpEntries, dnsEntries, tlsEntries)
     when(size(all) > 0, all)
   }
 
@@ -302,8 +310,16 @@ object UdmExpressions {
       .otherwise(lit(false)) ||
     when(h.isNotNull && truthy(f(h, "http.response.code")),
       tryInt(f(h, "http.response.code")).isNull).otherwise(lit(false)) ||
-    when(ttls.isNotNull, exists(ttls, t => tryInt(t).isNull)).otherwise(lit(false))
+    // a TTL that fails to parse is a null element of ttlInts(ttls).
+    // `exists` is CodegenFallback and Spark has no codegen'd test for a
+    // null element, so: array_join writes each null as "!", which no
+    // int's text contains
+    when(ttls.isNotNull, array_join(ttlInts(ttls), ",", "!").contains("!"))
+      .otherwise(lit(false))
   }
+
+  /** Each TTL as an int, null where the reference's int() would raise. */
+  private def ttlInts(ttls: Column): Column = ttls.try_cast(ArrayType(IntegerType))
 
   // ---------------------------------------------------------------------
   // Full event assembly (P12/P14) — the contract lives on the one entry
@@ -316,6 +332,7 @@ object UdmExpressions {
       desc.as("description"))
 
   private val nullStr = lit(null.asInstanceOf[String])
+  private val noStrings = array().cast(ArrayType(StringType))
 
   /** Pre-parsed variant: callers project `parsed` (= from_json of the
     * raw packet) and `tlsRecs` (= [[tlsRecords]]) into their own columns
@@ -336,8 +353,18 @@ object UdmExpressions {
 
   /** Innermost assembly over pre-computed hot sub-expressions. `qNames`
     * and `ttls` are each referenced twice downstream (dns section +
-    * about / error detection) — callers that project them into their
-    * own columns halve the interpreted higher-order-function work. */
+    * about / error detection); callers that project them into their own
+    * columns extract each once per row.
+    *
+    * Method boundaries: whole-stage codegen does not split expressions,
+    * so the whole event would land in one consume method, 25 KB of
+    * bytecode, which HotSpot never JIT-compiles (its `HugeMethodLimit`
+    * is 8,000 bytes). Each top-level section of the normal event
+    * (metadata, principal, target, network, about, additional) and each
+    * app section inside network (http, dns, tls) is generated into its
+    * own method ([[graft.functions.OwnMethodExpr]]); the largest is then
+    * about 5.4 KB. The malformed and error events and the branch
+    * conditions stay inline: they are small. */
   def udmEventPre(l: Column, rec: Column, qNames: Column, ttls: Column,
                   raw: Column, fallbackTs: Column): Column = {
     val fallbackIso = isoMicros(fallbackTs)
@@ -376,16 +403,18 @@ object UdmExpressions {
     // references. Same result: `date_format(null)` is null.
     val ts = coalesce(isoMicros(parsedTimestamp(f(f(l, "frame"), "frame.time_utc"))),
       fallbackIso)
-    val app = structOrNull("http" -> httpInfo(l), "dns" -> dnsInfo(l, qNames, ttls),
-      "tls" -> tlsInfo(l, rec))
-    val net = network(l, app)
+    val app = structOrNull(
+      "http" -> ownMethod("udm_http")(httpInfo(l)),
+      "dns" -> ownMethod("udm_dns")(dnsInfo(l, qNames, ttls)),
+      "tls" -> ownMethod("udm_tls")(tlsInfo(l, rec)))
     val normal = struct(
-      metadata(ts, lit("Wireshark TShark"), eventType(l), description(l)).as("metadata"),
-      principal(l).as("principal"),
-      target(l).as("target"),
-      net.as("network"),
-      about(l, rec, qNames).as("about"),
-      additional(l).as("additional"))
+      ownMethod("udm_metadata")(
+        metadata(ts, lit("Wireshark TShark"), eventType(l), description(l))).as("metadata"),
+      ownMethod("udm_principal")(principal(l)).as("principal"),
+      ownMethod("udm_target")(target(l)).as("target"),
+      ownMethod("udm_network")(network(l, app)).as("network"),
+      ownMethod("udm_about")(about(l, rec, qNames)).as("about"),
+      ownMethod("udm_additional")(additional(l)).as("additional"))
 
     struct(
       when(l.isNull, malformed)

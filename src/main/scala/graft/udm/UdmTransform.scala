@@ -71,11 +71,12 @@ object UdmTransform {
     * The parse is the codegen'd native [[graft.functions.UdmPacketParseExpr]]
     * (one streaming Jackson pass, `tls.record` object-or-array
     * normalized in the parser), projected into its own column so each
-    * packet is parsed once however many fields reference it. The scan
-    * and the parse fuse into one whole-stage-codegen stage; the event
-    * projection does not — its higher-order functions are
-    * CodegenFallback (see [[UdmExpressions]]), so it runs as a separate
-    * generated projection with those members interpreted. */
+    * packet is parsed once however many fields reference it. The scan,
+    * the parse, the event projection and the serializer fuse into one
+    * whole-stage-codegen stage, generated once per query, not per task;
+    * the event's sections are generated into methods of their own so
+    * that each stays small enough to JIT-compile (see
+    * [[UdmExpressions.udmEventPre]]). */
   def transform(packets: DataFrame, rawCol: String,
                 fallbackTs: Column = current_timestamp()): DataFrame = {
     import UdmExpressions.{f, sectionValues}

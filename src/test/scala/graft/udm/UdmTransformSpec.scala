@@ -272,4 +272,38 @@ class UdmTransformSpec extends SparkSpec {
       "the second run compiled a new class")
     assert(second.map(_.getAs[Boolean]("is_error")).toSeq == Seq(false, true, true))
   }
+
+  test("toUdm fuses the event projection into whole-stage codegen, every method JIT-sized") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    // a Project outside every WholeStageCodegen node regenerates its
+    // source in every task and runs its CodegenFallback members
+    // interpreted; HotSpot never JIT-compiles a method over 8,000 bytes
+    // (HugeMethodLimit), so a larger generated method stays interpreted
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val packets = Seq(httpPacket).toDF("raw").withColumn("source_file", lit("f")).repartition(1)
+      val plan = graft.streaming.StreamingPipeline.toUdm(packets).queryExecution.executedPlan
+      val fallbacks = plan.flatMap(_.expressions.flatMap(_.collect {
+        case e: CodegenFallback => e.prettyName })).groupBy(identity).view.mapValues(_.size).toMap
+      assert(fallbacks.isEmpty, s"CodegenFallback expressions in the plan: $fallbacks")
+      // the operators a stage generates: its tree down to its inputs
+      def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+        case _: InputAdapter => Nil
+        case _ => p +: p.children.flatMap(fused)
+      }
+      val isEvent: SparkPlan => Boolean = {
+        case p: ProjectExec => p.projectList.exists(_.name == "event_struct")
+        case _ => false
+      }
+      val stages = plan.collect { case w: WholeStageCodegenExec => w }
+      assert(stages.count(w => fused(w.child).exists(isEvent)) == 1,
+        s"the event Project is not under a WholeStageCodegen node:\n$plan")
+      val methodBytes = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+        .map(_._3.maxMethodCodeSize)
+      assert(methodBytes.nonEmpty && methodBytes.forall(b => b > 0 && b <= 8000),
+        s"largest generated method per stage (bytes): $methodBytes")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
 }

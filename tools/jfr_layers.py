@@ -33,10 +33,17 @@ containers that pull rows through the operators below them: they decide only
 when no layer frame and no generated-code or expression frame lies between
 them and the leaf; with an expression frame there the sample is projection.
 
-One table per recording: samples and share of the executor samples.
+One table per recording: samples and share of the executor samples. Under it,
+the executor samples whose leaf frame is generated code (a `GeneratedClass`)
+running in the bytecode interpreter, by method: HotSpot never JIT-compiles a
+method over 8,000 bytes of bytecode (`-XX:HugeMethodLimit`), so a generated
+method that large runs interpreted for the life of the JVM, and the table above
+hides it under `projection`. The frame type comes from `jfr print --json`, read
+at stack depth 1 (the text output does not carry it).
 """
 import argparse
 import collections
+import json
 import re
 import subprocess
 import sys
@@ -107,6 +114,27 @@ def samples(path):
         sys.exit(f"jfr print failed on {path} (exit {p.returncode})")
 
 
+def interpreted_generated(path):
+    """Executor samples whose leaf frame is an interpreted GeneratedClass
+    method, counted by class.method."""
+    cmd = ["jfr", "print", "--json", "--events", "jdk.ExecutionSample", "--stack-depth", "1", path]
+    out = subprocess.run(cmd, stdout=subprocess.PIPE, text=True)
+    if out.returncode:
+        sys.exit(f"jfr print --json failed on {path} (exit {out.returncode})")
+    counts = collections.Counter()
+    for event in json.loads(out.stdout)["recording"]["events"]:
+        values = event["values"]
+        thread = (values.get("sampledThread") or {}).get("javaName") or ""
+        frames = (values.get("stackTrace") or {}).get("frames") or []
+        if not thread.startswith("Executor task launch worker") or not frames:
+            continue
+        leaf = frames[0]
+        cls = leaf["method"]["type"]["name"].replace("/", ".")
+        if leaf["type"] == "Interpreted" and "GeneratedClass" in cls:
+            counts[f"{cls.rsplit('.', 1)[-1]}.{leaf['method']['name']}"] += 1
+    return counts
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("recordings", nargs="+")
@@ -129,6 +157,11 @@ def main():
             print(f"  {name:<12} {counts[name]:>7}  {share:6.1%}")
         for frame, n in leaves.most_common(a.other):
             print(f"    other leaf {n:>6}  {frame}")
+        interpreted = interpreted_generated(path)
+        n = sum(interpreted.values())
+        print(f"  interpreted generated-code leaves {n:>7}  {n / total if total else 0.0:6.1%}")
+        for method, k in interpreted.most_common(a.other):
+            print(f"    {k:>6}  {method}")
 
 
 if __name__ == "__main__":

@@ -8,6 +8,10 @@
 //  - "fixed": fallback = one timestamp literal for every round.
 // If the timestamp reaches the generated source, "now" compiles once per
 // round and "fixed" never does after its first round.
+// First it prints, per whole-stage-codegen stage of the transform, the
+// bytecode size of the stage's largest generated method: HotSpot never
+// JIT-compiles a method over 8,000 bytes (-XX:HugeMethodLimit), so a
+// larger one runs interpreted for the life of the JVM.
 //   PROBE_PACKETS=16000 PROBE_ROUNDS=8 \
 //   /opt/spark/bin/spark-shell --master local[2] \
 //     --conf spark.ui.enabled=false --conf spark.ui.showConsoleProgress=false \
@@ -28,6 +32,13 @@ try {
     .toDF("raw").withColumn("source_file", lit("probe.pcap"))
     .repartition(spark.sparkContext.defaultParallelism).cache()
   println(s"[probe] decoded ${packets.count()} packets")
+  // AQE off while planning: an adaptive plan has no codegen stages before it runs
+  val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+  spark.conf.set("spark.sql.adaptive.enabled", "false")
+  val plan = graft.udm.UdmTransform.transform(packets, "raw").queryExecution.executedPlan
+  spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  for (((_, _, stats), i) <- org.apache.spark.sql.execution.debug.codegenStringSeq(plan).zipWithIndex)
+    println(s"[probe] codegen stage ${i + 1} max_method_bytes=${stats.maxMethodCodeSize}")
   val fixed = lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
   for ((mode, fallback) <- Seq("now" -> current_timestamp(), "fixed" -> fixed);
        r <- 1 to rounds) {
