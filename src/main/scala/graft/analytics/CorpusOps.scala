@@ -1196,7 +1196,7 @@ object CorpusOps {
     * The per-source offsets table the skew-safe plan joins back is
     * ≤ (P + |sources|) rows — and SOURCE CARDINALITY GROWS WITH THE
     * CORPUS (a web corpus has per-domain sources), so the broadcast is
-    * size-gated on that bound: past `offsetsBroadcastMaxRows` it
+    * size-gated on that bound: past `OffsetsBroadcastMaxRows` (2^20) it
     * becomes a plain shuffle join, which is nearly free here — the
     * downstream per-(partition, source) window needs a hash exchange
     * on the same keys anyway, so only the tiny offsets side pays. */
@@ -1273,9 +1273,10 @@ object CorpusOps {
   private[analytics] val probeMemo =
     new java.util.concurrent.ConcurrentHashMap[Integer, java.lang.Boolean]()
 
+  private val OffsetsBroadcastMaxRows = 1L << 20
+
   def cumulativeTokens(documents: DataFrame,
-                       skewSafe: Option[Boolean] = None,
-                       offsetsBroadcastMaxRows: Long = 1L << 20): DataFrame = {
+                       skewSafe: Option[Boolean] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = graft.util.SparkUtil.widen(documents)
       .select(col("doc_id"), col("source"),
@@ -1332,7 +1333,7 @@ object CorpusOps {
       val wLocal = Window.partitionBy(col("_pid"), col("source")).orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val gatedOffsets =
-        if (sourceCount + p <= offsetsBroadcastMaxRows) broadcast(offsets)
+        if (sourceCount + p <= OffsetsBroadcastMaxRows) broadcast(offsets)
         else offsets
       withPid.join(gatedOffsets,
           col("_pid") === col("_opid") && col("source") <=> col("_k"))

@@ -419,20 +419,16 @@ object Dedup {
   /** Banding stage alone, over an existing signature table — computed
     * in-plan by [[minhashSignatures]] or read back from a
     * [[writeSignatures]] parquet (signatures computed ONCE per corpus,
-    * banded many times). */
+    * banded many times). The band self-join carries no hint: the
+    * planner broadcasts it over a cached, batch-bounded table (the
+    * streaming admission unit) and shuffles it at corpus scale. */
   def candidatePairsFromSignatures(sig: DataFrame, numHashes: Int,
-                                   rowsPerBand: Int,
-                                   broadcastJoin: Boolean = false): DataFrame = {
+                                   rowsPerBand: Int): DataFrame = {
     val banded = bandTable(sig, numHashes, rowsPerBand)
     val left = banded.select(col("doc_id").as("doc_a"), col("bk").as("bk_a"),
       array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig_a"))
-    val right0 = banded.select(col("doc_id").as("doc_b"), col("bk").as("bk_b"),
+    val right = banded.select(col("doc_id").as("doc_b"), col("bk").as("bk_b"),
       array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig_b"))
-    // broadcastJoin: for BATCH-BOUNDED signature tables only (the
-    // streaming admission unit) — skips the two bk exchanges of the
-    // self-join; row-identical (same equi key + residual). NEVER for
-    // corpus-scale callers: the broadcast side is the whole table.
-    val right = if (broadcastJoin) broadcast(right0) else right0
     left.join(right, col("bk_a") === col("bk_b") && col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         (size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b),
@@ -829,31 +825,83 @@ object Dedup {
     * component)` names each cluster's keeper (keep-one-per-cluster is
     * then a filter `doc_id = cluster_id`). Pairs alone under-dedup:
     * A~B and B~C without A~C still means {A,B,C} is ONE duplicate
-    * group — transitivity needs components, not pairs.
-    *
-    * Algorithm: iterative min-label propagation (each node takes the
-    * min root among itself and its neighbors' roots; Pregel-style).
-    * Converges in O(component diameter) rounds — near-dup clusters are
-    * shallow (diameter rarely exceeds a handful), and `maxIters` is a
-    * fail-LOUD bound: a non-converged result would silently under-merge,
-    * so we throw instead of returning it. Each round is one equi-join +
-    * one groupBy on doc ids — all shuffles on high-cardinality keys;
-    * the edge list is the LSH candidate set (never O(n²)). The
-    * singleton majority never enters the loop: only docs appearing in
-    * some pair carry labels; everyone else joins back as their own
-    * cluster at the end (at 100 TB the label table is |pairs|-sized,
-    * not corpus-sized). */
+    * group — transitivity needs components, not pairs. Components come
+    * from [[clustersFromPairs]]. */
   def duplicateClusters(documents: DataFrame, shingleK: Int, numHashes: Int,
-                        rowsPerBand: Int, maxIters: Int = 25): DataFrame = {
+                        rowsPerBand: Int): DataFrame = {
     val pairs = minhashCandidatePairs(documents, shingleK, numHashes, rowsPerBand)
       .select("doc_a", "doc_b")
-    clustersFromPairs(documents.select("doc_id"), pairs, maxIters)
+    clustersFromPairs(documents.select("doc_id"), pairs)
   }
 
+  /** Pair count at or under which [[clustersFromPairs]] labels the
+    * components on the driver: ≤ 2·100,000 longs (~1.6 MB) ever reach
+    * it. */
+  private val MaxDriverPairs = 100000L
+
   /** Component stage alone, over any near-dup pair table (MinHash,
-    * SimHash, or embedding pairs — they all emit (doc_a, doc_b)). */
-  def clustersFromPairs(docs: DataFrame, pairs: DataFrame,
-                        maxIters: Int = 25): DataFrame = {
+    * SimHash, or embedding pairs — they all emit (doc_a, doc_b)) —
+    * ONE operator for batch queries and the streaming admission
+    * micro-batch alike, which picks its execution from the measured
+    * pair count. The pair plan materializes ONCE (an eager
+    * localCheckpoint that then feeds whichever path runs, so the
+    * expensive banded pair-generation plan never executes twice):
+    *  - at most `MaxDriverPairs` (100,000) pairs: a driver union-find
+    *    (union-by-min + full path compression, so the root of every
+    *    member is the component MINIMUM — exactly the fixpoint of the
+    *    distributed loop; spec-asserted equal) labels the members,
+    *    which broadcast-join back; docs in no pair never leave the
+    *    executors. The distributed loop pays ≥3 eager jobs of fixed
+    *    scheduling/shuffle cost (edges cache, label init, one job per
+    *    round) — measured ~1.5 s to cluster 14 pairs inside a
+    *    streaming micro-batch;
+    *  - above it: the checkpointed pairs flow into
+    *    [[clustersByMinLabel]] — the 100 TB path. */
+  def clustersFromPairs(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val p = pairs.select(col("doc_a").cast("long").as("doc_a"),
+        col("doc_b").cast("long").as("doc_b"))
+      .localCheckpoint(true)
+    if (p.count() > MaxDriverPairs) clustersByMinLabel(docs, p)
+    else {
+      val edges = p.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrElse(r, r) != r) r = parent(r)
+        var c = x
+        while (parent.getOrElse(c, c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+        r
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val spark = docs.sparkSession
+      import spark.implicits._
+      val members = edges.iterator.flatMap { case (a, b) => Iterator(a, b) }
+        .toSet.iterator.map((id: Long) => (id, find(id))).toSeq
+      docs.join(broadcast(members.toDF("doc_id", "root")), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("root"), col("doc_id")).as("cluster_id"))
+        .orderBy("doc_id")
+    }
+  }
+
+  /** The distributed component loop behind [[clustersFromPairs]] above
+    * its driver gate: iterative min-label propagation (each node takes
+    * the min root among itself and its neighbors' roots;
+    * Pregel-style). Converges in O(component diameter) rounds —
+    * near-dup clusters are shallow (diameter rarely exceeds a handful),
+    * and `maxIters` is a fail-LOUD bound: a non-converged result would
+    * silently under-merge, so we throw instead of returning it. Each
+    * round is one equi-join + one groupBy on doc ids — all shuffles on
+    * high-cardinality keys; the edge list is the LSH candidate set
+    * (never O(n²)). The singleton majority never enters the loop: only
+    * docs appearing in some pair carry labels; everyone else joins back
+    * as their own cluster at the end (at 100 TB the label table is
+    * |pairs|-sized, not corpus-sized). */
+  private[analytics] def clustersByMinLabel(docs: DataFrame, pairs: DataFrame,
+                                            maxIters: Int = 25): DataFrame = {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .distinct().cache()
@@ -909,56 +957,6 @@ object Dedup {
           coalesce(col("root"), col("doc_id")).as("cluster_id"))
         .orderBy("doc_id")
     } finally edges.unpersist()
-  }
-
-  /** [[clustersFromPairs]] with a size-gated driver fast path for small
-    * pair tables. The distributed component loop pays ≥3 eager jobs of
-    * fixed scheduling/shuffle cost per call (edges cache, label init,
-    * one job per propagation round) — measured ~1.5 s to cluster 14
-    * pairs inside a streaming micro-batch, where AQE cannot coalesce
-    * the empty shuffle partitions. When the MATERIALIZED pair count is
-    * ≤ `maxDriverPairs`, a driver union-find (union-by-min + full path
-    * compression, so the root of every member is the component MINIMUM
-    * — exactly the fixpoint the distributed min-label loop converges
-    * to; spec-asserted equal on random graphs) labels the members and
-    * broadcast-joins them back; docs in no pair never leave the
-    * executors. The collect is bounded by the gate (≤ 2·maxDriverPairs
-    * longs, ~1.6 MB at the default) and the gate itself costs ONE
-    * materialization of the pair plan — an eager localCheckpoint that
-    * then feeds whichever path runs, so the (expensive) banded
-    * pair-generation plan never executes twice. Above the gate the
-    * checkpointed pairs flow into the distributed loop unchanged —
-    * the 100 TB path is the same plan it always was. */
-  def clustersFromPairsAuto(docs: DataFrame, pairs: DataFrame,
-                            maxDriverPairs: Int = 100000,
-                            maxIters: Int = 25): DataFrame = {
-    val p = pairs.select(col("doc_a").cast("long").as("doc_a"),
-        col("doc_b").cast("long").as("doc_b"))
-      .localCheckpoint(true)
-    if (p.count() > maxDriverPairs) clustersFromPairs(docs, p, maxIters)
-    else {
-      val edges = p.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val members = edges.iterator.flatMap { case (a, b) => Iterator(a, b) }
-        .toSet.iterator.map((id: Long) => (id, find(id))).toSeq
-      docs.join(broadcast(members.toDF("doc_id", "root")), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("root"), col("doc_id")).as("cluster_id"))
-        .orderBy("doc_id")
-    }
   }
 
   /** Leakage-safe train/test split — assign documents to splits BY

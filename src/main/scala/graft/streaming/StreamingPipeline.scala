@@ -629,18 +629,18 @@ object StreamingPipeline {
             org.apache.spark.sql.functions.broadcast(dupIds),
             Seq("doc_id"), "left_anti").cache()
           try {
+            // survivorSig is cached and batch-bounded, so the planner
+            // broadcasts the band self-join here without a hint
             val pairs = Dedup.candidatePairsFromSignatures(
-              survivorSig, numHashes, rowsPerBand,
-              broadcastJoin = true).select("doc_a", "doc_b")
-            // Auto: micro-batch pair tables are usually tiny (tens of
-            // pairs per thousand docs), and the distributed component
-            // loop's per-round job overhead dominated the batch fixed
-            // cost; the size gate keeps the distributed path for
+              survivorSig, numHashes, rowsPerBand).select("doc_a", "doc_b")
+            // micro-batch pair tables are usually tiny (tens of pairs
+            // per thousand docs), so clustersFromPairs labels them on
+            // the driver; its size gate keeps the distributed loop for
             // genuinely large batches. keep is batch-bounded (≤ one
             // doc_id per batch doc) — eagerly checkpointed so the two
             // sink writes below consume materialized ids instead of
             // re-running the cluster plan each
-            val keep = Dedup.clustersFromPairsAuto(survivorSig.select("doc_id"), pairs)
+            val keep = Dedup.clustersFromPairs(survivorSig.select("doc_id"), pairs)
               .filter(col("doc_id") === col("cluster_id")).select("doc_id")
               .localCheckpoint(true)
             // both sinks consume the MATERIALIZED keep set and the
@@ -1590,6 +1590,9 @@ object StreamingPipeline {
       .toDF("window_start", labelCol, "n", "ewma", "ratio", "is_anomaly")
   }
 
+  private def round4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   /** Shared closed-window fold behind [[anomalyAlerts]] and
     * [[holtCapacityAlerts]]: batch-local pre-count to (label, window,
     * count) partials in a narrow `mapPartitions` (each partial carries
@@ -1606,9 +1609,6 @@ object StreamingPipeline {
     * no window position and are excluded HERE (the quota/funnel
     * null-ts contract — a null Timestamp would NPE in the pre-count's
     * `ts.getTime` and kill the query). */
-  private def round4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   private def foldClosedWindows[T](
       events: DataFrame, tsCol: String, labelCol: String,
       windowSeconds: Long, keep: Int, watermarkDelay: String)(
@@ -3077,69 +3077,13 @@ object StreamingPipeline {
     * The late rows sit far below EITHER candidate filter watermark
     * (00:04 from b0 per the one-batch filter lag, 00:59 from b1), so
     * the dropped counts are lag-robust: 0, 0, 2, 2 exactly. */
-  def skewAlertDemoPanel(spark: SparkSession): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_skew")
-    val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
-    Files.createDirectories(Paths.get(in))
-    val t0 = "2024-01-01T00:0"
-    val files = Seq(
-      (0 to 5).map(m => s"""{"ts":"${t0}$m:00.000Z","label":"a"}"""),
-      (0 until 4).map(i => s"""{"ts":"2024-01-01T01:00:0$i.000Z","label":"b"}"""),
-      Seq(s"""{"ts":"${t0}2:01.000Z","label":"a"}""",
-        s"""{"ts":"${t0}3:02.000Z","label":"a"}""",
-        s"""{"ts":"2024-01-01T01:01:00.000Z","label":"b"}"""),
-      Seq(s"""{"ts":"${t0}0:30.000Z","label":"a"}""",
-        s"""{"ts":"${t0}1:30.000Z","label":"a"}""",
-        s"""{"ts":"2024-01-01T01:02:00.000Z","label":"b"}"""))
-    files.zipWithIndex.foreach { case (lines, i) =>
-      val f = Paths.get(in, f"f$i%02d.json")
-      Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 2000L)
+  def skewAlertDemoPanel(spark: SparkSession): DataFrame =
+    forgedLatenessDrain(spark, "graft_skew_demo", forgedLateFiles :+ Seq(
+        s"""{"ts":"${demoT0}0:30.000Z","label":"a"}""",
+        s"""{"ts":"${demoT0}1:30.000Z","label":"a"}""",
+        """{"ts":"2024-01-01T01:02:00.000Z","label":"b"}""")) { m =>
+      watermarkSkewAlerts(m, ratioThreshold = 0.5, kBatches = 2)
     }
-    val name = "graft_skew_demo"
-    val schema = StructType(Seq(StructField("ts", TimestampType),
-      StructField("label", StringType)))
-    val counts = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(in)
-      .withWatermark("ts", "60 seconds")
-      .groupBy(window(col("ts"), "60 seconds"), col("label")).count()
-    val listener = attachMonitoring(spark, base.toString, name)
-    try {
-      // batch-scoped stateful width (see withStreamShuffleWidth):
-      // 1-file micro-batches over a 4-row fixture need no session-wide
-      // state fan-out; counters are row/group counts — width-neutral
-      withStreamShuffleWidth(spark, 1) {
-        val q = counts.writeStream.queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .format("parquet").start(out)
-        require(q.awaitTermination(300000), "skew demo drain timed out")
-      }
-      val monDir = new org.apache.hadoop.fs.Path(s"$base/_monitoring/$name")
-      val fs = monDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val deadline = System.currentTimeMillis() + 60000
-      while ((!fs.exists(monDir) || fs.listStatus(monDir).length < 4) &&
-             System.currentTimeMillis() < deadline) Thread.sleep(200)
-      require(listener.writeFailures == 0,
-        s"monitoring listener dropped ${listener.writeFailures} row writes")
-      require(fs.exists(monDir) && fs.listStatus(monDir).length >= 4,
-        "monitoring rows incomplete after 60 s — listener lagging or writes lost")
-      val panel = watermarkSkewAlerts(
-        monitoringTable(spark, base.toString, name),
-        ratioThreshold = 0.5, kBatches = 2)
-      // eager materialization so the temp dirs can be deleted (the
-      // monitoringDemoPanel discipline)
-      val rows = panel.collect().toSeq
-      val schema2 = panel.schema
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema2)
-    } finally {
-      spark.streams.removeListener(listener)
-      val basePath = new org.apache.hadoop.fs.Path(base.toString)
-      basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(basePath, true)
-    }
-  }
 
   /** Bounded end-to-end demonstration of [[attachMonitoring]] for the
     * oracle gate (`stream_monitoring_panel`): a watermarked windowed
@@ -3157,70 +3101,9 @@ object StreamingPipeline {
     * on-time row) → rows_dropped_by_watermark = 2 exactly (the
     * counter is post-partial-agg, so the late rows must land in
     * distinct groups to count separately — see [[attachMonitoring]]). */
-  def monitoringDemoPanel(spark: SparkSession): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_monitor")
-    val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
-    Files.createDirectories(Paths.get(in))
-    val t0 = "2024-01-01T00:0"
-    val files = Seq(
-      // file 0: 6 on-time rows, 00:00..00:05
-      (0 to 5).map(m => s"""{"ts":"${t0}$m:00.000Z","label":"a"}"""),
-      // file 1: 4 rows at 01:00 — advances the watermark to 00:59
-      (0 until 4).map(i => s"""{"ts":"2024-01-01T01:00:0$i.000Z","label":"b"}"""),
-      // file 2: 2 late rows in DISTINCT windows (00:02 and 00:03,
-      // both < watermark 00:59) + 1 on-time
-      Seq(s"""{"ts":"${t0}2:01.000Z","label":"a"}""",
-        s"""{"ts":"${t0}3:02.000Z","label":"a"}""",
-        s"""{"ts":"2024-01-01T01:01:00.000Z","label":"b"}"""))
-    files.zipWithIndex.foreach { case (lines, i) =>
-      val f = Paths.get(in, f"f$i%02d.json")
-      Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-      // file-source batch order follows mtime: space >1 s apart (the
-      // micro-batch-coalescing trap) and strictly increasing
-      f.toFile.setLastModified(1700000000000L + i * 2000L)
-    }
-    val name = "graft_monitoring_demo"
-    val schema = StructType(Seq(StructField("ts", TimestampType),
-      StructField("label", StringType)))
-    val counts = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(in)
-      .withWatermark("ts", "60 seconds")
-      .groupBy(window(col("ts"), "60 seconds"), col("label")).count()
-    val listener = attachMonitoring(spark, base.toString, name)
-    try {
-      // batch-scoped stateful width (see withStreamShuffleWidth):
-      // 1-file micro-batches over a 13-row fixture; the oracled exact
-      // counts (input batches / rows / watermark drops) are
-      // width-neutral — watermarks are global and drop counters count
-      // post-partial-agg GROUPS, fixed by the fixture's file split
-      withStreamShuffleWidth(spark, 1) {
-        val q = counts.writeStream.queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .format("parquet").start(out)
-        require(q.awaitTermination(300000), "monitoring demo drain timed out")
-      }
-      // listener delivery is async post-commit: poll for all 3 input
-      // batches' rows (plus however many no-data batches Spark ran) —
-      // and FAIL LOUD on timeout or dropped writes, never summarize a
-      // partial record (it would surface as a baffling oracle
-      // data-mismatch instead of this error)
-      val monDir = new org.apache.hadoop.fs.Path(s"$base/_monitoring/$name")
-      val fs = monDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val deadline = System.currentTimeMillis() + 60000
-      while ((!fs.exists(monDir) || fs.listStatus(monDir).length < 3) &&
-             System.currentTimeMillis() < deadline) Thread.sleep(200)
-      require(listener.writeFailures == 0,
-        s"monitoring listener dropped ${listener.writeFailures} row writes")
-      require(fs.exists(monDir) && fs.listStatus(monDir).length >= 3,
-        "monitoring rows incomplete after 60 s — listener lagging or writes lost")
-      val m = monitoringTable(spark, base.toString, name)
-      // materialize the one-row panel EAGERLY so the temp dir (parquet
-      // sink + checkpoint + RocksDB + monitoring rows, re-created on
-      // every Verify/sweep run) can be deleted before returning — a
-      // lazy DataFrame over the files would leak one dir per build
-      val row = m.agg(
+  def monitoringDemoPanel(spark: SparkSession): DataFrame =
+    forgedLatenessDrain(spark, "graft_monitoring_demo", forgedLateFiles) { m =>
+      m.agg(
         sum(when(col("num_input_rows") > 0, 1L).otherwise(0L))
           .cast("long").as("n_input_batches"),
         sum("num_input_rows").cast("long").as("rows_in"),
@@ -3231,10 +3114,82 @@ object StreamingPipeline {
           max("batch_duration_ms") < 600000L).as("durations_ok"),
         (max("watermark") >= "2024-01-01T00:59:00.000Z")
           .as("watermark_advanced"))
-      val rows = row.collect().toSeq
-      val schema = row.schema
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
+    }
+
+  private val demoT0 = "2024-01-01T00:0"
+
+  /** The [[monitoringDemoPanel]] fixture, one JSONL file per entry. */
+  private val forgedLateFiles = Seq(
+    // file 0: 6 on-time rows, 00:00..00:05
+    (0 to 5).map(m => s"""{"ts":"${demoT0}$m:00.000Z","label":"a"}"""),
+    // file 1: 4 rows at 01:00 — advances the watermark to 00:59
+    (0 until 4).map(i => s"""{"ts":"2024-01-01T01:00:0$i.000Z","label":"b"}"""),
+    // file 2: 2 late rows in DISTINCT windows (00:02 and 00:03,
+    // both < watermark 00:59) + 1 on-time
+    Seq(s"""{"ts":"${demoT0}2:01.000Z","label":"a"}""",
+      s"""{"ts":"${demoT0}3:02.000Z","label":"a"}""",
+      """{"ts":"2024-01-01T01:01:00.000Z","label":"b"}"""))
+
+  /** The drain behind the two demo panels: writes `files` (JSONL rows of
+    * ts, label) into a temp dir, drains a 60 s watermarked windowed
+    * count over them one file per micro-batch under the query name
+    * `name`, waits for one `_monitoring` row per file, and returns
+    * `summarize` of the monitoring table — materialized eagerly, so the
+    * temp dir (parquet sink + checkpoint + state store + monitoring
+    * rows, re-created on every Verify/sweep run) is deleted before
+    * returning; a lazy DataFrame over the files would leak one dir per
+    * build. */
+  private def forgedLatenessDrain(spark: SparkSession, name: String,
+                                  files: Seq[Seq[String]])(
+      summarize: DataFrame => DataFrame): DataFrame = {
+    import java.nio.file.{Files, Paths}
+    val base = Files.createTempDirectory(name)
+    val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
+    Files.createDirectories(Paths.get(in))
+    files.zipWithIndex.foreach { case (lines, i) =>
+      val f = Paths.get(in, f"f$i%02d.json")
+      Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      // file-source batch order follows mtime: space >1 s apart (the
+      // micro-batch-coalescing trap) and strictly increasing
+      f.toFile.setLastModified(1700000000000L + i * 2000L)
+    }
+    val schema = StructType(Seq(StructField("ts", TimestampType),
+      StructField("label", StringType)))
+    val counts = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).json(in)
+      .withWatermark("ts", "60 seconds")
+      .groupBy(window(col("ts"), "60 seconds"), col("label")).count()
+    val listener = attachMonitoring(spark, base.toString, name)
+    try {
+      // batch-scoped stateful width (see withStreamShuffleWidth):
+      // 1-file micro-batches over a 13- or 16-row fixture; the exact
+      // counts (input batches / rows / watermark drops) are
+      // width-neutral — watermarks are global and drop counters count
+      // post-partial-agg GROUPS, fixed by the fixture's file split
+      withStreamShuffleWidth(spark, 1) {
+        val q = counts.writeStream.queryName(name)
+          .option("checkpointLocation", ckpt)
+          .outputMode("append").trigger(Trigger.AvailableNow())
+          .format("parquet").start(out)
+        require(q.awaitTermination(300000), s"$name drain timed out")
+      }
+      // listener delivery is async post-commit: poll for every input
+      // batch's row (plus however many no-data batches Spark ran) —
+      // and FAIL LOUD on timeout or dropped writes, never summarize a
+      // partial record (it would surface as a baffling oracle
+      // data-mismatch instead of this error)
+      val monDir = new org.apache.hadoop.fs.Path(s"$base/_monitoring/$name")
+      val fs = monDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val deadline = System.currentTimeMillis() + 60000
+      while ((!fs.exists(monDir) || fs.listStatus(monDir).length < files.length) &&
+             System.currentTimeMillis() < deadline) Thread.sleep(200)
+      require(listener.writeFailures == 0,
+        s"monitoring listener dropped ${listener.writeFailures} row writes")
+      require(fs.exists(monDir) && fs.listStatus(monDir).length >= files.length,
+        "monitoring rows incomplete after 60 s — listener lagging or writes lost")
+      val panel = summarize(monitoringTable(spark, base.toString, name))
+      val rows = panel.collect().toSeq
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), panel.schema)
     } finally {
       spark.streams.removeListener(listener)
       val basePath = new org.apache.hadoop.fs.Path(base.toString)

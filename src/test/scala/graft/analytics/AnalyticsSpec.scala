@@ -198,16 +198,21 @@ class AnalyticsSpec extends SparkSpec {
     // chain 1-2-3-4 (no direct 1~4 pair: transitivity must merge it),
     // pair {6,7}, singletons 5, 8, 9, 10
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (6L, 7L)).toDF("doc_a", "doc_b")
-    val got = Dedup.clustersFromPairs(docIds, pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      5L -> 5L, 6L -> 6L, 7L -> 6L, 8L -> 8L, 9L -> 9L, 10L -> 10L))
-    // keep-one-per-cluster = doc_id == cluster_id
-    assert(got.count { case (d, c) => d == c } == 6) // 1, 5, 6, 8, 9, 10
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      5L -> 5L, 6L -> 6L, 7L -> 6L, 8L -> 8L, 9L -> 9L, 10L -> 10L)
+    // the public operator (driver path at this size) and the
+    // distributed loop it runs above its gate
+    for (got <- Seq(Dedup.clustersFromPairs(docIds, pairs),
+                    Dedup.clustersByMinLabel(docIds, pairs))
+           .map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toMap)) {
+      assert(got == want)
+      // keep-one-per-cluster = doc_id == cluster_id
+      assert(got.count { case (d, c) => d == c } == 6) // 1, 5, 6, 8, 9, 10
+    }
 
-    // a bound too small for the chain throws instead of under-merging
+    // a loop bound too small for the chain throws instead of under-merging
     intercept[IllegalArgumentException] {
-      Dedup.clustersFromPairs(docIds, pairs, maxIters = 1).collect()
+      Dedup.clustersByMinLabel(docIds, pairs, maxIters = 1).collect()
     }
   }
 
@@ -238,7 +243,7 @@ class AnalyticsSpec extends SparkSpec {
       val docIds = (1L to 6L).toDF("doc_id")
       // chain 1-2-3-4: converges in 3 changing rounds + 1 confirm round
       val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("doc_a", "doc_b")
-      val got = Dedup.clustersFromPairs(docIds, pairs).collect()
+      val got = Dedup.clustersByMinLabel(docIds, pairs).collect()
       assert(got.count(r => r.getLong(1) == 1L) == 4)
       val n = drained()
       // exactly one action per round: init-labels checkpoint + 4 round
@@ -287,11 +292,13 @@ class AnalyticsSpec extends SparkSpec {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val want = (0 until n).map(i => i.toLong -> find(i).toLong).toMap
-      val got = Dedup.clustersFromPairs(
-          (0L until n.toLong).toDF("doc_id"),
-          edges.toDF("doc_a", "doc_b"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(got == want, s"trial $trial: n=$n edges=$edges")
+      val (docIds, pairs) = ((0L until n.toLong).toDF("doc_id"), edges.toDF("doc_a", "doc_b"))
+      for ((path, clusters) <- Seq(
+             "clustersFromPairs" -> Dedup.clustersFromPairs(docIds, pairs),
+             "clustersByMinLabel" -> Dedup.clustersByMinLabel(docIds, pairs))) {
+        val got = clusters.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+        assert(got == want, s"$path trial $trial: n=$n edges=$edges")
+      }
     }
   }
 
@@ -916,7 +923,7 @@ class AnalyticsSpec extends SparkSpec {
     assert(fromDisk == got)
   }
 
-  test("clustersFromPairsAuto: driver path ≡ distributed path at every gate setting") {
+  test("clustersFromPairs: driver path under the gate ≡ distributed loop, empty pairs are singletons") {
     import spark.implicits._
     val rng = new scala.util.Random(7)
     val n = 60
@@ -926,22 +933,59 @@ class AnalyticsSpec extends SparkSpec {
     }.filter(e => e._1 != e._2).distinct
     val docs = (0L until n.toLong).toDF("doc_id")
     val pairs = edges.toDF("doc_a", "doc_b")
-    val want = Dedup.clustersFromPairs(docs, pairs)
+    val want = Dedup.clustersByMinLabel(docs, pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     // under the gate: driver union-find + broadcast join-back
-    val auto = Dedup.clustersFromPairsAuto(docs, pairs)
-    assert(auto.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+    val got = Dedup.clustersFromPairs(docs, pairs)
+    assert(got.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
       "driver path must broadcast the member-label table")
-    assert(auto.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == want)
-    // gate forced below the pair count: the distributed loop runs and agrees
-    val dist = Dedup.clustersFromPairsAuto(docs, pairs, maxDriverPairs = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(dist == want)
+    assert(got.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == want)
     // no pairs at all: every doc is its own singleton cluster
-    val none = Dedup.clustersFromPairsAuto(docs,
+    val none = Dedup.clustersFromPairs(docs,
         Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(none == (0L until n.toLong).map(i => (i, i)))
+  }
+
+  test("duplicateClusters over real near-dups ≡ the distributed loop's labels") {
+    val base = Seq(
+      "the quick brown fox jumps over the lazy dog near the river bank today",
+      "spark streaming reads capture files and writes unified data model events",
+      "minhash bands collide when two documents share most of their shingles",
+      "a completely unrelated sentence about weather patterns in the mountains")
+    // each base text, an exact copy, and a copy with its last word edited
+    val rows = base.zipWithIndex.flatMap { case (t, i) =>
+      val id = i * 10L
+      Seq(id -> t, (id + 1) -> t, (id + 2) -> (t.split(" ").init :+ "edited").mkString(" "))
+    } :+ (99L -> "hi")
+    val d = docs(rows: _*)
+    val pairs = Dedup.minhashCandidatePairs(d, 3, 8, 4).select("doc_a", "doc_b")
+    val want = Dedup.clustersByMinLabel(d.select("doc_id"), pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val got = Dedup.duplicateClusters(d, 3, 8, 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got == want)
+    // the exact copies always cluster with their original
+    base.indices.foreach { i =>
+      assert(got.contains((i * 10L + 1, i * 10L)), s"exact copy of $i not clustered: $got")
+    }
+    assert(got.contains((99L, 99L)))
+  }
+
+  test("candidatePairsFromSignatures broadcasts the band self-join over an admission-sized cached table") {
+    // 1,000 docs of 12 words from a 200-word vocabulary: the size of one
+    // admission micro-batch
+    val rng = new scala.util.Random(11)
+    val d = docs((1L to 1000L).map(i =>
+      i -> Seq.fill(12)(s"w${rng.nextInt(200)}").mkString(" ")): _*)
+    val sig = Dedup.minhashSignatures(d, 3, 8).cache()
+    try {
+      assert(sig.count() > 0)
+      val pairs = Dedup.candidatePairsFromSignatures(sig, 8, 4)
+      val plan = pairs.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
+        s"planner did not broadcast the band self-join:\n$plan")
+    } finally { sig.unpersist(); () }
   }
 
   test("persisted simhash fingerprints band to the same near-dup pairs") {
