@@ -42,8 +42,24 @@ object Bench {
       case _ => -1.0
     }
 
+  /** `"git_head":…,"dirty":…` of the git checkout in the working
+    * directory (nulls outside one), so a record names the code it
+    * measured. */
+  private def gitStamp(): String = {
+    def git(args: String*): Option[String] = try {
+      val p = new ProcessBuilder(("git" +: args): _*).redirectErrorStream(true).start()
+      val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
+      if (p.waitFor() == 0) Some(out) else None
+    } catch { case NonFatal(_) => None }
+    git("rev-parse", "HEAD") match {
+      case Some(head) => s""""git_head":"$head","dirty":${git("status", "--porcelain").forall(_.nonEmpty)}"""
+      case None => """"git_head":null,"dirty":null"""
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg()
+    val stamp = gitStamp()
     val wallStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -102,13 +118,19 @@ object Bench {
       val base = Files.createTempDirectory(s"graft_bench_$label")
       def once(attempt: Int): Double = {
         val dir = s"$base/$attempt"
-        for ((sub, rows) <- inputs) {
-          Files.createDirectories(Paths.get(dir, sub))
-          rows.grouped(math.max(1, rows.length / nFiles)).zipWithIndex.foreach {
-            case (chunk, i) =>
-              Files.writeString(Paths.get(dir, sub, f"part_$i%03d.jsonl"),
-                chunk.mkString("\n"))
-          }
+        val files = for ((sub, rows) <- inputs;
+                         (chunk, i) <- rows.grouped(math.max(1, rows.length / nFiles)).zipWithIndex)
+          yield (Paths.get(dir, sub, f"part_$i%03d.jsonl"), chunk)
+        // mtimes strictly increasing and 2 s apart: the file source orders
+        // its batches by mtime, so every attempt of every run splits the
+        // input into the same batches (equal mtimes leave the order to
+        // the listing, and with it, e.g., which near-duplicate an
+        // admission drain keeps)
+        val mtime0 = System.currentTimeMillis() - 2000L * (files.length + 1)
+        files.zipWithIndex.foreach { case ((f, chunk), k) =>
+          Files.createDirectories(f.getParent)
+          Files.writeString(f, chunk.mkString("\n"))
+          f.toFile.setLastModified(mtime0 + 2000L * k)
         }
         val t0 = System.nanoTime()
         try {
@@ -568,18 +590,17 @@ object Bench {
       val wall = (System.nanoTime() - wallStart) / 1e9
       if (cpu < 0) -1.0
       else cpu / (wall * Runtime.getRuntime.availableProcessors())
-    }%.3f,"sf":"$sfDir"}"""
+    }%.3f,"sf":"$sfDir","cpus":$cpus,$stamp}"""
     println(line)
-    // the printed one-line contract stays; ALSO persist it to a
-    // fixed-name file so a log-tail capture that truncates the (large)
-    // line can never lose the round's per-query evidence — a write
-    // failure must not fail a bench that already succeeded
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")),
-      line + "\n")
+    // the printed one-line contract stays; ALSO persist it to a file
+    // named by the CPU count, so a log-tail capture that truncates the
+    // (large) line can never lose the round's per-query evidence and a
+    // run at one width never overwrites another width's record — a
+    // write failure must not fail a bench that already succeeded
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench_c$cpus.json")
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
     catch { case NonFatal(e) =>
-      System.err.println(s"[bench] bench_last.json write failed: ${e.getMessage}")
+      System.err.println(s"[bench] $out write failed: ${e.getMessage}")
     }
     spark.stop()
   }

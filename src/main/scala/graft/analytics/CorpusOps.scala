@@ -1157,62 +1157,6 @@ object CorpusOps {
       .orderBy("doc_id")
   }
 
-  /** Per-source running token totals in doc_id order — the shared core
-    * of [[packSequences]] and [[tokenBudget]] — with every stage P-way
-    * parallel: the [[graft.metrics.Metrics.percentRankByKey]]
-    * range-partition + offset machinery applied to a cumulative sum.
-    * A plain `Window.partitionBy(source)` walks each source through ONE
-    * reducer — correct while sources are many and balanced, but a
-    * single-dominant-source corpus (the documented pathology) funnels
-    * ~everything through one task. Here:
-    *
-    *  1. range-partition + implicit local sort on (source, doc_id) —
-    *     each of P partitions holds a contiguous slice;
-    *  2. per-(partition, source) token sums — tiny aggregate;
-    *  3. per-source running offsets over that tiny table;
-    *  4. local cumulative sum within (partition, source) + broadcast
-    *     offset = the global running total.
-    *
-    * `skewSafe = Some(false)` keeps the one-window-per-source plan —
-    * retained as the executable specification (spec-asserted equal in
-    * AnalyticsSpec "cumulativeTokens skew-safe plan equals the window
-    * plan") and the right choice when no source dominates. The
-    * skew-safe plan evaluates the tokenize projection twice (the range
-    * boundary sample pass reads the child too) — bounded 2× scan CPU
-    * traded for never serializing a dominant source through one
-    * reducer.
-    *
-    * `skewSafe = None` (the default) AUTO-SELECTS via
-    * [[dominanceProbe]] — one EAGER narrow job (no shuffle beyond the
-    * house widen round-robin on few-file inputs) with O(k)
-    * state at DataFrame-construction time (no shuffle; a per-source
-    * count aggregate would be corpus-cardinality-sized): the skew-safe
-    * plan is chosen only when one source holds ≥ half the corpus (the
-    * documented single-dominant-source pathology; the probe has no
-    * false negatives there and errs toward skew-safe on borderline
-    * corpora); balanced many-source corpora keep the cheaper
-    * single-scan window plan and pay ONLY the probe.
-    *
-    * The per-source offsets table the skew-safe plan joins back is
-    * ≤ (P + |sources|) rows — and SOURCE CARDINALITY GROWS WITH THE
-    * CORPUS (a web corpus has per-domain sources), so the broadcast is
-    * size-gated on that bound: past `OffsetsBroadcastMaxRows` (2^20) it
-    * becomes a plain shuffle join, which is nearly free here — the
-    * downstream per-(partition, source) window needs a hash exchange
-    * on the same keys anyway, so only the tiny offsets side pays. */
-  /** Bounded-state source-dominance probe — ONE narrow shuffle-free
-    * job, O(k) memory per task and on the driver (source cardinality
-    * grows with the corpus, so a per-source count aggregate or hash
-    * map would not fly at 100 TB). Each partition keeps a
-    * Misra-Gries(k) heavy-hitter sketch of the `source` column;
-    * partials merge by counter addition + the same trim (the sketch is
-    * mergeable). Guarantee: a source with true count f retains a
-    * counter ≥ f − total/(k+1), so a ≥½-dominant source ALWAYS
-    * satisfies (counter + total/(k+1))·2 ≥ total — no false
-    * negatives; corpora whose max share sits within 2/(k+1) of ½ may
-    * probe as dominant, erring toward the skew-safe plan. Both
-    * candidate plans are correct — the probe only picks the faster
-    * one. Returns (maxCounter, slack = total/(k+1), total). */
   /** Misra-Gries counter merge + trim, shared by [[dominanceProbe]]
     * and [[TextAnalysis.frequentTokens]]. LOOP the min-decrement: one
     * pass removes as few as 1 entry, and merged partials arrive up to
@@ -1256,6 +1200,19 @@ object CorpusOps {
         { case ((a, ta), (b, tb)) => (add(a, b), ta + tb) })
   }
 
+  /** Bounded-state source-dominance probe — ONE narrow shuffle-free
+    * job, O(k) memory per task and on the driver (source cardinality
+    * grows with the corpus, so a per-source count aggregate or hash
+    * map would not fly at 100 TB). Each partition keeps a
+    * Misra-Gries(k) heavy-hitter sketch of the `source` column;
+    * partials merge by counter addition + the same trim (the sketch is
+    * mergeable). Guarantee: a source with true count f retains a
+    * counter ≥ f − total/(k+1), so a ≥½-dominant source ALWAYS
+    * satisfies (counter + total/(k+1))·2 ≥ total — no false
+    * negatives; corpora whose max share sits within 2/(k+1) of ½ may
+    * probe as dominant, erring toward the skew-safe plan. Both
+    * candidate plans are correct — the probe only picks the faster
+    * one. Returns (maxCounter, slack = total/(k+1), total). */
   private[analytics] def dominanceProbe(documents: DataFrame,
                                         k: Int = 8): (Long, Long, Long) = {
     val (sketch, total) =
@@ -1275,6 +1232,49 @@ object CorpusOps {
 
   private val OffsetsBroadcastMaxRows = 1L << 20
 
+  /** Per-source running token totals in doc_id order — the shared core
+    * of [[packSequences]] and [[tokenBudget]] — with every stage P-way
+    * parallel: the [[graft.metrics.Metrics.percentRankByKey]]
+    * range-partition + offset machinery applied to a cumulative sum.
+    * A plain `Window.partitionBy(source)` walks each source through ONE
+    * reducer — correct while sources are many and balanced, but a
+    * single-dominant-source corpus (the documented pathology) funnels
+    * ~everything through one task. Here:
+    *
+    *  1. range-partition + implicit local sort on (source, doc_id) —
+    *     each of P partitions holds a contiguous slice;
+    *  2. per-(partition, source) token sums — tiny aggregate;
+    *  3. per-source running offsets over that tiny table;
+    *  4. local cumulative sum within (partition, source) + broadcast
+    *     offset = the global running total.
+    *
+    * `skewSafe = Some(false)` keeps the one-window-per-source plan —
+    * retained as the executable specification (spec-asserted equal in
+    * AnalyticsSpec "cumulativeTokens skew-safe plan equals the window
+    * plan") and the right choice when no source dominates. The
+    * skew-safe plan evaluates the tokenize projection twice (the range
+    * boundary sample pass reads the child too) — bounded 2× scan CPU
+    * traded for never serializing a dominant source through one
+    * reducer.
+    *
+    * `skewSafe = None` (the default) AUTO-SELECTS via
+    * [[dominanceProbe]] — one EAGER narrow job (no shuffle beyond the
+    * house widen round-robin on few-file inputs) with O(k)
+    * state at DataFrame-construction time (no shuffle; a per-source
+    * count aggregate would be corpus-cardinality-sized): the skew-safe
+    * plan is chosen only when one source holds ≥ half the corpus (the
+    * documented single-dominant-source pathology; the probe has no
+    * false negatives there and errs toward skew-safe on borderline
+    * corpora); balanced many-source corpora keep the cheaper
+    * single-scan window plan and pay ONLY the probe.
+    *
+    * The per-source offsets table the skew-safe plan joins back is
+    * ≤ (P + |sources|) rows — and SOURCE CARDINALITY GROWS WITH THE
+    * CORPUS (a web corpus has per-domain sources), so the broadcast is
+    * size-gated on that bound: past `OffsetsBroadcastMaxRows` (2^20) it
+    * becomes a plain shuffle join, which is nearly free here — the
+    * downstream per-(partition, source) window needs a hash exchange
+    * on the same keys anyway, so only the tiny offsets side pays. */
   def cumulativeTokens(documents: DataFrame,
                        skewSafe: Option[Boolean] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window

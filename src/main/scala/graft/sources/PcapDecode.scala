@@ -1,18 +1,28 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Generator}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** S5 — the pcap → tshark-JSON decode stage. The reference shells out
-  * to `tshark -r f -T json` once per file (reference
+import scala.collection.mutable
+
+/** S5 — the pcap decode stage. The reference shells out to
+  * `tshark -r f -T json` once per file (reference
   * processor/processor_app.py:149–155); the Spark-native shape is a
-  * binaryFile scan + per-partition decode, so a 1000-executor cluster
-  * decodes 1000 pcaps concurrently with no intermediate files.
+  * binaryFile scan + per-file decode inside the scan's partitions, so a
+  * 1000-executor cluster decodes 1000 pcaps concurrently with no
+  * intermediate files. [[decodePathsContained]] is the one reader.
   *
   * Three interchangeable decoders:
   *  - [[PcapParser.nativeDecoder]] (DEFAULT) — a real in-JVM libpcap
-  *    parser (Ethernet/IPv4/IPv6/TCP/UDP/ICMP/ARP + DNS/HTTP/TLS-SNI)
-  *    emitting tshark-shaped JSON; no external processes;
+  *    parser (Ethernet/IPv4/IPv6/TCP/UDP/ICMP/ARP + DNS/HTTP/TLS-SNI);
+  *    the reader takes its packets as parsed rows, no JSON text, no
+  *    external processes;
   *  - [[processDecoder]] — the reference's subprocess hop for a real
   *    tshark (exotic link types, deeper dissection);
   *  - [[stubDecoder]] — deterministic synthetic packets from payload
@@ -50,9 +60,9 @@ object PcapDecode {
     * A nonzero exit fails the task loudly with the decoder's stderr —
     * upstream retry/DLQ policy decides what happens next.
     *
-    * Usage: `decode(spark, dir, decoder = processDecoder(Seq("tshark",
-    * "-T", "json", "-r")))` — the file path is appended as the last
-    * argument. */
+    * Usage: `decodePathsContained(spark, paths, processDecoder(Seq(
+    * "tshark", "-T", "json", "-r")))` — the file path is appended as the
+    * last argument. */
   def processDecoder(cmd: Seq[String]): Decoder = (path, bytes) => {
     import java.nio.file.Files
     val tmp = Files.createTempFile("graft_pcap_", ".pcap")
@@ -89,29 +99,22 @@ object PcapDecode {
     (0 until node.size).map(i => mapper.writeValueAsString(node.get(i)))
   }
 
-  /** Read raw pcap files and decode each to packet rows
-    * (`source_file`, `raw`). Decode runs inside the scan's partitions —
-    * per-file parallelism, no driver involvement, no temp files. */
-  def decode(spark: SparkSession, dir: String, glob: String = "*.pcap*",
-             decoder: Decoder = PcapParser.nativeDecoder): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").option("pathGlobFilter", glob).load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, bytes) =>
-        decoder(path, bytes).map(raw => (path, raw))
-      })
-      .toDF("source_file", "raw")
-  }
-
   /** Decode over an explicit file list — the notification-driven
     * shape, where a micro-batch's payloads name the exact objects to
     * fetch (download → decode → transform, processor_app.py:144–163) —
-    * with per-FILE error containment: a capture whose decode throws
-    * yields ONE marker row (`source_file`, a non-JSON
-    * `GRAFT_DECODE_ERROR …` string) instead of failing the whole scan. The marker is unparseable on purpose — downstream the
-    * total UDM transform (P14) turns it into a Malformed error event
-    * that the pipeline's `is_error` routing dead-letters, so one
+    * to rows (`source_file`, `raw`), one per packet, with per-FILE
+    * error containment. `raw` is the packet's
+    * [[graft.udm.PacketSchemas.parsedPacketSchema]] row for the native
+    * decoder and its tshark-JSON text for any other; the UDM transform
+    * takes either. The decode runs inside the scan's partitions as a
+    * generator over the binaryFile rows, so no typed Dataset encoder
+    * sits between the scan and the transform.
+    *
+    * A capture whose decode throws yields ONE marker row instead of
+    * failing the whole scan: `raw` null for the native decoder, a
+    * non-JSON `GRAFT_DECODE_ERROR …` string for the others. Either way
+    * the total UDM transform (P14) turns it into a Malformed error
+    * event that the pipeline's `is_error` routing dead-letters, so one
     * corrupt capture DLQs one message while every co-batched message
     * still processes (the reference handles each notification in its
     * own request — this is that granularity inside one micro-batch).
@@ -124,23 +127,80 @@ object PcapDecode {
     * masked as bad input. */
   def decodePathsContained(spark: SparkSession, paths: Seq[String],
                            decoder: Decoder = PcapParser.nativeDecoder): DataFrame = {
-    import spark.implicits._
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val packets = DecodeCapture(ColumnBridge.expression(col("path")),
+      ColumnBridge.expression(col("content")),
+      if (decoder eq PcapParser.nativeDecoder) None else Some(decoder))
     spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, bytes) =>
-        try {
-          // decoders are lazy iterators: force inside the try so a
-          // mid-file parse failure is contained too, not thrown later
-          decoder(path, bytes).map(raw => (path, raw)).toVector.iterator
-        } catch {
-          case e if e.isInstanceOf[IllegalArgumentException] ||
-            e.isInstanceOf[java.io.IOException] ||
-            e.getClass == classOf[RuntimeException] =>
-            Iterator.single((path,
-              s"GRAFT_DECODE_ERROR ${e.getClass.getSimpleName}: ${e.getMessage}"))
-        }
-      })
-      .toDF("source_file", "raw")
+      .select(col("path").as("source_file"), ColumnBridge.column(packets).as("raw"))
+  }
+
+  private[sources] def contained(e: Throwable): Boolean =
+    e.isInstanceOf[IllegalArgumentException] || e.isInstanceOf[java.io.IOException] ||
+      e.getClass == classOf[RuntimeException]
+}
+
+/** [[PcapDecode.decodePathsContained]]'s per-file decode: one capture's
+  * (path, bytes) → one row per packet, or one marker row when the
+  * decode fails with a contained error. `textDecoder` None decodes to
+  * packet rows with [[PcapParser.decodeRows]]; a decoder gives packet
+  * JSON text. Generated code calls [[DecodeCapture.rows]], so the scan,
+  * the decode and the UDM projection after it fuse into one
+  * whole-stage-codegen stage: each packet row reaches the projection as
+  * it is, never copied into an UnsafeRow. */
+private[sources] case class DecodeCapture(path: Expression, content: Expression,
+                                          textDecoder: Option[PcapDecode.Decoder])
+  extends Generator {
+
+  override def children: Seq[Expression] = Seq(path, content)
+
+  override def elementSchema: StructType = StructType(Seq(StructField("raw",
+    if (textDecoder.isEmpty) graft.udm.PacketSchemas.parsedPacketSchema else StringType)))
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    DecodeCapture.rows(path.eval(input).asInstanceOf[UTF8String],
+      content.eval(input).asInstanceOf[Array[Byte]], textDecoder)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val p = path.genCode(ctx)
+    val c = content.genCode(ctx)
+    val decoder = ctx.addReferenceObj("textDecoder", textDecoder, "scala.Option")
+    // GenerateExec iterates `value.iterator()`
+    ev.copy(code = code"""
+      ${p.code}
+      ${c.code}
+      scala.collection.mutable.ArraySeq ${ev.value} = graft.sources.DecodeCapture$$.MODULE$$.rows(
+        ${p.isNull} ? null : ${p.value}, ${c.isNull} ? null : ${c.value}, $decoder);
+    """, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): DecodeCapture =
+    copy(path = newChildren(0), content = newChildren(1))
+}
+
+private[sources] object DecodeCapture {
+  def rows(path: UTF8String, bytes: Array[Byte],
+           textDecoder: Option[PcapDecode.Decoder]): mutable.ArraySeq[InternalRow] = {
+    if (path == null || bytes == null) return mutable.ArraySeq.empty
+    val file = path.toString
+    try textDecoder match {
+      case None =>
+        val packets = PcapParser.decodeRows(bytes, file)
+        val out = new Array[InternalRow](packets.length)
+        var i = 0
+        while (i < out.length) { out(i) = new GenericInternalRow(Array[Any](packets(i))); i += 1 }
+        mutable.ArraySeq.make(out)
+      case Some(decoder) =>
+        // decoders are lazy iterators: force inside the try so a
+        // mid-file parse failure is contained too, not thrown later
+        mutable.ArraySeq.make(decoder(file, bytes)
+          .map(raw => InternalRow(UTF8String.fromString(raw))).toArray)
+    } catch {
+      case e if PcapDecode.contained(e) =>
+        mutable.ArraySeq.make(Array(InternalRow(if (textDecoder.isEmpty) null
+          else UTF8String.fromString(
+            s"GRAFT_DECODE_ERROR ${e.getClass.getSimpleName}: ${e.getMessage}"))))
+    }
   }
 }

@@ -1,6 +1,14 @@
 package graft.sources
 
-import com.fasterxml.jackson.core.JsonFactory
+import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator}
+import graft.udm.PacketSchemas
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Native libpcap decoder — S5 without the external tshark dependency.
   *
@@ -16,16 +24,26 @@ import com.fasterxml.jackson.core.JsonFactory
   * the payload protocols the reference's classifier keys on: DNS
   * (queries + answers with name decompression), HTTP (request line,
   * Host, User-Agent, response code) and TLS (record version + the
-  * ClientHello SNI walk) — emitting one tshark-`-T json`-shaped object
-  * per packet ([[graft.udm.PacketSchemas]] field names), so the decoded
-  * stream drops into the same pipeline as tshark output.
+  * ClientHello SNI walk).
+  *
+  * One dissection, two writers. The dissection writes each packet as a
+  * [[PacketSchemas.parsedPacketSchema]] row ([[decodeRows]]) — the row
+  * [[PcapDecode.decodePathsContained]] hands to the UDM transform, so a
+  * binary capture reaches the event projection without any JSON text
+  * and with no `java.util.Formatter`, regex or Scala collection
+  * combinator per packet. [[jsonOf]] writes a decoded row as the
+  * tshark-`-T json`-shaped object (the decoder's layer and field order)
+  * that [[decodeFile]] and [[nativeDecoder]] return, so the decoded
+  * stream still drops into the same pipeline as tshark output; the UDM
+  * transform calls it only for packets on its error branch, whose
+  * events carry a snippet of that text.
   *
   * The reference shells out to `tshark -r f -T json`
   * (processor_app.py:149–155); this parser replaces that subprocess for
   * the formats above — zero external processes, runs inside the scan
-  * partition (see [[PcapDecode.decode]]), one file per task. Use
-  * [[PcapDecode.processDecoder]] with a real tshark when exotic link
-  * types or deeper dissection are required.
+  * partition (see [[PcapDecode.decodePathsContained]]), one file per
+  * task. Use [[PcapDecode.processDecoder]] with a real tshark when
+  * exotic link types or deeper dissection are required.
   *
   * Fail-loud policy: a corrupt FILE (bad magic, unsupported link type,
   * truncated record header) throws — the upstream retry/DLQ budget
@@ -34,9 +52,56 @@ import com.fasterxml.jackson.core.JsonFactory
   */
 object PcapParser {
 
-  /** The plug-in for [[PcapDecode.decode]]. */
+  /** The JSON-text decoder: [[decodeFile]] as a [[PcapDecode.Decoder]].
+    * [[PcapDecode.decodePathsContained]] recognizes it and decodes to
+    * rows instead. */
   val nativeDecoder: PcapDecode.Decoder =
     (path, bytes) => decodeFile(bytes, path).iterator
+
+  /** Every packet of a capture as tshark-JSON text. */
+  def decodeFile(bytes: Array[Byte], path: String = "<bytes>"): Seq[String] =
+    decodeRows(bytes, path).map(jsonOf).toSeq
+
+  /** Every packet of a capture as a [[PacketSchemas.parsedPacketSchema]]
+    * row. */
+  def decodeRows(bytes: Array[Byte], path: String = "<bytes>"): ArrayBuffer[InternalRow] = {
+    require(bytes.length >= 12, s"capture too short for any header: $path")
+    val magicBE = be32(bytes, 0)
+    if (magicBE == 0x0a0d0d0aL) return decodePcapng(bytes, path)
+    require(bytes.length >= 24, s"pcap too short for global header: $path")
+    val (little, nanos) = magicBE match {
+      case 0xa1b2c3d4L => (false, false)
+      case 0xd4c3b2a1L => (true, false)
+      case 0xa1b23c4dL => (false, true)
+      case 0x4d3cb2a1L => (true, true)
+      case other => throw new IllegalArgumentException(
+        f"not a pcap or pcapng capture (magic 0x$other%08x; expected classic " +
+          f"pcap 0xa1b2c3d4/0xa1b23c4d either byte order, or pcapng SHB 0x0a0d0d0a): $path")
+    }
+    val r = new Reader(bytes, 4, little)
+    r.u16(); r.u16(); r.u32(); r.u32(); r.u32() // version, thiszone, sigfigs, snaplen
+    val linkType = r.u32().toInt
+    requireSupportedLink(linkType, path)
+
+    val out = ArrayBuffer.empty[InternalRow]
+    val dissect = new Dissector
+    var n = 0
+    while (r.remaining > 0) {
+      require(r.remaining >= 16,
+        s"truncated record header at packet ${n + 1}: $path")
+      val tsSec = r.u32()
+      val tsFrac = r.u32()
+      val inclLen = r.u32().toInt
+      r.u32() // orig_len
+      require(inclLen >= 0 && r.remaining >= inclLen,
+        s"truncated packet ${n + 1} (need $inclLen, have ${r.remaining}): $path")
+      val data = java.util.Arrays.copyOfRange(r.b, r.pos, r.pos + inclLen)
+      r.pos += inclLen
+      n += 1
+      out += dissect.packet(n, tsSec, if (nanos) tsFrac else tsFrac * 1000L, data, linkType)
+    }
+    out
+  }
 
   // ---------------------------------------------------------- file level
 
@@ -65,44 +130,6 @@ object PcapParser {
     ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
       ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
 
-  def decodeFile(bytes: Array[Byte], path: String = "<bytes>"): Seq[String] = {
-    require(bytes.length >= 12, s"capture too short for any header: $path")
-    val magicBE = be32(bytes, 0)
-    if (magicBE == 0x0a0d0d0aL) return decodePcapng(bytes, path)
-    require(bytes.length >= 24, s"pcap too short for global header: $path")
-    val (little, nanos) = magicBE match {
-      case 0xa1b2c3d4L => (false, false)
-      case 0xd4c3b2a1L => (true, false)
-      case 0xa1b23c4dL => (false, true)
-      case 0x4d3cb2a1L => (true, true)
-      case other => throw new IllegalArgumentException(
-        f"not a pcap or pcapng capture (magic 0x$other%08x; expected classic " +
-          f"pcap 0xa1b2c3d4/0xa1b23c4d either byte order, or pcapng SHB 0x0a0d0d0a): $path")
-    }
-    val r = new Reader(bytes, 4, little)
-    r.u16(); r.u16(); r.u32(); r.u32(); r.u32() // version, thiszone, sigfigs, snaplen
-    val linkType = r.u32().toInt
-    requireSupportedLink(linkType, path)
-
-    val out = Seq.newBuilder[String]
-    var n = 0
-    while (r.remaining > 0) {
-      require(r.remaining >= 16,
-        s"truncated record header at packet ${n + 1}: $path")
-      val tsSec = r.u32()
-      val tsFrac = r.u32()
-      val inclLen = r.u32().toInt
-      r.u32() // orig_len
-      require(inclLen >= 0 && r.remaining >= inclLen,
-        s"truncated packet ${n + 1} (need $inclLen, have ${r.remaining}): $path")
-      val data = java.util.Arrays.copyOfRange(r.b, r.pos, r.pos + inclLen)
-      r.pos += inclLen
-      n += 1
-      out += decodePacket(n, tsSec, if (nanos) tsFrac else tsFrac * 1000L, data, linkType)
-    }
-    out.result()
-  }
-
   /** Supported capture link types (public LINKTYPE_* registry):
     * 1 = EN10MB (Ethernet, + 1 VLAN tag), 101 = RAW (bare IPv4/IPv6,
     * version nibble dispatches), 113 = LINUX_SLL (Linux "cooked"
@@ -123,13 +150,14 @@ object PcapParser {
     * sets byte order + resets the interface list), Interface Description
     * (0x00000001, link type + `if_tsresol` option), Enhanced Packet
     * (0x00000006, 64-bit timestamp in the interface's resolution) —
-    * routed into the same [[decodePacket]] as classic pcap. Name
+    * routed into the same [[Dissector]] as classic pcap. Name
     * Resolution (0x4) and Interface Statistics (0x5) blocks carry no
     * packet data and are skipped (tshark appends an ISB to every
     * capture); any OTHER block type throws — per the fail-loud policy a
     * block we cannot prove packet-free must not be silently dropped. */
-  private def decodePcapng(b: Array[Byte], path: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
+  private def decodePcapng(b: Array[Byte], path: String): ArrayBuffer[InternalRow] = {
+    val out = ArrayBuffer.empty[InternalRow]
+    val dissect = new Dissector
     var little = false
     def u16(o: Int): Int =
       if (little) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) else be16(b, o)
@@ -196,441 +224,681 @@ object PcapParser {
             s"pcapng EPB captured length $capLen exceeds block at offset $pos: $path")
           val data = java.util.Arrays.copyOfRange(b, pos + 28, pos + 28 + capLen)
           val (resol, pow2, link) = ifaces(ifId)
-          val (sec, nanos) =
-            if (pow2) {
-              val div = 1L << resol
-              (ts / div, (ts % div) * 1000000000L / div)
-            } else {
-              var div = 1L; var i = 0
-              while (i < resol) { div *= 10; i += 1 }
-              (ts / div, (ts % div) * (1000000000L / div))
-            }
+          var div = 1L
+          if (pow2) div = 1L << resol
+          else { var i = 0; while (i < resol) { div *= 10; i += 1 } }
+          val nanos =
+            if (pow2) (ts % div) * 1000000000L / div else (ts % div) * (1000000000L / div)
           n += 1
-          out += decodePacket(n, sec, nanos, data, link)
+          out += dissect.packet(n, ts / div, nanos, data, link)
         case 4 | 5 => () // NRB / ISB: metadata only, no packet data
         case other => throw new IllegalArgumentException(
           f"unsupported pcapng block type 0x$other%08x at offset $pos: $path")
       }
       pos += totalLen
     }
-    out.result()
+    out
   }
 
-  // -------------------------------------------------------- packet level
+  // ------------------------------------------------------------ row shape
 
-  /** One decoded layer: (tshark layer name, ordered field -> value).
-    * Values are strings except DNS's map-typed members. */
-  private type Fields = scala.collection.mutable.LinkedHashMap[String, Any]
-  private def fields(kv: (String, Any)*): Fields = {
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-    kv.foreach { case (k, v) => if (v != null) m += k -> v }
-    m
+  // ordinals in [[PacketSchemas.parsedLayersSchema]]; each layer row
+  // below lists its fields in that schema's order
+  private val layersSchema = PacketSchemas.parsedLayersSchema
+  private val NLayers = layersSchema.length
+  private val Frame = layersSchema.fieldIndex("frame")
+  private val Eth = layersSchema.fieldIndex("eth")
+  private val Sll = layersSchema.fieldIndex("sll")
+  private val Ip = layersSchema.fieldIndex("ip")
+  private val Ip6 = layersSchema.fieldIndex("ipv6")
+  private val Tcp = layersSchema.fieldIndex("tcp")
+  private val Udp = layersSchema.fieldIndex("udp")
+  private val Icmp = layersSchema.fieldIndex("icmp")
+  private val Arp = layersSchema.fieldIndex("arp")
+  private val Dns = layersSchema.fieldIndex("dns")
+  private val Http = layersSchema.fieldIndex("http")
+  private val Tls = layersSchema.fieldIndex("tls")
+
+  private def row(values: Array[Any]): GenericInternalRow = new GenericInternalRow(values)
+
+  // ---------------------------------------------------------- field text
+
+  /** The UTF-8 text of one field, built without `java.util.Formatter`:
+    * the `%d`, `%0Nd`, `%x` and `%02x` forms the tshark fields use. */
+  private final class Text {
+    private var buf = new Array[Byte](64)
+    private var n = 0
+
+    def isEmpty: Boolean = n == 0
+
+    def byte(c: Int): Text = {
+      if (n == buf.length) buf = java.util.Arrays.copyOf(buf, n * 2)
+      buf(n) = c.toByte; n += 1; this
+    }
+
+    /** ASCII text. */
+    def str(s: String): Text = {
+      var i = 0
+      while (i < s.length) { byte(s.charAt(i)); i += 1 }
+      this
+    }
+
+    def utf8(s: UTF8String): Text = {
+      val b = s.getBytes
+      var i = 0
+      while (i < b.length) { byte(b(i)); i += 1 }
+      this
+    }
+
+    /** `%d`. */
+    def dec(v: Long): Text = pad(v, 1)
+
+    /** `%0{width}d`: zero-padded to `width` characters, sign included. */
+    def pad(v: Long, width: Int): Text = {
+      if (v < 0) byte('-')
+      val x = math.abs(v) // never Long.MinValue here
+      var digits = 1
+      var t = x / 10
+      while (t > 0) { t /= 10; digits += 1 }
+      var zeros = width - digits - (if (v < 0) 1 else 0)
+      while (zeros > 0) { byte('0'); zeros -= 1 }
+      var i = 0
+      while (i < digits) { byte('0'); i += 1 }
+      var y = x
+      i = n - 1
+      while (y > 0) { buf(i) = ('0' + y % 10).toByte; y /= 10; i -= 1 }
+      this
+    }
+
+    /** `%x`. */
+    def hex(v: Int): Text = {
+      var shift = 28
+      while (shift > 0 && (v >>> shift) == 0) shift -= 4
+      while (shift >= 0) { byte(hexDigits((v >>> shift) & 0xf)); shift -= 4 }
+      this
+    }
+
+    /** `%02x` of a byte. */
+    def hex2(v: Int): Text = byte(hexDigits((v >> 4) & 0xf)).byte(hexDigits(v & 0xf))
+
+    /** ISO-8859-1 bytes `[from, until)` of `d`, as UTF-8. */
+    def latin1(d: Array[Byte], from: Int, until: Int): Text = {
+      var i = from
+      while (i < until) {
+        val c = d(i) & 0xff
+        if (c < 0x80) byte(c) else byte(0xc0 | (c >> 6)).byte(0x80 | (c & 0x3f))
+        i += 1
+      }
+      this
+    }
+
+    /** US-ASCII bytes `[from, until)` of `d`; any other byte reads as
+      * U+FFFD, as `new String(…, US_ASCII)` decodes it. */
+    def ascii(d: Array[Byte], from: Int, until: Int): Text = {
+      var i = from
+      while (i < until) {
+        val c = d(i) & 0xff
+        if (c < 0x80) byte(c) else byte(0xef).byte(0xbf).byte(0xbd)
+        i += 1
+      }
+      this
+    }
+
+    /** The text so far; the buffer starts over. */
+    def take(): UTF8String = {
+      val s = UTF8String.fromBytes(java.util.Arrays.copyOf(buf, n))
+      n = 0
+      s
+    }
   }
+
+  private val hexDigits = "0123456789abcdef".getBytes("US-ASCII")
 
   private val months = Array("Jan", "Feb", "Mar", "Apr", "May", "Jun",
     "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
 
-  /** tshark frame.time_utc: `"Sep  5, 2025 12:34:56.123456000 UTC"` —
-    * space-padded day, nine fractional digits. */
-  private def frameTime(sec: Long, nanoFrac: Long): String = {
-    val t = java.time.LocalDateTime.ofEpochSecond(sec, 0, java.time.ZoneOffset.UTC)
-    val day = if (t.getDayOfMonth < 10) s" ${t.getDayOfMonth}" else s"${t.getDayOfMonth}"
-    f"${months(t.getMonthValue - 1)} $day, ${t.getYear}%d " +
-      f"${t.getHour}%02d:${t.getMinute}%02d:${t.getSecond}%02d.$nanoFrac%09d UTC"
+  // -------------------------------------------------------- packet level
+
+  /** The dissection of one capture's packets into rows (one per file:
+    * it reuses its text buffers from packet to packet). */
+  private final class Dissector {
+    private val t = new Text
+    private val protos = new Text
+    private var layers: Array[Any] = _
+
+    private def proto(name: String): Unit = {
+      if (!protos.isEmpty) protos.byte(':')
+      protos.str(name)
+    }
+
+    private def dec(v: Long): UTF8String = t.dec(v).take()
+    private def hex4(v: Int): UTF8String = t.str("0x").hex2(v >> 8).hex2(v & 0xff).take()
+
+    private def mac(b: Array[Byte], o: Int): UTF8String = {
+      var i = 0
+      while (i < 6) { if (i > 0) t.byte(':'); t.hex2(b(o + i)); i += 1 }
+      t.take()
+    }
+
+    private def ipv4(b: Array[Byte], o: Int): UTF8String = {
+      var i = 0
+      while (i < 4) { if (i > 0) t.byte('.'); t.dec(b(o + i) & 0xff); i += 1 }
+      t.take()
+    }
+
+    /** RFC 5952-style compressed lowercase IPv6 (longest zero run → ::). */
+    private def ipv6(b: Array[Byte], o: Int): UTF8String = {
+      var bestStart = -1; var bestLen = 0; var i = 0
+      while (i < 8) {
+        if (be16(b, o + 2 * i) == 0) {
+          var j = i; while (j < 8 && be16(b, o + 2 * j) == 0) j += 1
+          if (j - i > bestLen) { bestStart = i; bestLen = j - i }
+          i = j
+        } else i += 1
+      }
+      if (bestLen < 2) { bestStart = 8; bestLen = 0 }
+      i = 0
+      while (i < 8) {
+        if (i == bestStart) { t.str("::"); i += bestLen }
+        else {
+          if (i > 0 && i != bestStart + bestLen) t.byte(':')
+          t.hex(be16(b, o + 2 * i)); i += 1
+        }
+      }
+      t.take()
+    }
+
+    /** tshark frame.time_utc: `"Sep  5, 2025 12:34:56.123456000 UTC"` —
+      * space-padded day, nine fractional digits; the proleptic Gregorian
+      * calendar of `LocalDateTime.ofEpochSecond(sec, 0, UTC)`, whose
+      * range (years ±999,999,999) bounds a valid packet time. */
+    private def frameTime(sec: Long, nanoFrac: Long): UTF8String = {
+      val days = Math.floorDiv(sec, 86400L)
+      require(days >= -365243219162L && days <= 365241780471L,
+        s"packet time $sec s is outside years -999999999..999999999")
+      val inDay = sec - days * 86400L
+      val ymd = graft.functions.FrameTime.civilFromDays(days)
+      val day = ymd & 0x1f
+      t.str(months(((ymd >> 5) & 0xf).toInt - 1)).byte(' ')
+      if (day < 10) t.byte(' ')
+      t.dec(day).str(", ").dec(ymd >> 9).byte(' ')
+        .pad(inDay / 3600, 2).byte(':').pad(inDay / 60 % 60, 2).byte(':').pad(inDay % 60, 2)
+        .byte('.').pad(nanoFrac, 9).str(" UTC")
+        .take()
+    }
+
+    def packet(num: Int, tsSec: Long, tsNanos: Long, d: Array[Byte],
+               linkType: Int): InternalRow = {
+      layers = new Array[Any](NLayers)
+      linkType match {
+        case 1 => // Ethernet (+ 1 VLAN tag)
+          proto("eth")
+          if (d.length >= 14) {
+            layers(Eth) = row(Array(mac(d, 6), mac(d, 0)))
+            var etherType = be16(d, 12)
+            var l3 = 14
+            if (etherType == 0x8100 && d.length >= 18) { // one VLAN tag
+              etherType = be16(d, 16); l3 = 18
+            }
+            proto("ethertype")
+            l3Layer(d, l3, etherType)
+          }
+        case 101 => // LINKTYPE_RAW: bare IP, version nibble dispatches
+          proto("raw")
+          if (d.length >= 1) (d(0) & 0xf0) match {
+            case 0x40 => decodeIpv4(d, 0)
+            case 0x60 => decodeIpv6(d, 0)
+            case _ => () // not IP: frame only (tshark: raw "data")
+          }
+        case 113 => // LINKTYPE_SLL (Linux cooked): 16-byte header, then an
+          // EtherType-keyed payload exactly like Ethernet's
+          proto("sll")
+          if (d.length >= 16) {
+            val etherType = be16(d, 14)
+            layers(Sll) = row(Array(dec(be16(d, 0)), hex4(etherType)))
+            proto("ethertype")
+            l3Layer(d, 16, etherType)
+          }
+        case other => throw new IllegalStateException(
+          s"packet reached with unvetted link type $other") // guarded at file level
+      }
+      layers(Frame) = row(Array(dec(num), frameTime(tsSec, tsNanos), protos.take()))
+      row(Array(row(Array(new GenericInternalRow(layers)))))
+    }
+
+    private def l3Layer(d: Array[Byte], o: Int, etherType: Int): Unit = etherType match {
+      case 0x0800 => decodeIpv4(d, o)
+      case 0x86dd => decodeIpv6(d, o)
+      case 0x0806 => decodeArp(d, o)
+      case _ => () // unknown L3: frame + link layer only
+    }
+
+    // ---------------------------------------------------------- L3 / L4
+
+    private def decodeIpv4(d: Array[Byte], o: Int): Unit = {
+      if (d.length < o + 20 || (d(o) & 0xf0) != 0x40) return
+      val ihl = (d(o) & 0x0f) * 4
+      if (ihl < 20 || d.length < o + ihl) return
+      proto("ip")
+      layers(Ip) = row(Array(ipv4(d, o + 12), ipv4(d, o + 16), dec(d(o + 8) & 0xff)))
+      val fragOffset = be16(d, o + 6) & 0x1fff
+      if (fragOffset != 0) return // non-first fragment: no L4 header
+      decodeL4(d, o + ihl, d(o + 9) & 0xff)
+    }
+
+    private def decodeIpv6(d: Array[Byte], o: Int): Unit = {
+      if (d.length < o + 40 || (d(o) & 0xf0) != 0x60) return
+      proto("ipv6")
+      layers(Ip6) = row(Array(ipv6(d, o + 8), ipv6(d, o + 24)))
+      var next = d(o + 6) & 0xff
+      var p = o + 40
+      var hops = 0
+      while (hops < 8) { // bounded extension-header chain walk
+        next match {
+          case 0 | 43 | 60 => // hop-by-hop / routing / destination options
+            if (d.length < p + 2) return
+            val len = ((d(p + 1) & 0xff) + 1) * 8
+            next = d(p) & 0xff; p += len; hops += 1
+          case 44 => // fragment header
+            if (d.length < p + 8) return
+            if ((be16(d, p + 2) & 0xfff8) != 0) return // non-first fragment
+            next = d(p) & 0xff; p += 8; hops += 1
+          case _ =>
+            decodeL4(d, p, next); return
+        }
+      }
+    }
+
+    private def decodeL4(d: Array[Byte], o: Int, ipProto: Int): Unit =
+      ipProto match {
+        case 6 => // TCP
+          if (d.length < o + 20) return
+          val src = be16(d, o); val dst = be16(d, o + 2)
+          val dataOff = ((d(o + 12) & 0xf0) >> 4) * 4
+          if (dataOff < 20 || d.length < o + dataOff) return
+          val flags9 = ((d(o + 12) & 0x01) << 8) | (d(o + 13) & 0xff)
+          proto("tcp")
+          layers(Tcp) = row(Array(dec(src), dec(dst), hex4(flags9)))
+          val payload = o + dataOff
+          if (payload < d.length) {
+            if (src == 53 || dst == 53) {
+              // DNS over TCP: 2-byte length prefix then the message
+              if (d.length >= payload + 14 && decodeDns(d, payload + 2)) proto("dns")
+            } else if (decodeTls(d, payload)) proto("tls")
+            else if (decodeHttp(d, payload)) proto("http")
+          }
+        case 17 => // UDP
+          if (d.length < o + 8) return
+          val src = be16(d, o); val dst = be16(d, o + 2)
+          proto("udp")
+          layers(Udp) = row(Array(dec(src), dec(dst)))
+          if ((src == 53 || dst == 53) && d.length > o + 8 && decodeDns(d, o + 8)) proto("dns")
+        case 1 | 58 => // ICMP / ICMPv6 (schema folds both into `icmp`)
+          if (d.length < o + 2) return
+          proto(if (ipProto == 58) "icmpv6" else "icmp")
+          layers(Icmp) = row(Array(dec(d(o) & 0xff), dec(d(o + 1) & 0xff)))
+        case _ => ()
+      }
+
+    private def decodeArp(d: Array[Byte], o: Int): Unit = {
+      if (d.length < o + 28) return
+      // Ethernet/IPv4 ARP only (hw type 1, proto 0x0800, hlen 6, plen 4)
+      if (be16(d, o) != 1 || be16(d, o + 2) != 0x0800 ||
+        (d(o + 4) & 0xff) != 6 || (d(o + 5) & 0xff) != 4) return
+      proto("arp")
+      layers(Arp) = row(Array(dec(be16(d, o + 6)), mac(d, o + 8), ipv4(d, o + 14),
+        mac(d, o + 18), ipv4(d, o + 24)))
+    }
+
+    // ---------------------------------------------------------- payloads
+
+    /** DNS name at `start` with RFC 1035 compression, written to `t`;
+      * returns the offset after it, or -1 on malformed input. */
+    private def dnsName(d: Array[Byte], start: Int, msgStart: Int): Int = {
+      var o = start
+      var next = -1 // offset after the first pointer (caller resumes there)
+      var jumps = 0
+      var empty = true
+      while (true) {
+        if (o >= d.length || jumps > 32) return -1
+        val len = d(o) & 0xff
+        if (len == 0) {
+          if (empty) t.str("<Root>")
+          return if (next >= 0) next else o + 1
+        } else if ((len & 0xc0) == 0xc0) {
+          if (o + 1 >= d.length) return -1
+          if (next < 0) next = o + 2
+          o = msgStart + (((len & 0x3f) << 8) | (d(o + 1) & 0xff))
+          jumps += 1
+        } else {
+          if (o + 1 + len > d.length) return -1
+          if (!empty) t.byte('.')
+          empty = false
+          var i = 0
+          while (i < len) {
+            val c = d(o + 1 + i) & 0xff
+            // printable ascii passes through; anything else escapes as \xNN
+            if (c >= 0x21 && c <= 0x7e) t.byte(c) else t.str("\\x").hex2(c)
+            i += 1
+          }
+          o += 1 + len
+        }
+      }
+      -1 // unreachable
+    }
+
+    private def dnsTypeName(qtype: Int): String = qtype match {
+      case 1 => "A"; case 2 => "NS"; case 5 => "CNAME"; case 6 => "SOA"
+      case 12 => "PTR"; case 15 => "MX"; case 16 => "TXT"; case 28 => "AAAA"
+      case 33 => "SRV"; case _ => null
+    }
+
+    /** Parse a DNS message at `o`; sets the `dns` layer and returns true
+      * when the header + the walked questions parse cleanly.
+      *
+      * Large messages: the walk is CAPPED (first 16 questions, first 64
+      * answers) rather than the message rejected — a valid jumbo message
+      * still classifies as DNS with its leading records extracted (tshark
+      * parses them all; the divergence is only in fields beyond the cap,
+      * documented here). When the QUESTION count exceeds the cap the
+      * answer section cannot be located (answers start after the last
+      * question), so answers are omitted for that — vanishingly rare —
+      * shape. Malformed names still reject the whole message. Questions
+      * with the same display key keep the first one's place and the last
+      * one's fields, as tshark's JSON object keys do. */
+    private def decodeDns(d: Array[Byte], o: Int): Boolean = {
+      if (d.length < o + 12) return false
+      val flags = be16(d, o + 2)
+      val qd = be16(d, o + 4); val an = be16(d, o + 6)
+      if (qd == 0 && an == 0) return false
+      val isResponse = (flags >> 15) & 1
+
+      val qdWalk = math.min(qd, 16)
+      val qKeys = new Array[Any](qdWalk); val qVals = new Array[Any](qdWalk)
+      var nq = 0
+      var p = o + 12
+      var i = 0
+      while (i < qdWalk) {
+        val end = dnsName(d, p, o)
+        if (end < 0 || d.length < end + 4) { t.take(); return false }
+        val name = t.take()
+        val qtype = be16(d, end); val qclass = be16(d, end + 2)
+        t.utf8(name).str(": type ")
+        val typeName = dnsTypeName(qtype)
+        if (typeName != null) t.str(typeName) else t.str("type ").dec(qtype)
+        t.str(", class ")
+        if (qclass == 1) t.str("IN") else t.str("class ").dec(qclass)
+        val key = t.take()
+        val value = row(Array(name, dec(qtype)))
+        var k = 0
+        while (k < nq && qKeys(k) != key) k += 1
+        if (k == nq) { qKeys(nq) = key; nq += 1 }
+        qVals(k) = value
+        p = end + 4
+        i += 1
+      }
+      val anWalk = if (qd <= 16) math.min(an, 64) else 0 // unwalked questions -> answer offset unknown
+      val aKeys = new Array[Any](anWalk); val aVals = new Array[Any](anWalk)
+      var na = 0
+      var ok = true
+      while (na < anWalk && ok) {
+        val end = dnsName(d, p, o)
+        if (end < 0 || d.length < end + 10) { t.take(); ok = false }
+        else {
+          val name = t.take()
+          val ttl = be32(d, end + 4)
+          val rdlen = be16(d, end + 8)
+          if (d.length < end + 10 + rdlen) ok = false
+          else {
+            aKeys(na) = t.utf8(name).str(": answer ").dec(na + 1).take()
+            aVals(na) = row(Array(name, dec(ttl)))
+            na += 1
+            p = end + 10 + rdlen
+          }
+        }
+      }
+      layers(Dns) = row(Array(section(qKeys, qVals, nq), section(aKeys, aVals, na),
+        row(Array(dec(isResponse)))))
+      true
+    }
+
+    /** A dynamic-key DNS section of `n` entries, null when empty. */
+    private def section(keys: Array[Any], values: Array[Any], n: Int): ArrayBasedMapData =
+      if (n == 0) null
+      else new ArrayBasedMapData(new GenericArrayData(prefix(keys, n)),
+        new GenericArrayData(prefix(values, n)))
+
+    private def prefix(a: Array[Any], n: Int): Array[Any] =
+      if (n == a.length) a else { val p = new Array[Any](n); System.arraycopy(a, 0, p, 0, n); p }
+
+    /** Detect + parse an HTTP/1.x request or response head. */
+    private def decodeHttp(d: Array[Byte], o: Int): Boolean = {
+      val len = math.min(d.length - o, 2048)
+      if (len < 12) return false
+      val end = o + len
+      var lineEnd = o
+      while (lineEnd + 1 < end && !(d(lineEnd) == '\r' && d(lineEnd + 1) == '\n')) lineEnd += 1
+      if (lineEnd + 1 >= end) return false
+      // the request line splits like `line.split(" ", 3)`
+      val sp1 = indexOfSpace(d, o, lineEnd)
+      val sp2 = if (sp1 < 0) -1 else indexOfSpace(d, sp1 + 1, lineEnd)
+      if (startsWithMethod(d, o, lineEnd)) {
+        if (sp2 < 0 || !startsWith(d, sp2 + 1, lineEnd, HttpVersion)) return false
+        val method = t.latin1(d, o, sp1).take()
+        val host = header(d, o, end, HostHeader)
+        val uri =
+          if (host == null) null
+          else t.str("http://").utf8(host).latin1(d, sp1 + 1, sp2).take()
+        layers(Http) = row(Array(host, null, method, uri, header(d, o, end, UserAgentHeader), null))
+        true
+      } else if (startsWith(d, o, lineEnd, HttpVersion)) {
+        if (sp1 < 0) return false
+        val codeEnd = if (sp2 < 0) lineEnd else sp2
+        var i = sp1 + 1
+        while (i < codeEnd) { if (d(i) < '0' || d(i) > '9') return false; i += 1 }
+        layers(Http) = row(Array(null, null, null, null, null, t.latin1(d, sp1 + 1, codeEnd).take()))
+        true
+      } else false
+    }
+
+    /** The value of the first header line `name` (lowercase, with its
+      * colon) in `[o, end)`, as `(?mi)^Name:\s*(.*?)\s*$` finds it:
+      * the name matches in any ASCII case at the start of the text or
+      * after a CR, LF or NEL (0x85); the value starts after the
+      * whitespace that follows the colon (which may run across line
+      * ends) and runs to the next CR, LF or NEL or the end, without its
+      * trailing whitespace. Null when no line matches. */
+    private def header(d: Array[Byte], o: Int, end: Int, name: Array[Byte]): UTF8String = {
+      var i = o
+      while (i + name.length <= end) {
+        if ((i == o || isLineEnd(d(i - 1))) && startsWithIgnoreCase(d, i, name)) {
+          var from = i + name.length
+          while (from < end && isRegexSpace(d(from))) from += 1
+          var until = from
+          while (until < end && !isLineEnd(d(until))) until += 1
+          while (until > from && isRegexSpace(d(until - 1))) until -= 1
+          return t.latin1(d, from, until).take()
+        }
+        i += 1
+      }
+      null
+    }
+
+    /** Detect + parse a TLS record; walks a ClientHello for the SNI
+      * extension. One record per packet: the JSON writer emits it as
+      * a single `tls.record` OBJECT, the shape tshark uses for one
+      * record (P10). */
+    private def decodeTls(d: Array[Byte], o: Int): Boolean = {
+      if (d.length < o + 5) return false
+      val contentType = d(o) & 0xff
+      val vMajor = d(o + 1) & 0xff; val vMinor = d(o + 2) & 0xff
+      if (contentType < 20 || contentType > 23 || vMajor != 3 || vMinor > 4) return false
+      val recVersion = t.str("0x").hex2(vMajor).hex2(vMinor).take()
+      var hs: InternalRow = null
+      if (contentType == 22 && d.length >= o + 9 && (d(o + 5) & 0xff) == 1) {
+        // ClientHello: handshake type(1) len(3) version(2) random(32)
+        var p = o + 9
+        val hsVersion =
+          if (d.length >= p + 2) t.str("0x").hex2(d(p)).hex2(d(p + 1)).take() else null
+        var sni: UTF8String = null
+        if (d.length >= p + 35) {
+          p += 34 // version + random
+          val sidLen = d(p) & 0xff; p += 1 + sidLen // session id
+          if (d.length >= p + 2) {
+            val csLen = be16(d, p); p += 2 + csLen // cipher suites
+            if (d.length >= p + 1) {
+              val compLen = d(p) & 0xff; p += 1 + compLen // compression
+              if (d.length >= p + 2) {
+                var extEnd = p + 2 + be16(d, p); p += 2
+                extEnd = math.min(extEnd, d.length)
+                while (p + 4 <= extEnd && sni == null) {
+                  val extType = be16(d, p); val extLen = be16(d, p + 2)
+                  if (extType == 0 && p + 4 + extLen <= extEnd && extLen >= 5) {
+                    // server_name list: len(2) type(1)=host_name len(2) name
+                    val nameLen = be16(d, p + 7)
+                    if (p + 9 + nameLen <= extEnd)
+                      sni = t.ascii(d, p + 9, p + 9 + nameLen).take()
+                  }
+                  p += 4 + extLen
+                }
+              }
+            }
+          }
+        }
+        if (hsVersion != null || sni != null) hs = row(Array(hsVersion, sni))
+      }
+      layers(Tls) = row(Array(new GenericArrayData(Array[Any](row(Array(recVersion, hs))))))
+      true
+    }
   }
 
-  private def mac(b: Array[Byte], o: Int): String =
-    (0 until 6).map(i => f"${b(o + i) & 0xff}%02x").mkString(":")
-  private def ipv4(b: Array[Byte], o: Int): String =
-    (0 until 4).map(i => (b(o + i) & 0xff).toString).mkString(".")
+  private val HttpVersion = "HTTP/1.".getBytes("US-ASCII")
+  private val HttpMethods = Array("GET ", "POST ", "PUT ", "DELETE ", "HEAD ",
+    "OPTIONS ", "PATCH ").map(_.getBytes("US-ASCII"))
+  private val HostHeader = "host:".getBytes("US-ASCII")
+  private val UserAgentHeader = "user-agent:".getBytes("US-ASCII")
 
-  /** RFC 5952-style compressed lowercase IPv6 (longest zero run → ::). */
-  private def ipv6(b: Array[Byte], o: Int): String = {
-    val groups = (0 until 8).map(i => be16(b, o + 2 * i))
-    var bestStart = -1; var bestLen = 0; var i = 0
-    while (i < 8) {
-      if (groups(i) == 0) {
-        var j = i; while (j < 8 && groups(j) == 0) j += 1
-        if (j - i > bestLen) { bestStart = i; bestLen = j - i }
-        i = j
-      } else i += 1
-    }
-    if (bestLen < 2) groups.map(g => f"$g%x").mkString(":")
-    else {
-      val head = groups.take(bestStart).map(g => f"$g%x").mkString(":")
-      val tail = groups.drop(bestStart + bestLen).map(g => f"$g%x").mkString(":")
-      s"$head::$tail"
-    }
+  private def startsWith(d: Array[Byte], from: Int, until: Int, p: Array[Byte]): Boolean = {
+    if (until - from < p.length) return false
+    var i = 0
+    while (i < p.length && d(from + i) == p(i)) i += 1
+    i == p.length
   }
 
-  private def decodePacket(num: Int, tsSec: Long, tsNanos: Long,
-                           d: Array[Byte], linkType: Int = 1): String = {
-    val layers = scala.collection.mutable.LinkedHashMap.empty[String, Fields]
-    val protos = scala.collection.mutable.ArrayBuffer.empty[String]
-
-    linkType match {
-      case 1 => // Ethernet (+ 1 VLAN tag)
-        protos += "eth"
-        if (d.length >= 14) {
-          layers += "eth" -> fields("eth.dst" -> mac(d, 0), "eth.src" -> mac(d, 6))
-          var etherType = be16(d, 12)
-          var l3 = 14
-          if (etherType == 0x8100 && d.length >= 18) { // one VLAN tag
-            etherType = be16(d, 16); l3 = 18
-          }
-          protos += "ethertype"
-          etherType match {
-            case 0x0800 => decodeIpv4(d, l3, layers, protos)
-            case 0x86dd => decodeIpv6(d, l3, layers, protos)
-            case 0x0806 => decodeArp(d, l3, layers, protos)
-            case _ => () // unknown L3: frame + eth only
-          }
-        }
-      case 101 => // LINKTYPE_RAW: bare IP, version nibble dispatches
-        protos += "raw"
-        if (d.length >= 1) (d(0) & 0xf0) match {
-          case 0x40 => decodeIpv4(d, 0, layers, protos)
-          case 0x60 => decodeIpv6(d, 0, layers, protos)
-          case _ => () // not IP: frame only (tshark: raw "data")
-        }
-      case 113 => // LINKTYPE_SLL (Linux cooked): 16-byte header, then an
-        // EtherType-keyed payload exactly like Ethernet's
-        protos += "sll"
-        if (d.length >= 16) {
-          val etherType = be16(d, 14)
-          layers += "sll" -> fields(
-            "sll.pkttype" -> be16(d, 0).toString,
-            "sll.etype" -> f"0x$etherType%04x")
-          protos += "ethertype"
-          etherType match {
-            case 0x0800 => decodeIpv4(d, 16, layers, protos)
-            case 0x86dd => decodeIpv6(d, 16, layers, protos)
-            case 0x0806 => decodeArp(d, 16, layers, protos)
-            case _ => ()
-          }
-        }
-      case other => throw new IllegalStateException(
-        s"decodePacket reached with unvetted link type $other") // guarded at file level
+  private def startsWithMethod(d: Array[Byte], from: Int, until: Int): Boolean = {
+    var m = 0
+    while (m < HttpMethods.length) {
+      if (startsWith(d, from, until, HttpMethods(m))) return true
+      m += 1
     }
+    false
+  }
 
-    val frame = fields(
-      "frame.number" -> num.toString,
-      "frame.time_utc" -> frameTime(tsSec, tsNanos),
-      "frame.protocols" -> protos.mkString(":"))
+  /** ASCII-case-insensitive match of lowercase `p` at `from`. */
+  private def startsWithIgnoreCase(d: Array[Byte], from: Int, p: Array[Byte]): Boolean = {
+    var i = 0
+    while (i < p.length) {
+      val c = d(from + i)
+      val lower = if (c >= 'A' && c <= 'Z') c + 0x20 else c.toInt
+      if (lower != p(i)) return false
+      i += 1
+    }
+    true
+  }
 
+  private def indexOfSpace(d: Array[Byte], from: Int, until: Int): Int = {
+    var i = from
+    while (i < until && d(i) != ' ') i += 1
+    if (i < until) i else -1
+  }
+
+  /** A line end of a regex in MULTILINE mode over ISO-8859-1 text. */
+  private def isLineEnd(c: Byte): Boolean = c == '\n' || c == '\r' || (c & 0xff) == 0x85
+
+  /** The regex class `\s`: space, tab, LF, VT, FF, CR. */
+  private def isRegexSpace(c: Byte): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == 0x0b || c == '\f' || c == '\r'
+
+  // -------------------------------------------------------- JSON writer
+
+  private val jsonFactory = new JsonFactory()
+
+  /** A decoded packet row as tshark-`-T json` text: layers in the
+    * decoder's order (frame, link, network, transport, payload), each
+    * layer's fields in tshark's order, null fields left out, the one TLS
+    * record as an object. Defined for rows [[decodeRows]] makes. */
+  def jsonOf(packet: InternalRow): String = {
+    val l = packet.getStruct(0, 1).getStruct(0, NLayers)
     val sw = new java.io.StringWriter(512)
     val g = jsonFactory.createGenerator(sw)
     g.writeStartObject()
     g.writeObjectFieldStart("_source")
     g.writeObjectFieldStart("layers")
-    writeLayer(g, "frame", frame)
-    layers.foreach { case (name, fs) => writeLayer(g, name, fs) }
+    writeLayer(g, l, Frame, 0, 1, 2)
+    writeLayer(g, l, Eth, 1, 0) // eth.dst before eth.src
+    writeLayer(g, l, Sll, 0, 1)
+    writeLayer(g, l, Ip, 0, 1, 2)
+    writeLayer(g, l, Ip6, 0, 1)
+    writeLayer(g, l, Arp, 0, 1, 2, 3, 4)
+    writeLayer(g, l, Tcp, 0, 1, 2)
+    writeLayer(g, l, Udp, 0, 1)
+    writeLayer(g, l, Icmp, 0, 1)
+    if (!l.isNullAt(Dns)) {
+      val dnsType = structAt(layersSchema, Dns)
+      val dns = l.getStruct(Dns, dnsType.length)
+      g.writeObjectFieldStart("dns")
+      Seq("Queries" -> PacketSchemas.dnsQuerySchema, "Answers" -> PacketSchemas.dnsAnswerSchema)
+        .foreach { case (name, entryType) =>
+          val ord = dnsType.fieldIndex(name)
+          if (!dns.isNullAt(ord)) {
+            val m = dns.getMap(ord)
+            g.writeObjectFieldStart(name)
+            (0 until m.numElements()).foreach { i =>
+              writeFields(g, m.keyArray().getUTF8String(i).toString,
+                m.valueArray().getStruct(i, entryType.length), entryType, entryType.indices)
+            }
+            g.writeEndObject()
+          }
+        }
+      writeLayer(g, dns, dnsType, dnsType.fieldIndex("dns.flags_tree"), 0)
+      g.writeEndObject()
+    }
+    if (!l.isNullAt(Tls)) {
+      val rec = l.getStruct(Tls, 1).getArray(0).getStruct(0, 2)
+      val recType = PacketSchemas.tlsRecordSchema
+      g.writeObjectFieldStart("tls")
+      g.writeObjectFieldStart("tls.record")
+      if (!rec.isNullAt(0)) g.writeStringField(recType(0).name, rec.getUTF8String(0).toString)
+      writeLayer(g, rec, recType, 1, 0, 1)
+      g.writeEndObject()
+      g.writeEndObject()
+    }
+    writeLayer(g, l, Http, 0, 1, 2, 3, 4, 5)
     g.writeEndObject(); g.writeEndObject(); g.writeEndObject()
     g.close()
     sw.toString
   }
 
-  private val jsonFactory = new JsonFactory()
+  private def structAt(st: StructType, ord: Int): StructType =
+    st(ord).dataType.asInstanceOf[StructType]
 
-  private def writeLayer(g: com.fasterxml.jackson.core.JsonGenerator,
-                         name: String, fs: Fields): Unit = {
+  /** A string-field layer of the packet's layers row, if present. */
+  private def writeLayer(g: JsonGenerator, l: InternalRow, ord: Int, order: Int*): Unit =
+    writeLayer(g, l, layersSchema, ord, order: _*)
+
+  private def writeLayer(g: JsonGenerator, parent: InternalRow, parentType: StructType,
+                         ord: Int, order: Int*): Unit =
+    if (!parent.isNullAt(ord)) {
+      val st = structAt(parentType, ord)
+      writeFields(g, parentType(ord).name, parent.getStruct(ord, st.length), st, order)
+    }
+
+  private def writeFields(g: JsonGenerator, name: String, r: InternalRow, st: StructType,
+                          order: Seq[Int]): Unit = {
     g.writeObjectFieldStart(name)
-    fs.foreach {
-      case (k, v: String) => g.writeStringField(k, v)
-      case (k, v: Fields @unchecked) => writeLayer(g, k, v)
-      case (k, v) => throw new IllegalStateException(s"bad field $k: $v")
+    order.foreach { i =>
+      if (!r.isNullAt(i)) g.writeStringField(st(i).name, r.getUTF8String(i).toString)
     }
     g.writeEndObject()
-  }
-
-  // ------------------------------------------------------------ L3 / L4
-
-  private def decodeIpv4(d: Array[Byte], o: Int,
-                         layers: scala.collection.mutable.LinkedHashMap[String, Fields],
-                         protos: scala.collection.mutable.ArrayBuffer[String]): Unit = {
-    if (d.length < o + 20 || (d(o) & 0xf0) != 0x40) return
-    val ihl = (d(o) & 0x0f) * 4
-    if (ihl < 20 || d.length < o + ihl) return
-    protos += "ip"
-    layers += "ip" -> fields(
-      "ip.src" -> ipv4(d, o + 12), "ip.dst" -> ipv4(d, o + 16),
-      "ip.ttl" -> (d(o + 8) & 0xff).toString)
-    val fragOffset = be16(d, o + 6) & 0x1fff
-    if (fragOffset != 0) return // non-first fragment: no L4 header
-    decodeL4(d, o + ihl, d(o + 9) & 0xff, layers, protos)
-  }
-
-  private def decodeIpv6(d: Array[Byte], o: Int,
-                         layers: scala.collection.mutable.LinkedHashMap[String, Fields],
-                         protos: scala.collection.mutable.ArrayBuffer[String]): Unit = {
-    if (d.length < o + 40 || (d(o) & 0xf0) != 0x60) return
-    protos += "ipv6"
-    layers += "ipv6" -> fields(
-      "ipv6.src" -> ipv6(d, o + 8), "ipv6.dst" -> ipv6(d, o + 24))
-    var next = d(o + 6) & 0xff
-    var p = o + 40
-    var hops = 0
-    while (hops < 8) { // bounded extension-header chain walk
-      next match {
-        case 0 | 43 | 60 => // hop-by-hop / routing / destination options
-          if (d.length < p + 2) return
-          val len = ((d(p + 1) & 0xff) + 1) * 8
-          next = d(p) & 0xff; p += len; hops += 1
-        case 44 => // fragment header
-          if (d.length < p + 8) return
-          if ((be16(d, p + 2) & 0xfff8) != 0) return // non-first fragment
-          next = d(p) & 0xff; p += 8; hops += 1
-        case _ =>
-          decodeL4(d, p, next, layers, protos); return
-      }
-    }
-  }
-
-  private def decodeL4(d: Array[Byte], o: Int, proto: Int,
-                       layers: scala.collection.mutable.LinkedHashMap[String, Fields],
-                       protos: scala.collection.mutable.ArrayBuffer[String]): Unit =
-    proto match {
-      case 6 => // TCP
-        if (d.length < o + 20) return
-        val src = be16(d, o); val dst = be16(d, o + 2)
-        val dataOff = ((d(o + 12) & 0xf0) >> 4) * 4
-        if (dataOff < 20 || d.length < o + dataOff) return
-        val flags9 = ((d(o + 12) & 0x01) << 8) | (d(o + 13) & 0xff)
-        protos += "tcp"
-        layers += "tcp" -> fields(
-          "tcp.srcport" -> src.toString, "tcp.dstport" -> dst.toString,
-          "tcp.flags" -> f"0x$flags9%04x")
-        val payload = o + dataOff
-        if (payload < d.length) {
-          if (src == 53 || dst == 53) {
-            // DNS over TCP: 2-byte length prefix then the message
-            if (d.length >= payload + 14 &&
-              decodeDns(d, payload + 2, layers)) protos += "dns"
-          } else if (decodeTls(d, payload, layers)) protos += "tls"
-          else if (decodeHttp(d, payload, layers)) protos += "http"
-        }
-      case 17 => // UDP
-        if (d.length < o + 8) return
-        val src = be16(d, o); val dst = be16(d, o + 2)
-        protos += "udp"
-        layers += "udp" -> fields(
-          "udp.srcport" -> src.toString, "udp.dstport" -> dst.toString)
-        if ((src == 53 || dst == 53) && d.length > o + 8 &&
-          decodeDns(d, o + 8, layers)) protos += "dns"
-      case 1 | 58 => // ICMP / ICMPv6 (schema folds both into `icmp`)
-        if (d.length < o + 2) return
-        protos += (if (proto == 58) "icmpv6" else "icmp")
-        layers += "icmp" -> fields(
-          "icmp.type" -> (d(o) & 0xff).toString,
-          "icmp.code" -> (d(o + 1) & 0xff).toString)
-      case _ => ()
-    }
-
-  private def decodeArp(d: Array[Byte], o: Int,
-                        layers: scala.collection.mutable.LinkedHashMap[String, Fields],
-                        protos: scala.collection.mutable.ArrayBuffer[String]): Unit = {
-    if (d.length < o + 28) return
-    // Ethernet/IPv4 ARP only (hw type 1, proto 0x0800, hlen 6, plen 4)
-    if (be16(d, o) != 1 || be16(d, o + 2) != 0x0800 ||
-      (d(o + 4) & 0xff) != 6 || (d(o + 5) & 0xff) != 4) return
-    protos += "arp"
-    layers += "arp" -> fields(
-      "arp.opcode" -> be16(d, o + 6).toString,
-      "arp.src.hw_mac" -> mac(d, o + 8),
-      "arp.src.proto_ipv4" -> ipv4(d, o + 14),
-      "arp.dst.hw_mac" -> mac(d, o + 18),
-      "arp.dst.proto_ipv4" -> ipv4(d, o + 24))
-  }
-
-  // ------------------------------------------------------------- payloads
-
-  private val dnsTypes = Map(1 -> "A", 2 -> "NS", 5 -> "CNAME", 6 -> "SOA",
-    12 -> "PTR", 15 -> "MX", 16 -> "TXT", 28 -> "AAAA", 33 -> "SRV")
-
-  /** DNS name at `o` with RFC 1035 compression; returns (name, next
-    * offset) or null on malformed input. */
-  private def dnsName(d: Array[Byte], start: Int, msgStart: Int): (String, Int) = {
-    val sb = new StringBuilder
-    var o = start
-    var next = -1 // offset after the first pointer (caller resumes there)
-    var jumps = 0
-    while (true) {
-      if (o >= d.length || jumps > 32) return null
-      val len = d(o) & 0xff
-      if (len == 0) {
-        return (if (sb.isEmpty) "<Root>" else sb.toString,
-          if (next >= 0) next else o + 1)
-      } else if ((len & 0xc0) == 0xc0) {
-        if (o + 1 >= d.length) return null
-        if (next < 0) next = o + 2
-        o = msgStart + (((len & 0x3f) << 8) | (d(o + 1) & 0xff))
-        jumps += 1
-      } else {
-        if (o + 1 + len > d.length) return null
-        if (sb.nonEmpty) sb.append('.')
-        var i = 0
-        while (i < len) {
-          val c = d(o + 1 + i) & 0xff
-          // printable ascii passes through; anything else escapes as \xNN
-          sb.append(if (c >= 0x21 && c <= 0x7e) c.toChar.toString else f"\\x$c%02x")
-          i += 1
-        }
-        o += 1 + len
-      }
-    }
-    null // unreachable
-  }
-
-  /** Parse a DNS message at `o`; adds a `dns` layer and returns true
-    * when the header + the walked questions parse cleanly.
-    *
-    * Large messages: the walk is CAPPED (first 16 questions, first 64
-    * answers) rather than the message rejected — a valid jumbo message
-    * still classifies as DNS with its leading records extracted (tshark
-    * parses them all; the divergence is only in fields beyond the cap,
-    * documented here). When the QUESTION count exceeds the cap the
-    * answer section cannot be located (answers start after the last
-    * question), so answers are omitted for that — vanishingly rare —
-    * shape. Malformed names still reject the whole message. */
-  private def decodeDns(d: Array[Byte], o: Int,
-                        layers: scala.collection.mutable.LinkedHashMap[String, Fields]): Boolean = {
-    if (d.length < o + 12) return false
-    val flags = be16(d, o + 2)
-    val qd = be16(d, o + 4); val an = be16(d, o + 6)
-    if (qd == 0 && an == 0) return false
-    val isResponse = (flags >> 15) & 1
-
-    val queries = scala.collection.mutable.LinkedHashMap.empty[String, Fields]
-    var p = o + 12
-    var i = 0
-    val qdWalk = math.min(qd, 16)
-    while (i < qdWalk) {
-      val nm = dnsName(d, p, o)
-      if (nm == null || d.length < nm._2 + 4) return false
-      val qtype = be16(d, nm._2); val qclass = be16(d, nm._2 + 2)
-      val typeName = dnsTypes.getOrElse(qtype, s"type $qtype")
-      val className = if (qclass == 1) "IN" else s"class $qclass"
-      queries += s"${nm._1}: type $typeName, class $className" -> fields(
-        "dns.qry.name" -> nm._1, "dns.qry.type" -> qtype.toString)
-      p = nm._2 + 4
-      i += 1
-    }
-    val answers = scala.collection.mutable.LinkedHashMap.empty[String, Fields]
-    i = 0
-    var ok = qd <= 16 // unwalked questions -> answer offset unknown
-    val anWalk = math.min(an, 64)
-    while (i < anWalk && ok) {
-      val nm = dnsName(d, p, o)
-      if (nm == null || d.length < nm._2 + 10) ok = false
-      else {
-        val ttl = be32(d, nm._2 + 4)
-        val rdlen = be16(d, nm._2 + 8)
-        if (d.length < nm._2 + 10 + rdlen) ok = false
-        else {
-          answers += s"${nm._1}: answer ${i + 1}" -> fields(
-            "dns.resp.name" -> nm._1, "dns.resp.ttl" -> ttl.toString)
-          p = nm._2 + 10 + rdlen
-        }
-      }
-      i += 1
-    }
-    val dns = fields()
-    if (queries.nonEmpty) dns += "Queries" -> queries
-    if (answers.nonEmpty) dns += "Answers" -> answers
-    dns += "dns.flags_tree" -> fields("dns.flags.response" -> isResponse.toString)
-    layers += "dns" -> dns
-    true
-  }
-
-  private val httpMethods =
-    Seq("GET ", "POST ", "PUT ", "DELETE ", "HEAD ", "OPTIONS ", "PATCH ")
-
-  // compiled once — header extraction runs per HTTP packet in the scan loop
-  private val hostPattern =
-    java.util.regex.Pattern.compile("(?mi)^Host:\\s*(.*?)\\s*$")
-  private val userAgentPattern =
-    java.util.regex.Pattern.compile("(?mi)^User-Agent:\\s*(.*?)\\s*$")
-
-  /** Detect + parse an HTTP/1.x request or response head. */
-  private def decodeHttp(d: Array[Byte], o: Int,
-                         layers: scala.collection.mutable.LinkedHashMap[String, Fields]): Boolean = {
-    val len = math.min(d.length - o, 2048)
-    if (len < 12) return false
-    val text = new String(d, o, len, java.nio.charset.StandardCharsets.ISO_8859_1)
-    val lineEnd = text.indexOf("\r\n")
-    if (lineEnd < 0) return false
-    val line = text.substring(0, lineEnd)
-    def header(p: java.util.regex.Pattern): String = {
-      val m = p.matcher(text)
-      if (m.find()) m.group(1) else null
-    }
-    if (httpMethods.exists(line.startsWith)) {
-      val parts = line.split(" ", 3)
-      if (parts.length < 3 || !parts(2).startsWith("HTTP/1.")) return false
-      val host = header(hostPattern)
-      layers += "http" -> fields(
-        "http.host" -> host,
-        "http.request.method" -> parts(0),
-        "http.request.full_uri" ->
-          (if (host != null) s"http://$host${parts(1)}" else null),
-        "http.user_agent" -> header(userAgentPattern))
-      true
-    } else if (line.startsWith("HTTP/1.")) {
-      val parts = line.split(" ", 3)
-      if (parts.length < 2 || !parts(1).forall(_.isDigit)) return false
-      layers += "http" -> fields("http.response.code" -> parts(1))
-      true
-    } else false
-  }
-
-  /** Detect + parse a TLS record; walks a ClientHello for the SNI
-    * extension. Emits `tls.record` as a single OBJECT — the shape
-    * tshark uses for one record (the pipeline's object-or-array
-    * normalization handles it, P10). */
-  private def decodeTls(d: Array[Byte], o: Int,
-                        layers: scala.collection.mutable.LinkedHashMap[String, Fields]): Boolean = {
-    if (d.length < o + 5) return false
-    val contentType = d(o) & 0xff
-    val vMajor = d(o + 1) & 0xff; val vMinor = d(o + 2) & 0xff
-    if (contentType < 20 || contentType > 23 || vMajor != 3 || vMinor > 4) return false
-    val recVersion = f"0x$vMajor%02x$vMinor%02x"
-    val record = fields("tls.record.version" -> recVersion)
-    if (contentType == 22 && d.length >= o + 9 && (d(o + 5) & 0xff) == 1) {
-      // ClientHello: handshake type(1) len(3) version(2) random(32)
-      var p = o + 9
-      val hsVersion =
-        if (d.length >= p + 2) f"0x${d(p) & 0xff}%02x${d(p + 1) & 0xff}%02x" else null
-      var sni: String = null
-      if (d.length >= p + 35) {
-        p += 34 // version + random
-        val sidLen = d(p) & 0xff; p += 1 + sidLen // session id
-        if (d.length >= p + 2) {
-          val csLen = be16(d, p); p += 2 + csLen // cipher suites
-          if (d.length >= p + 1) {
-            val compLen = d(p) & 0xff; p += 1 + compLen // compression
-            if (d.length >= p + 2) {
-              var extEnd = p + 2 + be16(d, p); p += 2
-              extEnd = math.min(extEnd, d.length)
-              while (p + 4 <= extEnd && sni == null) {
-                val extType = be16(d, p); val extLen = be16(d, p + 2)
-                if (extType == 0 && p + 4 + extLen <= extEnd && extLen >= 5) {
-                  // server_name list: len(2) type(1)=host_name len(2) name
-                  val nameLen = be16(d, p + 7)
-                  if (p + 9 + nameLen <= extEnd)
-                    sni = new String(d, p + 9, nameLen,
-                      java.nio.charset.StandardCharsets.US_ASCII)
-                }
-                p += 4 + extLen
-              }
-            }
-          }
-        }
-      }
-      val hs = fields("tls.handshake.version" -> hsVersion,
-        "tls.handshake.extensions_server_name" -> sni)
-      if (hs.nonEmpty) record += "tls.handshake" -> hs
-    }
-    layers += "tls" -> fields("tls.record" -> record)
-    true
   }
 }

@@ -443,8 +443,10 @@ object StreamingPipeline {
                 graft.sources.PcapDecode.decodePathsContained(spark,
                   pcapNames.map { case (_, f, _) => s"$dataDir/$f" }.toSeq, decoder))
             ).flatten
-            val raw = parts.reduce(_ unionByName _)
-            val b = toUdm(raw).cache()
+            // the JSON branch carries packet text and the native pcap
+            // branch packet rows: each goes through the transform on its
+            // own, and the two event sets union
+            val b = parts.map(toUdm).reduce(_ unionByName _).cache()
             try {
               // the three Spark sinks all derive from the cached batch
               // and are mutually order-free (each a batch_id-scoped

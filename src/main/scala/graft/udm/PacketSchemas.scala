@@ -31,6 +31,12 @@ object PacketSchemas {
     StructField("eth.src", StringType),
     StructField("eth.dst", StringType)))
 
+  /** Linux cooked capture header (LINKTYPE_SLL): the packet type and the
+    * EtherType the payload is keyed by. */
+  val sllSchema: StructType = StructType(Seq(
+    StructField("sll.pkttype", StringType),
+    StructField("sll.etype", StringType)))
+
   val ipSchema: StructType = StructType(Seq(
     StructField("ip.src", StringType),
     StructField("ip.dst", StringType),
@@ -96,6 +102,7 @@ object PacketSchemas {
   val layersSchema: StructType = StructType(Seq(
     StructField("frame", frameSchema),
     StructField("eth", ethSchema),
+    StructField("sll", sllSchema),
     StructField("ip", ipSchema),
     StructField("ipv6", ipv6Schema),
     StructField("tcp", tcpSchema),
@@ -127,7 +134,9 @@ object PacketSchemas {
       case other => other
     })
 
-  /** Root schema produced by the codegen'd native packet parser. */
+  /** Root schema produced by the codegen'd native packet parser, and of
+    * the rows the native capture decoder writes directly
+    * ([[graft.sources.PcapParser.decodeRows]]). */
   val parsedPacketSchema: StructType = StructType(Seq(
     StructField("_source", StructType(Seq(
       StructField("layers", parsedLayersSchema))))))

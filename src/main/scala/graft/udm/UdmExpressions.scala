@@ -10,10 +10,13 @@ import org.apache.spark.sql.types._
   *
   * Everything here is built-in expressions or native codegen'd ones
   * from `graft.functions` (zero UDFs, no higher-order functions: those
-  * are CodegenFallback in Spark 4), and the per-packet transform is
-  * narrow (no shuffle), like the reference's per-file loop but
-  * distributed. The event projection fuses into the whole-stage-codegen
-  * stage that holds the scan, the parse and the serializer. That stage
+  * are CodegenFallback in Spark 4; the P3 frame time is the native
+  * `FrameTimeExpr`, not a regex and java.time cascade; the error
+  * snippet is the native `PacketSnippetExpr`), and the per-packet
+  * transform is narrow (no shuffle), like the reference's per-file loop
+  * but distributed. The event projection fuses into the
+  * whole-stage-codegen stage that holds the scan, the parse or the
+  * native capture decode, and the serializer. That stage
   * generates each top-level section of the normal event and each app
   * section into a method of its own (see [[udmEventPre]]), so that every
   * generated method stays small enough for HotSpot to JIT-compile.
@@ -69,35 +72,18 @@ object UdmExpressions {
   // ---------------------------------------------------------------------
 
   /** P3 — the reference's `convert_timestamp_robust`
-    * (json2udm_cloud.py:19–46) as a Catalyst cascade:
-    *  1. primary: first 26 chars must fully match
-    *     `MMM d, yyyy H:m:s.<frac>` (replicating the `[:26]` truncation
-    *     quirk, which clips microseconds to 3–4 digits);
-    *  2. fallback: strip a trailing " UTC…" / " Central European Summer
-    *     Time…" suffix, parse without fraction;
-    *  3. final fallback: `fallback` (current processing time in
-    *     production; a frozen literal in tests, so the expression stays
-    *     deterministic for the oracle).
-    * All times are interpreted as UTC (session timezone must be UTC),
-    * matching `frame.time_utc` semantics.
+    * (json2udm_cloud.py:19–46): the frame time parsed by the native,
+    * codegen'd [[graft.functions.FrameTime]] (the `MMM d, yyyy
+    * H:m:s.<frac>` primary on the first 26 characters — the `[:26]`
+    * truncation quirk — then the no-fraction fallback with a trailing
+    * " UTC…" / " Central European Summer Time…" suffix stripped), else
+    * `fallback` (current processing time in production; a frozen
+    * literal in tests, so the expression stays deterministic for the
+    * oracle). All times are interpreted as UTC (session timezone must
+    * be UTC), matching `frame.time_utc` semantics.
     */
   def robustTimestamp(ts: Column, fallback: Column = current_timestamp()): Column =
-    coalesce(parsedTimestamp(ts), fallback)
-
-  /** [[robustTimestamp]]'s cascade without the fallback: null where
-    * neither format matches. */
-  private def parsedTimestamp(ts: Column): Column = {
-    val s26 = substring(ts, 1, 26)
-    val primaryPat = "^[A-Za-z]{3}\\s+\\d{1,2}, \\d{4} \\d{1,2}:\\d{1,2}:\\d{1,2}\\.\\d+$"
-    val primary = when(s26.rlike(primaryPat),
-      try_to_timestamp(regexp_replace(s26, "\\s+", " "), lit("MMM d, yyyy H:m:s.SSSSSS")))
-    val cleaned = trim(substring_index(substring_index(ts, " UTC", 1),
-      " Central European Summer Time", 1))
-    val noFracPat = "^[A-Za-z]{3}\\s+\\d{1,2}, \\d{4} \\d{1,2}:\\d{1,2}:\\d{1,2}$"
-    val secondary = when(cleaned.rlike(noFracPat),
-      try_to_timestamp(regexp_replace(cleaned, "\\s+", " "), lit("MMM d, yyyy H:m:s")))
-    coalesce(primary, secondary)
-  }
+    coalesce(graft.functions.FrameTimeExpr.timestamp(ts), fallback)
 
   /** ISO-8601 with microseconds and a literal Z (json2udm_cloud.py:45).
     * Requires session timezone UTC. */
@@ -364,9 +350,13 @@ object UdmExpressions {
     * app section inside network (http, dns, tls) is generated into its
     * own method ([[graft.functions.OwnMethodExpr]]); the largest is then
     * about 5.4 KB. The malformed and error events and the branch
-    * conditions stay inline: they are small. */
+    * conditions stay inline: they are small.
+    *
+    * `packet` is what the error event's snippet is cut from: the raw
+    * packet JSON text, or the native decoder's packet row
+    * ([[graft.functions.PacketSnippetExpr]]). */
   def udmEventPre(l: Column, rec: Column, qNames: Column, ttls: Column,
-                  raw: Column, fallbackTs: Column): Column = {
+                  packet: Column, fallbackTs: Column): Column = {
     val fallbackIso = isoMicros(fallbackTs)
     val frameNo = coalesce(f(f(l, "frame"), "frame.number"), lit("N/A"))
 
@@ -381,8 +371,7 @@ object UdmExpressions {
       lit(null).cast(additionalType).as("additional"))
 
     val errMsg = lit("invalid literal for int() in packet field")
-    val snippet = when(length(raw) > 1000, concat(substring(raw, 1, 1000), lit("...")))
-      .otherwise(raw)
+    val snippet = graft.functions.PacketSnippetExpr(packet)
     val errorEvent = struct(
       metadata(fallbackIso, lit("Wireshark TShark (PacketProcessingError)"),
         lit("NETWORK_EVENT_ERROR"),
@@ -400,8 +389,8 @@ object UdmExpressions {
     // timestamp literal is inlined into the generated source, and
     // `current_timestamp()` binds a new one per micro-batch, which would
     // compile a new class every batch; a string literal rides codegen
-    // references. Same result: `date_format(null)` is null.
-    val ts = coalesce(isoMicros(parsedTimestamp(f(f(l, "frame"), "frame.time_utc"))),
+    // references
+    val ts = coalesce(graft.functions.FrameTimeExpr.iso(f(f(l, "frame"), "frame.time_utc")),
       fallbackIso)
     val app = structOrNull(
       "http" -> ownMethod("udm_http")(httpInfo(l)),

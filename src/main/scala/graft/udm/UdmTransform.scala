@@ -55,34 +55,48 @@ object UdmTransform {
         sum(when(col("product_name")
           .contains("PacketProcessingError"), 1L).otherwise(0L)).as("packet_errors"))
 
-  /** P12/P14 — the one UDM entry point: a column of raw packet JSON
-    * text → the input rows plus `event_struct` (its `event` field is the
-    * UDM event) and `udm_json` (its serialization). A total row→row
-    * transform: EVERY input row yields exactly one event (the
-    * reference's core invariant, json2udm_cloud.py:94–96):
-    *  - unparseable JSON or missing `_source.layers` → minimal
-    *    NETWORK_EVENT_UNKNOWN "Malformed" event (py:104–111);
+  /** P12/P14 — the one UDM entry point: a column of packets → the input
+    * rows plus `event_struct` (its `event` field is the UDM event) and
+    * `udm_json` (its serialization). The packet column `rawCol` is
+    * either
+    *  - raw packet JSON text (tshark-JSON captures, the
+    *    [[graft.sources.PcapDecode.processDecoder]] and
+    *    [[graft.sources.PcapDecode.stubDecoder]] decodes), parsed here
+    *    by the codegen'd native [[graft.functions.UdmPacketParseExpr]]
+    *    (one streaming Jackson pass, `tls.record` object-or-array
+    *    normalized in the parser), or
+    *  - the [[PacketSchemas.parsedPacketSchema]] row the native capture
+    *    decoder writes ([[graft.sources.PcapDecode.decodePathsContained]]),
+    *    taken as it is: no JSON text is written or parsed.
+    * Both give byte-identical `udm_json` for the same packet.
+    *
+    * A total row→row transform: EVERY input row yields exactly one
+    * event (the reference's core invariant, json2udm_cloud.py:94–96):
+    *  - unparseable JSON, a null packet row or missing `_source.layers`
+    *    → minimal NETWORK_EVENT_UNKNOWN "Malformed" event (py:104–111);
     *  - would-throw int casts → NETWORK_EVENT_ERROR with message and a
-    *    ≤1000-char snippet of the raw packet (py:296–317);
+    *    ≤1000-char snippet of the packet's JSON text (py:296–317),
+    *    written from a packet row only for the rows on this branch;
     *  - otherwise the full mapped event.
     * Null-section omission (py:267–291) happens at serialization — see
     * [[toJson]].
     *
-    * The parse is the codegen'd native [[graft.functions.UdmPacketParseExpr]]
-    * (one streaming Jackson pass, `tls.record` object-or-array
-    * normalized in the parser), projected into its own column so each
-    * packet is parsed once however many fields reference it. The scan,
-    * the parse, the event projection and the serializer fuse into one
-    * whole-stage-codegen stage, generated once per query, not per task;
-    * the event's sections are generated into methods of their own so
-    * that each stays small enough to JIT-compile (see
-    * [[UdmExpressions.udmEventPre]]). */
+    * The packet is projected into its own column, so each packet is
+    * parsed once however many fields reference it. The parse, the event
+    * projection and the serializer fuse into one whole-stage-codegen
+    * stage, generated once per query, not per task; the event's sections
+    * are generated into methods of their own so that each stays small
+    * enough to JIT-compile (see [[UdmExpressions.udmEventPre]]). */
   def transform(packets: DataFrame, rawCol: String,
                 fallbackTs: Column = current_timestamp()): DataFrame = {
     import UdmExpressions.{f, sectionValues}
+    val parsed = packets.schema(rawCol).dataType match {
+      case StringType => graft.functions.UdmPacketParseExpr(col(rawCol))
+      case _ => col(rawCol)
+    }
     val l = col("__parsed").getField("_source").getField("layers")
     packets
-      .withColumn("__parsed", graft.functions.UdmPacketParseExpr(col(rawCol)))
+      .withColumn("__parsed", parsed)
       // hot multiply-referenced sub-expressions get their own columns so
       // each is computed once per row regardless of downstream fan-out
       .withColumn("__tls_recs", f(f(l, "tls"), "tls.record"))

@@ -275,15 +275,21 @@ class UdmTransformSpec extends SparkSpec {
 
   test("toUdm fuses the event projection into whole-stage codegen, every method JIT-sized") {
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec, SparkPlan,
+      WholeStageCodegenExec}
     // a Project outside every WholeStageCodegen node regenerates its
     // source in every task and runs its CodegenFallback members
     // interpreted; HotSpot never JIT-compiles a method over 8,000 bytes
     // (HugeMethodLimit), so a larger generated method stays interpreted
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val packets = Seq(httpPacket).toDF("raw").withColumn("source_file", lit("f")).repartition(1)
+    // packet JSON text, and the native decoder's packet rows
+    val capture = java.nio.file.Files.createTempFile("graft_fused", ".pcap")
+    java.nio.file.Files.write(capture, graft.sources.CaptureBytes.syntheticPcap(64))
+    try Seq(
+      Seq(httpPacket).toDF("raw").withColumn("source_file", lit("f")).repartition(1),
+      graft.sources.PcapDecode.decodePathsContained(spark, Seq(capture.toString))
+    ).foreach { packets =>
       val plan = graft.streaming.StreamingPipeline.toUdm(packets).queryExecution.executedPlan
       val fallbacks = plan.flatMap(_.expressions.flatMap(_.collect {
         case e: CodegenFallback => e.prettyName })).groupBy(identity).view.mapValues(_.size).toMap
@@ -300,10 +306,18 @@ class UdmTransformSpec extends SparkSpec {
       val stages = plan.collect { case w: WholeStageCodegenExec => w }
       assert(stages.count(w => fused(w.child).exists(isEvent)) == 1,
         s"the event Project is not under a WholeStageCodegen node:\n$plan")
+      // the native decode runs in the same stage: its rows are never copied
+      plan.collect { case g: GenerateExec => g }.foreach { g =>
+        assert(stages.exists(w => fused(w.child).exists(isEvent) && fused(w.child).contains(g)),
+          s"the capture decode is not fused with the event Project:\n$plan")
+      }
       val methodBytes = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
         .map(_._3.maxMethodCodeSize)
       assert(methodBytes.nonEmpty && methodBytes.forall(b => b > 0 && b <= 8000),
         s"largest generated method per stage (bytes): $methodBytes")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      java.nio.file.Files.delete(capture)
+    }
   }
 }
