@@ -289,7 +289,7 @@ object Bench {
     }
 
     // maintained-search cost vs delta LIFETIME batches — the datapoint
-    // behind compactMaintainedDelta: search must be flat in store ROWS,
+    // behind compactAdmissionStore: search must be flat in store ROWS,
     // not in lifetime batch count (every maintainedCodes query re-lists
     // the delta). 16 single-file micro-batches build a 16-partition
     // delta; the IDENTICAL ivfPqTopK probe is timed (best-of-2) over it
@@ -330,7 +330,7 @@ object Bench {
       // publishes its segment and swaps the manifest concurrently
       @volatile var compactErr: Throwable = null
       val folder = new Thread(() =>
-        try StreamingPipeline.compactMaintainedDelta(spark, delta)
+        try StreamingPipeline.compactAdmissionStore(spark, delta)
         catch { case e: Throwable => compactErr = e })
       folder.start()
       val during = searchOnce()
@@ -338,7 +338,7 @@ object Bench {
       if (compactErr != null) throw compactErr
       // second maintenance entry sweeps the retired partitions, so the
       // "compacted" probe measures the steady state
-      StreamingPipeline.compactMaintainedDelta(spark, delta)
+      StreamingPipeline.compactAdmissionStore(spark, delta)
       val post = math.min(searchOnce(), searchOnce())
       (pre, during, post)
     }

@@ -853,7 +853,7 @@ object Similarity {
     *
     * COMPACTION: the delta's live partitions resolve through the
     * store MANIFEST ([[graft.util.StoreManifest]]), so
-    * [[graft.streaming.StreamingPipeline.compactMaintainedDelta]] may
+    * [[graft.streaming.StreamingPipeline.compactAdmissionStore]] may
     * run CONCURRENTLY with searches — the fold publishes a new
     * segment, swaps the manifest atomically, and defers deleting the
     * covered originals to the next maintenance entry, so a frame

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.udm.UdmTransform
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -95,39 +95,110 @@ object StreamingPipeline {
                maxFilesPerTrigger: Int = 16,
                maxAttempts: Int = 5,
                failHook: (DataFrame, Long) => Unit = (_, _) => ())
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val udm = toUdm(readPacketStream(spark, landingDir, maxFilesPerTrigger))
-    udm.writeStream
+      : DataStreamWriter[Row] =
+    microBatches(toUdm(readPacketStream(spark, landingDir, maxFilesPerTrigger)),
+        checkpoint, trigger) { b =>
+      withRetryBudget(spark, checkpoint, outDir, b.id, maxAttempts) {
+        b.write(Sink(s"$outDir/_errors", "json", b.df.select(col("source_file"),
+          col("udm_json"), lit("retry budget exhausted").as("dlq_reason"))))
+      } {
+        failHook(b.df, b.id)
+        writeCapture(b, b.cache(b.df), outDir)(identity)
+      }
+    }
+
+  /** One batch_id-scoped sink of a micro-batch: `rows` overwrite
+    * `dir/batch_id=N` in `format` (text, json or parquet). */
+  private final case class Sink(dir: String, format: String, rows: DataFrame)
+
+  /** What [[microBatches]] hands a batch body: the batch `df`, its
+    * `id`, a cache scope the skeleton releases once the body returns or
+    * throws, and the writer of the batch's sinks. */
+  private final class MicroBatch(val df: DataFrame, val id: Long) {
+    private var cached = List.empty[DataFrame]
+
+    def cache(frame: DataFrame): DataFrame = {
+      val c = frame.cache()
+      cached ::= c
+      c
+    }
+
+    /** Write `sinks` concurrently ([[runSinksConcurrently]]), each an
+      * overwrite of its own `batch_id=N` dir. */
+    def write(sinks: Sink*): Unit =
+      runSinksConcurrently(sinks.map(s => () =>
+        s.rows.write.mode("overwrite").format(s.format).save(s"${s.dir}/batch_id=$id")))
+
+    def release(): Unit = cached.foreach(_.unpersist())
+  }
+
+  /** The one micro-batch skeleton every `foreachBatch` pipeline runs
+    * through. Structured Streaming's exactly-once argument (Armbrust et
+    * al., SIGMOD 2018) is replay plus an idempotent sink: the
+    * checkpoint re-runs an uncommitted batch, and every sink written
+    * through [[MicroBatch.write]] overwrites its own `batch_id=N` dir,
+    * so a replay replaces its partial output instead of appending to
+    * it. The skeleton wires the query (checkpoint, trigger, the default
+    * append mode) and releases the batch's caches whatever `body` does;
+    * each pipeline passes only its input and its batch body. */
+  private def microBatches(input: DataFrame, checkpoint: String, trigger: Trigger)
+                          (body: MicroBatch => Unit): DataStreamWriter[Row] =
+    input.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        withRetryBudget(spark, checkpoint, outDir, batchId, maxAttempts) {
-          batch.select(col("source_file"), col("udm_json"),
-              lit("retry budget exhausted").as("dlq_reason"))
-            .write.mode("overwrite").json(s"$outDir/_errors/batch_id=$batchId")
-        } {
-          failHook(batch, batchId)
-          val b = batch.cache()
-          try {
-            // K2 — good events, JSONL
-            b.filter(!col("is_error")).select(col("udm_json"))
-              .write.mode("overwrite").text(s"$outDir/events/batch_id=$batchId")
-            // K4 — DLQ for error/malformed events
-            b.filter(col("is_error")).select(col("source_file"), col("udm_json"),
-                lit("row error").as("dlq_reason"))
-              .write.mode("overwrite").json(s"$outDir/_errors/batch_id=$batchId")
-            // K3 + A1/A2 — per-file notification with packet/error counts
-            // F5 (empty-output guard, processor_app.py:165–167) is
-            // subsumed here: the transform is total (P14 invariant — one
-            // event per input row, property-tested), so an empty output
-            // for a non-empty batch is structurally impossible; and any
-            // sink-write failure throws out of foreachBatch, failing the
-            // batch so the checkpoint retries it (up to maxAttempts).
-            UdmTransform.perFileCounts(b)
-              .write.mode("overwrite").json(s"$outDir/_notifications/batch_id=$batchId")
-          } finally b.unpersist()
-        }
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        val b = new MicroBatch(df, batchId)
+        try body(b) finally b.release()
       }
+
+  /** The JSONL file stream the store pipelines read: an explicit
+    * `schema`, at most `maxFilesPerTrigger` new files per micro-batch. */
+  private def jsonFiles(spark: SparkSession, schema: StructType, dir: String,
+                        maxFilesPerTrigger: Int): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .json(dir)
+
+  /** Every sink dir a capture batch may write under `outDir`. */
+  private val captureSinkDirs = Seq("events", "_errors", "_notifications", "_latency")
+
+  /** K2/K3/K4 for one capture batch, the step [[pipeline]] and
+    * [[notifyPipeline]] share: good events as JSONL (`events`), error
+    * and malformed events to the `_errors` DLQ, and per-file
+    * packet/error counts to `_notifications` (A1/A2), all three from
+    * the cached [[toUdm]] output `udm` and written concurrently. `dlq`
+    * maps the error rows `(source_file, udm_json, dlq_reason)` to the
+    * stream's own DLQ columns.
+    *
+    * F5 (the empty-output guard, processor_app.py:165–167) is subsumed:
+    * the transform is total (P14: one event per input row,
+    * property-tested), so an empty output for a non-empty batch cannot
+    * happen, and a failed sink write throws out of the batch, so the
+    * checkpoint retries it (up to the retry budget). */
+  private def writeCapture(b: MicroBatch, udm: DataFrame, outDir: String)
+                          (dlq: DataFrame => DataFrame): Unit =
+    b.write(
+      Sink(s"$outDir/events", "text", udm.filter(!col("is_error")).select(col("udm_json"))),
+      Sink(s"$outDir/_errors", "json", dlq(udm.filter(col("is_error"))
+        .select(col("source_file"), col("udm_json"), lit("row error").as("dlq_reason")))),
+      Sink(s"$outDir/_notifications", "json", UdmTransform.perFileCounts(udm)))
+
+  /** A manifest store's live rows as batch `batchId` must see them, at
+    * the explicit `schema`: the live paths from
+    * [[graft.util.StoreManifest.livePathsChecked]] (one listing serves
+    * the fresh-checkpoint watermark refusal and the resolution, and the
+    * batch's own partition is excluded, so a replay never meets its own
+    * rows), or an empty frame while the store has none. An explicit
+    * schema rather than footer inference, so an empty path list or a
+    * fileless dir reads as empty instead of wedging every retry in
+    * UNABLE_TO_INFER_SCHEMA. */
+  private def liveStore(spark: SparkSession, dir: String, batchId: Long,
+                        schema: StructType): DataFrame = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = graft.util.StoreManifest.livePathsChecked(fs, dir, batchId)
+    if (live.nonEmpty) spark.read.schema(schema).parquet(live: _*)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
   /** Take a create-once lock file for a store-rewriting operation
@@ -172,7 +243,8 @@ object StreamingPipeline {
     * processing so a mid-batch crash still consumes an attempt. Once a
     * batch has failed `maxAttempts` times it is a poison batch: earlier
     * partial attempts may have committed some sink directories before
-    * crashing on a later one, so those are removed and `deadLetter`
+    * crashing on a later one (`_latency` included), so every capture
+    * sink's batch dir is removed and `deadLetter`
     * writes every row of the batch (the whole "message", like the
     * reference's DLQ topic) — its rows exist ONLY in the DLQ, no
     * double-count on re-drive. Otherwise `body` runs. Either way the
@@ -191,7 +263,7 @@ object StreamingPipeline {
     fs.mkdirs(attemptsDir)
     fs.create(new Path(attemptsDir, s"attempt-$attempt"), true).close()
     if (attempt >= maxAttempts) {
-      dropBatchDirs(spark, outDir, batchId, "events", "_notifications")
+      dropBatchDirs(spark, outDir, batchId, captureSinkDirs: _*)
       deadLetter
     } else body
     fs.delete(attemptsDir, true)
@@ -360,8 +432,8 @@ object StreamingPipeline {
     * under `dataDir`; per micro-batch the named files are batch-read
     * and run through the same UDM transform and batch_id-scoped
     * idempotent sinks as [[pipeline]]. Payloads naming BINARY captures
-    * (`*.pcap` / `*.pcapng`) are decoded in-plan by `decoder` (default:
-    * the native [[graft.sources.PcapParser]]) — the reference's
+    * (`*.pcap` / `*.pcapng`) are decoded in-plan by the native
+    * [[graft.sources.PcapParser]] — the reference's
     * download → tshark → transform chain as ONE streaming plan;
     * payloads naming pre-decoded `*.json` captures read as wholetext. Semantics carried over from the
     * reference subscription:
@@ -393,116 +465,92 @@ object StreamingPipeline {
                      maxAttempts: Int = 5,
                      ack: String = "off",
                      maxMessagesPerTrigger: Int = 1024,
-                     decoder: graft.sources.PcapDecode.Decoder =
-                       graft.sources.PcapParser.nativeDecoder,
                      failHook: (DataFrame, Long) => Unit = (_, _) => ())
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     val notifications = spark.readStream.format("graft-notify")
       .option("ack", ack)
       .option("maxMessagesPerTrigger", maxMessagesPerTrigger)
       .load(queueDir)
-    notifications.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        withRetryBudget(spark, checkpoint, outDir, batchId, maxAttempts) {
-          batch.select(col("message_id"), col("payload"),
-              lit("retry budget exhausted").as("dlq_reason"))
-            .write.mode("overwrite").json(s"$outDir/_errors/batch_id=$batchId")
-        } {
-          failHook(batch, batchId)
-          val msgs = batch.select("message_id", "payload", "publish_ms").collect()
-            .map(r => (r.getString(0), r.getString(1).trim, r.getLong(2)))
-          val (valid, invalid) = msgs.partition { case (_, f, _) =>
-            // F1 (processor_app.py:131–133) + directory traversal: "."
-            // or ".." would make $dataDir/$f a DIRECTORY read (Python's
-            // open() raises there; a silent dir scan would ingest
-            // foreign files)
-            f.nonEmpty && !f.contains("/") && f != "." && f != ".."
-          }
-          import spark.implicits._
-          val dlqInvalid = invalid.toSeq.map { case (m, f, _) => (m, f) }
-            .toDF("message_id", "payload")
-            .withColumn("dlq_reason", lit("invalid filename"))
-          if (valid.nonEmpty) {
-            // the reference's full processor path: a payload naming a
-            // BINARY capture runs download → decode → transform in this
-            // batch's plan (tshark hop, processor_app.py:144–163 — here
-            // the native parser inside the scan partitions); payloads
-            // naming pre-decoded *.json captures keep the wholetext path
-            val (pcapNames, jsonNames) = valid.partition { case (_, f, _) =>
-              f.endsWith(".pcap") || f.endsWith(".pcapng")
-            }
-            val parts = Seq(
-              if (jsonNames.isEmpty) None else Some(
-                UdmTransform.splitCaptures(spark.read.option("wholetext", "true")
-                  .text(jsonNames.map { case (_, f, _) => s"$dataDir/$f" }: _*))),
-              if (pcapNames.isEmpty) None else Some(
-                // contained: ONE corrupt capture DLQs one message (via
-                // the P14 Malformed path), never the whole batch
-                graft.sources.PcapDecode.decodePathsContained(spark,
-                  pcapNames.map { case (_, f, _) => s"$dataDir/$f" }.toSeq, decoder))
-            ).flatten
-            // the JSON branch carries packet text and the native pcap
-            // branch packet rows: each goes through the transform on its
-            // own, and the two event sets union
-            val b = parts.map(toUdm).reduce(_ unionByName _).cache()
-            try {
-              // the three Spark sinks all derive from the cached batch
-              // and are mutually order-free (each a batch_id-scoped
-              // overwrite) — overlapped (§2.6). Concurrent first
-              // readers of the unmaterialized cache dedup per-block
-              // (BlockManager write locks), so the decode still runs
-              // once. The order-BEARING write — the `_latency` stamp,
-              // whose commit_ms must postdate the data sink — stays
-              // strictly after this call returns, which awaits all
-              // three.
-              runSinksConcurrently(Seq(
-                () => b.filter(!col("is_error")).select(col("udm_json"))
-                  .write.mode("overwrite").text(s"$outDir/events/batch_id=$batchId"),
-                () => b.filter(col("is_error"))
-                  .select(col("source_file"), col("udm_json"),
-                    lit("row error").as("dlq_reason"))
-                  .select(col("source_file").as("message_id"),
-                    col("udm_json").as("payload"), col("dlq_reason"))
-                  .unionByName(dlqInvalid)
-                  .write.mode("overwrite").json(s"$outDir/_errors/batch_id=$batchId"),
-                () => UdmTransform.perFileCounts(b)
-                  .write.mode("overwrite").json(s"$outDir/_notifications/batch_id=$batchId")))
-              // A3: per-file ingest→commit latency, the reference's
-              // PROCESSING_DURATION_SECONDS metric per processed file
-              // (processor_app.py:174–176) — publish_ms is the queue
-              // message's ingest stamp, commit is now (after the data
-              // sink writes above). Batch-scoped overwrite like every
-              // other sink: replayed attempts re-measure, never
-              // double-count. The rows are computed ON THE DRIVER from
-              // the already-collected message list, so this sink is a
-              // direct JSONL file write — spending a Spark job (plan +
-              // 1 task + commit protocol) to ship ≤maxMessagesPerTrigger
-              // driver-local rows was pure per-batch fixed cost.
-              // spark.read.json reads the dir identically.
-              val commitMs = System.currentTimeMillis()
-              dropBatchDirs(spark, outDir, batchId, "_latency")
-              // Hadoop FS, not java.nio: outDir may be hdfs://s3a://
-              // (every other sink resolves through the same FS — a
-              // local-only write would silently split the output
-              // across filesystems)
-              val latPath = new org.apache.hadoop.fs.Path(
-                s"$outDir/_latency/batch_id=$batchId/part-00000.json")
-              val latFs = latPath.getFileSystem(
-                spark.sparkContext.hadoopConfiguration)
-              val latOs = latFs.create(latPath, true)
-              try latOs.write(valid.map { case (_, f, pub) =>
-                s"""{"source_file":${jsonQuote(f)},"publish_ms":$pub,""" +
-                  s""""commit_ms":$commitMs,"latency_ms":${commitMs - pub}}"""
-              }.mkString("", "\n", "\n").getBytes("UTF-8"))
-              finally latOs.close()
-            } finally b.unpersist()
-          } else if (invalid.nonEmpty) {
-            dlqInvalid.write.mode("overwrite").json(s"$outDir/_errors/batch_id=$batchId")
-          }
+    microBatches(notifications, checkpoint, trigger) { b =>
+      withRetryBudget(spark, checkpoint, outDir, b.id, maxAttempts) {
+        b.write(Sink(s"$outDir/_errors", "json", b.df.select(col("message_id"),
+          col("payload"), lit("retry budget exhausted").as("dlq_reason"))))
+      } {
+        failHook(b.df, b.id)
+        val msgs = b.df.select("message_id", "payload", "publish_ms").collect()
+          .map(r => (r.getString(0), r.getString(1).trim, r.getLong(2)))
+        val (valid, invalid) = msgs.partition { case (_, f, _) =>
+          // F1 (processor_app.py:131–133) + directory traversal: "."
+          // or ".." would make $dataDir/$f a DIRECTORY read (Python's
+          // open() raises there; a silent dir scan would ingest
+          // foreign files)
+          f.nonEmpty && !f.contains("/") && f != "." && f != ".."
         }
+        import spark.implicits._
+        val dlqInvalid = invalid.toSeq.map { case (m, f, _) => (m, f) }
+          .toDF("message_id", "payload")
+          .withColumn("dlq_reason", lit("invalid filename"))
+        if (valid.nonEmpty) {
+          // the reference's full processor path: a payload naming a
+          // BINARY capture runs download → decode → transform in this
+          // batch's plan (tshark hop, processor_app.py:144–163 — here
+          // the native parser inside the scan partitions); payloads
+          // naming pre-decoded *.json captures keep the wholetext path
+          val (pcapNames, jsonNames) = valid.partition { case (_, f, _) =>
+            f.endsWith(".pcap") || f.endsWith(".pcapng")
+          }
+          val parts = Seq(
+            if (jsonNames.isEmpty) None else Some(
+              UdmTransform.splitCaptures(spark.read.option("wholetext", "true")
+                .text(jsonNames.map { case (_, f, _) => s"$dataDir/$f" }: _*))),
+            if (pcapNames.isEmpty) None else Some(
+              // contained: ONE corrupt capture DLQs one message (via
+              // the P14 Malformed path), never the whole batch
+              graft.sources.PcapDecode.decodePathsContained(spark,
+                pcapNames.map { case (_, f, _) => s"$dataDir/$f" }.toSeq))
+          ).flatten
+          // the JSON branch carries packet text and the native pcap
+          // branch packet rows: each goes through the transform on its
+          // own, and the two event sets union. Concurrent first readers
+          // of the unmaterialized cache dedup per block (BlockManager
+          // write locks), so the decode still runs once.
+          val udm = b.cache(parts.map(toUdm).reduce(_ unionByName _))
+          writeCapture(b, udm, outDir)(_.select(col("source_file").as("message_id"),
+              col("udm_json").as("payload"), col("dlq_reason"))
+            .unionByName(dlqInvalid))
+          // A3: per-file ingest→commit latency, the reference's
+          // PROCESSING_DURATION_SECONDS metric per processed file
+          // (processor_app.py:174–176) — publish_ms is the queue
+          // message's ingest stamp, commit is now: strictly after the
+          // capture sinks, which writeCapture awaits, so commit_ms
+          // postdates the data sink. Batch-scoped overwrite like every
+          // other sink: replayed attempts re-measure, never
+          // double-count. The rows are computed ON THE DRIVER from
+          // the already-collected message list, so this sink is a
+          // direct JSONL file write — spending a Spark job (plan +
+          // 1 task + commit protocol) to ship ≤maxMessagesPerTrigger
+          // driver-local rows was pure per-batch fixed cost.
+          // spark.read.json reads the dir identically.
+          val commitMs = System.currentTimeMillis()
+          dropBatchDirs(spark, outDir, b.id, "_latency")
+          // Hadoop FS, not java.nio: outDir may be hdfs://s3a://
+          // (every other sink resolves through the same FS — a
+          // local-only write would silently split the output
+          // across filesystems)
+          val latPath = new org.apache.hadoop.fs.Path(
+            s"$outDir/_latency/batch_id=${b.id}/part-00000.json")
+          val latFs = latPath.getFileSystem(
+            spark.sparkContext.hadoopConfiguration)
+          val latOs = latFs.create(latPath, true)
+          try latOs.write(valid.map { case (_, f, pub) =>
+            s"""{"source_file":${jsonQuote(f)},"publish_ms":$pub,""" +
+              s""""commit_ms":$commitMs,"latency_ms":${commitMs - pub}}"""
+          }.mkString("", "\n", "\n").getBytes("UTF-8"))
+          finally latOs.close()
+        } else if (invalid.nonEmpty)
+          b.write(Sink(s"$outDir/_errors", "json", dlqInvalid))
       }
+    }
   }
 
   /** Read schema of the document streams ([[admissionPipeline]],
@@ -556,110 +604,78 @@ object StreamingPipeline {
                         rowsPerBand: Int = 4,
                         failHook: (DataFrame, Long) => Unit = (_, _) => (),
                         prepare: DataFrame => DataFrame = identity)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     import graft.analytics.Dedup
-    // explicit read schema for the store leaves (batch_id never
-    // appears — live partitions are resolved through the manifest and
-    // read as leaf dirs): no footer-driven schema inference, so an
-    // empty live path list or a fileless dir reads as empty instead of
-    // wedging every retry in UNABLE_TO_INFER_SCHEMA
+    // the store leaves' read schema: batch_id never appears (live
+    // partitions are resolved through the manifest and read as leaf dirs)
     val sigSchema = StructType(
-      StructField("doc_id", org.apache.spark.sql.types.LongType) +:
+      StructField("doc_id", LongType) +:
         (0 until numHashes).map(i => StructField(s"h$i", StringType)))
-    val stream = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(incomingDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.hadoop.fs.Path
-        val sigPath = new Path(sigDir)
-        val fs = sigPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // live partitions resolve through the store MANIFEST (segments
-        // + unfolded batch dirs) so compaction can run concurrently —
-        // a REPLAYED batch (crash after the sink writes, before the
-        // checkpoint commit) must not see its own persisted signatures
-        // (it would band-collide every one of its docs with itself and
-        // overwrite the batch dirs with empty: permanent loss), so its
-        // own partition is excluded at PATH level; the fold never
-        // covers the newest partition, so replayed rows can never hide
-        // inside a segment.
-        // one listing serves BOTH the fresh-checkpoint watermark
-        // refusal and the live-path resolution
-        val sigLive = graft.util.StoreManifest.livePathsChecked(fs, sigDir,
-          batchId)
-        val corpusSig =
-          if (sigLive.nonEmpty)
-            spark.read.schema(sigSchema).parquet(sigLive: _*)
-          else
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              sigSchema)
-        // ONE signature pass per batch (the shingle+hash stage dominates
-        // at scale — see Dedup.writeSignatures); admission, intra-batch
-        // pairs, and the persisted store all derive from it. The batch
-        // itself is cached too: it is admission-bounded, and both the
-        // signature pass and the doc sink pull it — uncached each
-        // re-reads the source files
-        val cachedBatch = prepare(batch).cache()
-        val sig = Dedup.minhashSignatures(cachedBatch, shingleK, numHashes).cache()
-        try {
-          val corpusBands = Dedup.bandTable(corpusSig, numHashes, rowsPerBand)
-            .select("bk")
-          // the STORE side must never shuffle (r19): the old
-          // batch-left_semi-store SMJ re-shuffled the whole store's
-          // band table every micro-batch — per-batch cost GROWING with
-          // store size. The batch side is bounded by the admission
-          // unit (maxFilesPerTrigger), i.e. broadcast-safe by
-          // construction: inner-BHJ the store scan against a hash of
-          // the batch's band keys, then distinct(doc_id) — row-set ≡
-          // the left_semi (exists) semantics, both sides already
-          // null-band-free (bandTable drops null keys).
-          val batchBands = Dedup.bandTable(sig, numHashes, rowsPerBand)
-            .select("doc_id", "bk")
-          val dupIds = corpusBands
-            .join(org.apache.spark.sql.functions.broadcast(batchBands), Seq("bk"))
-            .select("doc_id").distinct()
-          // cached: the store-read + double-band-join plan above it is
-          // the batch's second-heaviest stage and THREE consumers pull
-          // it (intra-batch pairs, the cluster keep-set, the sig sink);
-          // uncached it re-executed per action.
-          // dupIds is ≤ batch-sized — broadcast the anti-join build
-          // side (2 fewer exchanges per batch; left_anti builds right)
-          val survivorSig = sig.join(
-            org.apache.spark.sql.functions.broadcast(dupIds),
-            Seq("doc_id"), "left_anti").cache()
-          try {
-            // survivorSig is cached and batch-bounded, so the planner
-            // broadcasts the band self-join here without a hint
-            val pairs = Dedup.candidatePairsFromSignatures(
-              survivorSig, numHashes, rowsPerBand).select("doc_a", "doc_b")
-            // micro-batch pair tables are usually tiny (tens of pairs
-            // per thousand docs), so clustersFromPairs labels them on
-            // the driver; its size gate keeps the distributed loop for
-            // genuinely large batches. keep is batch-bounded (≤ one
-            // doc_id per batch doc) — eagerly checkpointed so the two
-            // sink writes below consume materialized ids instead of
-            // re-running the cluster plan each
-            val keep = Dedup.clustersFromPairs(survivorSig.select("doc_id"), pairs)
-              .filter(col("doc_id") === col("cluster_id")).select("doc_id")
-              .localCheckpoint(true)
-            // both sinks consume the MATERIALIZED keep set and the
-            // already-hot caches — independent, so overlapped (§2.6);
-            // order between them was never contract-bearing: each is a
-            // batch_id-scoped overwrite a replayed batch rewrites
-            // wholesale (spec: replay from a half-written batch)
-            runSinksConcurrently(Seq(
-              () => cachedBatch.join(keep, Seq("doc_id"), "left_semi")
-                .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId"),
-              () => sig.join(keep, Seq("doc_id"), "left_semi")
-                .write.mode("overwrite").parquet(s"$sigDir/batch_id=$batchId")))
-            failHook(batch, batchId) // test seam: crash AFTER sinks, BEFORE commit
-          } finally survivorSig.unpersist()
-        } finally { sig.unpersist(); cachedBatch.unpersist() }
-        ()
-      }
+    microBatches(jsonFiles(spark, docSchema, incomingDir, maxFilesPerTrigger),
+        checkpoint, trigger) { b =>
+      // live partitions resolve through the store MANIFEST (segments
+      // + unfolded batch dirs) so compaction can run concurrently —
+      // a REPLAYED batch (crash after the sink writes, before the
+      // checkpoint commit) must not see its own persisted signatures
+      // (it would band-collide every one of its docs with itself and
+      // overwrite the batch dirs with empty: permanent loss), so its
+      // own partition is excluded at PATH level; the fold never
+      // covers the newest partition, so replayed rows can never hide
+      // inside a segment.
+      val corpusSig = liveStore(spark, sigDir, b.id, sigSchema)
+      // ONE signature pass per batch (the shingle+hash stage dominates
+      // at scale — see Dedup.writeSignatures); admission, intra-batch
+      // pairs, and the persisted store all derive from it. The batch
+      // itself is cached too: it is admission-bounded, and both the
+      // signature pass and the doc sink pull it — uncached each
+      // re-reads the source files
+      val cachedBatch = b.cache(prepare(b.df))
+      val sig = b.cache(Dedup.minhashSignatures(cachedBatch, shingleK, numHashes))
+      val corpusBands = Dedup.bandTable(corpusSig, numHashes, rowsPerBand)
+        .select("bk")
+      // the STORE side must never shuffle (r19): the old
+      // batch-left_semi-store SMJ re-shuffled the whole store's
+      // band table every micro-batch — per-batch cost GROWING with
+      // store size. The batch side is bounded by the admission
+      // unit (maxFilesPerTrigger), i.e. broadcast-safe by
+      // construction: inner-BHJ the store scan against a hash of
+      // the batch's band keys, then distinct(doc_id) — row-set ≡
+      // the left_semi (exists) semantics, both sides already
+      // null-band-free (bandTable drops null keys).
+      val batchBands = Dedup.bandTable(sig, numHashes, rowsPerBand)
+        .select("doc_id", "bk")
+      val dupIds = corpusBands
+        .join(broadcast(batchBands), Seq("bk"))
+        .select("doc_id").distinct()
+      // cached: the store-read + double-band-join plan above it is
+      // the batch's second-heaviest stage and THREE consumers pull
+      // it (intra-batch pairs, the cluster keep-set, the sig sink);
+      // uncached it re-executed per action.
+      // dupIds is ≤ batch-sized — broadcast the anti-join build
+      // side (2 fewer exchanges per batch; left_anti builds right)
+      val survivorSig = b.cache(sig.join(broadcast(dupIds), Seq("doc_id"), "left_anti"))
+      // survivorSig is cached and batch-bounded, so the planner
+      // broadcasts the band self-join here without a hint
+      val pairs = Dedup.candidatePairsFromSignatures(
+        survivorSig, numHashes, rowsPerBand).select("doc_a", "doc_b")
+      // micro-batch pair tables are usually tiny (tens of pairs
+      // per thousand docs), so clustersFromPairs labels them on
+      // the driver; its size gate keeps the distributed loop for
+      // genuinely large batches. keep is batch-bounded (≤ one
+      // doc_id per batch doc) — eagerly checkpointed so the two
+      // sink writes below consume materialized ids instead of
+      // re-running the cluster plan each
+      val keep = Dedup.clustersFromPairs(survivorSig.select("doc_id"), pairs)
+        .filter(col("doc_id") === col("cluster_id")).select("doc_id")
+        .localCheckpoint(true)
+      // both sinks consume the MATERIALIZED keep set and the
+      // already-hot caches; order between them was never
+      // contract-bearing (spec: replay from a half-written batch)
+      b.write(
+        Sink(outDir, "parquet", cachedBatch.join(keep, Seq("doc_id"), "left_semi")),
+        Sink(sigDir, "parquet", sig.join(keep, Seq("doc_id"), "left_semi")))
+      failHook(b.df, b.id) // test seam: crash AFTER sinks, BEFORE commit
+    }
   }
 
   /** Exact-dedup streaming admission over a PERSISTED Bloom sketch —
@@ -697,108 +713,98 @@ object StreamingPipeline {
                              expectedItems: Long = 1000000L,
                              fpp: Double = 0.01,
                              failHook: (DataFrame, Long) => Unit = (_, _) => ())
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(expectedItems > 0 && fpp > 0 && fpp < 1,
       s"bad sketch params: expectedItems=$expectedItems fpp=$fpp")
-    val stream = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(incomingDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.hadoop.fs.Path
-        import org.apache.spark.util.sketch.BloomFilter
-        val dir = new Path(sketchDir)
-        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.mkdirs(dir)
-        val VerName = "sketch_v(\\d+)".r
-        def versions(): Seq[Long] = fs.listStatus(dir).toSeq
-          .flatMap(_.getPath.getName match {
-            case VerName(v) => Some(v.toLong)
-            case _ => None
-          })
-        // A version numbered ABOVE the current batch can only come from
-        // a mismatched checkpoint/sketchDir pairing (e.g. the checkpoint
-        // was wiped, restarting batchId at 0, while stale sketch_v* from
-        // the prior incarnation survive). Left alone they would silently
-        // become the "newest version < batchId" once batchId catches up,
-        // merging obsolete membership and over-rejecting novel docs —
-        // fail loud instead, like the bitSize require below. A version
-        // EQUAL to batchId is legitimate (crash-replay after the sketch
-        // write, before the commit) and is overwritten via tmp+rename.
-        val seen = versions()
-        require(seen.forall(_ <= batchId),
-          s"sketch dir $sketchDir has versions ${seen.filter(_ > batchId).sorted.mkString(",")} " +
-            s"ahead of batch $batchId: checkpoint and sketch directory are from " +
-            "different incarnations — restore the matching checkpoint, or delete " +
-            "the sketch directory to rebuild membership from scratch")
-        val prevId = seen.filter(_ < batchId).sorted.lastOption
-        val prev: Option[BloomFilter] = prevId.map { v =>
-          val in = fs.open(new Path(dir, s"sketch_v$v"))
-          try BloomFilter.readFrom(in) finally in.close()
-        }
-        val withFp = batch.withColumn("__f",
-          md5(regexp_replace(lower(col("text")), "[^a-z0-9]", "")))
-        val pastSketch = prev match {
-          case Some(bf) =>
-            val bc = spark.sparkContext.broadcast(bf)
-            val mc = udf((s: String) => s != null && bc.value.mightContain(s))
-            withFp.filter(!mc(col("__f")))
-          case None => withFp
-        }
-        // intra-batch exact collapse (batch-bounded groupBy); null
-        // fingerprints bypass it and are admitted as-is
-        val rep = pastSketch.filter(col("__f").isNotNull)
-          .groupBy("__f").agg(min("doc_id").as("doc_id")).select("doc_id")
-        val admitted = pastSketch
-          .join(rep, Seq("doc_id"), "left_semi")
-          .unionByName(pastSketch.filter(col("__f").isNull))
-          .cache()
-        try {
-          admitted.drop("__f")
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-          // Spark's stat.bloomFilter NPEs on an EMPTY input (its
-          // internal aggregate yields null bytes) — empty batches
-          // (e.g. the trailing AvailableNow commit batch) carry the
-          // previous sketch forward unchanged
-          val fps = admitted.filter(col("__f").isNotNull).select("__f")
-          val merged =
-            if (fps.isEmpty) prev.getOrElse(BloomFilter.create(expectedItems, fpp))
-            else {
-              val batchBf = fps.stat.bloomFilter("__f", expectedItems, fpp)
-              prev match {
-                case Some(p) =>
-                  // fail LOUD with the cause: restarting with different
-                  // (expectedItems, fpp) changes the bit size and the
-                  // merge throws IncompatibleMergeException on every
-                  // retry of every batch — a permanent wedge whose
-                  // remedy (keep the original params, or wipe sketchDir
-                  // and accept re-admission of history) the operator
-                  // must choose explicitly
-                  require(p.bitSize() == batchBf.bitSize(),
-                    s"persisted sketch (bitSize=${p.bitSize()}) is incompatible " +
-                      s"with expectedItems=$expectedItems fpp=$fpp " +
-                      s"(bitSize=${batchBf.bitSize()}): the sketch never resizes — " +
-                      "restart with the original parameters, or delete the sketch " +
-                      "directory to rebuild membership from scratch")
-                  p.mergeInPlace(batchBf); p
-                case None => batchBf
-              }
-            }
-          // tmp + rename: the version either exists complete or not at
-          // all — a half-written sketch must never be readable, and a
-          // silently failed rename would let later batches re-admit
-          // this batch's duplicates from an older version
-          graft.util.StoreManifest.publishFile(fs,
-              new Path(dir, s".sketch_v$batchId.tmp"),
-              new Path(dir, s"sketch_v$batchId"))(merged.writeTo)
-          failHook(batch, batchId) // test seam: crash AFTER sinks, BEFORE commit
-          versions().filter(_ < batchId - 1).foreach(v =>
-            fs.delete(new Path(dir, s"sketch_v$v"), false))
-        } finally admitted.unpersist()
-        ()
+    microBatches(jsonFiles(spark, docSchema, incomingDir, maxFilesPerTrigger),
+        checkpoint, trigger) { b =>
+      import org.apache.hadoop.fs.Path
+      import org.apache.spark.util.sketch.BloomFilter
+      val dir = new Path(sketchDir)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(dir)
+      val VerName = "sketch_v(\\d+)".r
+      def versions(): Seq[Long] = fs.listStatus(dir).toSeq
+        .flatMap(_.getPath.getName match {
+          case VerName(v) => Some(v.toLong)
+          case _ => None
+        })
+      // A version numbered ABOVE the current batch can only come from
+      // a mismatched checkpoint/sketchDir pairing (e.g. the checkpoint
+      // was wiped, restarting batchId at 0, while stale sketch_v* from
+      // the prior incarnation survive). Left alone they would silently
+      // become the "newest version < batchId" once batchId catches up,
+      // merging obsolete membership and over-rejecting novel docs —
+      // fail loud instead, like the bitSize require below. A version
+      // EQUAL to batchId is legitimate (crash-replay after the sketch
+      // write, before the commit) and is overwritten via tmp+rename.
+      val seen = versions()
+      require(seen.forall(_ <= b.id),
+        s"sketch dir $sketchDir has versions ${seen.filter(_ > b.id).sorted.mkString(",")} " +
+          s"ahead of batch ${b.id}: checkpoint and sketch directory are from " +
+          "different incarnations — restore the matching checkpoint, or delete " +
+          "the sketch directory to rebuild membership from scratch")
+      val prevId = seen.filter(_ < b.id).sorted.lastOption
+      val prev: Option[BloomFilter] = prevId.map { v =>
+        val in = fs.open(new Path(dir, s"sketch_v$v"))
+        try BloomFilter.readFrom(in) finally in.close()
       }
+      val withFp = b.df.withColumn("__f",
+        md5(regexp_replace(lower(col("text")), "[^a-z0-9]", "")))
+      val pastSketch = prev match {
+        case Some(bf) =>
+          val bc = spark.sparkContext.broadcast(bf)
+          val mc = udf((s: String) => s != null && bc.value.mightContain(s))
+          withFp.filter(!mc(col("__f")))
+        case None => withFp
+      }
+      // intra-batch exact collapse (batch-bounded groupBy); null
+      // fingerprints bypass it and are admitted as-is
+      val rep = pastSketch.filter(col("__f").isNotNull)
+        .groupBy("__f").agg(min("doc_id").as("doc_id")).select("doc_id")
+      val admitted = b.cache(pastSketch
+        .join(rep, Seq("doc_id"), "left_semi")
+        .unionByName(pastSketch.filter(col("__f").isNull)))
+      b.write(Sink(outDir, "parquet", admitted.drop("__f")))
+      // Spark's stat.bloomFilter NPEs on an EMPTY input (its
+      // internal aggregate yields null bytes) — empty batches
+      // (e.g. the trailing AvailableNow commit batch) carry the
+      // previous sketch forward unchanged
+      val fps = admitted.filter(col("__f").isNotNull).select("__f")
+      val merged =
+        if (fps.isEmpty) prev.getOrElse(BloomFilter.create(expectedItems, fpp))
+        else {
+          val batchBf = fps.stat.bloomFilter("__f", expectedItems, fpp)
+          prev match {
+            case Some(p) =>
+              // fail LOUD with the cause: restarting with different
+              // (expectedItems, fpp) changes the bit size and the
+              // merge throws IncompatibleMergeException on every
+              // retry of every batch — a permanent wedge whose
+              // remedy (keep the original params, or wipe sketchDir
+              // and accept re-admission of history) the operator
+              // must choose explicitly
+              require(p.bitSize() == batchBf.bitSize(),
+                s"persisted sketch (bitSize=${p.bitSize()}) is incompatible " +
+                  s"with expectedItems=$expectedItems fpp=$fpp " +
+                  s"(bitSize=${batchBf.bitSize()}): the sketch never resizes — " +
+                  "restart with the original parameters, or delete the sketch " +
+                  "directory to rebuild membership from scratch")
+              p.mergeInPlace(batchBf); p
+            case None => batchBf
+          }
+        }
+      // tmp + rename: the version either exists complete or not at
+      // all — a half-written sketch must never be readable, and a
+      // silently failed rename would let later batches re-admit
+      // this batch's duplicates from an older version
+      graft.util.StoreManifest.publishFile(fs,
+          new Path(dir, s".sketch_v${b.id}.tmp"),
+          new Path(dir, s"sketch_v${b.id}"))(merged.writeTo)
+      failHook(b.df, b.id) // test seam: crash AFTER sinks, BEFORE commit
+      versions().filter(_ < b.id - 1).foreach(v =>
+        fs.delete(new Path(dir, s"sketch_v$v"), false))
+    }
   }
 
   /** Continuous SEMANTIC admission — the third gate at the admission
@@ -848,7 +854,7 @@ object StreamingPipeline {
                                 tau: Double = 0.9, nBits: Int = 8,
                                 dim: Int = 64,
                                 failHook: (DataFrame, Long) => Unit = (_, _) => ())
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     import graft.analytics.{Dedup, Similarity}
     require(tau > 0 && tau <= 1, s"tau must be in (0,1]: $tau")
     // leaf-dir read schema: batch_id never appears (live partitions
@@ -856,88 +862,64 @@ object StreamingPipeline {
     val storeSchema = StructType(Seq(
       StructField("vec_id", LongType), StructField("bucket", LongType),
       StructField("vec", ArrayType(DoubleType))))
-    val stream = spark.readStream.schema(vecSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(incomingDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.hadoop.fs.Path
-        val storePath = new Path(storeDir)
-        val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // (nBits, dim, tau-independent) bucketing params are the
-        // store's identity: drifting them mis-buckets every lookup
-        // with zero errors surfaced — pin on first write, verify after
-        val paramsFile = new Path(storeDir + "_params")
-        val wantParams = s"nBits=$nBits dim=$dim"
-        if (fs.exists(paramsFile)) {
-          val got = graft.util.StoreManifest.readPin(fs, paramsFile)
-          require(got == wantParams,
-            s"semantic store $storeDir was built with ($got) but this " +
-              s"pipeline runs ($wantParams): bucketing params are the " +
-              "store's identity — restart with the original parameters, " +
-              "or delete the store to rebuild membership from scratch")
-        } else {
-          // pin BEFORE the first store write (a crash between a sink
-          // write and a later pin would leave store rows whose params
-          // the next, possibly drifted, incarnation could not check)
-          // and ATOMICALLY via tmp+rename (the Bloom-sketch publish
-          // pattern): a crash mid-write must never leave a truncated
-          // pin that bricks every restart with a garbage mismatch
-          graft.util.StoreManifest.publishPin(fs, paramsFile, wantParams)
-        }
-        val cachedBatch = batch.cache()
-        try {
-          // the batch's bucket cover — bounded by batch rows; pushed
-          // into the store scan as an In() filter (never a full scan)
-          val batchBuckets = cachedBatch
-            .filter(col("embedding").isNotNull)
-            .select(Similarity.srpBucket(col("embedding"), dim, nBits)
-              .as("bucket"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          // live partitions resolve through the store MANIFEST so
-          // compaction can run concurrently; replay exclusion is at
-          // PATH level (admissionPipeline's rationale — the fold
-          // never covers the newest partition)
-          // one listing: watermark refusal + live-path resolution
-          val storeLive = graft.util.StoreManifest.livePathsChecked(fs,
-            storeDir, batchId)
-          val store =
-            if (storeLive.nonEmpty)
-              spark.read.schema(storeSchema).parquet(storeLive: _*)
-                .filter(col("bucket").isInCollection(
-                  if (batchBuckets.isEmpty) Seq(-1L) else batchBuckets))
-                .select("bucket", "vec")
-            else
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                StructType(Seq(StructField("bucket", LongType),
-                  StructField("vec", ArrayType(DoubleType)))))
-          // eagerly materialized: both sinks consume the decision —
-          // uncheckpointed, each would re-run the store join
-          val admitted = Dedup.semanticAdmit(store, cachedBatch, tau, nBits,
-              Some(dim))
-            .filter(col("admitted")).select("vec_id", "bucket")
-            .localCheckpoint(true)
-          // both sinks consume the CHECKPOINTED decision + the hot
-          // cache — independent batch_id-scoped overwrites,
-          // overlapped (§2.6, the admissionPipeline discipline); a
-          // crash leaving either dir alone replays wholesale (the
-          // store read excludes the replayed batch's own partition
-          // at PATH level — spec: half-written replay)
-          runSinksConcurrently(Seq(
-            () => cachedBatch.join(admitted.select("vec_id"), Seq("vec_id"), "left_semi")
-              .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId"),
-            () => cachedBatch.filter(col("embedding").isNotNull)
-              .select(col("vec_id"), col("embedding").as("vec"))
-              .join(admitted, Seq("vec_id"))
-              .select(col("vec_id"), col("bucket"), col("vec"))
-              .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")))
-          failHook(batch, batchId) // test seam: crash AFTER sinks, BEFORE commit
-        } finally cachedBatch.unpersist()
-        ()
+    microBatches(jsonFiles(spark, vecSchema, incomingDir, maxFilesPerTrigger),
+        checkpoint, trigger) { b =>
+      import org.apache.hadoop.fs.Path
+      val storePath = new Path(storeDir)
+      val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // (nBits, dim, tau-independent) bucketing params are the
+      // store's identity: drifting them mis-buckets every lookup
+      // with zero errors surfaced — pin on first write, verify after
+      val paramsFile = new Path(storeDir + "_params")
+      val wantParams = s"nBits=$nBits dim=$dim"
+      if (fs.exists(paramsFile)) {
+        val got = graft.util.StoreManifest.readPin(fs, paramsFile)
+        require(got == wantParams,
+          s"semantic store $storeDir was built with ($got) but this " +
+            s"pipeline runs ($wantParams): bucketing params are the " +
+            "store's identity — restart with the original parameters, " +
+            "or delete the store to rebuild membership from scratch")
+      } else {
+        // pin BEFORE the first store write (a crash between a sink
+        // write and a later pin would leave store rows whose params
+        // the next, possibly drifted, incarnation could not check)
+        // and ATOMICALLY via tmp+rename (the Bloom-sketch publish
+        // pattern): a crash mid-write must never leave a truncated
+        // pin that bricks every restart with a garbage mismatch
+        graft.util.StoreManifest.publishPin(fs, paramsFile, wantParams)
       }
+      val cachedBatch = b.cache(b.df)
+      // the batch's bucket cover — bounded by batch rows; pushed
+      // into the store scan as an In() filter (never a full scan)
+      val batchBuckets = cachedBatch
+        .filter(col("embedding").isNotNull)
+        .select(Similarity.srpBucket(col("embedding"), dim, nBits)
+          .as("bucket"))
+        .distinct().collect().map(_.getLong(0)).toSeq
+      // replay exclusion at PATH level (admissionPipeline's rationale
+      // — the fold never covers the newest partition)
+      val store = liveStore(spark, storeDir, b.id, storeSchema)
+        .filter(col("bucket").isInCollection(
+          if (batchBuckets.isEmpty) Seq(-1L) else batchBuckets))
+        .select("bucket", "vec")
+      // eagerly materialized: both sinks consume the decision —
+      // uncheckpointed, each would re-run the store join
+      val admitted = Dedup.semanticAdmit(store, cachedBatch, tau, nBits,
+          Some(dim))
+        .filter(col("admitted")).select("vec_id", "bucket")
+        .localCheckpoint(true)
+      // both sinks consume the CHECKPOINTED decision + the hot
+      // cache; a crash leaving either dir alone replays wholesale
+      // (spec: half-written replay)
+      b.write(
+        Sink(outDir, "parquet",
+          cachedBatch.join(admitted.select("vec_id"), Seq("vec_id"), "left_semi")),
+        Sink(storeDir, "parquet", cachedBatch.filter(col("embedding").isNotNull)
+          .select(col("vec_id"), col("embedding").as("vec"))
+          .join(admitted, Seq("vec_id"))
+          .select(col("vec_id"), col("bucket"), col("vec"))))
+      failHook(b.df, b.id) // test seam: crash AFTER sinks, BEFORE commit
+    }
   }
 
   /** Continuous ANN INDEX MAINTENANCE — the streaming wrapper
@@ -968,111 +950,92 @@ object StreamingPipeline {
                                trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
                                maxFilesPerTrigger: Int = 16,
                                failHook: (DataFrame, Long) => Unit = (_, _) => ())
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val stream = spark.readStream.schema(vecSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(incomingDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // EMPTY batch: skip the delta write AND the pin transition — a
-        // zero-row batch_id partition would flip deltaHasCodes true
-        // permanently, wedging a later legitimate retrain against data
-        // that does not exist (replaying the skip is trivially
-        // idempotent: nothing was written either time). NOT a `return`:
-        // a return inside this lambda would throw NonLocalReturnControl
-        // at runtime (the enclosing method has long since returned).
-        if (!batch.isEmpty) {
-          import org.apache.hadoop.fs.Path
-          // ONE model collect per batch: id + encoder share it (two
-          // separate collects would read the model parquet twice per
-          // batch — the round-7 admission fixed-cost lesson)
-          val (modelId, encode) = graft.analytics.Similarity.ivfPqFrozenEncoder(
-            spark.read.parquet(s"$indexDir/cells"),
-            spark.read.parquet(s"$indexDir/codebook"))
-          // the MODEL is the delta's identity (the semantic store's
-          // _params discipline): pin its content id before the first
-          // write, verify every batch — encoding against a retrained
-          // index would mix two codebooks' bytes in one delta with
-          // zero errors surfaced until search returns garbage
-          val pinPath = new Path(deltaDir + "_model_id")
-          val fs = pinPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val dPath = new Path(deltaDir)
-          // "has codes" = at least one published batch partition
-          // holding a COMMITTED parquet data file — the guard BOTH pin
-          // transitions need: a pin may only be written (or replaced)
-          // while the delta holds NO codes. Stamping a pre-existing
-          // unpinned delta would launder the very mismatch the pin
-          // detects; refusing to replace an ORPHAN pin (batch 0
-          // crashed between pin and first write) would wedge a
-          // legitimate retrain against data that doesn't exist. The
-          // "holds codes" = EXACTLY what a reader would resolve
-          // (manifested segments ∪ committed batch dirs) — the pin
-          // gate and maintainedCodes must never disagree about
-          // whether rows exist, or a retrain-mismatch could be
-          // laundered by re-stamping the pin over live-but-unseen
-          // codes (a crashed write's `_temporary`-only dir still
-          // counts as nothing)
-          def deltaHasCodes: Boolean =
-            graft.util.StoreManifest.livePaths(fs, deltaDir).nonEmpty
-          val pinOk = if (fs.exists(pinPath)) {
-            val got = graft.util.StoreManifest.readPin(fs, pinPath)
-            require(got == modelId || !deltaHasCodes,
-              s"delta $deltaDir is pinned to model $got but $indexDir now " +
-                s"holds model $modelId (retrained?): appending would mix " +
-                "codebooks in one delta — discard the delta (and this " +
-                "checkpoint) to maintain the new model, or restore the old " +
-                "index")
-            got == modelId
-          } else {
-            require(!deltaHasCodes,
-              s"delta $deltaDir holds code partitions but no model-id pin: " +
-                "their producing model cannot be proven — discard the delta " +
-                "(and this checkpoint), or restore its pin file")
-            false
-          }
-          // empty delta: (re)pin atomically, tmp+rename, BEFORE the
-          // first write of this incarnation
-          if (!pinOk) graft.util.StoreManifest.publishPin(fs, pinPath, modelId)
-          // fresh-checkpoint hazard (admissionPipeline's rationale): a
-          // restarted-id batch at or below the delta's folded watermark
-          // would write reader-invisible codes — refuse loudly
-          graft.util.StoreManifest.requireBatchAboveFold(fs, deltaDir, batchId)
-          encode(batch)
-            .write.mode("overwrite").parquet(s"$deltaDir/batch_id=$batchId")
-          failHook(batch, batchId) // test seam: crash AFTER sink, BEFORE commit
+      : DataStreamWriter[Row] =
+    microBatches(jsonFiles(spark, vecSchema, incomingDir, maxFilesPerTrigger),
+        checkpoint, trigger) { b =>
+      // EMPTY batch: skip the delta write AND the pin transition — a
+      // zero-row batch_id partition would flip deltaHasCodes true
+      // permanently, wedging a later legitimate retrain against data
+      // that does not exist (replaying the skip is trivially
+      // idempotent: nothing was written either time). NOT a `return`:
+      // a return inside this lambda would throw NonLocalReturnControl
+      // at runtime (the enclosing method has long since returned).
+      if (!b.df.isEmpty) {
+        import org.apache.hadoop.fs.Path
+        // ONE model collect per batch: id + encoder share it (two
+        // separate collects would read the model parquet twice per
+        // batch — the round-7 admission fixed-cost lesson)
+        val (modelId, encode) = graft.analytics.Similarity.ivfPqFrozenEncoder(
+          spark.read.parquet(s"$indexDir/cells"),
+          spark.read.parquet(s"$indexDir/codebook"))
+        // the MODEL is the delta's identity (the semantic store's
+        // _params discipline): pin its content id before the first
+        // write, verify every batch — encoding against a retrained
+        // index would mix two codebooks' bytes in one delta with
+        // zero errors surfaced until search returns garbage
+        val pinPath = new Path(deltaDir + "_model_id")
+        val fs = pinPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // "has codes" = at least one published batch partition
+        // holding a COMMITTED parquet data file — the guard BOTH pin
+        // transitions need: a pin may only be written (or replaced)
+        // while the delta holds NO codes. Stamping a pre-existing
+        // unpinned delta would launder the very mismatch the pin
+        // detects; refusing to replace an ORPHAN pin (batch 0
+        // crashed between pin and first write) would wedge a
+        // legitimate retrain against data that doesn't exist. The
+        // "holds codes" = EXACTLY what a reader would resolve
+        // (manifested segments ∪ committed batch dirs) — the pin
+        // gate and maintainedCodes must never disagree about
+        // whether rows exist, or a retrain-mismatch could be
+        // laundered by re-stamping the pin over live-but-unseen
+        // codes (a crashed write's `_temporary`-only dir still
+        // counts as nothing)
+        def deltaHasCodes: Boolean =
+          graft.util.StoreManifest.livePaths(fs, deltaDir).nonEmpty
+        val pinOk = if (fs.exists(pinPath)) {
+          val got = graft.util.StoreManifest.readPin(fs, pinPath)
+          require(got == modelId || !deltaHasCodes,
+            s"delta $deltaDir is pinned to model $got but $indexDir now " +
+              s"holds model $modelId (retrained?): appending would mix " +
+              "codebooks in one delta — discard the delta (and this " +
+              "checkpoint) to maintain the new model, or restore the old " +
+              "index")
+          got == modelId
+        } else {
+          require(!deltaHasCodes,
+            s"delta $deltaDir holds code partitions but no model-id pin: " +
+              "their producing model cannot be proven — discard the delta " +
+              "(and this checkpoint), or restore its pin file")
+          false
         }
-        ()
+        // empty delta: (re)pin atomically, tmp+rename, BEFORE the
+        // first write of this incarnation
+        if (!pinOk) graft.util.StoreManifest.publishPin(fs, pinPath, modelId)
+        // fresh-checkpoint hazard (admissionPipeline's rationale): a
+        // restarted-id batch at or below the delta's folded watermark
+        // would write reader-invisible codes — refuse loudly
+        graft.util.StoreManifest.requireBatchAboveFold(fs, deltaDir, b.id)
+        b.write(Sink(deltaDir, "parquet", encode(b.df)))
+        failHook(b.df, b.id) // test seam: crash AFTER sink, BEFORE commit
       }
-  }
+    }
 
-  /** Compact a batch_id-partitioned admission STORE — the small-files
-    * maintenance op the continuous pipelines need at scale: a 10 s
-    * trigger writes 8,640 partitions per DAY into the signature /
-    * semantic store, and every micro-batch re-lists and re-plans over
-    * all of them (store read cost grows with LIFETIME batches, not
-    * store rows). Folds every committed partition below the newest
-    * into one segment via the MANIFEST protocol ([[compactStoreCore]]
-    * / [[graft.util.StoreManifest]]) — LIVE-safe: it may run
-    * concurrently with the admission pipeline, because readers resolve
-    * the partition list through the manifest, the swap is one atomic
-    * create-once manifest file, and nothing a pre-swap reader planned
-    * is deleted until the NEXT maintenance entry. The pre-manifest
-    * protocol published duplicate rows into a shared partition and had
-    * to run offline (a live reader's planned file list could be
-    * deleted under it); both constraints are gone.
+  /** Compact a batch_id-partitioned STORE — the one small-files
+    * maintenance op for every parquet store the continuous pipelines
+    * write: [[admissionPipeline]]'s signatures,
+    * [[semanticAdmissionPipeline]]'s vectors and
+    * [[indexMaintenancePipeline]]'s codes delta. A 10 s trigger writes
+    * 8,640 partitions per DAY into each, and every reader (each
+    * admission micro-batch, each [[graft.analytics.Similarity
+    * .maintainedCodes]] search) re-lists and re-plans over all of them:
+    * read cost grows with LIFETIME batches, not store rows. The Bloom
+    * store is one sketch file per version and self-prunes; the delta's
+    * model-id pin is never touched.
     *
-    * Applies to the parquet stores ([[admissionPipeline]]'s
-    * signatures, [[semanticAdmissionPipeline]]'s vectors); the Bloom
-    * store is one sketch file per version and self-prunes. */
-  def compactAdmissionStore(spark: SparkSession, storeDir: String,
-                            outputFiles: Int = 1,
-                            failAt: String => Unit = _ => ()): (Int, Int) =
-    compactStoreCore(spark, storeDir, outputFiles, failAt)
-
-  /** The shared manifest-fold core behind [[compactAdmissionStore]]
-    * and [[compactMaintainedDelta]] — LIVE-safe by construction:
+    * Folds every committed partition below the newest into one segment
+    * via the MANIFEST protocol ([[graft.util.StoreManifest]]) — LIVE-safe
+    * by construction, so it may run concurrently with the pipeline and
+    * with searches:
     *
     *  1. Under the `.compact_lock` (create-if-absent; atomic on HDFS,
     *     best-effort on local/object stores; released in finally —
@@ -1096,16 +1059,24 @@ object StreamingPipeline {
     *     [[graft.util.StoreManifest.publish]]). Readers switch
     *     atomically; nothing is deleted.
     *
-    * Duplicate-intolerant for free (the fold product replaces its
-    * inputs in one manifest swap), so the codes delta and the
-    * duplication-tolerant admission stores share this path. Returns
+    * Duplicate-INtolerant by construction: the fold product replaces
+    * its inputs in one manifest swap, so a reader never sees a row
+    * twice — what the codes delta requires (a duplicate CODE row
+    * displaces a genuine top-k result) and the admission stores
+    * tolerate. The pre-manifest protocols (offline-only; the
+    * duplication-based store fold and the journaled directory swap of
+    * the delta) are retired: a store carrying a pending
+    * `.compact_journal` from a crashed pre-manifest run must complete
+    * that fold with the release that wrote it (refused below). Returns
     * (live units before, after) where a unit is a segment or an
     * unfolded batch partition; no-op when there are fewer than two
-    * units to merge below the newest batch. `failAt` is a test seam
-    * ("swept" / "segment_published" / "manifest_swapped"). */
-  private def compactStoreCore(spark: SparkSession, storeDir: String,
-                               outputFiles: Int,
-                               failAt: String => Unit): (Int, Int) = {
+    * units to merge below the newest batch. `outputFiles` sizes the
+    * segment (1 at test scale, more when the store outgrows one
+    * object); `failAt` is a test seam ("swept" / "segment_published" /
+    * "manifest_swapped"). */
+  def compactAdmissionStore(spark: SparkSession, storeDir: String,
+                            outputFiles: Int = 1,
+                            failAt: String => Unit = _ => ()): (Int, Int) = {
     import org.apache.hadoop.fs.Path
     import graft.util.StoreManifest
     require(outputFiles >= 1, s"outputFiles must be >= 1: $outputFiles")
@@ -1114,8 +1085,8 @@ object StreamingPipeline {
     require(fs.exists(root), s"store $storeDir does not exist")
     // a pending PRE-manifest journal means a legacy fold crashed
     // mid-swap: its dot-temp holds the ONLY complete copy of the
-    // covered rows, and this core's sweep would delete it — refuse
-    // HERE (not per wrapper) so no core caller can reach the sweep
+    // covered rows, and the sweep below would delete it — refuse
+    // before taking the lock
     require(!fs.exists(new Path(root, ".compact_journal")),
       s"$storeDir carries a pending pre-manifest compaction journal: its " +
         "covered originals may be partially deleted and the only complete " +
@@ -1139,8 +1110,7 @@ object StreamingPipeline {
       val token = java.util.UUID.randomUUID().toString.take(8)
       val segName = s"seg-$token"
       // leaf dirs are read directly (no batch_id column is inferred and
-      // the fold product carries none); outputFiles sizes the segment
-      // (1 for test-scale, more when the store outgrows one object)
+      // the fold product carries none)
       spark.read.parquet(foldInputs: _*)
         .coalesce(outputFiles)
         .write.mode("overwrite").parquet(s"$storeDir/$segName")
@@ -1154,31 +1124,6 @@ object StreamingPipeline {
       (liveBefore, 1 + batchIds.count(_ > newCoveredMax))
     } finally fs.delete(lock, false)
   }
-
-  /** Compact the MAINTAINED-INDEX codes delta — kills the small-files
-    * growth on the SEARCH path: every [[graft.analytics.Similarity
-    * .maintainedCodes]] query resolves the delta's live partitions, so
-    * its read cost otherwise grows with LIFETIME batches
-    * (8,640 partitions/day at a 10 s trigger).
-    *
-    * Same manifest fold as [[compactAdmissionStore]]
-    * ([[compactStoreCore]]): LIVE-safe — may run concurrently with the
-    * maintenance pipeline AND with searches, because a reader's
-    * resolved file list survives until the next maintenance entry and
-    * the swap is one atomic manifest publish. The manifest protocol is
-    * also duplicate-INtolerant by construction (the fold product
-    * replaces its inputs in one swap — a reader can never see a code
-    * row twice), which is what this store requires: duplicate CODE
-    * rows displace genuine top-k results. The pre-manifest journaled
-    * directory-swap protocol (offline-only — its swap window was
-    * unreadable) is retired; a store carrying a pending
-    * `.compact_journal` from a crashed pre-manifest run must complete
-    * that fold with the old release first (fail-loud below). The
-    * model-id pin is never touched. */
-  def compactMaintainedDelta(spark: SparkSession, deltaDir: String,
-                             outputFiles: Int = 1,
-                             failAt: String => Unit = _ => ()): (Int, Int) =
-    compactStoreCore(spark, deltaDir, outputFiles, failAt)
 
   /** First-class RETRAIN of the maintained IVF-PQ index — the
     * sanctioned path out of the model-id pin's deliberate dead end
@@ -1224,7 +1169,7 @@ object StreamingPipeline {
     import org.apache.hadoop.fs.Path
     val fs = new Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // exclusive lock (the compactMaintainedDelta discipline): the
+    // exclusive lock (the compactAdmissionStore discipline): the
     // orphan sweep below would otherwise delete a CONCURRENT run's
     // in-flight temp — run B sweeping run A's trained-but-unjournaled
     // index turns a race into rotating an EMPTY index dir live. The
@@ -1237,7 +1182,7 @@ object StreamingPipeline {
     val lock = new Path(indexDir + ".reindex_lock")
     acquireLock(fs, lock, "reindex")
     // ALSO hold the delta's .compact_lock while the rotation runs: the
-    // now-LIVE-safe compactMaintainedDelta may be scheduled
+    // LIVE-safe compactAdmissionStore may be scheduled
     // independently, and a fold mid-flight while this rotation deletes
     // the delta dir would resurrect covered rows from its segment (or
     // crash half-published). Same create-if-absent discipline; the
@@ -1269,7 +1214,7 @@ object StreamingPipeline {
         // BEFORE its journal published (mid-train, or between the
         // .complete stamp and the journal rename) — a full-size index
         // copy each; sweep them or every failed retrain strands one
-        // permanently (compactMaintainedDelta's unjournaled-temp sweep,
+        // permanently (the retired delta fold's unjournaled-temp sweep,
         // applied here)
         val parent = new Path(indexDir).getParent
         val baseName = new Path(indexDir).getName
@@ -1384,17 +1329,13 @@ object StreamingPipeline {
                              window_ : String = "60 seconds",
                              watermark: String = "0 seconds",
                              k: Int = 10)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(k >= 1, s"k must be >= 1: $k")
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("text", StringType, nullable = true),
       StructField("ts", TimestampType, nullable = false)))
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(incomingDir)
-    val counts = stream
+    val counts = jsonFiles(spark, docSchema, incomingDir, maxFilesPerTrigger)
       .withWatermark("ts", watermark)
       .select(col("ts"),
         explode(graft.analytics.TextAnalysis.tokens(col("text"))).as("token"))
@@ -1402,22 +1343,15 @@ object StreamingPipeline {
       .agg(count(lit(1)).cast("long").as("n"))
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"), col("token"), col("n"))
-    counts.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.expressions.Window
-        val ranked = batch.withColumn("rk",
-            row_number().over(Window.partitionBy("window_start", "window_end")
-              .orderBy(col("n").desc, col("token"))))
-          .filter(col("rk") <= k)
-          .select(col("window_start"), col("window_end"),
-            col("rk").cast("long").as("rk"), col("token"), col("n"))
-        ranked.write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
+    microBatches(counts, checkpoint, trigger) { b =>
+      import org.apache.spark.sql.expressions.Window
+      b.write(Sink(outDir, "parquet", b.df.withColumn("rk",
+          row_number().over(Window.partitionBy("window_start", "window_end")
+            .orderBy(col("n").desc, col("token"))))
+        .filter(col("rk") <= k)
+        .select(col("window_start"), col("window_end"),
+          col("rk").cast("long").as("rk"), col("token"), col("n"))))
+    }
   }
 
   /** BOUNDED-STATE trending tokens — the unbounded-vocabulary variant

@@ -665,7 +665,7 @@ class PipelineSpec extends SparkSpec {
     // crash AFTER the segment publishes, BEFORE the manifest swap: the
     // unmanifested segment is reader-invisible — view unchanged
     val c1 = intercept[RuntimeException] {
-      StreamingPipeline.compactMaintainedDelta(spark, delta,
+      StreamingPipeline.compactAdmissionStore(spark, delta,
         failAt = s => if (s == "segment_published") throw new RuntimeException("crash1"))
     }
     assert(c1.getMessage == "crash1")
@@ -674,7 +674,7 @@ class PipelineSpec extends SparkSpec {
     // the deterministic interleaving of a concurrent search with every
     // step of the protocol; each must see the identical code set
     val seams = scala.collection.mutable.Buffer[String]()
-    StreamingPipeline.compactMaintainedDelta(spark, delta, failAt = { s =>
+    StreamingPipeline.compactAdmissionStore(spark, delta, failAt = { s =>
       seams += s
       assert(codesSet() == before, s"concurrent reader at seam $s diverged")
     })
@@ -692,7 +692,7 @@ class PipelineSpec extends SparkSpec {
     runOnce()
     val full = codesSet()
     assert(full.size == before.size + 6)
-    val (nb2, na2) = StreamingPipeline.compactMaintainedDelta(spark, delta)
+    val (nb2, na2) = StreamingPipeline.compactAdmissionStore(spark, delta)
     assert(na2 == 2, s"re-fold must converge to [segment, newest]: $nb2 -> $na2")
     assert(codesSet() == full, "re-fold must preserve the exact set")
     // the FIRST fold's covered partitions (0..2) were swept at this
@@ -714,16 +714,16 @@ class PipelineSpec extends SparkSpec {
     // a third fold converges again (3 → 2), then [segment, newest] is a
     // no-op (the newest is never folded; one segment has no merge partner)
     val afterReplay = codesSet()
-    assert(StreamingPipeline.compactMaintainedDelta(spark, delta) == ((3, 2)))
+    assert(StreamingPipeline.compactAdmissionStore(spark, delta) == ((3, 2)))
     assert(codesSet() == afterReplay)
-    val noop = StreamingPipeline.compactMaintainedDelta(spark, delta)
+    val noop = StreamingPipeline.compactAdmissionStore(spark, delta)
     assert(noop == ((2, 2)), s"expected no-op: $noop")
     assert(!Files.exists(Paths.get(delta, ".compact_lock")))
     // a pending PRE-MANIFEST journal refuses loudly (its covered
     // originals may be half-deleted; only the old release can finish it)
     Files.writeString(Paths.get(delta, ".compact_journal"), "tok\n1\n0 1\n")
     val legacy = intercept[IllegalArgumentException] {
-      StreamingPipeline.compactMaintainedDelta(spark, delta)
+      StreamingPipeline.compactAdmissionStore(spark, delta)
     }
     assert(legacy.getMessage.contains("pre-manifest"), legacy.getMessage)
     Files.delete(Paths.get(delta, ".compact_journal"))
@@ -984,6 +984,14 @@ class PipelineSpec extends SparkSpec {
     Seq("batch", "stream", "notify").foreach { p =>
       assert(spark.read.json(s"$base/$p/_errors").count() == 2,
         s"$p must dead-letter the int-error and the malformed event")
+    }
+    // each capture path keeps its own DLQ columns (batch_id is the
+    // streams' partition column, not a written one)
+    Seq("batch" -> Set("source_file", "udm_json"),
+      "stream" -> Set("source_file", "udm_json", "dlq_reason"),
+      "notify" -> Set("message_id", "payload", "dlq_reason")).foreach { case (p, want) =>
+      assert(spark.read.json(s"$base/$p/_errors").columns.toSet - "batch_id" == want,
+        s"$p _errors columns")
     }
   }
 

@@ -337,4 +337,31 @@ class NotifySourceSpec extends SparkSpec {
     val dlq = spark.read.json(s"$out/_errors")
     assert(dlq.filter(col("dlq_reason") === "retry budget exhausted").count() == 1)
   }
+
+  test("a dead-lettered batch leaves its messages only in the DLQ: stale _latency rows are dropped") {
+    val q = Files.createTempDirectory("graft_lq").toString
+    val data = Files.createTempDirectory("graft_ldata").toString
+    val out = Files.createTempDirectory("graft_lout").toString
+    val ckpt = Files.createTempDirectory("graft_lckpt").toString
+    Files.writeString(Paths.get(data, "capture_l.pcap.json"), s"[$goodPacket]")
+    msg(q, "m1", "capture_l.pcap.json", 3100000L)
+    // simulate maxAttempts crashed attempts of batch 0, one of which got
+    // past the sinks and stamped its latency rows before dying
+    val attempts = Paths.get(ckpt, "graft_attempts", "batch-0")
+    Files.createDirectories(attempts)
+    Seq("attempt-0", "attempt-1").foreach(a => Files.createFile(attempts.resolve(a)))
+    Files.createDirectories(Paths.get(out, "_latency/batch_id=0"))
+    Files.writeString(Paths.get(out, "_latency/batch_id=0/part-00000-stale.json"),
+      """{"source_file":"capture_l.pcap.json","publish_ms":3100000,""" +
+        """"commit_ms":3100500,"latency_ms":500}""" + "\n")
+
+    val qq = StreamingPipeline.notifyPipeline(spark, q, data, out, ckpt,
+      trigger = Trigger.AvailableNow(), maxAttempts = 2).start()
+    qq.awaitTermination(120000)
+
+    val dlq = spark.read.json(s"$out/_errors")
+    assert(dlq.filter(col("dlq_reason") === "retry budget exhausted").count() == 1)
+    assert(!Files.exists(Paths.get(out, "_latency/batch_id=0")),
+      "a dead-lettered batch must not keep latency rows from an earlier attempt")
+  }
 }
