@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -16,7 +16,9 @@ import scala.collection.mutable
   * processor/processor_app.py:149–155); the Spark-native shape is a
   * binaryFile scan + per-file decode inside the scan's partitions, so a
   * 1000-executor cluster decodes 1000 pcaps concurrently with no
-  * intermediate files. [[decodePathsContained]] is the one reader.
+  * intermediate files. [[decodePathsContained]] is the one reader; the
+  * notify stream runs its two halves, [[captureFiles]] per batch and
+  * [[decodeColumn]] inside the UDM stage it prepares once per session.
   *
   * Three interchangeable decoders:
   *  - [[PcapParser.nativeDecoder]] (DEFAULT) — a real in-JVM libpcap
@@ -126,13 +128,23 @@ object PcapDecode {
     * index errors, OOM — still fail the task loudly instead of being
     * masked as bad input. */
   def decodePathsContained(spark: SparkSession, paths: Seq[String],
-                           decoder: Decoder = PcapParser.nativeDecoder): DataFrame = {
+                           decoder: Decoder = PcapParser.nativeDecoder): DataFrame =
+    captureFiles(spark, paths)
+      .select(col("path").as("source_file"), decodeColumn(decoder).as("raw"))
+
+  /** The binaryFile scan of `paths`: one `(path, content)` row per
+    * capture, the input of [[decodeColumn]]. */
+  private[graft] def captureFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.format("binaryFile").load(paths: _*).select(col("path"), col("content"))
+
+  /** The contained per-file decode of the `path` and `content` columns
+    * (a generator: one `raw` value per packet, see
+    * [[decodePathsContained]]). */
+  private[graft] def decodeColumn(decoder: Decoder = PcapParser.nativeDecoder): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val packets = DecodeCapture(ColumnBridge.expression(col("path")),
+    ColumnBridge.column(DecodeCapture(ColumnBridge.expression(col("path")),
       ColumnBridge.expression(col("content")),
-      if (decoder eq PcapParser.nativeDecoder) None else Some(decoder))
-    spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path").as("source_file"), ColumnBridge.column(packets).as("raw"))
+      if (decoder eq PcapParser.nativeDecoder) None else Some(decoder)))
   }
 
   private[sources] def contained(e: Throwable): Boolean =

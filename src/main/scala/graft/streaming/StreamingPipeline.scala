@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.udm.UdmTransform
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -56,10 +56,17 @@ object StreamingPipeline {
     * `source_file`, `udm_json`, `is_error` (the DLQ route) and
     * `product_name` (what [[UdmTransform.perFileCounts]] counts). The
     * pipelines cache this output once per batch, so the raw packet and
-    * the event struct are never materialized. */
-  def toUdm(packets: DataFrame): DataFrame = {
+    * the event struct are never materialized. This is the planned form,
+    * which the batch run uses; the streams run the same definition
+    * through [[UdmStage]], planned once per session. */
+  def toUdm(packets: DataFrame): DataFrame =
+    udmColumns(packets, graft.udm.UdmExpressions.isoMicros(current_timestamp()))
+
+  /** [[toUdm]] with the fallback timestamp as ISO text. */
+  private[graft] def udmColumns(packets: DataFrame, fallbackIso: Column): DataFrame = {
     val product = col("event_struct.event.metadata.product_name")
-    UdmTransform.transform(packets, "raw").select(col("source_file"), col("udm_json"),
+    UdmTransform.transformIso(packets, "raw", fallbackIso).select(col("source_file"),
+      col("udm_json"),
       (product.contains("PacketProcessingError") || product.contains("Malformed"))
         .as("is_error"),
       product.as("product_name"))
@@ -83,9 +90,9 @@ object StreamingPipeline {
     * to `_errors` and the batch commits — a poison input dead-letters
     * instead of wedging the stream forever.
     *
-    * `failHook` runs before the sinks on every normal attempt — a test
-    * seam to inject the processing crashes the retry budget guards
-    * (production default is a no-op).
+    * `failHook` runs before the sinks on every normal attempt, on the
+    * batch's [[toUdm]] rows — a test seam to inject the processing
+    * crashes the retry budget guards (production default is a no-op).
     *
     * Call `.start()` on the result (tests use Trigger.AvailableNow via
     * the `trigger` param). */
@@ -95,17 +102,20 @@ object StreamingPipeline {
                maxFilesPerTrigger: Int = 16,
                maxAttempts: Int = 5,
                failHook: (DataFrame, Long) => Unit = (_, _) => ())
-      : DataStreamWriter[Row] =
-    microBatches(toUdm(readPacketStream(spark, landingDir, maxFilesPerTrigger)),
+      : DataStreamWriter[Row] = {
+    UdmStage.stage(spark, UdmStage.TsharkJson) // a stage that cannot run fails here
+    microBatches(readPacketStream(spark, landingDir, maxFilesPerTrigger),
         checkpoint, trigger) { b =>
+      val udm = UdmStage(spark, UdmStage.TsharkJson, b.df, UdmStage.fallbackNow(spark))
       withRetryBudget(spark, checkpoint, outDir, b.id, maxAttempts) {
-        b.write(Sink(s"$outDir/_errors", "json", b.df.select(col("source_file"),
+        b.write(Sink(s"$outDir/_errors", "json", udm.select(col("source_file"),
           col("udm_json"), lit("retry budget exhausted").as("dlq_reason"))))
       } {
-        failHook(b.df, b.id)
-        writeCapture(b, b.cache(b.df), outDir)(identity)
+        failHook(udm, b.id)
+        writeCapture(b, b.cache(udm), outDir)(identity)
       }
     }
+  }
 
   /** One batch_id-scoped sink of a micro-batch: `rows` overwrite
     * `dir/batch_id=N` in `format` (text, json or parquet). */
@@ -166,7 +176,7 @@ object StreamingPipeline {
     * [[notifyPipeline]] share: good events as JSONL (`events`), error
     * and malformed events to the `_errors` DLQ, and per-file
     * packet/error counts to `_notifications` (A1/A2), all three from
-    * the cached [[toUdm]] output `udm` and written concurrently. `dlq`
+    * the cached [[UdmStage]] output `udm` and written concurrently. `dlq`
     * maps the error rows `(source_file, udm_json, dlq_reason)` to the
     * stream's own DLQ columns.
     *
@@ -467,6 +477,8 @@ object StreamingPipeline {
                      maxMessagesPerTrigger: Int = 1024,
                      failHook: (DataFrame, Long) => Unit = (_, _) => ())
       : DataStreamWriter[Row] = {
+    // a stage that cannot run fails here, not at the first batch
+    Seq(UdmStage.Pcap, UdmStage.TsharkJson).foreach(UdmStage.stage(spark, _))
     val notifications = spark.readStream.format("graft-notify")
       .option("ack", ack)
       .option("maxMessagesPerTrigger", maxMessagesPerTrigger)
@@ -486,10 +498,11 @@ object StreamingPipeline {
           // foreign files)
           f.nonEmpty && !f.contains("/") && f != "." && f != ".."
         }
-        import spark.implicits._
-        val dlqInvalid = invalid.toSeq.map { case (m, f, _) => (m, f) }
-          .toDF("message_id", "payload")
-          .withColumn("dlq_reason", lit("invalid filename"))
+        // built only when a name is invalid, at an explicit schema: no
+        // encoder is derived per batch
+        def dlqInvalid = spark.createDataFrame(
+          java.util.Arrays.asList(invalid.map { case (m, f, _) =>
+            Row(m, f, "invalid filename") }: _*), notifyDlqSchema)
         if (valid.nonEmpty) {
           // the reference's full processor path: a payload naming a
           // BINARY capture runs download → decode → transform in this
@@ -499,25 +512,31 @@ object StreamingPipeline {
           val (pcapNames, jsonNames) = valid.partition { case (_, f, _) =>
             f.endsWith(".pcap") || f.endsWith(".pcapng")
           }
+          val fallbackIso = UdmStage.fallbackNow(spark)
           val parts = Seq(
-            if (jsonNames.isEmpty) None else Some(
+            if (jsonNames.isEmpty) None else Some(UdmStage(spark, UdmStage.TsharkJson,
               UdmTransform.splitCaptures(spark.read.option("wholetext", "true")
-                .text(jsonNames.map { case (_, f, _) => s"$dataDir/$f" }: _*))),
-            if (pcapNames.isEmpty) None else Some(
+                .text(jsonNames.map { case (_, f, _) => s"$dataDir/$f" }: _*)),
+              fallbackIso)),
+            if (pcapNames.isEmpty) None else Some(UdmStage(spark, UdmStage.Pcap,
               // contained: ONE corrupt capture DLQs one message (via
-              // the P14 Malformed path), never the whole batch
-              graft.sources.PcapDecode.decodePathsContained(spark,
-                pcapNames.map { case (_, f, _) => s"$dataDir/$f" }.toSeq))
+              // the P14 Malformed path), never the whole batch; the
+              // decode runs inside the prepared stage
+              graft.sources.PcapDecode.captureFiles(spark,
+                pcapNames.map { case (_, f, _) => s"$dataDir/$f" }.toSeq),
+              fallbackIso))
           ).flatten
           // the JSON branch carries packet text and the native pcap
-          // branch packet rows: each goes through the transform on its
-          // own, and the two event sets union. Concurrent first readers
-          // of the unmaterialized cache dedup per block (BlockManager
-          // write locks), so the decode still runs once.
-          val udm = b.cache(parts.map(toUdm).reduce(_ unionByName _))
-          writeCapture(b, udm, outDir)(_.select(col("source_file").as("message_id"),
+          // branch binary captures: each runs through its own prepared
+          // stage, and the two event sets union. Concurrent first
+          // readers of the unmaterialized cache dedup per block
+          // (BlockManager write locks), so the decode still runs once.
+          val udm = b.cache(parts.reduce(_ unionByName _))
+          writeCapture(b, udm, outDir) { errors =>
+            val dlq = errors.select(col("source_file").as("message_id"),
               col("udm_json").as("payload"), col("dlq_reason"))
-            .unionByName(dlqInvalid))
+            if (invalid.isEmpty) dlq else dlq.unionByName(dlqInvalid)
+          }
           // A3: per-file ingest→commit latency, the reference's
           // PROCESSING_DURATION_SECONDS metric per processed file
           // (processor_app.py:174–176) — publish_ms is the queue
@@ -552,6 +571,10 @@ object StreamingPipeline {
       }
     }
   }
+
+  /** The columns of [[notifyPipeline]]'s `_errors` rows. */
+  private val notifyDlqSchema = StructType(Seq("message_id", "payload", "dlq_reason")
+    .map(StructField(_, StringType)))
 
   /** Read schema of the document streams ([[admissionPipeline]],
     * [[bloomAdmissionPipeline]]): JSONL doc_id, text, lang, source. */

@@ -334,7 +334,7 @@ object UdmExpressions {
     udmEventPre(l, try_element_at(tlsRecs, lit(1)),
       sectionValues(f(f(l, "dns"), "Queries"), "dns.qry.name"),
       sectionValues(f(f(l, "dns"), "Answers"), "dns.resp.ttl"),
-      raw, fallbackTs)
+      raw, isoMicros(fallbackTs))
   }
 
   /** Innermost assembly over pre-computed hot sub-expressions. `qNames`
@@ -354,10 +354,13 @@ object UdmExpressions {
     *
     * `packet` is what the error event's snippet is cut from: the raw
     * packet JSON text, or the native decoder's packet row
-    * ([[graft.functions.PacketSnippetExpr]]). */
+    * ([[graft.functions.PacketSnippetExpr]]). `fallbackIso` is the
+    * event timestamp of a packet without a parseable frame time, as
+    * [[isoMicros]] text: `isoMicros(fallbackTs)` for a planned query,
+    * or an input column of the stage that is planned once and runs
+    * every micro-batch (the batch's time, formatted on the driver). */
   def udmEventPre(l: Column, rec: Column, qNames: Column, ttls: Column,
-                  packet: Column, fallbackTs: Column): Column = {
-    val fallbackIso = isoMicros(fallbackTs)
+                  packet: Column, fallbackIso: Column): Column = {
     val frameNo = coalesce(f(f(l, "frame"), "frame.number"), lit("N/A"))
 
     val malformed = struct(
@@ -385,11 +388,11 @@ object UdmExpressions {
         errMsg.as("processing_error_message"),
         snippet.as("original_packet_data_snippet")).as("additional"))
 
-    // the fallback enters only as the folded `fallbackIso` string: a
-    // timestamp literal is inlined into the generated source, and
-    // `current_timestamp()` binds a new one per micro-batch, which would
-    // compile a new class every batch; a string literal rides codegen
-    // references
+    // the fallback enters only as ISO text: planned, `isoMicros` of a
+    // timestamp folds to a string literal, which rides codegen
+    // references, whereas a timestamp literal is inlined into the
+    // generated source, and `current_timestamp()` binds a new one per
+    // micro-batch, which would compile a new class every batch
     val ts = coalesce(graft.functions.FrameTimeExpr.iso(f(f(l, "frame"), "frame.time_utc")),
       fallbackIso)
     val app = structOrNull(

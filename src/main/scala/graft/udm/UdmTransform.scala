@@ -88,7 +88,13 @@ object UdmTransform {
     * are generated into methods of their own so that each stays small
     * enough to JIT-compile (see [[UdmExpressions.udmEventPre]]). */
   def transform(packets: DataFrame, rawCol: String,
-                fallbackTs: Column = current_timestamp()): DataFrame = {
+                fallbackTs: Column = current_timestamp()): DataFrame =
+    transformIso(packets, rawCol, UdmExpressions.isoMicros(fallbackTs))
+
+  /** [[transform]] with its fallback timestamp given as
+    * [[UdmExpressions.isoMicros]] text, which may be an input column. */
+  private[graft] def transformIso(packets: DataFrame, rawCol: String,
+                                  fallbackIso: Column): DataFrame = {
     import UdmExpressions.{f, sectionValues}
     val parsed = packets.schema(rawCol).dataType match {
       case StringType => graft.functions.UdmPacketParseExpr(col(rawCol))
@@ -104,7 +110,7 @@ object UdmTransform {
       .withColumn("__ttls", sectionValues(f(f(l, "dns"), "Answers"), "dns.resp.ttl"))
       .withColumn("event_struct", UdmExpressions.udmEventPre(
         l, try_element_at(col("__tls_recs"), lit(1)),
-        col("__qnames"), col("__ttls"), col(rawCol), fallbackTs))
+        col("__qnames"), col("__ttls"), col(rawCol), fallbackIso))
       .drop("__parsed", "__tls_recs", "__qnames", "__ttls")
       .withColumn("udm_json", toJson(col("event_struct")))
   }
